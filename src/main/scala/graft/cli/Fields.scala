@@ -243,7 +243,7 @@ object Fields {
   /** sanitizeFilename (main.go:302-375). */
   def sanitizeFilename(filename0: String): String = {
     if (graft.text.GoStrings.trimSpace(filename0).isEmpty) return "unnamed"
-    var filename = transliterate(filename0).toLowerCase
+    var filename = transliterate(filename0).toLowerCase(java.util.Locale.ROOT)
     filename = filename.replace("../", "").replace("..\\", "")
     var sanitized = controlChars.matcher(filename).replaceAll("_")
     sanitized = sanitized.replaceAll("_+", "_")

@@ -19,19 +19,24 @@ object HocrParse {
 
   def parseHocrString(decoded: String): Either[String, Hocr] = {
     val dom = HtmlDom.parse(decoded)
-    var result = extractDocumentMeta(dom)
-    val pages = ArrayBuffer.empty[HPage]
-    // findPages (parse.go:55-77): recursive, early-return per page subtree.
+    val pages = pageNodes(dom)
+    if (pages.isEmpty) Left("no ocr_page elements found in HOCR data")
+    else Right(extractDocumentMeta(dom).copy(pages = pages.map(processPage).toVector))
+  }
+
+  /** findPages (parse.go:55-77): `div.ocr_page` elements in document
+    * order; recursive, early-return per page subtree (a page nested in a
+    * page is not a page of its own). */
+  private[hocr] def pageNodes(dom: Node): ArrayBuffer[Node] = {
+    val pages = ArrayBuffer.empty[Node]
     def findPages(n: Node): Unit = {
       if (n.nodeType == ElementNode && n.data == "div" &&
           n.attr("class").contains("ocr_page")) {
-        pages += processPage(n)
+        pages += n
       } else n.children.foreach(findPages)
     }
     findPages(dom)
-    result = result.copy(pages = pages.toVector)
-    if (result.pages.isEmpty) Left("no ocr_page elements found in HOCR data")
-    else Right(result)
+    pages
   }
 
   /** ParseTitle (parse.go:87-105): split on ';', TrimSpace, Fields;
@@ -120,18 +125,25 @@ object HocrParse {
     Hocr(title = title, description = description, language = language, metadata = metadata)
   }
 
+  /** The bucket classes of each container, in the order they are tested
+    * (processPage, processArea, processParagraph). */
+  private[hocr] val PageClasses = Array("ocr_carea", "ocr_par", "ocr_line")
+  private[hocr] val AreaClasses = Array("ocr_par", "ocr_line", "ocrx_word")
+  private[hocr] val ParaClasses = Array("ocr_line", "ocrx_word")
+
   /** Child collection with descent stopping at the first matching class
-    * (parse.go:231-249 pattern). Buckets are filled in the order classes
-    * are tested; each matched subtree is not descended further. */
-  private def collectByClass(parent: Node, buckets: Seq[(String, ArrayBuffer[Node])]): Unit = {
-    val bucketArr = buckets.toArray
+    * (parse.go:231-249 pattern): one bucket per entry of `classes`,
+    * filled in document order. A node goes to the first class its
+    * `class` attribute contains, and its subtree is not descended. */
+  private[hocr] def collectByClass(parent: Node, classes: Array[String]): Array[ArrayBuffer[Node]] = {
+    val buckets = Array.fill(classes.length)(new ArrayBuffer[Node](4))
     def walk(node: Node): Unit = {
       if (node.nodeType == ElementNode) {
         val cls = node.attr("class")
         if (cls.nonEmpty) {
           var bi = 0
-          while (bi < bucketArr.length) {
-            if (cls.contains(bucketArr(bi)._1)) { bucketArr(bi)._2 += node; return }
+          while (bi < classes.length) {
+            if (cls.contains(classes(bi))) { buckets(bi) += node; return }
             bi += 1
           }
         }
@@ -139,7 +151,25 @@ object HocrParse {
       node.children.foreach(walk)
     }
     parent.children.foreach(walk)
+    buckets
   }
+
+  /** A line's words (parse.go:465-478): full recursion with early stop
+    * only at ocrx_word nodes. */
+  private[hocr] def lineWordNodes(line: Node): ArrayBuffer[Node] = {
+    val words = new ArrayBuffer[Node](8)
+    def extractWords(node: Node): Unit = {
+      if (node.nodeType == ElementNode && node.attr("class").contains("ocrx_word")) {
+        words += node
+      } else node.children.foreach(extractWords)
+    }
+    line.children.foreach(extractWords)
+    words
+  }
+
+  /** A word's text (processWord): only when the node has children. */
+  private[hocr] def wordText(n: Node): String =
+    if (n.children.nonEmpty) extractTextContent(n) else ""
 
   /** processPage (parse.go:196-280).
     *
@@ -167,10 +197,7 @@ object HocrParse {
         case _ =>
       }
     }
-    val areaNodes = ArrayBuffer.empty[Node]
-    val paraNodes = ArrayBuffer.empty[Node]
-    val lineNodes = ArrayBuffer.empty[Node]
-    collectByClass(n, Seq("ocr_carea" -> areaNodes, "ocr_par" -> paraNodes, "ocr_line" -> lineNodes))
+    val Array(areaNodes, paraNodes, lineNodes) = collectByClass(n, PageClasses)
     HPage(id = id, title = title, pageNumber = pageNumber, imageName = imageName,
       lang = lang, bbox = bbox,
       areas = areaNodes.map(processArea).toVector,
@@ -195,10 +222,7 @@ object HocrParse {
         case _ =>
       }
     }
-    val paraNodes = ArrayBuffer.empty[Node]
-    val lineNodes = ArrayBuffer.empty[Node]
-    val wordNodes = ArrayBuffer.empty[Node]
-    collectByClass(n, Seq("ocr_par" -> paraNodes, "ocr_line" -> lineNodes, "ocrx_word" -> wordNodes))
+    val Array(paraNodes, lineNodes, wordNodes) = collectByClass(n, AreaClasses)
     HArea(id = id, lang = lang, bbox = bbox,
       paragraphs = paraNodes.map(processParagraph).toVector,
       lines = lineNodes.map(processLine).toVector,
@@ -222,9 +246,7 @@ object HocrParse {
         case _ =>
       }
     }
-    val lineNodes = ArrayBuffer.empty[Node]
-    val wordNodes = ArrayBuffer.empty[Node]
-    collectByClass(n, Seq("ocr_line" -> lineNodes, "ocrx_word" -> wordNodes))
+    val Array(lineNodes, wordNodes) = collectByClass(n, ParaClasses)
     HPara(id = id, lang = lang, bbox = bbox,
       lines = lineNodes.map(processLine).toVector,
       words = wordNodes.map(processWord).toVector,
@@ -249,15 +271,8 @@ object HocrParse {
         case _ =>
       }
     }
-    val words = ArrayBuffer.empty[HWord]
-    def extractWords(node: Node): Unit = {
-      if (node.nodeType == ElementNode && node.attr("class").contains("ocrx_word")) {
-        words += processWord(node)
-      } else node.children.foreach(extractWords)
-    }
-    n.children.foreach(extractWords)
     HLine(id = id, lang = lang, bbox = bbox, baseline = baseline,
-      words = words.toVector, metadata = metadata)
+      words = lineWordNodes(n).map(processWord).toVector, metadata = metadata)
   }
 
   /** processWord (parse.go:498-539): title lang overrides attr lang;
@@ -283,8 +298,7 @@ object HocrParse {
         case _ =>
       }
     }
-    val text = if (n.children.nonEmpty) extractTextContent(n) else ""
-    HWord(id = id, text = text, bbox = bbox, confidence = confidence,
+    HWord(id = id, text = wordText(n), bbox = bbox, confidence = confidence,
       lang = lang, metadata = metadata)
   }
 

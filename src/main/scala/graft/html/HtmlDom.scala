@@ -1,5 +1,7 @@
 package graft.html
 
+import java.util.Locale
+
 import scala.collection.mutable.ArrayBuffer
 
 /** Minimal HTML DOM for the extraction engine.
@@ -23,8 +25,11 @@ object HtmlDom {
       val nodeType: NodeType,
       /** tag name (lowercase) for elements; text payload for text/comment */
       val data: String,
-      val attrs: ArrayBuffer[(String, String)] = ArrayBuffer.empty,
-      val children: ArrayBuffer[Node] = ArrayBuffer.empty
+      // small initial capacities: `ArrayBuffer.empty` allocates 16 slots,
+      // and most elements hold a few attributes and children (an hOCR
+      // word: class, id, title and one text node)
+      val attrs: ArrayBuffer[(String, String)] = new ArrayBuffer[(String, String)](4),
+      val children: ArrayBuffer[Node] = new ArrayBuffer[Node](2)
   ) {
     def attr(name: String): String = {
       val it = attrs.iterator
@@ -179,17 +184,63 @@ object HtmlDom {
   /** `toLowerCase` without the copy when the string is already
     * lowercase ASCII — the overwhelmingly common case for tag and
     * attribute names on this path, which is allocation-rate-bound
-    * (CLAUDE.md measurement realities). */
+    * (CLAUDE.md measurement realities). Locale.ROOT: under the default
+    * locale a Turkish JVM lowercases "DIV" to "dıv", so the DOM (and
+    * every extraction) would depend on the executor's locale. */
   private def lowerAscii(s: String): String = {
     var i = 0
     val n = s.length
     while (i < n) {
       val c = s.charAt(i)
-      if ((c >= 'A' && c <= 'Z') || c > 127) return s.toLowerCase
+      if ((c >= 'A' && c <= 'Z') || c > 127) return s.toLowerCase(Locale.ROOT)
       i += 1
     }
     s
   }
+
+  /** Tag and attribute names that the extraction inputs actually carry
+    * (the hOCR of `HocrRender` and perfbench's generator, and the HTML
+    * chrome of `CorpusGen` and perfbench), indexed by length. Within a
+    * length the hottest name comes first: `lowerName` tries them in
+    * order, and every hOCR element carries `class`, `id` and `title`,
+    * every hOCR line and word is a `span`. A name not listed here still
+    * parses, it just gets its own copy. */
+  private val knownNames: Array[Array[String]] = {
+    val names = Seq(
+      "id", "h1",
+      "a", "p",
+      "div", "nav",
+      "span", "href", "lang", "meta", "name", "html", "head", "body",
+      "class", "title", "aside", "xmlns",
+      "script", "header", "footer", "style",
+      "content", "xml:lang", "http-equiv")
+    Array.tabulate(names.map(_.length).max + 1)(n =>
+      names.filter(_.length == n).toArray)
+  }
+
+  /** `lowerAscii(input.substring(start, end))`, returning the shared
+    * constant for a well-known name instead of a fresh copy. The match
+    * is ASCII-only: `regionMatches(true, ...)` would also fold non-ASCII
+    * letters such as 'İ' or the Kelvin sign onto ASCII ones, which
+    * `lowerAscii` does not. */
+  private def lowerName(input: String, start: Int, end: Int): String = {
+    val len = end - start
+    if (len < knownNames.length) {
+      val candidates = knownNames(len)
+      var k = 0
+      while (k < candidates.length) {
+        val name = candidates(k)
+        var j = 0
+        while (j < len && asciiLower(input.charAt(start + j)) == name.charAt(j)) j += 1
+        if (j == len) return name
+        k += 1
+      }
+    }
+    lowerAscii(input.substring(start, end))
+  }
+
+  private def asciiLower(c: Char): Char =
+    if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
 
   private def indexOfIgnoreCase(haystack: String, needle: String, from: Int): Int = {
     var i = Math.max(from, 0)
@@ -209,7 +260,7 @@ object HtmlDom {
     val nameStart = i
     while (i < n && (Character.isLetterOrDigit(input.charAt(i)) ||
            input.charAt(i) == '-' || input.charAt(i) == ':')) i += 1
-    val node = new Node(ElementNode, lowerAscii(input.substring(nameStart, i)))
+    val node = new Node(ElementNode, lowerName(input, nameStart, i))
     var selfClosed = false
     var done = false
     while (!done && i < n) {
@@ -225,7 +276,7 @@ object HtmlDom {
           while (i < n && !Character.isWhitespace(input.charAt(i)) &&
                  input.charAt(i) != '=' && input.charAt(i) != '>' &&
                  input.charAt(i) != '/') i += 1
-          val aName = lowerAscii(input.substring(aStart, i))
+          val aName = lowerName(input, aStart, i)
           while (i < n && Character.isWhitespace(input.charAt(i))) i += 1
           var aVal = ""
           if (i < n && input.charAt(i) == '=') {

@@ -68,7 +68,7 @@ object PdfOps {
         if (!stop) {
           if (layer == ocrLayerName || pageLayer.matcher(layer).matches()) {
             has = true; name = layer; stop = true
-          } else if (layer.toLowerCase.contains("ocr") && !layer.startsWith(ocrLayerName)) {
+          } else if (layer.toLowerCase(java.util.Locale.ROOT).contains("ocr") && !layer.startsWith(ocrLayerName)) {
             warnings += s"Existing layer detected that might contain OCR: $layer"
           }
         }

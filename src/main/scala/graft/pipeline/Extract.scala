@@ -8,10 +8,13 @@ import org.apache.spark.sql.functions._
   * Plan (hybrid, skew-aware):
   *
   *   scan (doc_id, spans)
-  *     ├─ docs with <= spreadThreshold spans (the overwhelming mass):
-  *     │    posexplode -> per-span extraction IN THE SCAN STAGE (narrow,
-  *     │    zero pre-shuffle) — raw span bytes never cross the wire;
-  *     └─ mega-docs (> threshold spans, the skew tail):
+  *     ├─ docs that are exactly one input row (the overwhelming mass):
+  *     │    single-row docs with <= spreadThreshold spans, and pre-split
+  *     │    docs with <= min(spreadThreshold, PartSize) spans (one part)
+  *     │    -> row-local extraction + stitch IN THE SCAN STAGE
+  *     │       ([[extractInRow]]: `transform` over the span array, order =
+  *     │       array index) — no explode, no exchange, no sort;
+  *     └─ mega-docs (the skew tail, and every multi-part pre-split doc):
   *          posexplode -> repartition by (doc_id, pos/RunSize) so one
   *          document's spans spread across the cluster BEFORE the heavy
   *          work (salting; the reference's own parallel unit is the
@@ -19,15 +22,17 @@ import org.apache.spark.sql.functions._
   *          partial phase REUSES that partitioning
   *   union of per-doc results
   *
-  * Shuffles carry only EXTRACTED text (much smaller than the raw
-  * HTML/hOCR input): one exchange on the small path, two on the skew
-  * path (3 total in the executed plan). Ordering always comes from the
-  * data (`order` = span position), never from partition order.
+  * Only the skew path shuffles, and only EXTRACTED text on its stitch:
+  * two exchanges in the executed plan (the raw-span repartition and the
+  * final merge on the single-row layout; the partial and the final
+  * stitch on the pre-split layout), none on the small path. Ordering
+  * always comes from the data (`order` = span position), never from
+  * partition order.
   */
 object Extract {
 
-  /** Shared by the batch paths here and the streaming path
-    * (StreamingOps.extractStream) — one definition, no drift. */
+  /** Shared by the exploded paths and [[extractInRow]] — one
+    * definition, no drift. */
   private[graft] val extractUdf =
     udf((kind: String, text: String, mediaRef: String) =>
       SpanExtract.extractSpanText(kind, text, mediaRef))
@@ -86,12 +91,24 @@ object Extract {
       .select(col("doc_id"), col("n_spans"),
         (col("part_idx").cast("int") * PartSize + col("p")).as("pos"), col("span"))
 
-  /** Single-shuffle stitch (the common case). */
-  private def stitchSmall(ex: DataFrame): DataFrame =
-    ex.groupBy(col("doc_id"))
-      .agg(array_sort(collect_list(struct(
-        col("order"), col("kind"), col("text"), col("media_ref")))).as("seq0"))
-      .select(col("doc_id"), reorderFields(col("seq0")).as("span_seq"))
+  /** Row-local extraction and stitch of docs that arrive whole in one
+    * row: `transform` with the index lambda assigns `order` from array
+    * position, and the extraction UDF fires only for the extracted
+    * kinds. The small-doc path of [[run]] (both layouts) and the
+    * streaming flagship (StreamingOps.extractStream) — batch and stream
+    * are two execution modes of this one definition. Docs with no spans
+    * yield no row, like the exploded stitch, which has nothing to group. */
+  private[graft] def extractInRow(rows: DataFrame): DataFrame =
+    rows
+      .filter(size(col("spans")) > 0)
+      .select(col("doc_id"), transform(col("spans"),
+        (s, i) => struct(
+          s.getField("kind").as("kind"),
+          when(s.getField("kind").isin(ExtractedKinds: _*),
+              extractUdf(s.getField("kind"), s.getField("text"), s.getField("media_ref")))
+            .otherwise(s.getField("text")).as("text"),
+          s.getField("media_ref").as("media_ref"),
+          i.as("order"))).as("span_seq"))
 
   /** Two-phase stitch for the skew tail: partial sorted runs per
     * (doc_id, order/RunSize), then a final merge of pre-sorted runs. */
@@ -134,16 +151,14 @@ object Extract {
     * final merge of S pre-sorted runs per doc. The final reducer handles
     * S array objects instead of n_spans individual rows, bounding the
     * single-group memory/CPU spike the skew tail would otherwise cause.
-    * Small docs keep the single-shuffle stitch (an extra exchange would
-    * tax the common case). */
+    * Small docs already arrive whole in one row, so they stitch inside
+    * it ([[extractInRow]]) and never reach an exchange. */
   def run(input: DataFrame, spreadThreshold: Int = DefaultSpreadThreshold): DataFrame = {
     if (input.columns.contains("part_idx"))
       return runPreSplit(input, spreadThreshold)
     val withN = withNSpans(input)
 
-    val small = withN.filter(col("n_spans") <= spreadThreshold)
-      .select(col("doc_id"), posexplode(col("spans")).as(Seq("pos", "span")))
-    val smallOut = stitchSmall(extracted(small))
+    val smallOut = extractInRow(withN.filter(col("n_spans") <= spreadThreshold))
 
     // spread at RUN granularity: the partial-stitch groupBy below keys on
     // exactly (doc_id, floor(pos/RunSize)), so Catalyst reuses this
@@ -164,14 +179,17 @@ object Extract {
     * part_idx * PartSize + local position — order still comes from the
     * data, never from partition order.
     *
-    * Plan shape: extraction fuses into the scan for BOTH paths (every
-    * row is a bounded <= PartSize unit), so unlike the single-row layout
-    * there is no raw-byte repartition anywhere; mega-docs hit the same
-    * two-phase stitch, whose partial runs coincide with part rows. */
+    * Plan shape: a doc of at most PartSize spans is ONE part row
+    * (part_idx 0), so below the spread threshold it stitches inside that
+    * row exactly like a small single-row doc. Every other doc — mega-docs
+    * and multi-part docs under a raised threshold alike — takes the
+    * two-phase stitch, whose partial runs coincide with part rows.
+    * Extraction fuses into the scan on both paths (every row is a
+    * bounded <= PartSize unit), so there is no raw-byte repartition. */
   private def runPreSplit(input: DataFrame, spreadThreshold: Int): DataFrame = {
-    val exploded = preSplitExploded(input)
-    val smallOut = stitchSmall(extracted(exploded.filter(col("n_spans") <= spreadThreshold)))
-    val bigOut = stitchBig(extracted(exploded.filter(col("n_spans") > spreadThreshold)))
+    val inRow = col("n_spans") <= math.min(spreadThreshold, PartSize)
+    val smallOut = extractInRow(input.filter(inRow))
+    val bigOut = stitchBig(extracted(preSplitExploded(input.filter(!inRow))))
     smallOut.unionAll(bigOut)
   }
 

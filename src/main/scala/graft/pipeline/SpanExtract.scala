@@ -1,15 +1,17 @@
 package graft.pipeline
 
-import graft.hocr.{Hocr, HocrParse, HocrText}
+import graft.hocr.{Hocr, HocrText}
 import graft.html.Boilerplate
 import graft.layout.{Assembly, MediaOcr, RuneIndex}
 
 /** Pure per-span extraction — the unit of distributed work.
   *
   * kind = 'html'       -> DOM boilerplate strip (north rule)
-  * kind = 'pdf_layout' -> hOCR parse (H-1..H-11) + reading-order stitch
-  *                        (H-13); parse failures yield "" (the reference
-  *                        swallows per-element errors, parse.go:66-71)
+  * kind = 'pdf_layout' -> reading-order stitch (H-13) straight from the
+  *                        hOCR DOM (HocrText.fromMarkup, equal to the
+  *                        H-1..H-11 parse + stitch); no page yields ""
+  *                        (the reference swallows per-element errors,
+  *                        parse.go:66-71)
   * kind = 'media'      -> deterministic OCR-style layout classification
   *                        (replaces the gRPC call G-22), then the G-13
   *                        hOCR assembly and the H-13 stitch
@@ -24,11 +26,7 @@ object SpanExtract {
     case "html" =>
       if (text == null) "" else Boilerplate.extractMainText(text)
     case "pdf_layout" =>
-      if (text == null) ""
-      else HocrParse.parseHocrString(text) match {
-        case Right(h) => HocrText.extractText(h)
-        case Left(_)  => ""
-      }
+      if (text == null) "" else HocrText.fromMarkup(text)
     case "media" =>
       if (mediaRef == null) ""
       else {

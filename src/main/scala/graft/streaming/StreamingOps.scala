@@ -81,26 +81,14 @@ object StreamingOps {
   /** Streaming flagship: incremental extraction over an append-only
     * corpus table (readStream -> extract -> append sink). Each arriving
     * row is a COMPLETE (doc_id, spans) document, so extraction and the
-    * stitch run inside the row — `transform` with the index lambda
-    * assigns `order` from array position, the extraction UDF fires only
-    * for the extracted kinds — and the query is STATELESS append: no
+    * stitch run inside the row — the same [[graft.pipeline.Extract.extractInRow]]
+    * that batch runs for its small docs — and the query is STATELESS append: no
     * state store, no watermark, exactly-once from the source checkpoint.
     * (Mega-docs arrive as one row each; micro-batch sizing bounds them —
     * the batch engine's spread/pre-split paths are for backfills, where
     * SLA is throughput, not latency.) Output schema == batch Extract.run. */
-  def extractStream(corpus: DataFrame): DataFrame = {
-    import graft.pipeline.Extract.{extractUdf, ExtractedKinds} // shared: no batch/stream drift
-    corpus
-      .filter(size(col("spans")) > 0) // batch groupBy drops empty docs; match it
-      .select(col("doc_id"), transform(col("spans"),
-        (s, i) => struct(
-          s.getField("kind").as("kind"),
-          when(s.getField("kind").isin(ExtractedKinds: _*),
-              extractUdf(s.getField("kind"), s.getField("text"), s.getField("media_ref")))
-            .otherwise(s.getField("text")).as("text"),
-          s.getField("media_ref").as("media_ref"),
-          i.as("order"))).as("span_seq"))
-  }
+  def extractStream(corpus: DataFrame): DataFrame =
+    graft.pipeline.Extract.extractInRow(corpus)
 
   /** Streaming exact dedup: the incremental form of q_dedup_exact —
     * content-fingerprint dedup bounded by an event-time watermark, the

@@ -222,7 +222,7 @@ object GoStrings {
         // then take until the next one.
         def isDelim(c: Char) = c == '"' || c == ';' || c == '\'' || c == '>'
         val first = encSnippet.dropWhile(isDelim).takeWhile(!isDelim(_))
-        val enc = first.toLowerCase
+        val enc = first.toLowerCase(java.util.Locale.ROOT) // Go's ToLower ignores locale
         if (enc.nonEmpty) encoding = enc
       }
     }

@@ -1,13 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fixtures.CorpusGen
 import graft.model.{Doc, Span}
 import graft.pipeline.{Extract, SpanExtract}
 
-class ExtractSpec extends AnyFunSuite {
+class ExtractSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -64,6 +66,30 @@ class ExtractSpec extends AnyFunSuite {
     // and through the mega path for everything
     assert(canon(Extract.run(pre, spreadThreshold = 0)) ==
       canon(Extract.run(input, spreadThreshold = 0)))
+    // no spread at all: a multi-part doc is still one doc, so only a
+    // single-part doc (n_spans <= min(threshold, PartSize)) may stitch
+    // inside its row — mp must come back as ONE row of all its spans
+    val unspread = canon(Extract.run(pre, spreadThreshold = Int.MaxValue))
+    assert(unspread == canon(Extract.run(input, spreadThreshold = Int.MaxValue)))
+    val mp = Extract.run(pre, spreadThreshold = Int.MaxValue).filter("doc_id = 'mp'")
+      .selectExpr("size(span_seq)", "transform(span_seq, s -> s.order)")
+      .as[(Int, Seq[Int])].collect()
+    assert(mp.toSeq == Seq((2600, 0 until 2600)))
+  }
+
+  /** Shuffle exchanges of the final (post-AQE) plan of an executed job. */
+  private def exchanges(df: DataFrame): Int = {
+    df.collect()
+    collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }.size
+  }
+
+  test("small docs stitch in their row: only the skew path shuffles, both layouts") {
+    // sf0.001 has docs on both sides of the default threshold: the skew
+    // path's two exchanges per layout, and none for docs that arrive
+    // whole in one row
+    val input = CorpusGen.fromDocuments(spark, "/root/testdata/sf0.001")
+    assert(exchanges(Extract.run(input)) == 2)
+    assert(exchanges(Extract.run(CorpusGen.preSplit(input))) == 2)
   }
 
   test("hostile spans: malformed html/hOCR, empty docs, weird kinds survive") {
@@ -86,7 +112,9 @@ class ExtractSpec extends AnyFunSuite {
     // unparseable hOCR (no ocr_page) -> "" (reference: errors swallowed)
     assert(out("h1")(1)._2 == "")
     assert(out("h1")(4)._2 == "passthrough") // unknown kinds pass through
-    // empty-spans doc: groupBy drops it (no spans -> no row) — documented
+    // empty-spans doc: no spans -> no row. The in-row stitch filters it
+    // explicitly, matching the exploded stitch (nothing to group), and
+    // the streaming path shares that filter
     assert(!out.contains("h2"))
     assert(out("h3").head._2.length == 100000)
   }
