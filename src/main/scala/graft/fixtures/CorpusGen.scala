@@ -137,7 +137,7 @@ object CorpusGen {
 
   def preSplit(corpus: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    // the chunk size is a layout CONTRACT, not a knob: Extract.runPreSplit
+    // the chunk size is a layout CONTRACT, not a knob: Extract.run
     // reconstructs global order as part_idx * Extract.PartSize + local pos
     val partSize = graft.pipeline.Extract.PartSize
     val withN =

@@ -254,7 +254,11 @@ object PdfParse {
       val buf = new Array[Byte](8192)
       while (!inf.finished()) {
         val n = inf.inflate(buf)
-        if (n == 0 && inf.needsInput()) return Left("truncated Flate stream")
+        // a read that makes no progress never will: an FDICT stream
+        // stalls here without asking for more input
+        if (n == 0 && !inf.finished())
+          return Left(if (inf.needsDictionary()) "Flate stream needs a preset dictionary"
+            else "truncated Flate stream")
         out.write(buf, 0, n)
       }
       Right(out.toByteArray)

@@ -24,8 +24,8 @@ import graft.pipeline.Extract
   *   kind[i]     = [html|pdf_layout|media] by fm(h("span:"+id+":"+i), 10)
   *   media_ref[i]= "img://" + hex16(h(...))        for media spans
   *
-  * The Spark side runs the FULL extraction job (Extract.run — explode,
-  * skew split, UDF extraction, two-phase stitch) and projects exactly
+  * The Spark side runs the FULL extraction job (Extract.run — UDF
+  * extraction and stitch inside each scan row) and projects exactly
   * those columns plus text_nonempty, which forces the extraction UDF to
   * execute (nested-field pruning cannot elide it) and pins the
   * "every html/pdf_layout/media span extracts to non-empty text"

@@ -82,11 +82,12 @@ object StreamingOps {
     * corpus table (readStream -> extract -> append sink). Each arriving
     * row is a COMPLETE (doc_id, spans) document, so extraction and the
     * stitch run inside the row — the same [[graft.pipeline.Extract.extractInRow]]
-    * that batch runs for its small docs — and the query is STATELESS append: no
-    * state store, no watermark, exactly-once from the source checkpoint.
-    * (Mega-docs arrive as one row each; micro-batch sizing bounds them —
-    * the batch engine's spread/pre-split paths are for backfills, where
-    * SLA is throughput, not latency.) Output schema == batch Extract.run. */
+    * that batch runs for every single-row doc — and the query is STATELESS
+    * append: no state store, no watermark, exactly-once from the source
+    * checkpoint. (Mega-docs arrive as one row each; micro-batch sizing
+    * bounds them — the batch engine's pre-split layout is for backfills,
+    * where SLA is throughput, not latency.) Output schema == batch
+    * Extract.run. */
   def extractStream(corpus: DataFrame): DataFrame =
     graft.pipeline.Extract.extractInRow(corpus)
 

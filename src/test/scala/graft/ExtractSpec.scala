@@ -24,13 +24,35 @@ class ExtractSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       .collect().map(r => r.getString(0) + "" + r.getString(1)).sorted.toSeq
   }
 
+  /** `base` plus `mp`, a 2,600-span doc that spans three PartSize=1024
+    * parts (every sf0.001 doc, >256-span ones included, fits one part). */
+  private def withMultiPart(base: DataFrame): DataFrame = {
+    import spark.implicits._
+    base.unionAll(spark.createDataset(Seq(
+      Doc("mp", (0 until 2600).map(i => Span("media", "", f"img://mp/$i%d", i * 10)).toVector)
+    )).toDF())
+  }
+
+  private def mpRows(out: DataFrame): Seq[(Int, Seq[Int])] = {
+    import spark.implicits._
+    out.filter("doc_id = 'mp'")
+      .selectExpr("size(span_seq)", "transform(span_seq, s -> s.order)")
+      .as[(Int, Seq[Int])].collect().toSeq
+  }
+
+  /** Shuffle exchanges of the final (post-AQE) plan of an executed job. */
+  private def exchanges(df: DataFrame): Int = {
+    df.collect()
+    collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }.size
+  }
+
   test("distributed == sequential: pipeline output matches per-doc library result") {
     import spark.implicits._
     val docs = (0L until 40L).map { id =>
       CorpusGen.genDoc(id, s"some words for doc $id repeated " * 8)
     }
     val input = spark.createDataset(docs).toDF()
-    val got = Extract.run(input, spreadThreshold = 4) // force both paths
+    val got = Extract.run(input)
       .as[(String, Seq[(String, String, String, Int)])]
       .collect().toMap
     docs.foreach { d =>
@@ -41,55 +63,42 @@ class ExtractSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("spread path == narrow path (threshold extremes give identical output)") {
+  test("single-row layout: a 2,600-span doc is one row, no shuffle") {
     val input = CorpusGen.fromDocuments(spark, "/root/testdata/sf0.001")
-    val allNarrow = canon(Extract.run(input, spreadThreshold = Int.MaxValue))
-    val allSpread = canon(Extract.run(input, spreadThreshold = 0))
-    assert(allNarrow == allSpread)
-    assert(allNarrow.nonEmpty)
+    val out = Extract.run(withMultiPart(input))
+    assert(exchanges(out) == 0)
+    assert(mpRows(out) == Seq((2600, 0 until 2600)))
   }
 
   test("pre-split storage layout == single-row layout (incl. multi-part mega doc)") {
-    import spark.implicits._
-    // sf0.001 corpus (mixed small + >256-span mega docs) plus one doc
-    // large enough to span multiple PartSize=1024 chunks
     val base = CorpusGen.fromDocuments(spark, "/root/testdata/sf0.001")
-    val multiPart = spark.createDataset(Seq(
-      Doc("mp", (0 until 2600).map(i => Span("media", "", f"img://mp/$i%d", i * 10)).toVector)
-    )).toDF()
-    val input = base.unionAll(multiPart)
+    val input = withMultiPart(base)
     val pre = CorpusGen.preSplit(input)
     // sanity: the 2600-span doc really is chunked
     assert(pre.filter("doc_id = 'mp'").count() == 3)
     assert(Extract.run(pre).schema == Extract.run(input).schema)
     assert(canon(Extract.run(pre)) == canon(Extract.run(input)))
-    // and through the mega path for everything
-    assert(canon(Extract.run(pre, spreadThreshold = 0)) ==
-      canon(Extract.run(input, spreadThreshold = 0)))
-    // no spread at all: a multi-part doc is still one doc, so only a
-    // single-part doc (n_spans <= min(threshold, PartSize)) may stitch
-    // inside its row — mp must come back as ONE row of all its spans
-    val unspread = canon(Extract.run(pre, spreadThreshold = Int.MaxValue))
-    assert(unspread == canon(Extract.run(input, spreadThreshold = Int.MaxValue)))
-    val mp = Extract.run(pre, spreadThreshold = Int.MaxValue).filter("doc_id = 'mp'")
-      .selectExpr("size(span_seq)", "transform(span_seq, s -> s.order)")
-      .as[(Int, Seq[Int])].collect()
-    assert(mp.toSeq == Seq((2600, 0 until 2600)))
+    // a multi-part doc is still one doc: its parts merge into ONE row of
+    // all its spans in global order
+    assert(mpRows(Extract.run(pre)) == Seq((2600, 0 until 2600)))
+    // one row per span, global order on both layouts
+    def spans(df: DataFrame): Seq[String] =
+      Extract.extractSpans(df).collect().map(_.toString).sorted.toSeq
+    assert(spans(pre) == spans(input))
+    assert(spans(input).size ==
+      Extract.run(input).selectExpr("sum(size(span_seq))").head().getLong(0))
   }
 
-  /** Shuffle exchanges of the final (post-AQE) plan of an executed job. */
-  private def exchanges(df: DataFrame): Int = {
-    df.collect()
-    collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }.size
-  }
-
-  test("small docs stitch in their row: only the skew path shuffles, both layouts") {
-    // sf0.001 has docs on both sides of the default threshold: the skew
-    // path's two exchanges per layout, and none for docs that arrive
-    // whole in one row
+  test("exchanges: single-row 0, pre-split 1 with a multi-part doc") {
     val input = CorpusGen.fromDocuments(spark, "/root/testdata/sf0.001")
-    assert(exchanges(Extract.run(input)) == 2)
-    assert(exchanges(Extract.run(CorpusGen.preSplit(input))) == 2)
+    assert(exchanges(Extract.run(input)) == 0)
+    // every sf0.001 doc fits one part: the merge branch is empty
+    assert(exchanges(Extract.run(CorpusGen.preSplit(input))) == 0)
+    // mp's three parts meet in the one merge exchange
+    assert(exchanges(Extract.run(CorpusGen.preSplit(withMultiPart(input)))) == 1)
+    // per-span extraction never shuffles, on either layout
+    assert(exchanges(Extract.extractSpans(withMultiPart(input))) == 0)
+    assert(exchanges(Extract.extractSpans(CorpusGen.preSplit(withMultiPart(input)))) == 0)
   }
 
   test("hostile spans: malformed html/hOCR, empty docs, weird kinds survive") {

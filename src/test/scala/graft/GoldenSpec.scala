@@ -37,7 +37,7 @@ class GoldenSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val input = spark.createDataset(Golden.corpus.toVector).toDF()
-    val got = Extract.run(input, spreadThreshold = 3) // exercise both paths
+    val got = Extract.run(input)
       .as[(String, Seq[(String, String, String, Int)])]
       .collect().map(r => r._1 -> r._2).toMap
     // pipeline output must equal the sequential library output, which
@@ -65,7 +65,7 @@ class GoldenSpec extends AnyFunSuite {
     })
     assert(withNonBmp.nonEmpty)
     val input = spark.createDataset(withNonBmp.toVector).toDF()
-    val got = graft.pipeline.Extract.run(input, spreadThreshold = 2)
+    val got = graft.pipeline.Extract.run(input)
       .as[(String, Seq[(String, String, String, Int)])]
       .collect().map(r => r._1 -> r._2).toMap
     withNonBmp.foreach { d =>

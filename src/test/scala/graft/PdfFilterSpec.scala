@@ -1,8 +1,15 @@
 package graft
 
 import java.nio.charset.StandardCharsets.ISO_8859_1
+import java.util.zip.Deflater
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+
+import org.scalatest.concurrent.{Signaler, ThreadSignaler}
+import org.scalatest.concurrent.TimeLimits.failAfter
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import graft.hocr.{HLine, HPage, HWord, Hocr}
 import graft.model.BBox
@@ -180,6 +187,35 @@ class PdfFilterSpec extends AnyFunSuite {
       prev = row
     }
     out
+  }
+
+  private def deflate(data: Array[Byte], dict: Option[Array[Byte]]): Array[Byte] = {
+    val d = new Deflater()
+    dict.foreach(d.setDictionary)
+    d.setInput(data)
+    d.finish()
+    val out = new java.io.ByteArrayOutputStream()
+    val buf = new Array[Byte](256)
+    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+    d.end()
+    out.toByteArray
+  }
+
+  test("Flate with a preset dictionary (FDICT) is a clear error, not a hang") {
+    val text = ("BT /F1 12 Tf (common words) Tj ET " * 20).getBytes(ISO_8859_1)
+    val fdict = deflate(text, Some("common words".getBytes(ISO_8859_1)))
+    // inflate runs on its own thread so that a hang fails the test
+    // instead of stalling the suite
+    implicit val signaler: Signaler = ThreadSignaler
+    val got = failAfter(Span(10, Seconds)) {
+      Await.result(Future(PdfParse.inflate(fdict))(ExecutionContext.global), Duration.Inf)
+    }
+    assert(got == Left("Flate stream needs a preset dictionary"))
+    // without the dictionary the same text round-trips; cut short, it is
+    // truncated
+    val plain = deflate(text, None)
+    assert(PdfParse.inflate(plain).toOption.get.sameElements(text))
+    assert(PdfParse.inflate(plain.take(plain.length / 2)) == Left("truncated Flate stream"))
   }
 
   test("Flate + /Predictor 12 page content parses and page-imports end-to-end (P-8)") {
