@@ -50,6 +50,11 @@ object Boilerplate {
 
   private val headingTags = Set("h1", "h2", "h3", "h4", "h5", "h6")
 
+  // the walk's inherited flags: inside an <a>, a heading, an <li>
+  private final val InLink = 1
+  private final val InHeading = 2
+  private final val InLi = 4
+
   private final class Block {
     val text = new StringBuilder
     var linkLen = 0
@@ -93,33 +98,56 @@ object Boilerplate {
       cur = new Block
     }
 
-    def walk(n: Node, inLink: Boolean, inHeading: Boolean, inLi: Boolean): Unit = {
-      n.nodeType match {
+    // Pre-order walk on an explicit stack, so that nesting depth costs
+    // heap, not thread stack (a Spark task thread has 1 MiB). Each entry
+    // is a node with its inherited link/heading/li flags; a null node is
+    // the flush a block element owes after its last child.
+    var nodes = new Array[Node](32)
+    var flags = new Array[Int](32)
+    var top = 0
+    def push(n: Node, f: Int): Unit = {
+      if (top == nodes.length) {
+        nodes = java.util.Arrays.copyOf(nodes, 2 * top)
+        flags = java.util.Arrays.copyOf(flags, 2 * top)
+      }
+      nodes(top) = n; flags(top) = f; top += 1
+    }
+    def pushChildren(n: Node, f: Int): Unit = {
+      var i = n.children.length - 1
+      while (i >= 0) { push(n.children(i), f); i -= 1 }
+    }
+    push(dom, 0)
+    while (top > 0) {
+      top -= 1
+      val n = nodes(top)
+      val f = flags(top)
+      nodes(top) = null
+      if (n == null) flush()
+      else n.nodeType match {
         case TextNode =>
           val t = n.data
           cur.text.append(t)
-          if (inLink) {
+          if ((f & InLink) != 0) {
             val cw = collapseWs(t)
             cur.linkLen += cw.codePointCount(0, cw.length)
           }
-          if (inHeading) cur.heading = true
-          if (inLi) cur.listItem = true
+          if ((f & InHeading) != 0) cur.heading = true
+          if ((f & InLi) != 0) cur.listItem = true
         case ElementNode =>
           val tag = n.data
-          if (dropTags.contains(tag)) return
-          val isBlock = blockTags.contains(tag)
-          if (isBlock) flush()
-          else cur.tagCount += 1
-          val link = inLink || tag == "a"
-          val heading = inHeading || headingTags.contains(tag)
-          val li = inLi || tag == "li"
-          n.children.foreach(c => walk(c, link, heading, li))
-          if (isBlock) flush()
+          if (!dropTags.contains(tag)) {
+            val isBlock = blockTags.contains(tag)
+            if (isBlock) { flush(); push(null, 0) }
+            else cur.tagCount += 1
+            pushChildren(n, f |
+              (if (tag == "a") InLink else 0) |
+              (if (headingTags.contains(tag)) InHeading else 0) |
+              (if (tag == "li") InLi else 0))
+          }
         case _ =>
-          n.children.foreach(c => walk(c, inLink, inHeading, inLi))
+          pushChildren(n, f)
       }
     }
-    walk(dom, inLink = false, inHeading = false, inLi = false)
     flush()
 
     val kept = blocks.filter { b =>

@@ -68,6 +68,55 @@ object MediaOcr {
     def int(n: Int): Int = (Math.floorMod(next(), n.toLong)).toInt
   }
 
+  /** The stitch law: the text that `classify` -> G-13 assembly
+    * (`Assembly.createHocrPage`) -> H-13 stitch (`HocrText.extractText`)
+    * yields for `mediaRef`, computed from the Rng stream alone, with no
+    * layout page, no hOCR page and no stitch. It makes exactly the draws
+    * `classify` makes, in the same order, and keeps only the words:
+    *
+    *   for each line: every word ++ " ", then "\n"
+    *   (+ the orphan paragraph's word ++ " \n", + "orphan line \n") ++ "\n\n"
+    *
+    * The law is exact because:
+    *  - anchors nest exactly as generated, and containment is by anchor
+    *    segment (ContainmentIndex), so reading order is generation order;
+    *  - line ids are unique per (area, para, line), so the H-13 line
+    *    dedup never fires;
+    *  - cleanTokenText reduces every token slice to its vocabulary word
+    *    (trimSpace strips the break char);
+    *  - the two edge shapes, a paragraph in no block (about 1 in 7) and a
+    *    line in no paragraph (about 1 in 11), come after the blocks, in
+    *    that order.
+    *
+    * MediaTextSpec pins it equal to the model path; the
+    * q_extract_media_text and q_extract_pdf_text oracles run the same law
+    * as a DuckDB recursive CTE (MediaTextQ.machineCtes). */
+  def text(mediaRef: String): String = {
+    val rng = new Rng(hash64(mediaRef))
+    val sb = new java.lang.StringBuilder(256)
+    rng.int(langs.length) // page language
+    val nBlocks = 1 + rng.int(3)
+    for (_ <- 0 until nBlocks) {
+      val nParas = 1 + rng.int(2)
+      for (_ <- 0 until nParas) {
+        val nLines = 1 + rng.int(3)
+        for (_ <- 0 until nLines) {
+          val nTokens = 2 + rng.int(6)
+          for (_ <- 0 until nTokens) {
+            sb.append(vocab(rng.int(vocab.length))).append(' ')
+            rng.int(50) // confidence
+            if (rng.int(5) == 0) rng.int(langs.length) // token language
+          }
+          if (rng.int(4) == 0) rng.int(langs.length) // line language
+          sb.append('\n')
+        }
+      }
+    }
+    if (rng.int(7) == 0) sb.append(vocab(rng.int(vocab.length))).append(" \n")
+    if (rng.int(11) == 0) sb.append("orphan line \n")
+    sb.append("\n\n").toString
+  }
+
   /** Classification result: page text + the layout page (pageNumber=1). */
   final case class OcrResult(text: String, page: LPage)
 

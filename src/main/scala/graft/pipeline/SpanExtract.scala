@@ -1,8 +1,8 @@
 package graft.pipeline
 
-import graft.hocr.{Hocr, HocrText}
+import graft.hocr.HocrText
 import graft.html.Boilerplate
-import graft.layout.{Assembly, MediaOcr, RuneIndex}
+import graft.layout.MediaOcr
 
 /** Pure per-span extraction — the unit of distributed work.
   *
@@ -12,9 +12,10 @@ import graft.layout.{Assembly, MediaOcr, RuneIndex}
   *                        H-1..H-11 parse + stitch); no page yields ""
   *                        (the reference swallows per-element errors,
   *                        parse.go:66-71)
-  * kind = 'media'      -> deterministic OCR-style layout classification
-  *                        (replaces the gRPC call G-22), then the G-13
-  *                        hOCR assembly and the H-13 stitch
+  * kind = 'media'      -> the deterministic OCR-style classifier's
+  *                        stitch law (MediaOcr.text; replaces the gRPC
+  *                        call G-22), pinned equal to classify -> G-13
+  *                        -> H-13 by MediaTextSpec
   * other kinds pass through unchanged.
   */
 object SpanExtract {
@@ -28,12 +29,7 @@ object SpanExtract {
     case "pdf_layout" =>
       if (text == null) "" else HocrText.fromMarkup(text)
     case "media" =>
-      if (mediaRef == null) ""
-      else {
-        val r = MediaOcr.classify(mediaRef)
-        val page = Assembly.createHocrPage(r.page, new RuneIndex(r.text), 1)
-        HocrText.extractText(Hocr(pages = Vector(page)))
-      }
+      if (mediaRef == null) "" else MediaOcr.text(mediaRef)
     case _ => text
   }
 }

@@ -4,30 +4,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.fixtures.CorpusGen
+import graft.layout.MediaOcr
 import graft.pipeline.Extract
 
 /** Media-span TEXT under the independent oracle (round-3 verdict #7,
   * stretch): the last flagship column class that was only rows-only /
   * golden-pinned.
   *
-  * The Spark side runs the FULL extraction pipeline (classifier ->
-  * G-13 assembly -> H-13 stitch) and emits md5(text) per media span.
-  * The oracle re-derives the text from the documents parquet alone by
-  * simulating MediaOcr's sequential splitmix64 Rng stream in a DuckDB
-  * RECURSIVE CTE — a 15-phase state machine consuming exactly one draw
-  * per step — and then applying the STITCH LAW (derived statically from
-  * HocrText/Assembly, pinned against the real pipeline by
-  * MediaTextSpec):
+  * One law, two execution forms. The Spark side runs the extraction
+  * pipeline, whose media kernel is the classifier's STITCH LAW in Scala
+  * (MediaOcr.text), and emits md5(text) per media span. The oracle
+  * re-derives the text from the documents parquet alone by running the
+  * law's SQL form: MediaOcr's sequential splitmix64 Rng stream simulated
+  * in a DuckDB RECURSIVE CTE — a 15-phase state machine consuming exactly
+  * one draw per step — that accumulates the stitched text:
   *
   *   stitched = for each line, every word ++ " ", then "\n"
   *              (+ optional orphan-paragraph word line, + optional
   *               "orphan line " line)  ++ "\n\n"
   *
-  * Reading order equals generation order because containment is by
-  * text-anchor SEGMENTS (ContainmentIndex), which nest exactly as
-  * generated; line IDs are unique (original-index ordinals) so the
-  * H-13 line dedup never fires; cleanTokenText reduces each token
-  * slice to its vocabulary word (trimSpace strips the break char).
+  * MediaTextSpec pins the law against the model path it replaces
+  * (classify -> G-13 assembly -> H-13 stitch); MediaOcr.text's scaladoc
+  * says why it is exact.
   *
   * Rng recurrence (MediaOcr.Rng — splitmix64 proper, distinct from the
   * hash64 absorb loop): state += 0x9E3779B97F4A7C15; z = state;
@@ -40,51 +38,6 @@ import graft.pipeline.Extract
   * 0]; then int(7) [+ word int(V) if 0]; int(11).
   */
 object MediaTextQ {
-
-  /** The classifier vocabulary (MediaOcr.vocab — spec-level constant;
-    * the spec asserts the two stay identical). */
-  private[queries] val Vocab: Array[String] = graft.layout.MediaOcr.vocab
-
-  // ---- Scala reference machine (independent of classify/assembly) ----
-
-  /** Predicted stitched text for one media_ref — the same state machine
-    * the SQL oracle runs, in plain Scala. MediaTextSpec pins
-    * predictMediaText(ref) == SpanExtract.extractSpanText("media",_,ref)
-    * so the law (not just the SQL) is verified against the pipeline. */
-  def predictMediaText(ref: String): String = {
-    var state = graft.layout.MediaOcr.hash64(ref)
-    def next(): Long = {
-      state += 0x9E3779B97F4A7C15L
-      var z = state
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
-    def int(n: Int): Int = Math.floorMod(next(), n.toLong).toInt
-    val sb = new StringBuilder
-    int(4) // pageLang
-    val nBlocks = 1 + int(3)
-    for (_ <- 0 until nBlocks) {
-      val nParas = 1 + int(2)
-      for (_ <- 0 until nParas) {
-        val nLines = 1 + int(3)
-        for (_ <- 0 until nLines) {
-          val nTokens = 2 + int(6)
-          for (_ <- 0 until nTokens) {
-            sb.append(Vocab(int(Vocab.length))).append(' ')
-            int(50) // confidence
-            if (int(5) == 0) int(4) // token language
-          }
-          if (int(4) == 0) int(4) // line language
-          sb.append('\n')
-        }
-      }
-    }
-    if (int(7) == 0) sb.append(Vocab(int(Vocab.length))).append(' ').append('\n')
-    if (int(11) == 0) sb.append("orphan line \n")
-    sb.append("\n\n")
-    sb.toString
-  }
 
   // ---- the Spark queries ----
 
@@ -142,8 +95,8 @@ object MediaTextQ {
   private[queries] def machineCtes(refExpr: String, kindFilter: String): String = {
     val (z1, z2, rout) = routSql
     def d(n: Int) = floorModSql("rout", n)
-    val vocabList = Vocab.map(w => s"'$w'").mkString("[", ", ", "]")
-    val word = s"list_extract($vocabList, CAST(${d(Vocab.length)} AS INT) + 1)"
+    val vocabList = MediaOcr.vocab.map(w => s"'$w'").mkString("[", ", ", "]")
+    val word = s"list_extract($vocabList, CAST(${d(MediaOcr.vocab.length)} AS INT) + 1)"
     val tokEnd = s"((phase = 'TL' AND ${d(5)} <> 0) OR phase = 'TL2')"
     val lineEnd = s"((phase = 'LL' AND ${d(4)} <> 0) OR phase = 'LL2')"
     // NB draws int(3), NP int(2), NL int(3), NT int(6)

@@ -1,6 +1,11 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicReference
+
+import org.scalatest.concurrent.{Signaler, ThreadSignaler}
+import org.scalatest.concurrent.TimeLimits.failAfter
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import graft.html.{Boilerplate, HtmlDom}
 
@@ -72,5 +77,26 @@ class BoilerplateSpec extends AnyFunSuite {
   test("deterministic: same input -> same output") {
     val a = Boilerplate.extractMainText(page)
     assert((1 to 5).forall(_ => Boilerplate.extractMainText(page) == a))
+  }
+
+  test("100k nested <div> on a 1 MiB-stack thread: no StackOverflowError, paragraph kept") {
+    // a Spark task thread has the JVM default 1 MiB stack; the walk must
+    // not spend it per nesting level
+    val para = Seq.fill(20)("word").mkString(" ") + "!"
+    assert(para.length == 100)
+    val html = "<div>" * 100000 + s"<p>$para</p>" + "</div>" * 100000
+    val result = new AtomicReference[Either[Throwable, String]]()
+    val t = new Thread(null, () =>
+      result.set(try Right(Boilerplate.extractMainText(html)) catch { case e: Throwable => Left(e) }),
+      "deep-html", 1L << 20)
+    implicit val signaler: Signaler = ThreadSignaler
+    failAfter(Span(10, Seconds)) {
+      t.start()
+      t.join()
+    }
+    result.get match {
+      case Left(e) => fail(s"extractMainText threw $e")
+      case Right(out) => assert(out == para)
+    }
   }
 }

@@ -91,6 +91,9 @@ class DedupClusterSpec extends AnyFunSuite {
   test("one Spark job per propagation iteration (lazy checkpoint + fused convergence count)") {
     // warm the memoized bands + edges lineage out of the measurement
     DedupQ.qDedupCluster(spark, dir).count()
+    // let the async listener bus drain the warm-up count's event first:
+    // a listener registered while it is still queued counts it too
+    Thread.sleep(500)
 
     // Count ACTIONS (QueryExecutionListener), not Spark jobs: broadcast
     // exchanges and AQE stages each run helper jobs, so job count is a

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.DedupQ
@@ -48,28 +49,34 @@ class DupProfileSpec extends AnyFunSuite {
     // exact duplicates of its own
     val exact = DedupQ.qDedupExact(spark, dir).collect().map(_.getLong(2))
     assert(exact.forall(_ == 1L), "corpus gained natural exact dups")
-    // second precondition (round-5 ADVICE): the injected upper-case tier
-    // relies on Spark upper() (Java full case mapping) and DuckDB upper()
-    // (utf8proc simple mapping) agreeing — they diverge on full-casing
-    // characters (ß -> SS, fi-ligatures, final sigma, İ/ı, ŉ, ǰ). Pin
-    // that no doc_id % 7 == 0 document contains one.
-    val fullCasing = "[ßﬁﬂﬀﬃﬄﬆςŉǰİı]".r
-    val risky = spark.read.parquet(s"$dir/documents.parquet")
-      .filter(org.apache.spark.sql.functions.col("doc_id") % 7 === 0)
-      .select("text").collect()
-      .count(r => fullCasing.findFirstIn(r.getString(0)).isDefined)
-    assert(risky == 0, s"$risky doc_id%7 docs contain full-casing chars — " +
-      "Spark/DuckDB upper() would diverge on the injected tier")
-    // third precondition (round-5 ADVICE #2): NULL text diverges between
-    // the engines — the Spark side drops NULL fingerprints via
-    // fp.isNotNull while the frozen oracle's GROUP BY fp would keep a
-    // NULL-fingerprint cluster. Pin that the corpus has no NULL text so
-    // the divergence stays vacuous (the oracle SQL is a frozen surface;
-    // this assert is the guard the ADVICE asked for).
-    val nullText = spark.read.parquet(s"$dir/documents.parquet")
-      .filter(org.apache.spark.sql.functions.col("text").isNull).count()
-    assert(nullText == 0, s"$nullText NULL-text docs — q_dup_profile's " +
-      "Spark/DuckDB NULL-fingerprint handling would diverge")
+    // second and third preconditions (round-5 ADVICE), pinned at every
+    // scale beside `dir` (every sf* corpus), not only the one this
+    // histogram uses:
+    //  - the injected upper-case tier relies on Spark upper() (Java full
+    //    case mapping) and DuckDB upper() (utf8proc simple mapping)
+    //    agreeing — they diverge on full-casing characters (ß -> SS,
+    //    fi-ligatures, final sigma, İ/ı, ŉ, ǰ). Pin that no
+    //    doc_id % 7 == 0 document contains one.
+    //  - NULL text diverges between the engines — the Spark side drops
+    //    NULL fingerprints via fp.isNotNull while the frozen oracle's
+    //    GROUP BY fp would keep a NULL-fingerprint cluster. Pin that the
+    //    corpus has no NULL text so the divergence stays vacuous (the
+    //    oracle SQL is a frozen surface; this assert is the guard the
+    //    ADVICE asked for).
+    val scales = Option(new java.io.File(dir).getParentFile.listFiles()).toSeq.flatten
+      .filter(f => f.getName.startsWith("sf") && new java.io.File(f, "documents.parquet").exists)
+      .map(_.getPath).sorted
+    assert(scales.contains(dir), s"no documents.parquet under $dir")
+    scales.foreach { sf =>
+      val docs = spark.read.parquet(s"$sf/documents.parquet")
+      val risky = docs.filter(col("doc_id") % 7 === 0 && col("text").rlike("[ßﬁﬂﬀﬃﬄﬆςŉǰİı]")).count()
+      assert(risky == 0, s"$sf: $risky doc_id%7 docs contain full-casing chars — " +
+        "Spark/DuckDB upper() would diverge on the injected tier")
+      val nullText = docs.filter(col("text").isNull).count()
+      assert(nullText == 0, s"$sf: $nullText NULL-text docs — q_dup_profile's " +
+        "Spark/DuckDB NULL-fingerprint handling would diverge")
+    }
+    info(s"preconditions hold at ${scales.length} scales: ${scales.map(new java.io.File(_).getName).mkString(", ")}")
     val ids = spark.read.parquet(s"$dir/documents.parquet")
       .select("doc_id").collect().map(_.getLong(0))
     val n3 = ids.count(_ % 21 == 0).toLong            // base + upper + spaced

@@ -2,42 +2,77 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.SpanExtract
-import graft.queries.MediaTextQ
+import graft.hocr.{Hocr, HocrText}
+import graft.layout.{Assembly, MediaOcr, RuneIndex}
 
-/** The media-text stitch LAW behind q_extract_media_text's oracle:
-  * MediaTextQ.predictMediaText (the plain state machine the DuckDB
-  * recursive CTE also runs) must equal the REAL pipeline — classify ->
-  * G-13 assembly -> H-13 stitch — for every ref. 4,000 refs in the
-  * corpus's own shape make both edge branches (orphan paragraph ~1/7,
-  * orphan line ~1/11) fire hundreds of times; a divergence in draw
-  * order, containment, cleaning, or separators shifts every subsequent
-  * draw and fails in bulk, not by luck. */
+/** The media-text stitch LAW that media extraction runs and the
+  * q_extract_media_text oracle simulates: MediaOcr.text must equal the
+  * MODEL path it replaces — classify -> G-13 assembly -> H-13 stitch —
+  * for every ref. 100k refs in four shapes (the corpus's img://hex16,
+  * CorpusGen's pdf://doc/i, random Unicode, short ASCII) plus "" make
+  * both edge branches (orphan paragraph ~1/7, orphan line ~1/11) and the
+  * non-BMP word fire thousands of times; a divergence in draw order,
+  * containment, cleaning, or separators shifts every subsequent draw and
+  * fails in bulk, not by luck. */
 class MediaTextSpec extends AnyFunSuite {
 
-  test("predictMediaText == classify+assembly+stitch on 4,000 corpus-shaped refs") {
+  private def model(ref: String): String = {
+    val r = MediaOcr.classify(ref)
+    val page = Assembly.createHocrPage(r.page, new RuneIndex(r.text), 1)
+    HocrText.extractText(Hocr(pages = Vector(page)))
+  }
+
+  /** A random string of valid code points, BMP and supplementary. */
+  private def unicode(rnd: java.util.Random): String = {
+    val sb = new java.lang.StringBuilder
+    (0 until rnd.nextInt(24)).foreach { _ =>
+      var cp = rnd.nextInt(0x30000)
+      while (cp >= 0xD800 && cp <= 0xDFFF) cp = rnd.nextInt(0x30000)
+      sb.appendCodePoint(cp)
+    }
+    sb.toString
+  }
+
+  private val Fraktur = "𝔤𝔯𝔞𝔣𝔱"
+
+  test("MediaOcr.text == classify+assembly+stitch on 100k refs in four shapes (edges fired)") {
+    val rnd = new java.util.Random(20261017L)
+    val refs = Iterator.single("") ++ (0 until 25000).iterator.flatMap { i =>
+      Seq(f"img://${MediaOcr.hash64(s"spec:$i")}%016x", s"pdf://${i / 7}/${i % 7}",
+        unicode(rnd), "x" + i)
+    }
+    var n = 0
     var orphanParas = 0
     var orphanLines = 0
-    (0 until 4000).foreach { i =>
-      val ref = f"img://${graft.layout.MediaOcr.hash64(s"spec:$i")}%016x"
-      val real = SpanExtract.extractSpanText("media", null, ref)
-      val predicted = MediaTextQ.predictMediaText(ref)
-      assert(predicted == real, s"ref=$ref\npredicted=<$predicted>\nreal=<$real>")
-      // count edge coverage on the REAL output so the law is exercised
-      if (real.contains("orphan line \n")) orphanLines += 1
-      val lines = real.split("\n", -1)
-      if (lines.length >= 4 && lines(lines.length - 4).count(_ == ' ') == 1) orphanParas += 1
+    var nonBmp = 0
+    refs.foreach { ref =>
+      val real = model(ref)
+      val law = MediaOcr.text(ref)
+      assert(law == real, s"ref=$ref\nlaw=<$law>\nreal=<$real>")
+      n += 1
+      // edge coverage, counted on the model output: the orphan line is
+      // the only "orphan" word; the orphan paragraph is the only one-word
+      // line (a block line has 2-7 words)
+      val lines = real.stripSuffix("\n\n").split("\n").toSeq
+      if (lines.last == "orphan line ") orphanLines += 1
+      if (lines.filterNot(_ == "orphan line ").last.count(_ == ' ') == 1) orphanParas += 1
+      if (real.contains(Fraktur)) nonBmp += 1
     }
-    assert(orphanLines > 100, s"orphan-line branch fired only $orphanLines times")
+    assert(n == 100001)
+    info(s"$n refs: orphan paragraph $orphanParas, orphan line $orphanLines, non-BMP word $nonBmp")
+    assert(orphanParas >= 100, s"orphan-paragraph branch fired only $orphanParas times")
+    assert(orphanLines >= 100, s"orphan-line branch fired only $orphanLines times")
+    assert(nonBmp >= 100, s"non-BMP word appeared in only $nonBmp texts")
   }
 
   test("non-BMP vocabulary word survives the stitch byte-for-byte") {
     // find a ref whose text contains the plane-1 Fraktur word and pin it:
     // any UTF-16/codepoint slip in RuneIndex/cleaning corrupts the match
-    val hit = (0 until 3000).map(i => f"img://${graft.layout.MediaOcr.hash64(s"bmp:$i")}%016x")
-      .find(r => SpanExtract.extractSpanText("media", null, r).contains("𝔤"))
+    val hit = (0 until 3000).map(i => f"img://${MediaOcr.hash64(s"bmp:$i")}%016x")
+      .find(r => model(r).contains(Fraktur))
     assert(hit.nonEmpty, "no ref produced the Fraktur word in 3,000 tries")
     val ref = hit.get
-    assert(MediaTextQ.predictMediaText(ref) == SpanExtract.extractSpanText("media", null, ref))
+    assert(MediaOcr.text(ref) == model(ref))
+    assert(MediaOcr.text(ref).split("[ \n]").contains(Fraktur))
   }
 }

@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fixtures.CorpusGen
+import graft.layout.MediaOcr
 import graft.pipeline.SpanExtract
-import graft.queries.{HtmlTextQ, MediaTextQ}
+import graft.queries.HtmlTextQ
 
 /** The two text LAWS behind q_extract_html_text / q_extract_pdf_text
   * (and the capstone q_extract_span_equality):
@@ -15,8 +16,8 @@ import graft.queries.{HtmlTextQ, MediaTextQ}
   *    generates. Both data-dependent branches (h%3 ads div, h%2 second
   *    paragraph) must fire in bulk: the ads branch exercises the
   *    link-density drop, the second paragraph the block join.
-  *  - pdf_layout: MediaTextQ.predictMediaText("pdf://<doc>/<i>") — the
-  *    same Rng machine as media, different seed — must equal the REAL
+  *  - pdf_layout: MediaOcr.text("pdf://<doc>/<i>") — the media stitch
+  *    law, different seed — must equal the REAL
   *    round-trip: CorpusGen renders genuine hOCR XHTML from the
   *    classifier page and extraction does HocrParse -> H-13 stitch. Any
   *    loss in render -> parse (entity escaping, line IDs, bbox fields,
@@ -63,7 +64,7 @@ class SpanTextSpec extends AnyFunSuite {
     assert(second > 100, s"second-paragraph branch fired only $second times")
   }
 
-  test("predictMediaText(pdf://) == render -> parse -> stitch on every generated pdf span") {
+  test("MediaOcr.text(pdf://) == render -> parse -> stitch on every generated pdf span") {
     var pdfSpans = 0
     (0 until 300).foreach { d =>
       val docId = d.toLong
@@ -72,7 +73,7 @@ class SpanTextSpec extends AnyFunSuite {
         if (sp.kind == "pdf_layout") {
           pdfSpans += 1
           val real = SpanExtract.extractSpanText("pdf_layout", sp.text, "")
-          val predicted = MediaTextQ.predictMediaText(s"pdf://$docId/$i")
+          val predicted = MediaOcr.text(s"pdf://$docId/$i")
           assert(predicted == real,
             s"doc=$docId span=$i\npredicted=<$predicted>\nreal=<$real>")
         }
