@@ -25,18 +25,38 @@ object HocrParse {
   }
 
   /** findPages (parse.go:55-77): `div.ocr_page` elements in document
-    * order; recursive, early-return per page subtree (a page nested in a
-    * page is not a page of its own). */
+    * order; early-return per page subtree (a page nested in a page is not
+    * a page of its own). */
   private[hocr] def pageNodes(dom: Node): ArrayBuffer[Node] = {
     val pages = ArrayBuffer.empty[Node]
-    def findPages(n: Node): Unit = {
-      if (n.nodeType == ElementNode && n.data == "div" &&
-          n.attr("class").contains("ocr_page")) {
-        pages += n
-      } else n.children.foreach(findPages)
-    }
-    findPages(dom)
+    def isPage(n: Node): Boolean =
+      n.nodeType == ElementNode && n.data == "div" && n.attr("class").contains("ocr_page")
+    if (isPage(dom)) pages += dom
+    else preOrder(dom) { n => if (isPage(n)) { pages += n; false } else true }
     pages
+  }
+
+  /** The pre-order walk of every recursive DOM search in this file (the
+    * reference recurses, parse.go): `visit` sees `root`'s descendants in
+    * document order and returns whether to descend into the node it was
+    * given. It runs on an explicit stack, so nesting depth costs heap,
+    * not thread stack (a Spark task thread has 1 MiB). */
+  private def preOrder(root: Node)(visit: Node => Boolean): Unit = {
+    var stack = new Array[Node](16)
+    var top = 0
+    def pushChildren(n: Node): Unit = {
+      val cs = n.children
+      if (top + cs.length > stack.length)
+        stack = java.util.Arrays.copyOf(stack, math.max(2 * stack.length, top + cs.length))
+      var i = cs.length - 1
+      while (i >= 0) { stack(top) = cs(i); top += 1; i -= 1 }
+    }
+    pushChildren(root)
+    while (top > 0) {
+      top -= 1
+      val n = stack(top)
+      if (visit(n)) pushChildren(n)
+    }
   }
 
   /** ParseTitle (parse.go:87-105): split on ';', TrimSpace, Fields;
@@ -94,12 +114,14 @@ object HocrParse {
     }
 
     // findHead (parse.go:124-135): first head element, DFS.
-    def findHead(n: Node): Option[Node] =
-      if (n.nodeType == ElementNode && n.data == "head") Some(n)
-      else n.children.iterator.map(findHead).collectFirst { case Some(h) => h }
+    var head: Option[Node] = None
+    preOrder(doc) { c =>
+      if (head.isEmpty && c.isElem("head")) head = Some(c)
+      head.isEmpty
+    }
 
-    findHead(doc).foreach { head =>
-      head.children.foreach { c =>
+    head.foreach { h =>
+      h.children.foreach { c =>
         if (c.nodeType == ElementNode) c.data match {
           case "title" =>
             c.children.headOption.foreach { fc =>
@@ -137,20 +159,13 @@ object HocrParse {
     * `class` attribute contains, and its subtree is not descended. */
   private[hocr] def collectByClass(parent: Node, classes: Array[String]): Array[ArrayBuffer[Node]] = {
     val buckets = Array.fill(classes.length)(new ArrayBuffer[Node](4))
-    def walk(node: Node): Unit = {
-      if (node.nodeType == ElementNode) {
-        val cls = node.attr("class")
-        if (cls.nonEmpty) {
-          var bi = 0
-          while (bi < classes.length) {
-            if (cls.contains(classes(bi))) { buckets(bi) += node; return }
-            bi += 1
-          }
-        }
-      }
-      node.children.foreach(walk)
+    preOrder(parent) { node =>
+      val cls = if (node.nodeType == ElementNode) node.attr("class") else ""
+      var bi = 0
+      if (cls.isEmpty) bi = classes.length
+      else while (bi < classes.length && !cls.contains(classes(bi))) bi += 1
+      if (bi < classes.length) { buckets(bi) += node; false } else true
     }
-    parent.children.foreach(walk)
     buckets
   }
 
@@ -158,12 +173,11 @@ object HocrParse {
     * only at ocrx_word nodes. */
   private[hocr] def lineWordNodes(line: Node): ArrayBuffer[Node] = {
     val words = new ArrayBuffer[Node](8)
-    def extractWords(node: Node): Unit = {
-      if (node.nodeType == ElementNode && node.attr("class").contains("ocrx_word")) {
-        words += node
-      } else node.children.foreach(extractWords)
+    preOrder(line) { node =>
+      val word = node.nodeType == ElementNode && node.attr("class").contains("ocrx_word")
+      if (word) words += node
+      !word
     }
-    line.children.foreach(extractWords)
     words
   }
 
@@ -306,12 +320,52 @@ object HocrParse {
     * TrimSpace at every level (inner trims, then outer trims the concat —
     * inter-element spaces are dropped). Single-text-child fast path (the
     * overwhelmingly common word shape): trim(trim(x)) == trim(x), so the
-    * builder is skipped. */
+    * walk is skipped. The walk runs on an explicit stack with one shared
+    * builder: an element's text is the builder's tail from where the
+    * element opened, trimmed when the element closes. */
   def extractTextContent(n: Node): String = {
     if (n.nodeType == TextNode) return GoStrings.trimSpace(n.data)
-    if (n.children.length == 1) return GoStrings.trimSpace(extractTextContent(n.children(0)))
+    if (n.children.length == 1 && n.children(0).nodeType == TextNode)
+      return GoStrings.trimSpace(n.children(0).data)
     val sb = new java.lang.StringBuilder
-    n.children.foreach(c => sb.append(extractTextContent(c)))
-    GoStrings.trimSpace(sb.toString)
+    var nodes = new Array[Node](16)
+    var next = new Array[Int](16) // the open element's next child
+    var from = new Array[Int](16) // where the open element's text starts
+    var top = 0
+    def open(e: Node): Unit = {
+      if (top == nodes.length) {
+        nodes = java.util.Arrays.copyOf(nodes, 2 * top)
+        next = java.util.Arrays.copyOf(next, 2 * top)
+        from = java.util.Arrays.copyOf(from, 2 * top)
+      }
+      nodes(top) = e; next(top) = 0; from(top) = sb.length; top += 1
+    }
+    open(n)
+    while (top > 0) {
+      val e = nodes(top - 1)
+      if (next(top - 1) < e.children.length) {
+        val c = e.children(next(top - 1))
+        next(top - 1) += 1
+        if (c.nodeType == TextNode) {
+          val t = c.data
+          var i = 0
+          var j = t.length
+          while (i < j && GoStrings.isSpace(t.charAt(i))) i += 1
+          while (j > i && GoStrings.isSpace(t.charAt(j - 1))) j -= 1
+          sb.append(t, i, j)
+        } else open(c)
+      } else {
+        // trim the closing element's text in place
+        top -= 1
+        val start = from(top)
+        var j = sb.length
+        while (j > start && GoStrings.isSpace(sb.charAt(j - 1))) j -= 1
+        sb.setLength(j)
+        var i = start
+        while (i < j && GoStrings.isSpace(sb.charAt(i))) i += 1
+        sb.delete(start, i)
+      }
+    }
+    sb.toString
   }
 }

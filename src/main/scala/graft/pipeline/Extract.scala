@@ -2,12 +2,13 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{ColumnBridge, ExtractSpanSeq}
 
 /** The distributed extraction job (SURVEY.md §3.4).
   *
   * Plan: every input row is extracted inside its scan row
-  * ([[extractInRow]]: `transform` over the span array, order = base +
-  * array index), so extraction fuses into the scan on both layouts.
+  * ([[extractInRow]]: one `extract_span_seq` call per row, order = base
+  * + array index), so extraction never leaves the row on either layout.
   *
   *   single-row layout (doc_id, spans):
   *     scan -> extractInRow                       no exchange
@@ -30,18 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object Extract {
 
-  /** The one extraction UDF of [[extractInRow]]. */
-  private val extractUdf =
-    udf((kind: String, text: String, mediaRef: String) =>
-      SpanExtract.extractSpanText(kind, text, mediaRef))
-
-  /** The kinds SpanExtract transforms; every other kind passes through
-    * unchanged (SpanExtract's `case _ => text`), so the plan routes only
-    * these through the opaque UDF — pass-through spans stay inside
-    * whole-stage codegen instead of paying a serialize/deserialize hop.
-    * Single source of truth for batch AND streaming extraction. */
-  val ExtractedKinds = Seq("html", "pdf_layout", "media")
-
   /** Spans per storage part in the PRE-SPLIT layout — (doc_id, part_idx,
     * spans, n_spans) with fixed-size chunks, written by
     * [[graft.fixtures.CorpusGen.preSplit]]. A 100k-span doc stored as ONE
@@ -50,25 +39,21 @@ object Extract {
     * itself parallelizes. */
   val PartSize: Int = 1024
 
-  /** Row-local extraction and stitch: `transform` with the index lambda
-    * assigns `order` = `base` + array position, and the extraction UDF
-    * fires only for the extracted kinds. `base` is 0 for a row that
-    * holds a whole doc and part_idx * PartSize for a pre-split part row.
-    * Every path of [[run]] and [[extractSpans]], and the streaming
-    * flagship (StreamingOps.extractStream) — batch and stream are two
-    * execution modes of this one definition. Rows with no spans yield no
-    * row. */
+  private val hasSpans: Column = size(col("spans")) > 0
+
+  /** Row-local extraction and stitch: one [[ExtractSpanSeq]] per row
+    * runs SpanExtract over the extracted kinds, passes every other span
+    * through and assigns `order` = `base` + array position. `base` is 0
+    * for a row that holds a whole doc and part_idx * PartSize for a
+    * pre-split part row. Every path of [[run]], the resumable sink and
+    * the streaming flagship (StreamingOps.extractStream) — batch and
+    * stream are two execution modes of this one definition. Rows with
+    * no spans yield no row. */
   private[graft] def extractInRow(rows: DataFrame, base: Column = lit(0)): DataFrame =
-    rows
-      .filter(size(col("spans")) > 0)
-      .select(col("doc_id"), transform(col("spans"),
-        (s, i) => struct(
-          s.getField("kind").as("kind"),
-          when(s.getField("kind").isin(ExtractedKinds: _*),
-              extractUdf(s.getField("kind"), s.getField("text"), s.getField("media_ref")))
-            .otherwise(s.getField("text")).as("text"),
-          s.getField("media_ref").as("media_ref"),
-          (base + i).as("order"))).as("span_seq"))
+    rows.filter(hasSpans).select(col("doc_id"), spanSeq(base).as("span_seq"))
+
+  private def spanSeq(base: Column): Column =
+    ColumnBridge.of(ExtractSpanSeq(ColumnBridge.expr(col("spans")), ColumnBridge.expr(base)))
 
   private def isPreSplit(input: DataFrame): Boolean = input.columns.contains("part_idx")
 
@@ -76,12 +61,16 @@ object Extract {
   private val partBase: Column = col("part_idx").cast("int") * PartSize
 
   /** Per-span extraction, one row per span (doc_id, kind, text,
-    * media_ref, order): [[extractInRow]] on every input row, then
-    * `inline`. No exchange on either layout; on the pre-split layout
-    * `order` is the GLOBAL position. */
+    * media_ref, order): the span law of [[extractInRow]] on every input
+    * row, exploded by `inline`. No exchange on either layout; on the
+    * pre-split layout `order` is the GLOBAL position. `inline` takes the
+    * expression itself, not a `span_seq` column: over a column the
+    * optimizer infers `size(span_seq) > 0 AND span_seq IS NOT NULL` for
+    * the generator and pushes that filter below the projection, so the
+    * plan holds three copies of the extraction per row. */
   def extractSpans(input: DataFrame): DataFrame =
-    extractInRow(input, if (isPreSplit(input)) partBase else lit(0))
-      .select(col("doc_id"), inline(col("span_seq")))
+    input.filter(hasSpans)
+      .select(col("doc_id"), inline(spanSeq(if (isPreSplit(input)) partBase else lit(0))))
 
   /** Full job: (doc_id, spans) -> (doc_id, span_seq) sorted by `order`.
     *
@@ -96,13 +85,12 @@ object Extract {
     if (!isPreSplit(input)) return extractInRow(input)
     val onePart = col("n_spans") <= PartSize
     // a part's run starts at order part_idx * PartSize, so sorting the
-    // runs by their first order sorts them by part
+    // (first, run) pairs sorts the runs by part
     val merged = extractInRow(input.filter(!onePart), partBase)
       .groupBy(col("doc_id"))
-      .agg(flatten(transform(
-        array_sort(collect_list(struct(
-          col("span_seq")(0)("order").as("first"), col("span_seq").as("run")))),
-        (r: Column) => r.getField("run"))).as("span_seq"))
+      .agg(flatten(sort_array(collect_list(struct(
+        col("span_seq")(0)("order").as("first"), col("span_seq").as("run"))))("run"))
+        .as("span_seq"))
     extractInRow(input.filter(onePart)).unionAll(merged)
   }
 

@@ -17,18 +17,32 @@ import graft.layout.MediaOcr
   *                        call G-22), pinned equal to classify -> G-13
   *                        -> H-13 by MediaTextSpec
   * other kinds pass through unchanged.
+  *
+  * Spark runs this per span inside one native expression that every
+  * Extract path uses (org.apache.spark.sql.graft.ExtractSpanSeq): it
+  * calls [[extractSpanText]] only for the [[TransformedKinds]] and hands
+  * every other span's text through as the same UTF8String, never
+  * converting it to a String.
   */
 object SpanExtract {
+
+  final val Html = "html"
+  final val PdfLayout = "pdf_layout"
+  final val Media = "media"
+
+  /** The kinds [[extractSpanText]] transforms; every other kind's text
+    * passes through unchanged (`case _ => text`). */
+  val TransformedKinds: Array[String] = Array(Html, PdfLayout, Media)
 
   def extractSpanText(kind: String, text: String, mediaRef: String): String = kind match {
     // NULL span fields degrade like parse failures do (yield ""), never
     // NPE the task: nullable parquet from an external writer must not
     // kill the batch job or the shared streaming query
-    case "html" =>
+    case Html =>
       if (text == null) "" else Boilerplate.extractMainText(text)
-    case "pdf_layout" =>
+    case PdfLayout =>
       if (text == null) "" else HocrText.fromMarkup(text)
-    case "media" =>
+    case Media =>
       if (mediaRef == null) "" else MediaOcr.text(mediaRef)
     case _ => text
   }

@@ -82,7 +82,8 @@ object StreamingOps {
     * corpus table (readStream -> extract -> append sink). Each arriving
     * row is a COMPLETE (doc_id, spans) document, so extraction and the
     * stitch run inside the row — the same [[graft.pipeline.Extract.extractInRow]]
-    * that batch runs for every single-row doc — and the query is STATELESS
+    * (one `extract_span_seq` call per row, the expression batch runs for
+    * every single-row doc) — and the query is STATELESS
     * append: no state store, no watermark, exactly-once from the source
     * checkpoint. (Mega-docs arrive as one row each; micro-batch sizing
     * bounds them — the batch engine's pre-split layout is for backfills,

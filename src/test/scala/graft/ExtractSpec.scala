@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, LambdaFunction, ScalaUDF}
+import org.apache.spark.sql.graft.ExtractSpanSeq
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -99,6 +101,28 @@ class ExtractSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // per-span extraction never shuffles, on either layout
     assert(exchanges(Extract.extractSpans(withMultiPart(input))) == 0)
     assert(exchanges(Extract.extractSpans(CorpusGen.preSplit(withMultiPart(input)))) == 0)
+  }
+
+  test("executed plans: one extract_span_seq per branch, in whole-stage codegen, no lambda, no ScalaUDF") {
+    val input = withMultiPart(CorpusGen.fromDocuments(spark, "/root/testdata/sf0.001"))
+    // stored parts, as the resumable sink reads them: the plan holds only
+    // Extract's expressions, not preSplit's
+    val pre = CorpusGen.preSplit(input).localCheckpoint()
+    Seq("run single-row" -> Extract.run(input), "run pre-split" -> Extract.run(pre),
+        "extractSpans single-row" -> Extract.extractSpans(input),
+        "extractSpans pre-split" -> Extract.extractSpans(pre)).foreach { case (what, df) =>
+      df.collect()
+      val exprs = collect(df.queryExecution.executedPlan)(_.expressions).flatten.flatMap(_.collect {
+        case e @ (_: ArrayTransform | _: LambdaFunction | _: ScalaUDF | _: ExtractSpanSeq) => e
+      })
+      assert(!exprs.exists(!_.isInstanceOf[ExtractSpanSeq]), s"$what: ${exprs.mkString(", ")}")
+      // the pre-split run extracts in both of its union branches
+      assert(exprs.size == (if (what == "run pre-split") 2 else 1), s"$what: ${exprs.mkString(", ")}")
+      // an operator inside a whole-stage-codegen stage prints as *(n)
+      val holders = stripAQEPlan(df.queryExecution.executedPlan).toString.split("\n")
+        .filter(_.contains("extract_span_seq")).map(_.dropWhile(" :+-".contains(_)))
+      assert(holders.nonEmpty && holders.forall(_.startsWith("*(")), s"$what: ${holders.mkString("; ")}")
+    }
   }
 
   test("hostile spans: malformed html/hOCR, empty docs, weird kinds survive") {
