@@ -2,6 +2,7 @@ package graft.html
 
 import java.util.Locale
 
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 /** Minimal HTML DOM for the extraction engine.
@@ -124,6 +125,13 @@ object HtmlDom {
     def top: Node = stack.last
     val n = input.length
     var i = 0
+    // Open elements per tag name, so an end tag that closes nothing is
+    // rejected without scanning the stack (N stray end tags under N open
+    // elements were quadratic). Built on the first end tag that does not
+    // close the top element: well-formed markup never allocates it.
+    var open: mutable.HashMap[String, Int] = null
+    def count(tag: String, d: Int): Unit = open(tag) = open.getOrElse(tag, 0) + d
+    def pop(): Unit = { if (open != null) count(top.data, -1); stack.dropRightInPlace(1) }
 
     def emitText(start: Int, end: Int): Unit =
       if (end > start)
@@ -153,9 +161,17 @@ object HtmlDom {
             val name = lowerAscii((if (end < 0) input.substring(lt + 2)
                         else input.substring(lt + 2, end)).trim)
             // pop until a matching open element; ignore stray end tags
-            var k = stack.length - 1
-            while (k > 0 && stack(k).data != name) k -= 1
-            if (k > 0) stack.dropRightInPlace(stack.length - k)
+            if (stack.length > 1 && top.data == name) pop()
+            else {
+              if (open == null) {
+                open = mutable.HashMap.empty
+                stack.iterator.drop(1).foreach(e => count(e.data, 1))
+              }
+              if (open.getOrElse(name, 0) > 0) {
+                while (top.data != name) pop()
+                pop()
+              }
+            }
             i = if (end < 0) n else end + 1
           case c if Character.isLetter(c) =>
             val (node, selfClosed, next) = parseTag(input, lt)
@@ -169,7 +185,10 @@ object HtmlDom {
                 if (end > i) node.children += leaf(TextNode, input.substring(i, end))
                 val gt = input.indexOf('>', end)
                 i = if (close < 0) n else (if (gt < 0) n else gt + 1)
-              } else stack += node
+              } else {
+                stack += node
+                if (open != null) count(tag, 1)
+              }
             }
           case _ =>
             // stray '<' — treat as text

@@ -10,9 +10,6 @@ package graft.model
 final case class Span(kind: String, text: String, media_ref: String, offset: Int)
 final case class Doc(doc_id: String, spans: Seq[Span])
 
-final case class OutSpan(kind: String, text: String, media_ref: String, order: Int)
-final case class OutDoc(doc_id: String, span_seq: Seq[OutSpan])
-
 /** Bounding box, (x1,y1)=top-left (x2,y2)=bottom-right.
   * Mirrors /root/reference/pkg/hocr/types.go:89-99. */
 final case class BBox(x1: Double, y1: Double, x2: Double, y2: Double)

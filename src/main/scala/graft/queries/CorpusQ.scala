@@ -276,12 +276,10 @@ object CorpusQ {
     * identical text in both engines. Output carries the exact distinct
     * alongside, so the correctness row also PINS the estimator's
     * accuracy on this data. */
-  /** Per-(source, bucket) HLL registers from any (source, text)
-    * relation — the m=32 deterministic sketch kernel, shared by the
-    * batch estimator and the streaming sketch ([[graft.streaming
-    * .StreamingOps.hllStream]]): register update is a MAX, so the
-    * streaming aggregation is bit-identical to the batch one. */
-  def hllRegisters(docs: DataFrame): DataFrame = {
+  /** One HLL cell per (source, text) row: the md5 fingerprint, its
+    * bucket (top 5 of 60 bits) and the rank of the other 55 — the
+    * projection both register aggregates below share. */
+  private def hllCells(docs: DataFrame): DataFrame = {
     val fp = graft.queries.DedupQ.exactFp(col("text"))
     val v = expr("CAST(conv(substr(fp, 1, 15), 16, 10) AS BIGINT)")
     docs
@@ -291,26 +289,23 @@ object CorpusQ {
         (v.bitwiseAND(lit((1L << 55) - 1))).as("w"))
       .withColumn("rho",
         when(col("w") === 0L, lit(56)).otherwise(lit(56) - length(bin(col("w")))))
-      .groupBy(col("source"), col("bucket")).agg(max(col("rho")).as("m"))
   }
+
+  /** Per-(source, bucket) HLL registers from any (source, text)
+    * relation — the m=32 deterministic sketch kernel of the streaming
+    * sketch ([[graft.streaming.StreamingOps.hllStream]]): register
+    * update is a MAX, so the streaming aggregation is bit-identical to
+    * the batch one ([[hllRegistersExact]]). */
+  def hllRegisters(docs: DataFrame): DataFrame =
+    hllCells(docs).groupBy(col("source"), col("bucket")).agg(max(col("rho")).as("m"))
 
   /** [[hllRegisters]] plus the per-bucket DISTINCT fingerprint count —
     * lets qApproxDistinct derive the exact NDV from the same single
     * scan (bucket = f(fp), so per-source NDV = SUM of per-bucket
     * distincts). */
-  private def hllRegistersExact(docs: DataFrame): DataFrame = {
-    val fp = graft.queries.DedupQ.exactFp(col("text"))
-    val v = expr("CAST(conv(substr(fp, 1, 15), 16, 10) AS BIGINT)")
-    docs
-      .select(col("source"), fp.as("fp"))
-      .select(col("source"), col("fp"),
-        shiftright(v, 55).as("bucket"),
-        (v.bitwiseAND(lit((1L << 55) - 1))).as("w"))
-      .withColumn("rho",
-        when(col("w") === 0L, lit(56)).otherwise(lit(56) - length(bin(col("w")))))
-      .groupBy(col("source"), col("bucket"))
+  private[graft] def hllRegistersExact(docs: DataFrame): DataFrame =
+    hllCells(docs).groupBy(col("source"), col("bucket"))
       .agg(max(col("rho")).as("m"), countDistinct(col("fp")).as("nfp"))
-  }
 
   /** The dataset "data card" — the one-table datasheet a corpus release
     * ships with: per SOURCE and as a grand TOTAL (one rollup — a single

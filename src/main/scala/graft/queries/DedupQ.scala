@@ -1088,8 +1088,8 @@ object DedupQ {
        |${simhashNeardupTail("sims", shr, xor)}""".stripMargin
 
   /** The 60-vote sims aggregation alone — the expensive single pass
-    * over the token stream (also probed standalone by SimhashProbe). */
-  private[graft] def simhash60Sims(s: SparkSession, dir: String): DataFrame = {
+    * over the token stream. */
+  private def simhash60Sims(s: SparkSession, dir: String): DataFrame = {
     documents(s, dir).createOrReplaceTempView("documents")
     s.sql(
       s"""WITH ${simhash60Votes(

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.MiningQ
+import graft.queries.{CorpusQ, MiningQ}
 import graft.streaming.StreamingOps
 
 /** Streaming Count-Min sketch == batch sketch over the same data,
@@ -86,6 +86,10 @@ class StreamingCmsSpec extends AnyFunSuite {
     val batch = StreamingOps.hllStream(docs.toDF("source", "text"))
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap
     assert(streamed == batch, "streaming registers must equal the batch sketch")
+    // and the registers of q_approx_distinct's own kernel on the same docs
+    val kernel = CorpusQ.hllRegistersExact(docs.toDF("source", "text"))
+      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap
+    assert(streamed == kernel, "streaming registers must equal q_approx_distinct's registers")
     assert(streamed.nonEmpty)
     assert(streamed.size <= 3 * 32)
   }
