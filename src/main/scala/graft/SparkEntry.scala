@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.fixtures.CorpusGen
 import graft.pipeline.Extract
+import graft.queries.Tables
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -80,7 +81,7 @@ object SparkEntry {
       // q_extract_flagship already measures that composition.
       "q_extract_text" -> ((s: SparkSession, dir: String) => {
         import org.apache.spark.sql.functions._
-        Extract.run(s.read.parquet(CorpusGen.materializedPreSplit(s, dir)))
+        Extract.run(Tables.preSplit(s, dir))
           .select(col("doc_id"), posexplode(col("span_seq")).as(Seq("pos", "sp")))
           .select(col("doc_id"), col("sp.order").as("span_order"),
             col("sp.kind").as("kind"), col("sp.text").as("text"),
@@ -147,11 +148,11 @@ object SparkEntry {
       // layout like q_extract_text — identical output, and the battery
       // measures the extract->curate composition, not corpus synthesis.
       "q_extract_curate" -> ((s: SparkSession, dir: String) =>
-        Extract.extractCurate(s.read.parquet(CorpusGen.materializedPreSplit(s, dir)))))
+        Extract.extractCurate(Tables.preSplit(s, dir))))
 
   /** Page table derived distributively from documents (1-4 pages/doc). */
   private def pagesTable(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables.documents(s, dir)
       .selectExpr("doc_id", "explode(sequence(0, CAST(doc_id % 3 AS INT))) AS page_idx")
       .selectExpr("CAST(doc_id AS STRING) AS doc_id", "page_idx",
         "concat('img://page/', doc_id, '/', page_idx) AS media_ref")

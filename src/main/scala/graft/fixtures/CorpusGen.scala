@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.hocr.HocrRender
 import graft.layout.{Assembly, MediaOcr, RuneIndex}
 import graft.model.{Doc, Span}
+import graft.queries.Tables
 
 /** Deterministic synthesis of the interleaved input table
   * (doc_id, spans[kind,text,media_ref,offset]) — BASELINE.json input_hint —
@@ -82,7 +83,7 @@ object CorpusGen {
   /** Build the corpus Dataset from a scale-factor directory. */
   def fromDocuments(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    spark.read.parquet(s"$sfDir/documents.parquet")
+    Tables.documents(spark, sfDir)
       .select("doc_id", "text")
       .as[(Long, String)]
       .map { case (id, text) => genDoc(id, text) }

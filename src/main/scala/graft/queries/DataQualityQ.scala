@@ -5,6 +5,8 @@ import java.nio.file.Paths
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import Tables.documents
+
 /** Pipeline-reliability operators (engine-side additions, SURVEY.md
   * §2.F/G): a declarative data-quality check suite (the Deequ/
   * expectations pattern), a JSONL sink→source round-trip through
@@ -19,9 +21,6 @@ import org.apache.spark.sql.functions._
   * independent prediction, never an accident of the generator).
   */
 object DataQualityQ {
-
-  private def documents(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   // ---------------------------------------------------------------------
   // q_dq_checks — declarative constraint validation with planted bad rows
@@ -43,7 +42,7 @@ object DataQualityQ {
     * (broadcast-sized at any corpus scale: it is the CUSTOMER key set).
     * The two one-row aggregates cross-join trivially. */
   def qDqChecks(s: SparkSession, dir: String): DataFrame = {
-    val base = s.read.parquet(s"$dir/orders.parquet")
+    val base = Tables.read(s, dir, "orders")
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"), col("o_totalprice"))
     val nullSlice = base.filter(col("o_orderkey") % 97 === 13)
       .select((col("o_orderkey") + 5000000L).as("o_orderkey"),
@@ -54,7 +53,7 @@ object DataQualityQ {
         lit(-42L).as("o_custkey"), col("o_orderstatus"), col("o_totalprice"))
     val dupSlice = base.filter(col("o_orderkey") % 101 === 7)
     val t = base.unionByName(nullSlice).unionByName(riSlice).unionByName(dupSlice)
-    val cust = s.read.parquet(s"$dir/customer.parquet").select(col("c_custkey"))
+    val cust = Tables.read(s, dir, "customer").select(col("c_custkey"))
     checkSuite(t, cust)
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import QCache.ScopedCacheOps
+import Tables.documents
 
 /** Deduplication operators for a training-data pipeline: exact dedup,
   * MinHash+LSH near-dup candidates, n-gram Jaccard, SimHash.
@@ -19,15 +20,14 @@ import QCache.ScopedCacheOps
   * (`scopedCache()`), living exactly until the consuming query's action
   * completes — the battery/verify drivers release them per query, so
   * entries are independently measurable and the shared session's cached
-  * footprint stays bounded. The ONE deliberate cross-query cache is the
-  * [[cachedBands]] memo below (five consumers, documented there).
+  * footprint stays bounded. The deliberate cross-query caches are the
+  * MinHash signature and its bands ([[cachedSig]], [[cachedBands]]),
+  * held as Spark session state (a temp view persisted in the session's
+  * cache, [[sessionMemo]]) — not in this object.
   */
 object DedupQ {
 
-  def documents(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-
-  private def norm(c: Column): Column = lower(regexp_replace(c, "\\s+", " "))
+  private[queries] def norm(c: Column): Column = lower(regexp_replace(c, "\\s+", " "))
 
   /** THE exact-dup content fingerprint — ONE definition for every
     * consumer (batch exact dedup, streaming dedupStream, the
@@ -257,31 +257,40 @@ object DedupQ {
     (0 until 4).map(b => (b, md5hex((4 * b until 4 * b + 4).map(mins).mkString(","))))
   }
 
-  /** The band relation cached once per (session, sf dir): FIVE queries
-    * consume it (qMinhashLsh directly and via qDedupCluster /
-    * qNeardupVerified, plus qLshBucketProfile), and without the memo each
-    * re-executed the full shingle -> minhash lineage — ~4 s of the
-    * round-2 battery went to qLshBucketProfile recomputing it alone
-    * (verdict "What's wrong" #3). 4 narrow rows per doc: cheap to keep,
-    * expensive to recompute. */
-  private val bandsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def cachedBands(s: SparkSession, dir: String): DataFrame =
-    bandsMemo.getOrElseUpdate((s, dir), bandsFromSig(cachedSig(s, dir), 4).cache())
+  /** A relation shared across queries as Spark session state: the temp
+    * view `graft_<kind>_<md5(dir)>` holds its analyzed plan and is a
+    * cached table, so the CacheManager serves every call after the
+    * first from one InMemoryRelation. A stopped session takes both
+    * along, and after `spark.catalog.clearCache()` the next call caches
+    * the view again. Rebuilding the plan per call instead would re-read
+    * the input (one parquet schema job) and re-analyze it in every
+    * consumer: +1 job and ~0.1-0.15 s per LSH leaf at sf0.1. */
+  private def sessionMemo(s: SparkSession, kind: String, dir: String)(
+      plan: => DataFrame): DataFrame = {
+    val view = s"graft_${kind}_${md5hex(dir)}"
+    if (!s.catalog.tableExists(view)) plan.createOrReplaceTempView(view)
+    if (!s.catalog.isCached(view)) s.catalog.cacheTable(view)
+    s.table(view)
+  }
 
-  /** The 16-column MinHash SIGNATURE relation cached per (session, sf
-    * dir) — the layer UNDER the band memo: the shingle -> 16-min-md5
-    * aggregation is the expensive pass, and two queries need the raw
-    * signature rather than the 4x4 banding (qLshTuning re-bands it 3
-    * ways; qMinhashCalibration compares per-component matches). One row
-    * per doc, 16 hex strings: cheap to keep, expensive to recompute.
-    * The band memo derives from it, so the first consumer of EITHER
-    * memo pays the one signature pass. */
-  private val sigMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+  /** The 4x4 band relation of [[cachedSig]], a session memo:
+    * qMinhashLsh (and through it qDedupCluster / qNeardupVerified),
+    * qLshBucketProfile, qMinhashCalibration, qLshRecall and
+    * qIncrementalDedup all consume it, and without the memo each would
+    * re-execute the full shingle -> minhash lineage. 4 narrow rows per
+    * doc: cheap to keep, expensive to recompute. */
+  private def cachedBands(s: SparkSession, dir: String): DataFrame =
+    sessionMemo(s, "minhash_bands", dir)(bandsFromSig(cachedSig(s, dir), 4))
+
+  /** The 16-column MinHash SIGNATURE relation, a session memo — the layer
+    * UNDER the band memo: the shingle -> 16-min-md5 aggregation is the
+    * expensive pass, and two queries need the raw signature rather than
+    * the 4x4 banding (qLshTuning re-bands it 3 ways; qMinhashCalibration
+    * compares per-component matches). The band memo derives from it, so
+    * the first consumer of EITHER memo pays the one signature pass. */
   private def cachedSig(s: SparkSession, dir: String): DataFrame =
-    sigMemo.getOrElseUpdate((s, dir),
-      minhash16(documents(s, dir).select(col("doc_id"), col("text"))).cache())
+    sessionMemo(s, "minhash_sig", dir)(
+      minhash16(documents(s, dir).select(col("doc_id"), col("text"))))
 
   /** MinHash (16 perms via md5 keyed by j) + LSH (4 bands x 4 rows):
     * candidate near-duplicate pairs. The banding is the scale path: docs
@@ -461,10 +470,6 @@ object DedupQ {
     * the previous unpersisted). The oracle computes the same components
     * via a recursive transitive closure — fine at oracle scale, exactly
     * the quadratic thing the Spark side avoids. */
-  /** Propagation iterations of the most recent qDedupCluster run —
-    * diagnostic only (the jobs-per-iteration spec reads it). */
-  @volatile var lastClusterIterations: Int = 0
-
   def qDedupCluster(s: SparkSession, dir: String): DataFrame =
     connectedComponents(qMinhashLsh(s, dir)).orderBy(col("doc_id"))
 
@@ -472,7 +477,11 @@ object DedupQ {
     * (doc_a, doc_b) -> (doc_id, cluster_rep, cluster_size). Standalone:
     * any near-dup candidate relation (MinHash, SimHash, aHash, embedding
     * buckets) clusters through it. */
-  def connectedComponents(pairs: DataFrame): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame = componentsWithRounds(pairs)._1
+
+  /** [[connectedComponents]] plus the number of propagation rounds it
+    * ran (DedupClusterSpec pins the rounds and one action per round). */
+  private[graft] def componentsWithRounds(pairs: DataFrame): (DataFrame, Int) = {
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionAll(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .scopedCache()
@@ -524,11 +533,11 @@ object DedupQ {
       labels = updated.select(col("id"), col("label"))
       iters += 1
     }
-    lastClusterIterations = iters
     val w = Window.partitionBy(col("label"))
-    labels
+    (labels
       .withColumn("cluster_size", count(lit(1)).over(w))
-      .select(col("id").as("doc_id"), col("label").as("cluster_rep"), col("cluster_size"))
+      .select(col("id").as("doc_id"), col("label").as("cluster_rep"), col("cluster_size")),
+      iters)
   }
 
   val qDedupClusterSql: String =
@@ -785,7 +794,7 @@ object DedupQ {
     * the full corpus; every shuffle carries only clustered docs. */
   def qCanonicalDocs(s: SparkSession, dir: String): DataFrame = {
     val clusters = qDedupCluster(s, dir)
-    val lens = s.read.parquet(s"$dir/documents.parquet")
+    val lens = documents(s, dir)
       .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"))
     // consumed twice (the per-cluster argmax AND the final join): cache
     // so the cluster window + length join lineage executes once
@@ -1108,12 +1117,16 @@ object DedupQ {
     // InMemoryTableScan) — lineage on the DataFrame itself guarantees
     // the InMemoryRelation is what every branch scans.
     val sims = simhash60Sims(s, dir).scopedCache()
-    val blocks = (0 until 4).map { b =>
-      sims.select(col("doc_id"), lit(b).as("blk"),
-        shiftright(col("sh"), 15 * b).bitwiseAND(lit(32767L)).as("bv"), col("sh"))
-    }.reduce(_ unionAll _)
-    val bsz = blocks.groupBy(col("blk"), col("bv")).agg(count(lit(1)).as("bn"))
-    val capped = blocks.join(bsz, Seq("blk", "bv"))
+    // the four block rows of a doc come from ONE posexplode (pos = block
+    // index) and the bucket cap is a window count over (blk, bv) — the
+    // qMinhashLsh shape: `sims` is scanned once and shuffled once on
+    // the bucket key, and the self-join below reuses that partitioning
+    val w = Window.partitionBy(col("blk"), col("bv"))
+    val capped = sims
+      .select(col("doc_id"), col("sh"), posexplode(array((0 until 4).map { b =>
+        shiftright(col("sh"), 15 * b).bitwiseAND(lit(32767L))
+      }: _*)).as(Seq("blk", "bv")))
+      .withColumn("bn", count(lit(1)).over(w))
       .filter(col("bn") <= MaxLshBucket)
       .select(col("doc_id"), col("blk"), col("bv"), col("sh"))
     val left = capped.select(col("doc_id").as("doc_a"), col("blk"), col("bv"), col("sh").as("sha"))

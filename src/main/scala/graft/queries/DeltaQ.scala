@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import QCache.ScopedCacheOps
+import Tables.documents
 
 /** Delta-processing + catalog operators (engine-side additions, SURVEY.md
   * §2.F/G — the reference pipeline is single-snapshot and keeps no
@@ -17,9 +18,6 @@ import QCache.ScopedCacheOps
   * integer basis points (never a rounded double ratio); hashes are md5.
   */
 object DeltaQ {
-
-  private def documents(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   // ---------------------------------------------------------------------
   // q_snapshot_diff — fingerprint diff of two corpus snapshots
@@ -301,7 +299,7 @@ object DeltaQ {
     * lakehouse MERGE adds file-level pruning on top, which
     * q_compaction_plan / q_snapshot_diff model separately. */
   def qUpsertMerge(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = documents(s, dir)
     val base = docs.select(col("doc_id"), col("lang"), col("source"))
     val updates = docs.filter(col("doc_id") % 11 === 0)
       .select(col("doc_id"), lit("xx").as("lang"), col("source"))

@@ -1,9 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import QCache.ScopedCacheOps
+import Relational.dec
 
 /** Event-stream analytics beyond the funnel/sessionize/hop-window trio
   * (engine-side additions, SURVEY.md §2.F/G): cohort retention and
@@ -15,11 +16,6 @@ import QCache.ScopedCacheOps
   * then floored to BIGINT cents, ratios are integer basis points.
   */
 object EventsQ {
-
-  private def events(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/events.parquet")
-
-  private def dec(c: Column): Column = c.cast("decimal(18,4)")
 
   // ---------------------------------------------------------------------
   // q_cohort_retention — first-activity cohorts x day offset
@@ -37,7 +33,7 @@ object EventsQ {
     * per cohort day (broadcast). Nothing scales with raw event count
     * past the first aggregate. */
   def qCohortRetention(s: SparkSession, dir: String): DataFrame = {
-    val days = events(s, dir)
+    val days = Tables.read(s, dir, "events")
       .select(col("user_id"),
         datediff(to_date(col("ts")), lit("2024-01-01").cast("date")).cast("long").as("day"))
       .distinct()
@@ -86,7 +82,7 @@ object EventsQ {
     * event-sized, and the event table is touched exactly twice, both
     * times collapsing map-side. */
   def qGapFill(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir)
+    val ev = Tables.read(s, dir, "events")
       .select(expr("to_unix_timestamp(ts) div 3600").as("h"),
         col("event_type"), col("value"))
     val agg = ev.groupBy(col("h"), col("event_type"))
@@ -137,7 +133,7 @@ object EventsQ {
     * check IS the point of the query; a production rollup keeps only
     * the first scan); both aggregates collapse map-side. */
   def qPartialReagg(s: SparkSession, dir: String): DataFrame = {
-    val ev = events(s, dir)
+    val ev = Tables.read(s, dir, "events")
       .select(datediff(to_date(col("ts")), lit("2024-01-01").cast("date")).cast("long").as("day"),
         col("event_type"), dec(col("value")).as("v"))
     val partials = ev.groupBy(col("day"), col("event_type"))
@@ -205,7 +201,7 @@ object EventsQ {
     * aggregate on event_type. */
   def qLateProfile(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val planted = events(s, dir)
+    val planted = Tables.read(s, dir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"),
         when(col("event_id") % 61 === 17, col("ts") - expr("INTERVAL 36 HOURS"))
           .otherwise(col("ts")).as("ts"))

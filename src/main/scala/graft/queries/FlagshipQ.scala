@@ -124,5 +124,5 @@ object FlagshipQ {
     * qFlagship: global span order reconstructed from part_idx must agree
     * with the single-row layout bit-for-bit. */
   def qFlagshipPreSplit(s: SparkSession, dir: String): DataFrame =
-    project(Extract.run(s.read.parquet(CorpusGen.materializedPreSplit(s, dir))))
+    project(Extract.run(Tables.preSplit(s, dir)))
 }

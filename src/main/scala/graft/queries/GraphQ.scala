@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import QCache.ScopedCacheOps
+import Tables.documents
 
 /** Link-graph analytics over the crawl corpus — the selection signals a
   * web-scale training pipeline derives from the hyperlink structure
@@ -46,13 +47,10 @@ import QCache.ScopedCacheOps
   */
 object GraphQ {
 
-  private def documents(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-
   /** Deterministic link edges (src, dst) — multigraph semantics: if two
     * j values collide on the same dst the edge counts twice, exactly as
     * the oracle's UNNEST does. */
-  private def linkEdges(docs: DataFrame): DataFrame = {
+  private[graft] def linkEdges(docs: DataFrame): DataFrame = {
     val n = docs.agg(count(lit(1)).as("n_docs"))
     docs.crossJoin(broadcast(n))
       .select(col("doc_id").as("src"),
@@ -293,9 +291,6 @@ object GraphQ {
     * real corpus and a deep synthetic chain. */
   val BfsMaxRounds = 64
 
-  /** Rounds the last [[qBfsFixpoint]] took (diagnostics + spec pin). */
-  @volatile var lastBfsRounds: Int = 0
-
   /** BFS distance run TO FIXPOINT (round-4 verdict #6) — the
     * until-convergence complement of [[qBfsDist]]'s fixed 4-hop bound,
     * reusing q_dedup_cluster's convergence machinery: per round, relax
@@ -314,14 +309,14 @@ object GraphQ {
     * grow with the graph's eccentricity, not its size. */
   def qBfsFixpoint(s: SparkSession, dir: String): DataFrame = {
     val docs = documents(s, dir)
-    bfsFixpointOver(docs, linkEdges(docs))
+    bfsFixpointOver(docs, linkEdges(docs))._1
   }
 
   /** The fixpoint kernel over any (doc_id) node relation and (src, dst)
-    * edge relation — exposed so BfsFixpointSpec can drive it with
-    * controlled deep-path graphs the synthetic link generator cannot
-    * produce. */
-  private[graft] def bfsFixpointOver(docs: DataFrame, e: DataFrame): DataFrame = {
+    * edge relation, with the number of rounds it ran — exposed so
+    * BfsFixpointSpec can pin the rounds and drive it with controlled
+    * deep-path graphs the synthetic link generator cannot produce. */
+  private[graft] def bfsFixpointOver(docs: DataFrame, e: DataFrame): (DataFrame, Int) = {
     val und = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(col("src")).scopedCache()
     var dist = docs.select(col("doc_id"),
@@ -341,11 +336,10 @@ object GraphQ {
       dist = updated.select(col("doc_id"), col("ndist").as("dist"))
       rounds += 1
     }
-    lastBfsRounds = rounds
-    dist.select(col("doc_id"),
+    (dist.select(col("doc_id"),
         when(col("dist") >= Inf, -1L).otherwise(col("dist")).as("dist"),
         (col("doc_id") % 128 === 0).as("is_seed"))
-      .orderBy(col("doc_id"))
+      .orderBy(col("doc_id")), rounds)
   }
 
   val qBfsFixpointSql: String =

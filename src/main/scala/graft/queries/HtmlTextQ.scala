@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.fixtures.CorpusGen
 import graft.pipeline.Extract
 
 /** HTML-span TEXT under the independent oracle — the last flagship text
@@ -76,7 +75,7 @@ object HtmlTextQ {
     * q_extract_text — the battery measures extraction, not synthesis);
     * md5(text) per html span. */
   def qExtractHtmlText(s: SparkSession, dir: String): DataFrame =
-    Extract.run(s.read.parquet(CorpusGen.materializedPreSplit(s, dir)))
+    Extract.run(Tables.preSplit(s, dir))
       .select(col("doc_id"), explode(col("span_seq")).as("sp"))
       .filter(col("sp.kind") === "html")
       .select(col("doc_id"), col("sp.order").as("span_order"),

@@ -1,10 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import DedupQ.norm
 import QCache.ScopedCacheOps
+import Tables.documents
 
 /** Indexing / tokenizer-training operators a web-scale corpus platform
   * layers on the extraction battery (engine-side additions beyond the
@@ -20,14 +22,6 @@ import QCache.ScopedCacheOps
   * scan in both engines).
   */
 object IndexQ {
-
-  private def documents(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-
-  private def events(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/events.parquet")
-
-  private def norm(c: Column): Column = lower(regexp_replace(c, "\\s+", " "))
 
   /** DuckDB-side tokenization identical to `norm` + split (the
     * qCmsHeavy pattern). */
@@ -100,7 +94,7 @@ object IndexQ {
     * change filter runs between them without re-partitioning). */
   def qScd2(s: SparkSession, dir: String): DataFrame = {
     val ord = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val changes = events(s, dir)
+    val changes = Tables.read(s, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .withColumn("prev_type", lag(col("event_type"), 1).over(ord))
       .filter(col("prev_type").isNull || col("prev_type") =!= col("event_type"))

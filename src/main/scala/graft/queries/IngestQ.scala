@@ -37,7 +37,7 @@ object IngestQ {
       Files.walk(rootPath).iterator().asScala.toSeq.reverse
         .foreach(p => Files.deleteIfExists(p))
     }
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.documents(s, dir)
       .select(col("doc_id")).filter(col("doc_id") % 50 === 0)
       .as[Long](org.apache.spark.sql.Encoders.scalaLong).collect().sorted
     docs.foreach { id =>
@@ -85,7 +85,7 @@ object IngestQ {
     import org.apache.spark.sql.types._
     val sfName = Paths.get(dir).getFileName.toString
     val root = s"/tmp/graft_fmt_$sfName"
-    val base = s.read.parquet(s"$dir/documents.parquet")
+    val base = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
     base.write.mode("overwrite").orc(s"$root/orc")
     base.write.mode("overwrite")
@@ -138,7 +138,7 @@ object IngestQ {
     import org.apache.spark.sql.types._
     val sfName = Paths.get(dir).getFileName.toString
     val root = s"/tmp/graft_quarantine_$sfName"
-    s.read.parquet(s"$dir/documents.parquet")
+    Tables.documents(s, dir)
       .selectExpr(
         """CASE WHEN doc_id % 17 = 0
           | THEN concat('{"doc_id": ', CAST(doc_id AS STRING), ', "lang": "broken')

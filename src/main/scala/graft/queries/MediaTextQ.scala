@@ -59,7 +59,7 @@ object MediaTextQ {
     * (like q_extract_text): the battery measures extraction, and the
     * pre-split order reconstruction gets a text-level oracle row too. */
   def qExtractPdfText(s: SparkSession, dir: String): DataFrame =
-    Extract.run(s.read.parquet(CorpusGen.materializedPreSplit(s, dir)))
+    Extract.run(Tables.preSplit(s, dir))
       .select(col("doc_id"), explode(col("span_seq")).as("sp"))
       .filter(col("sp.kind") === "pdf_layout")
       .select(col("doc_id"), col("sp.order").as("span_order"),

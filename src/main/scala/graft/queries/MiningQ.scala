@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import DedupQ.norm
 import QCache.ScopedCacheOps
+import Tables.documents
 
 /** Text-mining operators a web-scale curation pipeline layers on top of
   * the dedup/similarity battery (reference scope boundary: ocrchestra
@@ -20,11 +22,6 @@ import QCache.ScopedCacheOps
   * documented oracle-safety rule for that function).
   */
 object MiningQ {
-
-  private def documents(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
-
-  private def norm(c: Column): Column = lower(regexp_replace(c, "\\s+", " "))
 
   // ---------------------------------------------------------------------
   // q_fuzzy_dedup — edit-distance near-dup with prefix blocking

@@ -37,7 +37,7 @@ object PdfQ {
 
   def qPdfRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet").select("doc_id").as[Long]
+    Tables.documents(s, dir).select("doc_id").as[Long]
       .map { id =>
         val nPages = (id % 3).toInt + 1
         val pages = (0 until nPages).map(p => synthPage(id, p)).toVector
@@ -88,7 +88,7 @@ object PdfQ {
     * the overlay text are present. */
   def qPdfModify(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet").select("doc_id").as[Long]
+    Tables.documents(s, dir).select("doc_id").as[Long]
       .map { id =>
         val nPages = (id % 3).toInt + 1
         val src = PdfRender.applyOcrPdf(
@@ -149,7 +149,7 @@ object PdfQ {
     * AES+SHA chain per password operation — 6 chains per AES-256 doc). */
   def qPdfEncrypt(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet").select("doc_id")
+    Tables.documents(s, dir).select("doc_id")
       .filter(col("doc_id") % 5 === 0).as[Long]
       .map { id =>
         val nPages = (id % 3).toInt + 1
@@ -217,7 +217,7 @@ object PdfQ {
     * the per-reason count + doc_id-sum audit table. */
   def qPdfQuarantine(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$dir/documents.parquet").select("doc_id")
+    Tables.documents(s, dir).select("doc_id")
       .filter(col("doc_id") % 5 === 0).as[Long]
       .map { id =>
         val nPages = (id % 3).toInt + 1
@@ -275,7 +275,7 @@ object PdfQ {
       |FROM t GROUP BY reason ORDER BY reason""".stripMargin
 
   def qPdfAssemble(s: SparkSession, dir: String): DataFrame = {
-    val pageTable = s.read.parquet(s"$dir/documents.parquet")
+    val pageTable = Tables.documents(s, dir)
       .selectExpr("doc_id", "explode(sequence(0, CAST(doc_id % 3 AS INT))) AS page_idx")
       .selectExpr("CAST(doc_id AS STRING) AS doc_id", "page_idx",
         "concat('img://page/', doc_id, '/', page_idx) AS media_ref")
@@ -297,7 +297,7 @@ object PdfQ {
     * flips `consistent` and hash-mismatches. */
   def qPdfAssembleCheck(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pageTable = s.read.parquet(s"$dir/documents.parquet")
+    val pageTable = Tables.documents(s, dir)
       .selectExpr("doc_id", "explode(sequence(0, CAST(doc_id % 3 AS INT))) AS page_idx")
       .selectExpr("CAST(doc_id AS STRING) AS doc_id", "page_idx",
         "concat('img://page/', doc_id, '/', page_idx) AS media_ref")

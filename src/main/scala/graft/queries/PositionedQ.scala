@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
 object PositionedQ {
 
   def qPositionedWords(s: SparkSession, dir: String): DataFrame = {
-    val docs = s.read.parquet(s"$dir/documents.parquet").filter(col("doc_id") < 100)
+    val docs = Tables.documents(s, dir).filter(col("doc_id") < 100)
     val words = docs
       .select(col("doc_id"), posexplode(split(trim(col("text")), "\\s+")).as(Seq("w_idx", "w")))
       .select(

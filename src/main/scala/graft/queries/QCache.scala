@@ -15,9 +15,14 @@ import org.apache.spark.sql.Dataset
   * starts from a cold cache and is independently measurable.
   *
   * The only cross-query cached state left is the two DOCUMENTED memos —
-  * [[DedupQ]]'s per-(session, sf) LSH band relation (five consumers) and
+  * [[DedupQ]]'s MinHash signature and band relations, held as Spark
+  * session state (temp views whose plans are persisted in the session's
+  * cache, so `spark.catalog.clearCache()` drops the data and a stopped
+  * session takes them along), and
   * [[graft.fixtures.CorpusGen.materializedPreSplit]] (on-disk, not a
-  * cache) — which deliberately do NOT register here.
+  * cache) — which deliberately do NOT register here. This registry is
+  * the one piece of query state held in an `object`: it only tracks
+  * the scoped caches between a query's build and its release.
   */
 object QCache {
 

@@ -23,17 +23,11 @@ import org.apache.spark.sql.functions._
   */
 object Relational {
 
-  private def dec(c: Column): Column = c.cast("decimal(18,4)")
-
-  def lineitem(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/lineitem.parquet")
-  def orders(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/orders.parquet")
-  def customer(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/customer.parquet")
-  def nation(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/nation.parquet")
-  def events(s: SparkSession, dir: String): DataFrame = s.read.parquet(s"$dir/events.parquet")
+  private[queries] def dec(c: Column): Column = c.cast("decimal(18,4)")
 
   /** TPC-H Q1 shape: scan-side filter pushdown + partial aggregation. */
   def qAggPushdown(s: SparkSession, dir: String): DataFrame =
-    lineitem(s, dir)
+    Tables.read(s, dir, "lineitem")
       .filter(col("l_shipdate") < lit("1998-09-02").cast("timestamp"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -55,9 +49,9 @@ object Relational {
 
   /** Star join: fact orders x broadcast dims customer, nation. */
   def qJoinBroadcast(s: SparkSession, dir: String): DataFrame =
-    orders(s, dir)
-      .join(broadcast(customer(s, dir)), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(nation(s, dir)), col("c_nationkey") === col("n_nationkey"))
+    Tables.read(s, dir, "orders")
+      .join(broadcast(Tables.read(s, dir, "customer")), col("o_custkey") === col("c_custkey"))
+      .join(broadcast(Tables.read(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"))
       .agg(
         sum(dec(col("o_totalprice"))).cast("double").as("revenue"),
@@ -74,7 +68,7 @@ object Relational {
 
   /** Top-k with deterministic tie-break (G-16's top-1 generalized). */
   def qTopkRevenue(s: SparkSession, dir: String): DataFrame =
-    orders(s, dir)
+    Tables.read(s, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
       .limit(10)
@@ -85,7 +79,7 @@ object Relational {
   /** Window functions: row_number + exact running total per customer. */
   def qWindowRunning(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("o_custkey")).orderBy(col("o_orderdate"), col("o_orderkey"))
-    orders(s, dir)
+    Tables.read(s, dir, "orders")
       .select(
         col("o_custkey"), col("o_orderkey"),
         row_number().over(w).as("rn"),
@@ -104,7 +98,7 @@ object Relational {
   /** Ordered stitch (H-13 relational analog): per user, event types
     * concatenated in (ts, event_id) order. */
   def qStitchOrder(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
+    Tables.read(s, dir, "events")
       .groupBy(col("user_id"))
       .agg(array_join(
         transform(
@@ -119,7 +113,7 @@ object Relational {
 
   /** Page-sort shape (G-4): line numbers per order in ascending order. */
   def qPageSort(s: SparkSession, dir: String): DataFrame =
-    lineitem(s, dir)
+    Tables.read(s, dir, "lineitem")
       .groupBy(col("l_orderkey"))
       .agg(array_join(
         transform(array_sort(collect_list(col("l_linenumber"))), (x: Column) => x.cast("string")),
@@ -132,7 +126,7 @@ object Relational {
 
   /** Frequency argmax with lexicographic tie-break (G-16). */
   def qFreqArgmax(s: SparkSession, dir: String): DataFrame = {
-    val counts = s.read.parquet(s"$dir/documents.parquet")
+    val counts = Tables.documents(s, dir)
       .groupBy(col("source"), col("lang")).agg(count(lit(1)).as("c"))
     val w = Window.partitionBy(col("source")).orderBy(col("c").desc, col("lang"))
     counts.withColumn("rn", row_number().over(w))
@@ -151,7 +145,7 @@ object Relational {
   /** Duplicate-key fold (G-7/G-10 relational analog): distinct values per
     * key in first-seen order. */
   def qDupkeyFold(s: SparkSession, dir: String): DataFrame = {
-    val firstSeen = events(s, dir)
+    val firstSeen = Tables.read(s, dir, "events")
       .groupBy(col("user_id"), col("event_type"))
       .agg(min(col("ts")).as("first_ts"))
     firstSeen
@@ -175,11 +169,11 @@ object Relational {
     * containment — no O(P x C) nested loop (SURVEY.md §2.E "Joins"). */
   def qContainmentJoin(s: SparkSession, dir: String): DataFrame = {
     val binSize = 256
-    val parents = orders(s, dir).select(
+    val parents = Tables.read(s, dir, "orders").select(
       col("o_orderkey"),
       (col("o_orderkey") * 7 % 5000000).as("lo"),
       (col("o_orderkey") * 7 % 5000000 + col("o_orderkey") % 97 + 20).as("hi"))
-    val children = lineitem(s, dir).select(
+    val children = Tables.read(s, dir, "lineitem").select(
       ((col("l_orderkey") * 3 + col("l_linenumber") * 11) % 5000000).as("clo"),
       ((col("l_orderkey") * 3 + col("l_linenumber") * 11) % 5000000 + col("l_partkey") % 13).as("chi"))
     // parent spans bins floor(lo/B)..floor(hi/B); child lives in one bin
@@ -207,7 +201,7 @@ object Relational {
   /** Sessionization: 30-minute inactivity gap (batch form). */
   def qSessionize(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    events(s, dir)
+    Tables.read(s, dir, "events")
       .withColumn("prev_ts", lag(col("ts"), 1).over(w))
       .withColumn("is_new",
         when(unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts")) > 1800, 1).otherwise(0))
@@ -227,7 +221,7 @@ object Relational {
 
   /** JSON scalar extraction from the props column. */
   def qJsonExtract(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
+    Tables.read(s, dir, "events")
       .select(col("event_type"), get_json_object(col("props"), "$.k").cast("long").as("k"))
       .groupBy(col("event_type"))
       .agg(sum(col("k")).as("sum_k"), count(lit(1)).as("n"))
@@ -246,7 +240,7 @@ object Relational {
   def qAsofJoin(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    events(s, dir)
+    Tables.read(s, dir, "events")
       .withColumn("prior_view_id",
         last(when(col("event_type") === "view", col("event_id")), ignoreNulls = true).over(w))
       .withColumn("prior_view_ms",
@@ -278,11 +272,11 @@ object Relational {
     * COALESCEd to 'ALL' so the cross-engine hash never sees engine NULL
     * ordering. */
   def qRollupRevenue(s: SparkSession, dir: String): DataFrame = {
-    val sup = s.read.parquet(s"$dir/supplier.parquet")
-    val reg = s.read.parquet(s"$dir/region.parquet")
-    lineitem(s, dir)
+    val sup = Tables.read(s, dir, "supplier")
+    val reg = Tables.read(s, dir, "region")
+    Tables.read(s, dir, "lineitem")
       .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
+      .join(broadcast(Tables.read(s, dir, "nation")), col("s_nationkey") === col("n_nationkey"))
       .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
       .rollup(col("r_name"), col("n_name"))
       .agg(
@@ -314,8 +308,8 @@ object Relational {
   /** Fact x broadcast part dimension: per-brand item counts, distinct
     * parts, exact quantity sum. */
   def qBrandStats(s: SparkSession, dir: String): DataFrame = {
-    val part = s.read.parquet(s"$dir/part.parquet")
-    lineitem(s, dir)
+    val part = Tables.read(s, dir, "part")
+    Tables.read(s, dir, "lineitem")
       .join(broadcast(part), col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"))
       .agg(count(lit(1)).as("n_items"),
@@ -337,8 +331,8 @@ object Relational {
     * At fact scale the anti-join shuffles like the inner join would;
     * the price filter pushes to the orders scan. */
   def qAntiJoin(s: SparkSession, dir: String): DataFrame =
-    customer(s, dir)
-      .join(orders(s, dir).filter(col("o_totalprice") > 400000),
+    Tables.read(s, dir, "customer")
+      .join(Tables.read(s, dir, "orders").filter(col("o_totalprice") > 400000),
         col("c_custkey") === col("o_custkey"), "left_anti")
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
       .orderBy(col("c_custkey"))
@@ -353,8 +347,8 @@ object Relational {
     * for low-value events but never for high-value ones, and the types
     * common to both (inputs are distinct, so ALL == set semantics). */
   def qSetOps(s: SparkSession, dir: String): DataFrame = {
-    val lo = events(s, dir).filter(col("value") < 10).select(col("event_type")).distinct()
-    val hi = events(s, dir).filter(col("value") >= 10).select(col("event_type")).distinct()
+    val lo = Tables.read(s, dir, "events").filter(col("value") < 10).select(col("event_type")).distinct()
+    val hi = Tables.read(s, dir, "events").filter(col("value") >= 10).select(col("event_type")).distinct()
     lo.exceptAll(hi).select(col("event_type"), org.apache.spark.sql.functions.lit("only_low").as("bucket"))
       .unionAll(lo.intersectAll(hi)
         .select(col("event_type"), org.apache.spark.sql.functions.lit("both").as("bucket")))
@@ -378,14 +372,14 @@ object Relational {
   private val PivotLangs = Seq("de", "en", "es", "fr", "zh")
 
   def qPivotLangs(s: SparkSession, dir: String): DataFrame = {
-    val wide = s.read.parquet(s"$dir/documents.parquet")
+    val wide = Tables.documents(s, dir)
       .groupBy(col("source"))
       .pivot("lang", PivotLangs)
       .agg(sum(col("n_chars")))
     PivotLangs.foldLeft(wide) { (df, l) =>
         df.withColumn(s"chars_$l", coalesce(col(l), lit(0L))).drop(l)
       }
-      .join(s.read.parquet(s"$dir/documents.parquet")
+      .join(Tables.documents(s, dir)
         .groupBy(col("source")).agg(count(lit(1)).as("n_docs")), Seq("source"))
       .select(col("source") +: PivotLangs.map(l => col(s"chars_$l")) :+ col("n_docs"): _*)
       .orderBy(col("source"))
@@ -415,7 +409,7 @@ object Relational {
     * Microsecond-exact integer arithmetic on both engines. */
   def qRangeJoin(s: SparkSession, dir: String): DataFrame = {
     val WinUs = 60000000L // 60 s, also the bin width
-    val ev = s.read.parquet(s"$dir/events.parquet")
+    val ev = Tables.read(s, dir, "events")
       .select(col("event_id"), col("user_id"), col("event_type"),
         expr("unix_micros(CAST(ts AS TIMESTAMP))").as("us"))
     val anchors0 = ev.filter(col("event_type") === "error")
@@ -460,7 +454,7 @@ object Relational {
     * per-user sorted event array — a single groupBy). Microsecond
     * integer timestamps; stage is an exact INT. */
   def qFunnel(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(s"$dir/events.parquet")
+    Tables.read(s, dir, "events")
       .select(col("user_id"), col("event_type"),
         expr("unix_micros(CAST(ts AS TIMESTAMP))").as("us"))
       .groupBy(col("user_id"))
@@ -514,7 +508,7 @@ object Relational {
     * necessary when the per-map key set is already unique, e.g. after a
     * distinct or when upstream partitioning aligns with the key). */
   def qSaltedAgg(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
+    Tables.read(s, dir, "events")
       .select(col("event_type"), (col("event_id") % 64).as("salt"), dec(col("value")).as("v"))
       .groupBy(col("event_type"), col("salt"))
       .agg(count(lit(1)).as("c"), sum(col("v")).as("sv"))
@@ -542,7 +536,7 @@ object Relational {
     * incrementally with a watermark (StreamingOps.windowCounts); here
     * it is pinned against an independent engine as a batch query. */
   def qHopWindow(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
+    Tables.read(s, dir, "events")
       .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"))
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"),
@@ -578,7 +572,7 @@ object Relational {
     val morton = (0 until 16).map(b =>
       s"shiftleft(shiftright(xs, $b) & 1, ${2 * b}) + shiftleft(shiftright(ys, $b) & 1, ${2 * b + 1})")
       .mkString(" + ")
-    val docs = s.read.parquet(s"$dir/documents.parquet")
+    val docs = Tables.documents(s, dir)
     val mx = docs.agg(max(col("doc_id")).as("mx"), max(col("n_chars")).as("my"))
     docs.crossJoin(broadcast(mx))
       .selectExpr("doc_id", "n_chars",
@@ -632,7 +626,7 @@ object Relational {
       |ORDER BY source, lang""".stripMargin
 
   def qGroupingSets(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(s"$dir/documents.parquet").createOrReplaceTempView("documents")
+    Tables.documents(s, dir).createOrReplaceTempView("documents")
     s.sql(qGroupingSetsSql)
   }
 
@@ -648,7 +642,7 @@ object Relational {
     * Spark's max_by is not deterministic under ties, so the explicit
     * row_number with a total order is the engine-portable form. */
   def qCdcLatest(s: SparkSession, dir: String): DataFrame =
-    events(s, dir)
+    Tables.read(s, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),
         floor(dec(col("value")) * 100).cast("long").as("value_cents"))
       .withColumn("rn", row_number().over(

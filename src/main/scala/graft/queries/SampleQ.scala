@@ -202,7 +202,7 @@ object SampleQ {
 
   /** The two-phase plan with an explicit salt count (spec knob). */
   private[graft] def domainCapPlan(s: SparkSession, dir: String, salts: Int): DataFrame = {
-    val base = s.read.parquet(s"$dir/documents.parquet")
+    val base = Tables.documents(s, dir)
       .select(col("doc_id"), col("source"), col("n_chars"))
     val w1 = Window
       .partitionBy(col("source"), pmod(col("doc_id"), lit(salts.toLong)))
@@ -298,7 +298,7 @@ object SampleQ {
   private[graft] val unimaxDuckSql: String = unimaxSql("//")
 
   private def run(sql: String)(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(s"$dir/documents.parquet").createOrReplaceTempView("documents")
+    Tables.documents(s, dir).createOrReplaceTempView("documents")
     s.sql(sql)
   }
 

@@ -22,7 +22,7 @@ import graft.functions.VectorExprs.{hyperplaneBucket, qdot}
 object SimilarityQ {
 
   def embeddings(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    Tables.read(s, dir, "embeddings")
 
   /** All dot products and signatures below run through the native codegen
     * expressions (graft.functions.VectorExprs) — value-pinned to the

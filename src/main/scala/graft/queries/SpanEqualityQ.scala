@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.fixtures.CorpusGen
 import graft.pipeline.Extract
 
 /** The north rule's span-sequence equality — (kind, text, media_ref,
@@ -28,7 +27,7 @@ import graft.pipeline.Extract
 object SpanEqualityQ {
 
   def qExtractSpanEquality(s: SparkSession, dir: String): DataFrame =
-    Extract.run(s.read.parquet(CorpusGen.materializedPreSplit(s, dir)))
+    Extract.run(Tables.preSplit(s, dir))
       .select(col("doc_id"), explode(col("span_seq")).as("sp"))
       .select(col("doc_id"), col("sp.order").as("span_order"),
         col("sp.kind").as("kind"), col("sp.media_ref").as("media_ref"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import Tables.documents
+
 /** Training-set preparation operators — the steps a pipeline runs AFTER
   * curation, immediately before tokenization/sharding:
   *
@@ -38,9 +40,6 @@ import org.apache.spark.sql.functions._
 object TrainPrepQ {
 
   import graft.queries.QCache.ScopedCacheOps
-
-  def documents(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
 
   // ---------------------------------------------------------------- //
   // q_dsir_select                                                     //

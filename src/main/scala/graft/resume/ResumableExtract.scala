@@ -27,9 +27,7 @@ import graft.pipeline.Extract
   * skipped (anti-join on bucket id): zero re-extraction of committed
   * partitions.
   *
-  * Scale note: [[run]] filters the raw input by bucket, which re-scans
-  * the source per wave — fine when the source is already bucketed. When
-  * it is not, [[stageByBucket]] + [[runStaged]] is the production path:
+  * Scale note: [[stageByBucket]] + [[runStaged]] is the one wave path:
   * ONE pass writes the input hive-partitioned by bucket, after which
   * every wave's read partition-prunes to exactly its own files (the
   * filter lands in PartitionFilters, not a data scan) — total input I/O
@@ -66,7 +64,9 @@ object ResumableExtract {
 
   /** Resumable extraction over a [[stageByBucket]]-staged input: each
     * wave reads ONLY its bucket partitions (partition pruning), so the
-    * source is scanned exactly once across all waves + resumes. */
+    * source is scanned exactly once across all waves + resumes.
+    * `failAfterWaves` is the injectable failure for the kill/resume
+    * checks: throw after this many waves committed (negative = never). */
   def runStaged(
       spark: SparkSession,
       stageDir: String,
@@ -74,36 +74,7 @@ object ResumableExtract {
       buckets: Int = 16,
       waveSize: Int = 4,
       attempt: String = "a1",
-      failAfterWaves: Int = -1): Unit =
-    runWaves(spark,
-      wave => spark.read.parquet(stageDir)
-        .filter(col("bucket").isin(wave.map(Integer.valueOf): _*)).drop("bucket"),
-      outDir, buckets, waveSize, attempt, failAfterWaves)
-
-  /** Injectable failure for the kill/resume test: throw after this many
-    * waves committed (negative = never). */
-  def run(
-      spark: SparkSession,
-      input: DataFrame,
-      outDir: String,
-      buckets: Int = 16,
-      waveSize: Int = 4,
-      attempt: String = "a1",
       failAfterWaves: Int = -1): Unit = {
-    val withBucket = input.withColumn("bucket", bucketExpr(buckets))
-    runWaves(spark,
-      wave => withBucket.filter(col("bucket").isin(wave.map(Integer.valueOf): _*)).drop("bucket"),
-      outDir, buckets, waveSize, attempt, failAfterWaves)
-  }
-
-  private def runWaves(
-      spark: SparkSession,
-      partForWave: Seq[Int] => DataFrame,
-      outDir: String,
-      buckets: Int,
-      waveSize: Int,
-      attempt: String,
-      failAfterWaves: Int): Unit = {
     import spark.implicits._
     val done = completedBuckets(spark, outDir)
     val bucketOf = bucketExpr(buckets)
@@ -113,7 +84,8 @@ object ResumableExtract {
       if (failAfterWaves >= 0 && wi >= failAfterWaves)
         throw new RuntimeException(s"injected failure before wave $wi")
       val t0 = System.nanoTime()
-      val part = partForWave(wave)
+      val part = spark.read.parquet(stageDir)
+        .filter(col("bucket").isin(wave.map(Integer.valueOf): _*)).drop("bucket")
       val out = Extract.run(part).withColumn("bucket", bucketOf)
       out.write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")

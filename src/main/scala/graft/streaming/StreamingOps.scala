@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.queries.Tables
+
 /** Structured Streaming operators (the reference is pure batch — these
   * are the streaming capabilities a training-data pipeline needs:
   * incremental ingestion with event-time windows + watermarks, and
@@ -407,14 +409,14 @@ object StreamingOps {
 
   private def runStreamOverDir(spark: SparkSession, sfDir: String, queryName: String,
       op: DataFrame => DataFrame): DataFrame = {
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val schema = Tables.read(spark, sfDir, "events").schema
     // file-stream sources require a DIRECTORY; stage the (read-only)
     // events file into a temp dir via symlink — removed after the
     // one-shot query so repeated verification runs don't litter /tmp
     val dir = java.nio.file.Files.createTempDirectory("graft_stream")
-    val link = dir.resolve("events.parquet")
-    java.nio.file.Files.createSymbolicLink(
-      link, java.nio.file.Paths.get(s"$sfDir/events.parquet"))
+    val events = java.nio.file.Paths.get(Tables.path(sfDir, "events"))
+    val link = dir.resolve(events.getFileName)
+    java.nio.file.Files.createSymbolicLink(link, events)
     try {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")

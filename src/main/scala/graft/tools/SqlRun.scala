@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.Tables
+
 /** Debug utility: run an arbitrary Spark SQL statement against the
   * testdata tables (registered as temp views). Usage:
   *   sbt "runMain graft.tools.SqlRun <sfDir> <sql>"
@@ -19,7 +21,7 @@ object SqlRun {
     spark.sparkContext.setLogLevel("ERROR")
     Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "events", "documents", "embeddings").foreach { t =>
-      spark.read.parquet(s"$sfDir/$t.parquet").createOrReplaceTempView(t)
+      Tables.read(spark, sfDir, t).createOrReplaceTempView(t)
     }
     spark.sql(sql).show(200, truncate = false)
     spark.stop()

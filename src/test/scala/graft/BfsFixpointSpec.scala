@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.GraphQ
+import graft.queries.{GraphQ, Tables}
 
 /** q_bfs_fixpoint (round-4 verdict #6): until-convergence BFS pinned
   * against an in-test brute-force BFS over the identically-derived edge
@@ -21,6 +21,12 @@ class BfsFixpointSpec extends AnyFunSuite {
     .getOrCreate()
 
   private val dir = "/root/testdata/sf0.001"
+
+  /** qBfsFixpoint's plan, with the kernel's round count returned. */
+  private def fixpointWithRounds() = {
+    val docs = Tables.documents(spark, dir)
+    GraphQ.bfsFixpointOver(docs, GraphQ.linkEdges(docs))
+  }
 
   /** Driver-side BFS over an explicit undirected edge list. */
   private def bruteBfs(nodes: Seq[Long], edges: Seq[(Long, Long)],
@@ -51,7 +57,8 @@ class BfsFixpointSpec extends AnyFunSuite {
     }
     val expected = bruteBfs(docs, edges, docs.filter(_ % 128 == 0).toSet)
 
-    val got = GraphQ.qBfsFixpoint(spark, dir).collect()
+    val (fixpoint, rounds) = fixpointWithRounds()
+    val got = fixpoint.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     assert(got.length == docs.size)
     got.foreach { case (doc, dist, isSeed) =>
@@ -59,8 +66,8 @@ class BfsFixpointSpec extends AnyFunSuite {
       assert(isSeed == (doc % 128 == 0))
     }
     // converged BEFORE the safety bound (loop exited on changed == 0)
-    assert(GraphQ.lastBfsRounds < GraphQ.BfsMaxRounds,
-      s"did not converge: ${GraphQ.lastBfsRounds} rounds")
+    assert(rounds < GraphQ.BfsMaxRounds,
+      s"did not converge: $rounds rounds")
     // non-vacuous vs the bounded q_bfs_dist: some node sits beyond 4 hops
     assert(got.exists { case (_, d, _) => d > GraphQ.BfsHops || d == -1L },
       "corpus graph never exceeds the 4-hop bound — fixpoint adds nothing")
@@ -76,20 +83,22 @@ class BfsFixpointSpec extends AnyFunSuite {
     def vid(i: Long): Long = if (i == 0) 0L else 128L * (i - 1) + 1
     val nodes = (0L until 200L).map(vid).toDF("doc_id")
     val edges = (0L until 199L).map(i => (vid(i), vid(i + 1))).toDF("src", "dst")
-    val got = GraphQ.bfsFixpointOver(nodes, edges).collect()
+    val (path, pathRounds) = GraphQ.bfsFixpointOver(nodes, edges)
+    val got = path.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     (0L until 200L).foreach { i =>
       val want = if (i <= GraphQ.BfsMaxRounds) i else -1L
       assert(got(vid(i)) == want, s"path position $i (id ${vid(i)})")
     }
-    assert(GraphQ.lastBfsRounds == GraphQ.BfsMaxRounds) // exited on the cap
+    assert(pathRounds == GraphQ.BfsMaxRounds) // exited on the cap
     // and a SHORT path converges in diameter + 1 rounds, all exact
     val nodes2 = (0L until 30L).toDF("doc_id")
     val edges2 = (0L until 29L).map(i => (i, i + 1)).toDF("src", "dst")
-    val got2 = GraphQ.bfsFixpointOver(nodes2, edges2).collect()
+    val (path2, path2Rounds) = GraphQ.bfsFixpointOver(nodes2, edges2)
+    val got2 = path2.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     (0L until 30L).foreach(i => assert(got2(i) == i))
-    assert(GraphQ.lastBfsRounds == 30) // 29 relaxations + the zero-change round
+    assert(path2Rounds == 30) // 29 relaxations + the zero-change round
   }
 
   test("one Spark count action per relaxation round (lazy checkpoint, fused convergence)") {
@@ -105,10 +114,10 @@ class BfsFixpointSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(qel)
     try {
-      val n = GraphQ.qBfsFixpoint(spark, dir).count()
+      val (fixpoint, rounds) = fixpointWithRounds()
+      val n = fixpoint.count()
       Thread.sleep(500) // async listener bus
       assert(n > 0)
-      val rounds = GraphQ.lastBfsRounds
       assert(rounds >= 2, s"expected several rounds, got $rounds")
       assert(countActions.get() <= rounds + 1,
         s"qBfsFixpoint ran ${countActions.get()} count actions for $rounds rounds — " +

@@ -10,8 +10,9 @@ import graft.queries.{DedupQ, QCache}
 /** The battery cache-lifecycle law (round-3 verdict #6): intra-query
   * temporaries register with QCache and die at the per-query release;
   * the ONLY cached state that survives across queries is the documented
-  * LSH-bands memo. Asserted on `sc.getPersistentRDDs` — the public view
-  * of what actually occupies storage. */
+  * MinHash signature + bands memo, which lives in the Spark session's
+  * cache. Asserted on `sc.getPersistentRDDs` — the public view of what
+  * actually occupies storage. */
 class CacheLifecycleSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -60,5 +61,27 @@ class CacheLifecycleSpec extends AnyFunSuite {
     DedupQ.qMinhashLsh(spark, dir).count()
     QCache.releaseScoped(blocking = true)
     assert(sc.getPersistentRDDs.keySet == afterFirst)
+  }
+
+  test("the MinHash memo is session cache state: clearCache drops it, the next consumer rebuilds it once") {
+    val sc = spark.sparkContext
+    DedupQ.qMinhashLsh(spark, dir).count()
+    QCache.releaseScoped(blocking = true)
+    spark.catalog.clearCache()
+    val cleared = sc.getPersistentRDDs.keySet
+    // qLshTuning reads the signature alone: exactly one memo entry comes
+    // back, and a second run is served from it
+    DedupQ.qLshTuning(spark, dir).count()
+    QCache.releaseScoped(blocking = true)
+    val sigOnly = sc.getPersistentRDDs.keySet
+    assert((sigOnly -- cleared).size == 1, s"expected the signature alone, got ${sigOnly -- cleared}")
+    DedupQ.qLshTuning(spark, dir).count()
+    QCache.releaseScoped(blocking = true)
+    assert(sc.getPersistentRDDs.keySet == sigOnly, "the rebuilt signature memo must serve the next run")
+    // a band consumer adds the bands over the SAME signature: one more
+    // entry, not a second signature pass
+    DedupQ.qMinhashLsh(spark, dir).count()
+    QCache.releaseScoped(blocking = true)
+    assert((sc.getPersistentRDDs.keySet -- sigOnly).size == 1)
   }
 }

@@ -77,9 +77,9 @@ class DedupClusterSpec extends AnyFunSuite {
     val pairs = spark.range(999L).select(
       org.apache.spark.sql.functions.col("id").as("doc_a"),
       (org.apache.spark.sql.functions.col("id") + 1L).as("doc_b"))
-    val got = DedupQ.connectedComponents(pairs).collect()
+    val (cc, iters) = DedupQ.componentsWithRounds(pairs)
+    val got = cc.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val iters = DedupQ.lastClusterIterations
     assert(got.length == 1000)
     got.foreach { case (doc, rep, size) =>
       assert(rep == 0L, s"doc $doc -> $rep"); assert(size == 1000L)
@@ -112,10 +112,11 @@ class DedupClusterSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(qel)
     try {
-      val n = DedupQ.qDedupCluster(spark, dir).count()
+      // qDedupCluster's plan, with the kernel's round count returned
+      val (cc, iters) = DedupQ.componentsWithRounds(DedupQ.qMinhashLsh(spark, dir))
+      val n = cc.orderBy("doc_id").count()
       Thread.sleep(500) // let the async listener bus drain
       assert(n > 0)
-      val iters = DedupQ.lastClusterIterations
       assert(iters >= 4, s"chain corpus should need several iterations, got $iters")
       // iters in-loop counts + the final .count() above (+0 slack): the
       // 2-actions-per-iteration shape would read >= 2*iters + 1

@@ -74,12 +74,14 @@ class EdgeSpec extends AnyFunSuite {
   }
 
   test("ResumableExtract lineage is append-only and idempotent on full rerun") {
+    val stage = java.nio.file.Files.createTempDirectory("graft_stage2").toString
     val out = java.nio.file.Files.createTempDirectory("graft_resume2").toString
     val input = graft.fixtures.CorpusGen.fromDocuments(spark, "/root/testdata/sf0.001")
-    graft.resume.ResumableExtract.run(spark, input, out, buckets = 4, waveSize = 2, attempt = "x1")
+    graft.resume.ResumableExtract.stageByBucket(spark, input, stage, buckets = 4)
+    graft.resume.ResumableExtract.runStaged(spark, stage, out, buckets = 4, waveSize = 2, attempt = "x1")
     val n1 = spark.read.parquet(graft.resume.ResumableExtract.lineageDir(out)).count()
     // second full run: everything already committed -> no new lineage rows
-    graft.resume.ResumableExtract.run(spark, input, out, buckets = 4, waveSize = 2, attempt = "x2")
+    graft.resume.ResumableExtract.runStaged(spark, stage, out, buckets = 4, waveSize = 2, attempt = "x2")
     val n2 = spark.read.parquet(graft.resume.ResumableExtract.lineageDir(out)).count()
     assert(n1 == 4 && n2 == 4)
   }

@@ -20,12 +20,14 @@ class ResumeSpec extends AnyFunSuite {
 
   test("kill after k waves, resume -> identical output, zero re-extraction") {
     import org.apache.spark.sql.functions._
+    val stage = Files.createTempDirectory("graft_resume_stage").toString
     val out = Files.createTempDirectory("graft_resume").toString
     val input = CorpusGen.fromDocuments(spark, "/root/testdata/sf0.001")
+    ResumableExtract.stageByBucket(spark, input, stage, buckets = 16)
 
     // attempt 1: dies after 2 of 4 waves
     intercept[RuntimeException] {
-      ResumableExtract.run(spark, input, out, buckets = 16, waveSize = 4,
+      ResumableExtract.runStaged(spark, stage, out, buckets = 16, waveSize = 4,
         attempt = "a1", failAfterWaves = 2)
     }
     val lineage1 = spark.read.parquet(ResumableExtract.lineageDir(out))
@@ -33,7 +35,7 @@ class ResumeSpec extends AnyFunSuite {
     assert(done1.size == 8) // 2 waves x 4 buckets
 
     // attempt 2: resumes, completes
-    ResumableExtract.run(spark, input, out, buckets = 16, waveSize = 4, attempt = "a2")
+    ResumableExtract.runStaged(spark, stage, out, buckets = 16, waveSize = 4, attempt = "a2")
     val lineage2 = spark.read.parquet(ResumableExtract.lineageDir(out))
     assert(ResumableExtract.completedBuckets(spark, out).size == 16)
     // buckets committed in attempt 1 were NOT re-extracted: still exactly
