@@ -264,7 +264,8 @@ object DedupQ {
     * along, and after `spark.catalog.clearCache()` the next call caches
     * the view again. Rebuilding the plan per call instead would re-read
     * the input (one parquet schema job) and re-analyze it in every
-    * consumer: +1 job and ~0.1-0.15 s per LSH leaf at sf0.1. */
+    * consumer: +1 job per LSH leaf, +13-34% on the sub-second ones at
+    * sf0.1. */
   private def sessionMemo(s: SparkSession, kind: String, dir: String)(
       plan: => DataFrame): DataFrame = {
     val view = s"graft_${kind}_${md5hex(dir)}"
@@ -278,9 +279,14 @@ object DedupQ {
     * qLshBucketProfile, qMinhashCalibration, qLshRecall and
     * qIncrementalDedup all consume it, and without the memo each would
     * re-execute the full shingle -> minhash lineage. 4 narrow rows per
-    * doc: cheap to keep, expensive to recompute. */
-  private def cachedBands(s: SparkSession, dir: String): DataFrame =
-    sessionMemo(s, "minhash_bands", dir)(bandsFromSig(cachedSig(s, dir), 4))
+    * doc: cheap to keep, expensive to recompute. The signature is
+    * cached first, also when the view already exists (after
+    * `clearCache()`), so the bands are cached over it rather than over
+    * a second signature pass. */
+  private def cachedBands(s: SparkSession, dir: String): DataFrame = {
+    val sig = cachedSig(s, dir)
+    sessionMemo(s, "minhash_bands", dir)(bandsFromSig(sig, 4))
+  }
 
   /** The 16-column MinHash SIGNATURE relation, a session memo — the layer
     * UNDER the band memo: the shingle -> 16-min-md5 aggregation is the

@@ -84,4 +84,20 @@ class CacheLifecycleSpec extends AnyFunSuite {
     QCache.releaseScoped(blocking = true)
     assert((sc.getPersistentRDDs.keySet -- sigOnly).size == 1)
   }
+
+  test("after clearCache a band consumer caches the signature under the bands: one signature pass") {
+    val sc = spark.sparkContext
+    DedupQ.qMinhashLsh(spark, dir).count() // both memo views exist
+    QCache.releaseScoped(blocking = true)
+    spark.catalog.clearCache()
+    val cleared = sc.getPersistentRDDs.keySet
+    DedupQ.qMinhashLsh(spark, dir).count()
+    QCache.releaseScoped(blocking = true)
+    val both = sc.getPersistentRDDs.keySet
+    assert((both -- cleared).size == 2, s"expected signature + bands, got ${both -- cleared}")
+    // a signature consumer is served from the entry the bands were built on
+    DedupQ.qLshTuning(spark, dir).count()
+    QCache.releaseScoped(blocking = true)
+    assert(sc.getPersistentRDDs.keySet == both, "the signature must not be cached a second time")
+  }
 }
