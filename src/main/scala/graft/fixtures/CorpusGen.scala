@@ -90,15 +90,6 @@ object CorpusGen {
       .toDF()
   }
 
-  /** The PRE-SPLIT storage layout (doc_id, part_idx, spans, n_spans):
-    * each doc's span array chunked into fixed Extract.PartSize slices,
-    * n_spans = the doc TOTAL (the pushdown split key). This is how a
-    * production corpus should be written: a mega-doc stored as one
-    * parquet row is an unsplittable scan unit no repartition can fix —
-    * stored as bounded part rows, the scan (and the extraction fused
-    * into it) parallelizes by itself. Extract.run accepts this layout
-    * directly and reconstructs global span order from
-    * part_idx * PartSize + local position. */
   /** Fingerprint of the SYNTHESIS SEMANTICS: a hash over a probe doc's
     * generated spans (kinds, texts, media_refs). Any change to the
     * generator chain (CorpusGen arithmetic, MediaOcr vocabulary,
@@ -136,6 +127,15 @@ object CorpusGen {
     path
   }
 
+  /** The PRE-SPLIT storage layout (doc_id, part_idx, spans, n_spans):
+    * each doc's span array chunked into fixed Extract.PartSize slices,
+    * n_spans = the doc TOTAL (the pushdown split key). This is how a
+    * production corpus should be written: a mega-doc stored as one
+    * parquet row is an unsplittable scan unit no repartition can fix —
+    * stored as bounded part rows, the scan (and the extraction fused
+    * into it) parallelizes by itself. Extract.run accepts this layout
+    * directly and reconstructs global span order from
+    * part_idx * PartSize + local position. */
   def preSplit(corpus: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     // the chunk size is a layout CONTRACT, not a knob: Extract.run

@@ -20,10 +20,9 @@ import Tables.documents
   * (`scopedCache()`), living exactly until the consuming query's action
   * completes — the battery/verify drivers release them per query, so
   * entries are independently measurable and the shared session's cached
-  * footprint stays bounded. The deliberate cross-query caches are the
-  * MinHash signature and its bands ([[cachedSig]], [[cachedBands]]),
-  * held as Spark session state (a temp view persisted in the session's
-  * cache, [[sessionMemo]]) — not in this object.
+  * footprint stays bounded. The one deliberate cross-query cache is
+  * the MinHash signature ([[cachedSig]]), held as Spark session state
+  * (a temp view persisted in the session's cache) — not in this object.
   */
 object DedupQ {
 
@@ -181,9 +180,6 @@ object DedupQ {
       .select(col("doc_id"),
         concat_ws(" ", expr("w[i]"), expr("w[i+1]"), expr("w[i+2]")).as("s"))
 
-  private def wordShingles(s: SparkSession, dir: String): DataFrame =
-    wordShinglesOf(documents(s, dir).select(col("doc_id"), col("text")))
-
   /** Docs per (band, band_hash) bucket above which the bucket is excluded
     * from candidate generation — the skew guard: one degenerate bucket
     * (boilerplate-identical docs) would otherwise make the self-join
@@ -193,14 +189,11 @@ object DedupQ {
     * oracle-checked drop report (`dropped = 1` rows are the exclusions). */
   val MaxLshBucket = 256
 
-  /** (doc_id, band, bh) LSH band signatures. MinHash as 16 PARALLEL min
-    * aggregates over per-shingle hash columns: each shingle row carries
-    * its 16 keyed hashes in-register (no 16x row explode), and the single
-    * groupBy(doc_id) gets map-side partial combine — each partition ships
-    * at most one 16-column row per doc into the only shuffle. */
   /** The 16-column MinHash signature (doc_id, m0..m15) — the banding-
     * independent core, shared by the standard 4x4 bands and the tuning
-    * sweep's alternative bandings. */
+    * sweep's alternative bandings. 16 PARALLEL min aggregates over
+    * per-shingle hash columns: each shingle row carries its 16 keyed
+    * hashes in-register (no 16x row explode) into one groupBy(doc_id). */
   private def minhash16(docs: DataFrame): DataFrame = {
     val hashed = wordShinglesOf(docs).select(
       col("doc_id") +:
@@ -210,28 +203,34 @@ object DedupQ {
       .agg(min(col("h0")).as("m0"), (1 until 16).map(j => min(col(s"h$j")).as(s"m$j")): _*)
   }
 
-  /** Band the signature into nBands bands of 16/nBands rows each. */
-  private def bandsFromSig(mh: DataFrame, nBands: Int): DataFrame = {
+  /** The band hashes of a signature's nBands bands of 16/nBands rows
+    * each: md5 of the band's comma-joined minhashes. */
+  private def bandHashes(nBands: Int): Seq[Column] = {
     val r = 16 / nBands
-    mh.select(col("doc_id"),
-      posexplode(array((0 until nBands).map { b =>
-        md5(concat_ws(",", (r * b until r * b + r).map(k => col(s"m$k")): _*).cast("binary"))
-      }: _*)).as(Seq("band", "bh")))
+    (0 until nBands).map { b =>
+      md5(concat_ws(",", (r * b until r * b + r).map(k => col(s"m$k")): _*).cast("binary"))
+    }
   }
 
-  private def lshBandsOf(docs: DataFrame): DataFrame =
-    bandsFromSig(minhash16(docs), 4)
+  /** (doc_id, band, bh): one row per band of `hashes`. */
+  private def explodeBands(mh: DataFrame, hashes: Seq[Column]): DataFrame =
+    mh.select(col("doc_id"), posexplode(array(hashes: _*)).as(Seq("band", "bh")))
+
+  /** Band the signature into nBands bands of 16/nBands rows each. */
+  private def bandsFromSig(mh: DataFrame, nBands: Int): DataFrame =
+    explodeBands(mh, bandHashes(nBands))
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       .map(b => f"$b%02x").mkString
 
-  /** Pure per-document band signatures — EXACTLY the batch lshBands
-    * arithmetic (word 3-gram shingles of the whitespace-normalized
-    * lowercased text; 16 minhashes as min md5("j:"+shingle) under
-    * lexicographic hex order, which is what the SQL MIN over md5
-    * strings compares; band hash = md5 of the comma-joined quartet).
+  /** Pure per-document band signatures — EXACTLY the batch
+    * [[minhash16]] + [[bandsFromSig]] arithmetic (word 3-gram shingles
+    * of the whitespace-normalized lowercased text; 16 minhashes as min
+    * md5("j:"+shingle) under lexicographic hex order, which is what the
+    * SQL MIN over md5 strings compares; band hash = md5 of the
+    * comma-joined quartet).
     * One row arriving on a stream carries a complete document, so its
     * signatures compute in-row with no cross-row aggregation — the
     * function the streaming near-dup operator shares with batch
@@ -257,83 +256,108 @@ object DedupQ {
     (0 until 4).map(b => (b, md5hex((4 * b until 4 * b + 4).map(mins).mkString(","))))
   }
 
-  /** A relation shared across queries as Spark session state: the temp
-    * view `graft_<kind>_<md5(dir)>` holds its analyzed plan and is a
-    * cached table, so the CacheManager serves every call after the
-    * first from one InMemoryRelation. A stopped session takes both
-    * along, and after `spark.catalog.clearCache()` the next call caches
-    * the view again. Rebuilding the plan per call instead would re-read
-    * the input (one parquet schema job) and re-analyze it in every
-    * consumer: +1 job per LSH leaf, +13-34% on the sub-second ones at
-    * sf0.1. */
-  private def sessionMemo(s: SparkSession, kind: String, dir: String)(
-      plan: => DataFrame): DataFrame = {
-    val view = s"graft_${kind}_${md5hex(dir)}"
-    if (!s.catalog.tableExists(view)) plan.createOrReplaceTempView(view)
+  /** The corpus's MinHash SIGNATURE (doc_id, m0..m15), a session memo:
+    * the shingle -> 16-min-md5 aggregation is the expensive pass behind
+    * every LSH query. Each row also carries its four 4x4 band hashes
+    * (b0..b3, [[bandHashes]]), computed once in the same pass: hashing
+    * them in every band consumer instead cost the sub-0.3 s band leaves
+    * 9-18% at sf0.1, and a second cached relation of bands is a memo
+    * over a memo. The temp view `graft_minhash_sig_<md5(dir)>` holds
+    * the analyzed plan and is a cached table, so the CacheManager serves
+    * every call after the first from one InMemoryRelation; a stopped
+    * session takes both along, and after `spark.catalog.clearCache()`
+    * the next call caches the view again. Rebuilding the plan per call
+    * instead would re-read the input (one parquet schema job) and
+    * re-analyze it in every consumer: +1 job per LSH leaf, +13-34% on
+    * the sub-second ones at sf0.1. The input is hash-partitioned on
+    * doc_id across the session's cores first: a small corpus is one
+    * parquet split, and the signature pass would otherwise run as one
+    * task. */
+  private def cachedSig(s: SparkSession, dir: String): DataFrame = {
+    val view = s"graft_minhash_sig_${md5hex(dir)}"
+    if (!s.catalog.tableExists(view))
+      minhash16(byDocId(s, documents(s, dir).select(col("doc_id"), col("text"))))
+        .select(col("*") +: bandHashes(4).zipWithIndex.map { case (h, b) => h.as(s"b$b") }: _*)
+        .createOrReplaceTempView(view)
     if (!s.catalog.isCached(view)) s.catalog.cacheTable(view)
     s.table(view)
   }
 
-  /** The 4x4 band relation of [[cachedSig]], a session memo:
-    * qMinhashLsh (and through it qDedupCluster / qNeardupVerified),
-    * qLshBucketProfile, qMinhashCalibration, qLshRecall and
-    * qIncrementalDedup all consume it, and without the memo each would
-    * re-execute the full shingle -> minhash lineage. 4 narrow rows per
-    * doc: cheap to keep, expensive to recompute. The signature is
-    * cached first, also when the view already exists (after
-    * `clearCache()`), so the bands are cached over it rather than over
-    * a second signature pass. */
-  private def cachedBands(s: SparkSession, dir: String): DataFrame = {
-    val sig = cachedSig(s, dir)
-    sessionMemo(s, "minhash_bands", dir)(bandsFromSig(sig, 4))
+  /** The corpus's 4x4 bands (doc_id, band, bh), read from the band
+    * hashes the signature memo carries. */
+  private def corpusBands(s: SparkSession, dir: String): DataFrame =
+    explodeBands(cachedSig(s, dir), (0 until 4).map(b => col(s"b$b")))
+
+  /** `docs` hash-partitioned on doc_id into the session's default
+    * parallelism — spreads a per-doc pass over a single-split input
+    * across every core. */
+  private def byDocId(s: SparkSession, docs: DataFrame): DataFrame =
+    docs.repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+
+  /** The skew guard of every bucketed near-dup join: rows whose `keys`
+    * group holds more than `max` rows are dropped. A window count (not
+    * groupBy + join back) shuffles once on the bucket key, and the
+    * caller's self-join on the same keys reuses that partitioning. */
+  private[queries] def capBuckets(df: DataFrame, max: Int, keys: String*): DataFrame =
+    df.withColumn("bn", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+      .filter(col("bn") <= max)
+      .drop("bn")
+
+  /** Self-join of the capped (band, bh) buckets of `bands`: a (doc_a,
+    * doc_b) row per pair that shares a bucket and satisfies `pair`. The
+    * capped relation is cached: without it the banding and the bucket
+    * window execute once per join side. */
+  private def lshJoin(bands: DataFrame)(pair: (Column, Column) => Column): DataFrame = {
+    val capped = capBuckets(bands, MaxLshBucket, "band", "bh").scopedCache()
+    capped.as("a").join(capped.as("b"), col("a.band") === col("b.band") &&
+        col("a.bh") === col("b.bh") && pair(col("a.doc_id"), col("b.doc_id")))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
   }
 
-  /** The 16-column MinHash SIGNATURE relation, a session memo — the layer
-    * UNDER the band memo: the shingle -> 16-min-md5 aggregation is the
-    * expensive pass, and two queries need the raw signature rather than
-    * the 4x4 banding (qLshTuning re-bands it 3 ways; qMinhashCalibration
-    * compares per-component matches). The band memo derives from it, so
-    * the first consumer of EITHER memo pays the one signature pass. */
-  private def cachedSig(s: SparkSession, dir: String): DataFrame =
-    sessionMemo(s, "minhash_sig", dir)(
-      minhash16(documents(s, dir).select(col("doc_id"), col("text"))))
+  /** Unordered LSH candidate pairs (doc_a < doc_b) of `bands`. */
+  private def lshPairs(bands: DataFrame): DataFrame =
+    lshJoin(bands)(_ < _).distinct()
+
+  /** Exact word-3-gram overlap of candidate pairs: for each (doc_a,
+    * doc_b) row of `pairs`, the distinct-shingle counts na and nb of the
+    * two docs of `docs` (doc_id, text) and their intersection ni (0 when
+    * they share none). Candidate-bounded: only docs that appear in some
+    * pair are shingled, and the intersection is driven FROM the pair
+    * list ((pair, shingle) rows), never a corpus-wide shingle self-join.
+    * `pairs` is read four times: callers cache it when it is costly to
+    * recompute (an LSH join). */
+  private def shingleOverlap(pairs: DataFrame, docs: DataFrame): DataFrame = {
+    val ids = pairs.select(col("doc_a").as("doc_id"))
+      .unionAll(pairs.select(col("doc_b").as("doc_id"))).distinct()
+    val sh = wordShinglesOf(docs.join(ids, Seq("doc_id"))).distinct().scopedCache()
+    val n = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    val ni = pairs
+      .join(sh.as("x"), col("x.doc_id") === col("doc_a"))
+      .join(sh.as("y"), col("y.doc_id") === col("doc_b") && col("y.s") === col("x.s"))
+      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("ni"))
+    pairs.join(ni, Seq("doc_a", "doc_b"), "left")
+      .join(n.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
+      .join(n.select(col("doc_id").as("doc_b"), col("n").as("nb")), Seq("doc_b"))
+      .select(col("doc_a"), col("doc_b"), col("na"), col("nb"),
+        coalesce(col("ni"), lit(0L)).as("ni"))
+  }
+
+  /** Exact Jaccard ni / (na + nb - ni) over [[shingleOverlap]]'s
+    * columns, rounded to 4 places (int/int: identical on both engines). */
+  private def overlapJaccard: Column =
+    round(col("ni").cast("double") / (col("na") + col("nb") - col("ni")), 4)
 
   /** MinHash (16 perms via md5 keyed by j) + LSH (4 bands x 4 rows):
     * candidate near-duplicate pairs. The banding is the scale path: docs
     * only ever meet through equal (band, band_hash) buckets — a shuffle
     * on the bucket key, never an all-pairs product — and oversized
     * buckets are excluded (MaxLshBucket). */
-  def qMinhashLsh(s: SparkSession, dir: String): DataFrame = {
-    val bands = cachedBands(s, dir)
-    // window (not groupBy+join): the band relation is already narrow
-    // (4 rows/doc of hashes), one shuffle on the bucket key that the
-    // self-join below then reuses.
-    val w = Window.partitionBy(col("band"), col("bh"))
-    val capped = bands
-      .withColumn("bn", count(lit(1)).over(w))
-      .filter(col("bn") <= MaxLshBucket)
-      .select(col("doc_id"), col("band"), col("bh"))
-      // self-join below: without the cache the ENTIRE shingle->minhash
-      // lineage executes twice (once per side); the band relation is
-      // 4 narrow rows per doc — cheap to keep, expensive to recompute
-      .scopedCache()
-    val a = capped.as("a")
-    val b = capped.as("b")
-    a.join(b, col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-      .orderBy(col("doc_a"), col("doc_b"))
-  }
+  def qMinhashLsh(s: SparkSession, dir: String): DataFrame =
+    lshPairs(corpusBands(s, dir)).orderBy(col("doc_a"), col("doc_b"))
 
-  /** Shared DuckDB CTE prefix: documents -> band signatures (the oracle
-    * spelling of [[lshBands]]), used by all three MinHash oracles. */
-  /** The band-signature CTE chain over an arbitrary (doc_id, text)
-    * relation name — lets eval queries band a UNION corpus (base +
-    * planted variants) through the exact same oracle spelling. */
   /** mh-signature CTE chain (n, sh, mh) over a (doc_id, text) relation
-    * name, plus a banding CTE named `bandsName` with `rowsPerBand`
-    * MinHash rows per band — the oracle spelling of [[bandsFromSig]]. */
+    * name — the oracle spelling of [[minhash16]]; eval queries sign a
+    * UNION corpus (base + planted variants) through it. */
   private def mhCteBody(src: String): String =
     s"""n AS (SELECT doc_id, regexp_split_to_array(trim(lower(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS w FROM $src),
       |sh AS (SELECT DISTINCT doc_id, w[CAST(i AS INT)] || ' ' || w[CAST(i AS INT) + 1] || ' ' || w[CAST(i AS INT) + 2] AS s
@@ -343,6 +367,8 @@ object DedupQ {
       |       FROM sh, UNNEST(generate_series(0, 15)) AS jj(j)
       |       GROUP BY doc_id, j)""".stripMargin
 
+  /** Banding CTE `bandsName` with `rowsPerBand` MinHash rows per band —
+    * the oracle spelling of [[bandsFromSig]]. */
   private def bandsCteOf(bandsName: String, rowsPerBand: Int): String =
     s"""$bandsName AS (SELECT doc_id, CAST(FLOOR(j / $rowsPerBand) AS INT) AS band,
       |                 md5(STRING_AGG(m, ',' ORDER BY j)) AS bh
@@ -382,47 +408,20 @@ object DedupQ {
     * join is driven FROM the pair list ((pair, shingle) rows, never a
     * corpus-wide shingle self-join); output is all-integer bp. */
   def qMinhashCalibration(s: SparkSession, dir: String): DataFrame = {
-    val bands = cachedBands(s, dir)
-    val w = Window.partitionBy(col("band"), col("bh"))
-    val capped = bands
-      .withColumn("bn", count(lit(1)).over(w))
-      .filter(col("bn") <= MaxLshBucket)
-      .select(col("doc_id"), col("band"), col("bh"))
-      .scopedCache()
-    val pairs = capped.as("a").join(capped.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-      .scopedCache()
-    val candIds = pairs.select(col("doc_a").as("doc_id"))
-      .unionAll(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    val candDocs = documents(s, dir).select(col("doc_id"), col("text"))
-      .join(candIds, Seq("doc_id"))
-    // signatures come warm from the session memo (minhash16 is per-doc,
-    // so the memo rows for candidate ids are exactly minhash16(candDocs));
-    // the ma/mb equi-joins below restrict to pair ids themselves
+    // signatures come warm from the session memo; the ma/mb equi-joins
+    // restrict them to pair ids
     val mh = cachedSig(s, dir)
-    val eq = pairs
+    val pairs = lshPairs(corpusBands(s, dir)).scopedCache()
+    shingleOverlap(pairs, documents(s, dir).select(col("doc_id"), col("text")))
       .join(mh.as("ma"), col("ma.doc_id") === col("doc_a"))
       .join(mh.as("mb"), col("mb.doc_id") === col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         (0 until 16).map(j =>
           when(col(s"ma.m$j") === col(s"mb.m$j"), 1L).otherwise(0L))
-          .reduce(_ + _).as("n_eq"))
-    val shAll = wordShinglesOf(candDocs).distinct().scopedCache()
-    val cnt = shAll.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val ni = pairs
-      .join(shAll.as("x"), col("x.doc_id") === col("doc_a"))
-      .join(shAll.as("y"), col("y.doc_id") === col("doc_b") && col("y.s") === col("x.s"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("ni"))
-    eq
-      .join(cnt.select(col("doc_id").as("doc_a"), col("n").as("na")), Seq("doc_a"))
-      .join(cnt.select(col("doc_id").as("doc_b"), col("n").as("nb")), Seq("doc_b"))
-      .join(ni, Seq("doc_a", "doc_b"), "left")
+          .reduce(_ + _).as("n_eq"), col("na"), col("nb"), col("ni"))
       .select(col("doc_a"), col("doc_b"), col("n_eq"),
         (col("n_eq") * 625L).as("est_bp"),
-        expr("coalesce(ni, 0) * 10000 div (na + nb - coalesce(ni, 0))").as("jacc_bp"))
+        expr("ni * 10000 div (na + nb - ni)").as("jacc_bp"))
       .withColumn("err_bp", abs(col("est_bp") - col("jacc_bp")))
       .orderBy(col("doc_a"), col("doc_b"))
   }
@@ -454,7 +453,7 @@ object DedupQ {
   /** The skew guard's drop report (no silent caps): every LSH bucket with
     * its size and whether the candidate stage excludes it. */
   def qLshBucketProfile(s: SparkSession, dir: String): DataFrame =
-    cachedBands(s, dir)
+    corpusBands(s, dir)
       .groupBy(col("band"), col("bh"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc"))
       .withColumn("dropped",
@@ -559,11 +558,27 @@ object DedupQ {
       |       CAST(COUNT(*) OVER (PARTITION BY cluster_rep) AS BIGINT) AS cluster_size
       |FROM labels ORDER BY doc_id""".stripMargin
 
+  /** Id offset of the planted near-dup variants. */
+  private val PlantOffset = 2000000L
+
+  /** The planted-variant fixture of the LSH evaluation queries: every
+    * doc with doc_id % 23 == 0 and length >= 60 gets a copy at
+    * doc_id + [[PlantOffset]] with chars 25-27 rewritten — a handful of
+    * word-3-gram shingles change, Jaccard stays high. Both engines derive
+    * it from the documents table alone. */
+  private def plantedVariants(base: DataFrame): DataFrame =
+    base.filter(col("doc_id") % 23 === 0 && length(col("text")) >= 60)
+      .select((col("doc_id") + PlantOffset).as("doc_id"),
+        concat(expr("substr(text, 1, 24)"), lit("qzx"), expr("substr(text, 28)")).as("text"))
+
+  /** Original ids (doc_a) whose planted variant shares a capped bucket
+    * of `bands` with them. */
+  private def plantedFound(bands: DataFrame): DataFrame =
+    lshJoin(bands)((a, b) => b === a + PlantOffset).select(col("doc_a")).distinct()
+
   /** LSH RECALL evaluation harness — measures the approximate pipeline
     * against KNOWN ground truth, the QA step a production dedup ships
-    * with: variants are planted fixture-in-query (doc_id % 23 == 0 and
-    * length >= 60 gets a copy at +2,000,000 with chars 25-27 rewritten
-    * — a handful of word-3-gram shingles change, Jaccard stays high),
+    * with: variants are planted fixture-in-query ([[plantedVariants]]),
     * the standard banding runs over base + variants, and each planted
     * pair reports whether ANY capped band bucket caught it plus its
     * exact shingle Jaccard. Recall is then `avg(found)`; the per-pair
@@ -572,43 +587,21 @@ object DedupQ {
     * relation and the same bands from the documents table alone. */
   def qLshRecall(s: SparkSession, dir: String): DataFrame = {
     val base = documents(s, dir).select(col("doc_id"), col("text"))
-    val planted = base.filter(col("doc_id") % 23 === 0 && length(col("text")) >= 60)
-      .select((col("doc_id") + 2000000L).as("doc_id"),
-        concat(expr("substr(text, 1, 24)"), lit("qzx"), expr("substr(text, 28)")).as("text"))
+    val planted = plantedVariants(base)
     // band signatures are PER-DOC independent (minhash never looks across
-    // docs), so the union corpus's bands are exactly cachedBands ∪
-    // bands(variants): the base relation comes warm from the shared memo
-    // and only the ~1-in-23 variants hash fresh
-    val bands = cachedBands(s, dir).unionAll(lshBandsOf(planted))
-    val w = Window.partitionBy(col("band"), col("bh"))
-    // self-joined below (a/b sides): cache so the planted-variant
-    // banding + bucket-size window run once, not once per side
-    val capped = bands.withColumn("bn", count(lit(1)).over(w))
-      .filter(col("bn") <= MaxLshBucket)
-      .select(col("doc_id"), col("band"), col("bh"))
-      .scopedCache()
-    val found = capped.as("a").join(capped.as("b"),
-        col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-          col("b.doc_id") === col("a.doc_id") + 2000000L)
-      .select(col("a.doc_id").as("doc_id")).distinct()
+    // docs), so the union corpus's bands are the memo's bands ∪
+    // bands(variants): the base signature comes warm from the session
+    // memo and only the ~1-in-23 variants hash fresh
+    val found = plantedFound(
+      corpusBands(s, dir).unionAll(bandsFromSig(minhash16(planted), 4)))
       .withColumn("hit", lit(1))
-    val origIds = planted.select((col("doc_id") - 2000000L).as("doc_id"))
-    // exact Jaccard only needs the PLANTED pairs' shingle sets — shingle
-    // the ~2/23 of the corpus under evaluation, not all of it
-    val evalDocs = base.join(origIds, Seq("doc_id")).unionAll(planted)
-    val shAll = wordShinglesOf(evalDocs).distinct().scopedCache()
-    val shA = shAll.filter(col("doc_id") < 2000000L)
-    val shB = shAll.filter(col("doc_id") >= 2000000L)
-      .select((col("doc_id") - 2000000L).as("doc_id"), col("s"))
-    val na = shA.groupBy(col("doc_id")).agg(count(lit(1)).as("na"))
-    val nb = shB.groupBy(col("doc_id")).agg(count(lit(1)).as("nb"))
-    val ni = shA.as("x")
-      .join(shB.as("y"), col("x.doc_id") === col("y.doc_id") && col("x.s") === col("y.s"))
-      .groupBy(col("x.doc_id").as("doc_id")).agg(count(lit(1)).as("ni"))
-    origIds.join(na, Seq("doc_id")).join(nb, Seq("doc_id")).join(ni, Seq("doc_id"))
-      .join(found, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("hit"), lit(0)).as("found"),
-        round(col("ni").cast("double") / (col("na") + col("nb") - col("ni")), 4).as("jaccard"))
+    val pairs = planted.select((col("doc_id") - PlantOffset).as("doc_a"), col("doc_id").as("doc_b"))
+    // a pair that shares no shingle drops out, as in the oracle's inner
+    // join on the intersection
+    shingleOverlap(pairs, base.unionAll(planted)).filter(col("ni") > 0)
+      .join(found, Seq("doc_a"), "left")
+      .select(col("doc_a").as("doc_id"), coalesce(col("hit"), lit(0)).as("found"),
+        overlapJaccard.as("jaccard"))
       .orderBy(col("doc_id"))
   }
 
@@ -651,28 +644,15 @@ object DedupQ {
     * the sweep itself is hash-verified. One signature pass feeds all
     * three bandings. */
   def qLshTuning(s: SparkSession, dir: String): DataFrame = {
-    val base = documents(s, dir).select(col("doc_id"), col("text"))
-    val planted = base.filter(col("doc_id") % 23 === 0 && length(col("text")) >= 60)
-      .select((col("doc_id") + 2000000L).as("doc_id"),
-        concat(expr("substr(text, 1, 24)"), lit("qzx"), expr("substr(text, 28)")).as("text"))
+    val planted = plantedVariants(documents(s, dir).select(col("doc_id"), col("text")))
     // per-doc signature of a disjoint-id union == union of per-doc
     // signatures: the base corpus side comes warm from the session memo
     // and only the ~1-in-23 planted variants hash fresh
-    val mh = cachedSig(s, dir).unionAll(minhash16(planted)).scopedCache()
+    val mh = cachedSig(s, dir).drop((0 until 4).map(b => s"b$b"): _*)
+      .unionAll(minhash16(planted)).scopedCache()
     val nPlanted = planted.count()
     Seq(2, 4, 8).map { nBands =>
-      val bands = bandsFromSig(mh, nBands)
-      val w = Window.partitionBy(col("band"), col("bh"))
-      // self-joined below (a/b sides): cache per banding so the re-band
-      // + bucket-size window run once, not once per side
-      val capped = bands.withColumn("bn", count(lit(1)).over(w))
-        .filter(col("bn") <= MaxLshBucket)
-        .select(col("doc_id"), col("band"), col("bh"))
-        .scopedCache()
-      val found = capped.as("a").join(capped.as("b"),
-          col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
-            col("b.doc_id") === col("a.doc_id") + 2000000L)
-        .select(col("a.doc_id")).distinct().count()
+      val found = plantedFound(bandsFromSig(mh, nBands)).count()
       (s"${nBands}x${16 / nBands}", nPlanted, found)
     }.foldLeft(Option.empty[DataFrame]) { (acc, row) =>
       import s.implicits._
@@ -726,35 +706,20 @@ object DedupQ {
     * Jaccard with min-id tie-break, is_dup at 0.5). Jaccard is int/int
     * division rounded to 4 — deterministic across engines. */
   def qIncrementalDedup(s: SparkSession, dir: String): DataFrame = {
-    val bands = cachedBands(s, dir)
-    val idx = bands.filter(col("doc_id") % 10 =!= 0)
-    val w = Window.partitionBy(col("band"), col("bh"))
-    val icap = idx.withColumn("bn", count(lit(1)).over(w))
-      .filter(col("bn") <= MaxLshBucket)
-      .select(col("doc_id").as("old_id"), col("band"), col("bh"))
+    val bands = corpusBands(s, dir)
+    val icap = capBuckets(bands.filter(col("doc_id") % 10 =!= 0), MaxLshBucket, "band", "bh")
+      .select(col("doc_id").as("doc_b"), col("band"), col("bh"))
     val probe = bands.filter(col("doc_id") % 10 === 0)
-      .select(col("doc_id").as("new_id"), col("band"), col("bh"))
-    val cand = probe.join(icap, Seq("band", "bh"))
-      .select(col("new_id"), col("old_id")).distinct().scopedCache()
-    val docs = cand.select(col("new_id").as("doc_id"))
-      .unionAll(cand.select(col("old_id").as("doc_id"))).distinct()
-    val sh = wordShingles(s, dir).join(docs, Seq("doc_id")).distinct().scopedCache()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(sh.as("x"), col("new_id") === col("x.doc_id"))
-      .join(sh.as("y"), col("old_id") === col("y.doc_id") && col("x.s") === col("y.s"))
-      .groupBy(col("new_id"), col("old_id")).agg(count(lit(1)).as("ni"))
-    val ni0 = coalesce(col("ni"), lit(0L))
-    val scored = cand
-      .join(inter, Seq("new_id", "old_id"), "left")
-      .join(sizes.select(col("doc_id").as("new_id"), col("n").as("na")), Seq("new_id"))
-      .join(sizes.select(col("doc_id").as("old_id"), col("n").as("nb")), Seq("old_id"))
-      .select(col("new_id"), col("old_id"),
-        round(ni0.cast("double") / (col("na") + col("nb") - ni0), 4).as("j"))
-    scored.groupBy(col("new_id"))
+      .select(col("doc_id").as("doc_a"), col("band"), col("bh"))
+    // (doc_a, doc_b) = (new doc, index doc)
+    val cand = probe.join(icap, Seq("band", "bh")).select(col("doc_a"), col("doc_b")).distinct()
+      .scopedCache()
+    shingleOverlap(cand, documents(s, dir).select(col("doc_id"), col("text")))
+      .select(col("doc_a"), col("doc_b"), overlapJaccard.as("j"))
+      .groupBy(col("doc_a"))
       .agg(count(lit(1)).as("n_candidates"),
-        max(struct(col("j"), (-col("old_id")).as("neg"))).as("m"))
-      .select(col("new_id").as("doc_id"), col("n_candidates"),
+        max(struct(col("j"), (-col("doc_b")).as("neg"))).as("m"))
+      .select(col("doc_a").as("doc_id"), col("n_candidates"),
         (-col("m.neg")).as("best_old_id"), col("m.j").as("best_jaccard"),
         when(col("m.j") >= 0.5, lit(1)).otherwise(lit(0)).as("is_dup"))
       .orderBy(col("doc_id"))
@@ -961,24 +926,11 @@ object DedupQ {
     * is bounded by the candidate count times shingle sizes, not by the
     * corpus squared. */
   def qNeardupVerified(s: SparkSession, dir: String): DataFrame = {
-    val pairs = qMinhashLsh(s, dir).scopedCache()
-    val docs = pairs.select(col("doc_a").as("doc_id"))
-      .unionAll(pairs.select(col("doc_b").as("doc_id"))).distinct()
-    // distinct shingle SETS, restricted to candidate docs only
-    val sh = wordShingles(s, dir).join(docs, Seq("doc_id")).distinct().scopedCache()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = pairs
-      .join(sh.as("x"), col("doc_a") === col("x.doc_id"))
-      .join(sh.as("y"), col("doc_b") === col("y.doc_id") && col("x.s") === col("y.s"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("n_inter"))
-    val jac = col("n_inter").cast("double") / (col("na") + col("nb") - col("n_inter"))
-    pairs
-      .join(inter, Seq("doc_a", "doc_b"), "left").na.fill(0L, Seq("n_inter"))
-      .join(sizes.select(col("doc_id"), col("n").as("na")), col("doc_a") === col("doc_id")).drop("doc_id")
-      .join(sizes.select(col("doc_id"), col("n").as("nb")), col("doc_b") === col("doc_id")).drop("doc_id")
-      .select(col("doc_a"), col("doc_b"), col("n_inter"),
-        round(jac, 4).as("jaccard"),
-        when(round(jac, 4) >= 0.5, lit(1)).otherwise(lit(0)).as("verified"))
+    val jac = overlapJaccard
+    shingleOverlap(qMinhashLsh(s, dir).scopedCache(),
+        documents(s, dir).select(col("doc_id"), col("text")))
+      .select(col("doc_a"), col("doc_b"), col("ni").as("n_inter"), jac.as("jaccard"),
+        when(jac >= 0.5, lit(1)).otherwise(lit(0)).as("verified"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -1103,9 +1055,10 @@ object DedupQ {
        |${simhashNeardupTail("sims", shr, xor)}""".stripMargin
 
   /** The 60-vote sims aggregation alone — the expensive single pass
-    * over the token stream. */
+    * over the token stream, spread over the session's cores
+    * ([[byDocId]]). */
   private def simhash60Sims(s: SparkSession, dir: String): DataFrame = {
-    documents(s, dir).createOrReplaceTempView("documents")
+    byDocId(s, documents(s, dir)).createOrReplaceTempView("documents")
     s.sql(
       s"""WITH ${simhash60Votes(
            "SELECT doc_id, t FROM documents LATERAL VIEW explode(split(trim(text), '\\\\s+')) AS t",
@@ -1124,17 +1077,13 @@ object DedupQ {
     // the InMemoryRelation is what every branch scans.
     val sims = simhash60Sims(s, dir).scopedCache()
     // the four block rows of a doc come from ONE posexplode (pos = block
-    // index) and the bucket cap is a window count over (blk, bv) — the
+    // index) and the bucket cap is [[capBuckets]] over (blk, bv) — the
     // qMinhashLsh shape: `sims` is scanned once and shuffled once on
     // the bucket key, and the self-join below reuses that partitioning
-    val w = Window.partitionBy(col("blk"), col("bv"))
-    val capped = sims
+    val capped = capBuckets(sims
       .select(col("doc_id"), col("sh"), posexplode(array((0 until 4).map { b =>
         shiftright(col("sh"), 15 * b).bitwiseAND(lit(32767L))
-      }: _*)).as(Seq("blk", "bv")))
-      .withColumn("bn", count(lit(1)).over(w))
-      .filter(col("bn") <= MaxLshBucket)
-      .select(col("doc_id"), col("blk"), col("bv"), col("sh"))
+      }: _*)).as(Seq("blk", "bv"))), MaxLshBucket, "blk", "bv")
     val left = capped.select(col("doc_id").as("doc_a"), col("blk"), col("bv"), col("sh").as("sha"))
     val right = capped.select(col("doc_id").as("doc_b"), col("blk"), col("bv"), col("sh").as("shb"))
     left.join(right, Seq("blk", "bv"))

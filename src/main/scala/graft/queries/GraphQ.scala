@@ -250,7 +250,10 @@ object GraphQ {
       // round — 2^4 = 16 re-executions of the base by round 4 (measured
       // 12.3 s vs qPagerank's 2.2 s, whose rounds reference the prior
       // relation once). The checkpoint adds no action; round N's plan
-      // starts from round N-1's materialized partitions.
+      // starts from round N-1's materialized partitions. The price is
+      // lineage: localCheckpoint keeps those partitions in executor
+      // storage only, so losing an executor loses them and the job
+      // fails instead of recomputing them.
       dist = dist.join(relaxed.withColumnRenamed("dst", "doc_id"), Seq("doc_id"), "left")
         .select(col("doc_id"), least(col("dist"), coalesce(col("mv"), lit(Inf))).as("dist"))
         .localCheckpoint(eager = false)

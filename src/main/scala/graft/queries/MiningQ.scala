@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import DedupQ.norm
+import DedupQ.{capBuckets, norm}
 import QCache.ScopedCacheOps
 import Tables.documents
 
@@ -87,10 +87,7 @@ object MiningQ {
     * edit_dist <= [[MaxEditDist]]. Exposed for MiningQSpec's cap-law
     * test. */
   def fuzzyPairs(corpus: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("blk"))
-    val capped = corpus
-      .withColumn("bn", count(lit(1)).over(w))
-      .filter(col("bn") <= MaxFuzzyBlock)
+    val capped = capBuckets(corpus, MaxFuzzyBlock, "blk")
       .select(col("doc_id"), col("text"), col("blk"), length(col("text")).as("len"))
       // self-joined below: without the cache the corpus lineage (parquet
       // scan + ASCII rlike over full text + block window) executes once

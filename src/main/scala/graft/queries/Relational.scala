@@ -533,7 +533,7 @@ object Relational {
     * a hash aggregate with map-side partial combine — the shuffle
     * carries per-(window) partials, not the event stream. This is also
     * byte-for-byte the aggregation Structured Streaming runs
-    * incrementally with a watermark (StreamingOps.windowCounts); here
+    * incrementally with a watermark (StreamingOps.slidingCounts); here
     * it is pinned against an independent engine as a batch query. */
   def qHopWindow(s: SparkSession, dir: String): DataFrame =
     Tables.read(s, dir, "events")

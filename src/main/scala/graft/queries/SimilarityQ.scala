@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import DedupQ.capBuckets
 import QCache.ScopedCacheOps
 
 import graft.functions.VectorExprs.{hyperplaneBucket, qdot}
@@ -187,13 +188,11 @@ object SimilarityQ {
     * carried raw float arrays (one fused codegen dot per pair, self-norms
     * precomputed per row), not a by-dimension join. */
   def qEmbedNeardup(s: SparkSession, dir: String): DataFrame = {
-    val sigs = embeddings(s, dir)
+    val sigs = capBuckets(embeddings(s, dir)
       .filter(col("embedding").isNotNull && size(col("embedding")) > 0) // match UNNEST semantics
       .select(col("vec_id"), col("embedding").as("v"),
         qdot(col("embedding"), col("embedding")).as("nrm"),
-        bucketCol(col("embedding")).as("bucket"))
-      .withColumn("bn", count(lit(1)).over(Window.partitionBy(col("bucket"))))
-      .filter(col("bn") <= MaxEmbedBucket)
+        bucketCol(col("embedding")).as("bucket")), MaxEmbedBucket, "bucket")
       .select(col("vec_id"), col("bucket"), col("v"), col("nrm"))
       .scopedCache()
     val a = sigs.as("a")

@@ -10,8 +10,7 @@ import graft.queries.{DedupQ, QCache}
 /** The battery cache-lifecycle law (round-3 verdict #6): intra-query
   * temporaries register with QCache and die at the per-query release;
   * the ONLY cached state that survives across queries is the documented
-  * MinHash signature + bands memo, which lives in the Spark session's
-  * cache. Asserted on `sc.getPersistentRDDs` — the public view of what
+  * MinHash signature memo, which lives in the Spark session's cache. Asserted on `sc.getPersistentRDDs` — the public view of what
   * actually occupies storage. */
 class CacheLifecycleSpec extends AnyFunSuite {
 
@@ -32,12 +31,12 @@ class CacheLifecycleSpec extends AnyFunSuite {
     d
   }
 
-  test("scoped caches release per query; only the bands memo survives") {
+  test("scoped caches release per query; only the signature memo survives") {
     val sc = spark.sparkContext
     QCache.releaseScoped(blocking = true)
     val before = sc.getPersistentRDDs.keySet
-    // qMinhashLsh materializes the bands MEMO (cross-query, deliberate)
-    // plus the capped-buckets temporary (scoped)
+    // qMinhashLsh materializes the signature MEMO (cross-query,
+    // deliberate) plus the capped-buckets temporary (scoped)
     DedupQ.qMinhashLsh(spark, dir).count()
     assert(QCache.liveCount >= 1, "capped-bucket temporary must be scoped")
     val during = sc.getPersistentRDDs.keySet
@@ -46,7 +45,7 @@ class CacheLifecycleSpec extends AnyFunSuite {
     assert(QCache.liveCount == 0)
     val afterFirst = sc.getPersistentRDDs.keySet
     assert(afterFirst.size < during.size, "scoped caches must unpersist at release")
-    assert((afterFirst -- before).nonEmpty, "the bands memo must SURVIVE the release")
+    assert((afterFirst -- before).nonEmpty, "the signature memo must SURVIVE the release")
 
     // a second query family: its temporaries appear, then release back to
     // EXACTLY the memo-only footprint — no accumulation across queries
@@ -78,26 +77,26 @@ class CacheLifecycleSpec extends AnyFunSuite {
     DedupQ.qLshTuning(spark, dir).count()
     QCache.releaseScoped(blocking = true)
     assert(sc.getPersistentRDDs.keySet == sigOnly, "the rebuilt signature memo must serve the next run")
-    // a band consumer adds the bands over the SAME signature: one more
-    // entry, not a second signature pass
+    // a band consumer bands the SAME signature in-query: no new entry,
+    // not a second signature pass
     DedupQ.qMinhashLsh(spark, dir).count()
     QCache.releaseScoped(blocking = true)
-    assert((sc.getPersistentRDDs.keySet -- sigOnly).size == 1)
+    assert((sc.getPersistentRDDs.keySet -- sigOnly).isEmpty)
   }
 
   test("after clearCache a band consumer caches the signature under the bands: one signature pass") {
     val sc = spark.sparkContext
-    DedupQ.qMinhashLsh(spark, dir).count() // both memo views exist
+    DedupQ.qMinhashLsh(spark, dir).count() // the memo view exists
     QCache.releaseScoped(blocking = true)
     spark.catalog.clearCache()
     val cleared = sc.getPersistentRDDs.keySet
     DedupQ.qMinhashLsh(spark, dir).count()
     QCache.releaseScoped(blocking = true)
-    val both = sc.getPersistentRDDs.keySet
-    assert((both -- cleared).size == 2, s"expected signature + bands, got ${both -- cleared}")
+    val sig = sc.getPersistentRDDs.keySet
+    assert((sig -- cleared).size == 1, s"expected the signature alone, got ${sig -- cleared}")
     // a signature consumer is served from the entry the bands were built on
     DedupQ.qLshTuning(spark, dir).count()
     QCache.releaseScoped(blocking = true)
-    assert(sc.getPersistentRDDs.keySet == both, "the signature must not be cached a second time")
+    assert(sc.getPersistentRDDs.keySet == sig, "the signature must not be cached a second time")
   }
 }

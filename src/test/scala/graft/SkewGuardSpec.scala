@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.queries.{DedupQ, SimilarityQ}
 
-/** The LSH bucket-size skew guards (DedupQ.MaxLshBucket,
-  * SimilarityQ.MaxEmbedBucket): a degenerate corpus — 1k identical docs /
+/** The LSH bucket-size skew guards (DedupQ.MaxLshBucket on the MinHash
+  * bands and the SimHash blocks, SimilarityQ.MaxEmbedBucket): a
+  * degenerate corpus — 1k identical docs /
   * 1k identical embeddings — lands in one bucket that would make the
   * candidate self-join quadratic (~500k pairs per band). The guard must
   * (a) exclude the oversized bucket from candidate generation and
@@ -65,6 +66,14 @@ class SkewGuardSpec extends AnyFunSuite {
     assert(prof.forall(_.getAs[Long]("n_docs") == 1000L))
     // all 4 bands of the identical group are oversized
     assert(prof.length == 4)
+  }
+
+  test("simhash guard: degenerate block buckets excluded") {
+    // the identical docs share one 60-bit simhash, so all four of its
+    // 15-bit block buckets hold 1000 docs and every one is capped
+    val pairs = DedupQ.qSimhashNeardup(spark, dir).collect()
+    assert(!pairs.exists(r => r.getLong(0) < 1000L || r.getLong(1) < 1000L),
+      "identical-doc flood leaked through the simhash block cap")
   }
 
   test("embedding guard: degenerate bucket excluded, real near-dups survive") {
