@@ -1,5 +1,8 @@
 package graft.queries
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+import java.util.{Arrays, HexFormat}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,6 +17,7 @@ import Tables.documents
   * so every stage is oracle-checkable: minhash_j(doc) =
   * min over shingles s of md5(j || ':' || s), LSH bands = md5 of the
   * concatenated band signature. No engine-specific hashing anywhere.
+  * Spark computes the signature in-row ([[minhashSig]], batch and stream).
   *
   * Cache policy: the self-join/iteration temporaries (capped bands,
   * candidate shingle sets, labels) register with [[QCache]]
@@ -189,19 +193,34 @@ object DedupQ {
     * oracle-checked drop report (`dropped = 1` rows are the exclusions). */
   val MaxLshBucket = 256
 
-  /** The 16-column MinHash signature (doc_id, m0..m15) — the banding-
-    * independent core, shared by the standard 4x4 bands and the tuning
-    * sweep's alternative bandings. 16 PARALLEL min aggregates over
-    * per-shingle hash columns: each shingle row carries its 16 keyed
-    * hashes in-register (no 16x row explode) into one groupBy(doc_id). */
-  private def minhash16(docs: DataFrame): DataFrame = {
-    val hashed = wordShinglesOf(docs).select(
-      col("doc_id") +:
-        (0 until 16).map(j =>
-          md5(concat(lit(j.toString), lit(":"), col("s")).cast("binary")).as(s"h$j")): _*)
-    hashed.groupBy(col("doc_id"))
-      .agg(min(col("h0")).as("m0"), (1 until 16).map(j => min(col(s"h$j")).as(s"m$j")): _*)
-  }
+  /** THE MinHash kernel, row-local (batch memo, planted variants and
+    * stream alike): array<string> of the 16 lowercase-hex minhashes of
+    * the words' 3-gram shingles, null under 3 words or for a null text.
+    * Minhash j = the smallest md5(j || ':' || shingle); digests compare
+    * as unsigned bytes, the order SQL MIN gives their hex strings. */
+  def minhashSig(text: Column): Column =
+    udf(minhashesOf _).apply(split(trim(norm(text)), " "))
+
+  private def minhashesOf(words: Seq[String]): Array[String] =
+    if (words == null || words.length < 3) null
+    else {
+      val shingles = words.sliding(3).map(_.mkString(" ").getBytes(UTF_8)).toArray
+      val (md, h) = (MessageDigest.getInstance("MD5"), new Array[Byte](16))
+      Array.tabulate(16) { j =>
+        val (seed, min) = (s"$j:".getBytes(UTF_8), Array.fill[Byte](16)(-1)) // no digest is larger
+        shingles.foreach { sh =>
+          md.update(seed); md.update(sh); md.digest(h, 0, 16)
+          if (Arrays.compareUnsigned(h, min) < 0) System.arraycopy(h, 0, min, 0, 16)
+        }
+        HexFormat.of().formatHex(min)
+      }
+    }
+
+  /** (doc_id, m0..m15) of the docs of `docs` (doc_id, text) with a signature.
+    * Not a Filter: pushed below the Project, it would run the kernel twice. */
+  private[graft] def signatures(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(array_compact(array(minhashSig(col("text"))))).as("sig"))
+      .select(col("doc_id") +: (0 until 16).map(j => col("sig")(j).as(s"m$j")): _*)
 
   /** The band hashes of a signature's nBands bands of 16/nBands rows
     * each: md5 of the band's comma-joined minhashes. */
@@ -217,52 +236,18 @@ object DedupQ {
     mh.select(col("doc_id"), posexplode(array(hashes: _*)).as(Seq("band", "bh")))
 
   /** Band the signature into nBands bands of 16/nBands rows each. */
-  private def bandsFromSig(mh: DataFrame, nBands: Int): DataFrame =
+  private[graft] def bandsFromSig(mh: DataFrame, nBands: Int): DataFrame =
     explodeBands(mh, bandHashes(nBands))
 
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map(b => f"$b%02x").mkString
-
-  /** Pure per-document band signatures — EXACTLY the batch
-    * [[minhash16]] + [[bandsFromSig]] arithmetic (word 3-gram shingles
-    * of the whitespace-normalized lowercased text; 16 minhashes as min
-    * md5("j:"+shingle) under lexicographic hex order, which is what the
-    * SQL MIN over md5 strings compares; band hash = md5 of the
-    * comma-joined quartet).
-    * One row arriving on a stream carries a complete document, so its
-    * signatures compute in-row with no cross-row aggregation — the
-    * function the streaming near-dup operator shares with batch
-    * (StreamingMultimodalSpec pins streaming == batch on the real
-    * documents table). Docs with fewer than 3 tokens produce no
-    * shingles and so no bands, matching the batch groupBy. */
-  def bandSignaturesOf(text: String): Seq[(Int, String)] = {
-    val words = text.replaceAll("\\s+", " ")
-      .toLowerCase(java.util.Locale.ROOT).trim.split(" ")
-    if (words.length < 3) return Seq.empty
-    val mins = new Array[String](16)
-    var i = 0
-    while (i <= words.length - 3) {
-      val sh = words(i) + " " + words(i + 1) + " " + words(i + 2)
-      var j = 0
-      while (j < 16) {
-        val h = md5hex(j.toString + ":" + sh)
-        if (mins(j) == null || h < mins(j)) mins(j) = h
-        j += 1
-      }
-      i += 1
-    }
-    (0 until 4).map(b => (b, md5hex((4 * b until 4 * b + 4).map(mins).mkString(","))))
-  }
-
   /** The corpus's MinHash SIGNATURE (doc_id, m0..m15), a session memo:
-    * the shingle -> 16-min-md5 aggregation is the expensive pass behind
+    * the per-doc [[minhashSig]] pass is the expensive one behind
     * every LSH query. Each row also carries its four 4x4 band hashes
     * (b0..b3, [[bandHashes]]), computed once in the same pass: hashing
     * them in every band consumer instead cost the sub-0.3 s band leaves
     * 9-18% at sf0.1, and a second cached relation of bands is a memo
-    * over a memo. The temp view `graft_minhash_sig_<md5(dir)>` holds
+    * over a memo. The temp view `graft_minhash_sig_<md5(dir)>_<md5(files)>`
+    * is keyed on the table's files (name, length, mtime; a driver-side
+    * listing), so a rewrite gets a new view and the old one is dropped. It holds
     * the analyzed plan and is a cached table, so the CacheManager serves
     * every call after the first from one InMemoryRelation; a stopped
     * session takes both along, and after `spark.catalog.clearCache()`
@@ -274,11 +259,22 @@ object DedupQ {
     * parquet split, and the signature pass would otherwise run as one
     * task. */
   private def cachedSig(s: SparkSession, dir: String): DataFrame = {
-    val view = s"graft_minhash_sig_${md5hex(dir)}"
-    if (!s.catalog.tableExists(view))
-      minhash16(byDocId(s, documents(s, dir).select(col("doc_id"), col("text"))))
+    def md5Hex(x: String) =
+      HexFormat.of().formatHex(MessageDigest.getInstance("MD5").digest(x.getBytes(UTF_8)))
+    val table = new org.apache.hadoop.fs.Path(Tables.path(dir, "documents"))
+    val it = table.getFileSystem(s.sparkContext.hadoopConfiguration).listFiles(table, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}").toSeq.sorted
+    val prefix = s"graft_minhash_sig_${md5Hex(dir)}_"
+    val view = prefix + md5Hex(files.mkString("\n"))
+    if (!s.catalog.tableExists(view)) {
+      // SHOW VIEWS runs no job; catalog.listTables() runs one
+      s.sql(s"SHOW VIEWS LIKE '$prefix*'").collect()
+        .foreach(r => s.catalog.dropTempView(r.getString(1)))
+      signatures(byDocId(s, documents(s, dir).select(col("doc_id"), col("text"))))
         .select(col("*") +: bandHashes(4).zipWithIndex.map { case (h, b) => h.as(s"b$b") }: _*)
         .createOrReplaceTempView(view)
+    }
     if (!s.catalog.isCached(view)) s.catalog.cacheTable(view)
     s.table(view)
   }
@@ -356,7 +352,7 @@ object DedupQ {
     lshPairs(corpusBands(s, dir)).orderBy(col("doc_a"), col("doc_b"))
 
   /** mh-signature CTE chain (n, sh, mh) over a (doc_id, text) relation
-    * name — the oracle spelling of [[minhash16]]; eval queries sign a
+    * name — the oracle spelling of [[minhashSig]]; eval queries sign a
     * UNION corpus (base + planted variants) through it. */
   private def mhCteBody(src: String): String =
     s"""n AS (SELECT doc_id, regexp_split_to_array(trim(lower(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS w FROM $src),
@@ -593,7 +589,7 @@ object DedupQ {
     // bands(variants): the base signature comes warm from the session
     // memo and only the ~1-in-23 variants hash fresh
     val found = plantedFound(
-      corpusBands(s, dir).unionAll(bandsFromSig(minhash16(planted), 4)))
+      corpusBands(s, dir).unionAll(bandsFromSig(signatures(planted), 4)))
       .withColumn("hit", lit(1))
     val pairs = planted.select((col("doc_id") - PlantOffset).as("doc_a"), col("doc_id").as("doc_b"))
     // a pair that shares no shingle drops out, as in the oracle's inner
@@ -649,7 +645,7 @@ object DedupQ {
     // signatures: the base corpus side comes warm from the session memo
     // and only the ~1-in-23 planted variants hash fresh
     val mh = cachedSig(s, dir).drop((0 until 4).map(b => s"b$b"): _*)
-      .unionAll(minhash16(planted)).scopedCache()
+      .unionAll(signatures(planted)).scopedCache()
     val nPlanted = planted.count()
     Seq(2, 4, 8).map { nBands =>
       val found = plantedFound(bandsFromSig(mh, nBands)).count()

@@ -522,6 +522,10 @@ object Relational {
       |  CAST(FLOOR(SUM(CAST(value AS DECIMAL(18,4))) * 100) AS BIGINT) AS sum_cents
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
+  /** q_hop_window's window (1 hour, every 30 minutes) and floored-cents sum. */
+  private[graft] def hopWindow(ts: Column): Column = window(ts, "1 hour", "30 minutes")
+  private[graft] def sumCents(value: Column): Column = floor(sum(dec(value)) * 100).cast("long")
+
   /** Sliding (hopping) time-window aggregation via Spark's native
     * `window()` generator: 1-hour windows every 30 minutes, so each
     * event lands in exactly two windows. The oracle replicates the
@@ -537,10 +541,10 @@ object Relational {
     * it is pinned against an independent engine as a batch query. */
   def qHopWindow(s: SparkSession, dir: String): DataFrame =
     Tables.read(s, dir, "events")
-      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"))
+      .groupBy(hopWindow(col("ts")).as("w"))
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"),
-        floor(sum(dec(col("value"))) * 100).cast("long").as("sum_cents"))
+        sumCents(col("value")).as("sum_cents"))
       .select(col("w.start").as("w_start"), col("n_events"), col("n_users"), col("sum_cents"))
       .orderBy(col("w_start"))
 

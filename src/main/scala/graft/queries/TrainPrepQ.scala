@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -78,13 +78,22 @@ object TrainPrepQ {
     * reference data the streaming gate scores against), so batch and
     * stream bucket arithmetic cannot drift. */
   private[graft] def dsirCounts(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("source"),
-        explode(split(trim(lower(col("text"))), "\\s+")).as("word"))
-      .filter(col("word") =!= "")
-      .withColumn("b", expr(
-        s"CAST(conv(substr(md5(CAST(word AS BINARY)), 1, 7), 16, 10) AS BIGINT) % $DsirBuckets"))
+    docs.select(col("doc_id"), col("source"), explode(dsirBuckets(col("text"))).as("b"))
       .groupBy(col("doc_id"), col("source"), col("b"))
       .agg(count(lit(1)).as("c"))
+
+  /** THE DSIR token kernel: the bucket ids of `text`'s non-empty tokens,
+    * each its md5's first 7 hex digits mod [[DsirBuckets]]; [[dsirCounts]]
+    * explodes it, StreamingOps.dsirSelectStream folds it. A UDF: as array
+    * lambdas (interpreted per token) it cost q_dsir_select 10-38% at sf0.1. */
+  private[graft] def dsirBuckets(text: Column): Column =
+    udf((words: Seq[String]) => if (words == null) null else {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      words.filter(_.nonEmpty).map { w =>
+        val d = md.digest(w.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        ((d(0) & 0xffL) << 20 | (d(1) & 0xff) << 12 | (d(2) & 0xff) << 4 | (d(3) & 0xff) >> 4) % DsirBuckets
+      }.toArray
+    }).apply(split(trim(lower(text)), "\\s+"))
 
   /** Freeze the two DSIR bucket distributions as driver-side maps —
     * BOUNDED reference data ([[DsirBuckets]] entries each), the shape a
@@ -830,16 +839,18 @@ object TrainPrepQ {
     * [[contamBenchFps]] (which freezes the benchmark set the streaming
     * gate scores against), so batch and stream gram arithmetic cannot
     * drift. One row per (doc_id, 1-based position, md5-of-8-gram). */
-  private[graft] def contamGrams(docs: DataFrame): DataFrame = {
-    val k = 8
+  private[graft] def contamGrams(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), split(trim(injectedText), "\\s+").as("toks"))
-      .filter(size(col("toks")) >= k)
+      .filter(size(col("toks")) >= ContamK)
       .select(col("doc_id"),
-        explode(sequence(lit(1), size(col("toks")) - (k - 1))).as("i"), col("toks"))
-      .select(col("doc_id"), col("i").cast("long").as("i"),
-        md5(concat_ws(" ", slice(col("toks"), col("i"), lit(k))).cast("binary")).as("fp"))
-  }
+        explode(sequence(lit(1), size(col("toks")) - (ContamK - 1))).as("i"), col("toks"))
+      .select(col("doc_id"), col("i").cast("long").as("i"), gramFp(col("toks"), col("i")).as("fp"))
+
+  /** The gram width, and the md5 of the gram of `toks` at 1-based `i` (batch and stream). */
+  private[graft] val ContamK = 8
+  private[graft] def gramFp(toks: Column, i: Column): Column =
+    md5(concat_ws(" ", slice(toks, i, lit(ContamK))).cast("binary"))
 
   /** Freeze the benchmark 8-gram fingerprint set — BOUNDED reference
     * data (an eval suite, not a second corpus), the shape a streaming
@@ -850,7 +861,6 @@ object TrainPrepQ {
       .collect().map(_.getString(0)).toSeq
 
   def qContamCoverage(s: SparkSession, dir: String): DataFrame = {
-    val k = 8
     val toks = documents(s, dir)
       .select(col("doc_id"), split(trim(injectedText), "\\s+").as("toks"))
     val grams = contamGrams(documents(s, dir))
@@ -862,7 +872,7 @@ object TrainPrepQ {
       .join(broadcast(bench), Seq("fp"))
       .withColumn("pm", max(col("i")).over(wPrev))
       .select(col("doc_id"),
-        (col("i") + k - greatest(col("i"), coalesce(col("pm") + k, col("i")))).as("inc"))
+        (col("i") + ContamK - greatest(col("i"), coalesce(col("pm") + ContamK, col("i")))).as("inc"))
       .groupBy(col("doc_id"))
       .agg(sum(col("inc")).as("cov"), count(lit(1)).as("nhit"))
     toks.filter(col("doc_id") % 97 =!= 0)

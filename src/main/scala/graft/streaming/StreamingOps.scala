@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -115,8 +115,8 @@ object StreamingOps {
 
   /** Streaming MinHash NEAR-dup: incremental candidate-pair discovery
     * over a live document feed. Each arriving (doc_id, text) row
-    * computes its 4 LSH band signatures in-row (the exact batch
-    * arithmetic — [[graft.queries.DedupQ.bandSignaturesOf]], shared so
+    * computes its 4 LSH band hashes in-row with the batch kernels
+    * (DedupQ.signatures over minhashSig, then bandsFromSig, shared so
     * streaming and batch cannot drift), then
     * `flatMapGroupsWithState` keyed by (band, band_hash) maintains each
     * bucket's member list and emits a candidate pair for the new doc
@@ -135,11 +135,8 @@ object StreamingOps {
     * here. */
   def neardupStream(docs: DataFrame): DataFrame = {
     import docs.sparkSession.implicits._
-    val bandsUdf = udf((text: String) => graft.queries.DedupQ.bandSignaturesOf(text))
-    docs
-      .select(col("doc_id").cast("long").as("doc_id"),
-        explode(bandsUdf(col("text"))).as("bs"))
-      .select(col("doc_id"), col("bs._1").as("band"), col("bs._2").as("bh"))
+    import graft.queries.DedupQ.{bandsFromSig, signatures}
+    bandsFromSig(signatures(docs.select(col("doc_id").cast("long").as("doc_id"), col("text"))), 4)
       .as[(Long, Int, String)]
       .groupByKey { case (_, band, bh) => (band, bh) }
       .flatMapGroupsWithState[Vector[Long], (Long, Long)](
@@ -183,16 +180,11 @@ object StreamingOps {
     * integer sums run inside Catalyst array HOFs over the row's own
     * token list — so there is no state store, no watermark and no
     * shuffle, the shape that keeps a high-volume ingest stream
-    * embarrassingly parallel. Bucket arithmetic is byte-identical to
-    * the batch kernel (same md5/conv expression); StreamingDsirSpec
+    * embarrassingly parallel. Buckets come from the batch kernel
+    * (TrainPrepQ.dsirBuckets); StreamingDsirSpec
     * pins stream == batch row-for-row on the real corpus. */
   def dsirSelectStream(docs: DataFrame, tDist: Map[Long, Long],
       sDist: Map[Long, Long], tTotal: Long, sTotal: Long): DataFrame = {
-    import org.apache.spark.sql.Column
-    val buckets = transform(
-      filter(split(trim(lower(col("text"))), "\\s+"), (w: Column) => w =!= ""),
-      w => conv(substring(md5(w.cast("binary")), 1, 7), 16, 10)
-        .cast("long") % graft.queries.TrainPrepQ.DsirBuckets)
     // try_element_at, NOT element_at: null-on-missing-key is the intent
     // (coalesce to 0 for unseen buckets), and plain element_at has
     // historically thrown MAP_KEY_DOES_NOT_EXIST under ANSI dialects —
@@ -201,7 +193,7 @@ object StreamingOps {
     def look(m: Column, b: Column): Column = coalesce(try_element_at(m, b), lit(0L))
     val (tMap, sMap) = (typedLit(tDist), typedLit(sDist))
     docs
-      .withColumn("bs", buckets)
+      .withColumn("bs", graft.queries.TrainPrepQ.dsirBuckets(col("text")))
       .filter(size(col("bs")) > 0) // empty docs are absent batch-side too
       .select(col("doc_id"),
         size(col("bs")).cast("long").as("n_tokens"),
@@ -222,8 +214,8 @@ object StreamingOps {
     * arithmetic as the batch window, but entirely inside the row.
     * STATELESS append: no state store, no watermark, no shuffle — the
     * decontamination-at-ingest gate stays embarrassingly parallel.
-    * Gram fingerprints are byte-identical to the batch kernel (same
-    * md5-of-space-joined-slice); StreamingContamSpec pins stream ==
+    * Gram fingerprints and width come from the batch kernel
+    * (TrainPrepQ.gramFp, ContamK); StreamingContamSpec pins stream ==
     * batch row-for-row on the real corpus.
     *
     * CALLER CONTRACT (round-4 advice — the stream==batch equivalence is
@@ -237,12 +229,10 @@ object StreamingOps {
     * output of TrainPrepQ.contamBenchFps over the SAME sentinel-injected
     * corpus. */
   def contamCoverageStream(docs: DataFrame, benchFps: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.Column
-    val k = 8
+    import graft.queries.TrainPrepQ.{gramFp, ContamK => k}
     val bench = typedLit(benchFps.map(_ -> true).toMap)
     // try_element_at for explicit null-on-miss (see dsirSelectStream)
-    val hit = (i: Column) => coalesce(try_element_at(bench,
-      md5(concat_ws(" ", slice(col("toks"), i, lit(k))).cast("binary"))), lit(false))
+    val hit = (i: Column) => coalesce(try_element_at(bench, gramFp(col("toks"), i)), lit(false))
     val zero = struct(lit(0L).as("last"), lit(0L).as("cov"))
     val step = (st: Column, i: Column) => struct(
       (i.cast("long") + k).as("last"),
@@ -331,17 +321,17 @@ object StreamingOps {
 
   /** Event-time SLIDING window aggregate (1-hour window hopping every 30
     * minutes) with a watermark — the streaming form of the batch
-    * q_hop_window: identical window generator and floored-cents decimal
-    * arithmetic, so the two cannot drift (the spec pins column-level
+    * q_hop_window: the batch window generator and floored-cents sum
+    * (Relational.hopWindow, sumCents), so the two cannot drift (the spec pins column-level
     * equality). Exact distinct-user counts are a batch-only column:
     * streaming aggregation cannot compute exact DISTINCT incrementally. */
   def slidingCounts(events: DataFrame): DataFrame =
     events
       .withColumn("ts", col("ts").cast("timestamp"))
       .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"))
+      .groupBy(graft.queries.Relational.hopWindow(col("ts")).as("w"))
       .agg(count(lit(1)).as("n_events"),
-        floor(sum(col("value").cast("decimal(18,4)")) * 100).cast("long").as("sum_cents"))
+        graft.queries.Relational.sumCents(col("value")).as("sum_cents"))
       .select(col("w.start").as("w_start"), col("n_events"), col("sum_cents"))
 
   def runSlidingOverDir(spark: SparkSession, sfDir: String, queryName: String): DataFrame =

@@ -103,6 +103,9 @@ class BfsFixpointSpec extends AnyFunSuite {
 
   test("one Spark count action per relaxation round (lazy checkpoint, fused convergence)") {
     GraphQ.qBfsFixpoint(spark, dir).count() // warm lineage/memos
+    // deliver the warm-up's (and earlier suites') listener events now,
+    // so none of them reaches the listener registered below
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
 
     val countActions = new java.util.concurrent.atomic.AtomicInteger(0)
     val qel = new org.apache.spark.sql.util.QueryExecutionListener {
@@ -116,7 +119,7 @@ class BfsFixpointSpec extends AnyFunSuite {
     try {
       val (fixpoint, rounds) = fixpointWithRounds()
       val n = fixpoint.count()
-      Thread.sleep(500) // async listener bus
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
       assert(n > 0)
       assert(rounds >= 2, s"expected several rounds, got $rounds")
       assert(countActions.get() <= rounds + 1,
