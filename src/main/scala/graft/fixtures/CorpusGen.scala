@@ -106,26 +106,34 @@ object CorpusGen {
   }
 
   /** Materialize the pre-split corpus for a scale dir once under /tmp,
-    * returning its path (idempotent; rebuilds when absent or when the
-    * generator SEMANTICS changed — the path carries
-    * [[generatorFingerprint]], not a hand-maintained version). Shared by
-    * Bench (the timed layout) and q_extract_presplit (the battery/
-    * correctness entry over the same layout). */
+    * returning its path (idempotent). The path is keyed on the scale
+    * dir, on its `documents` table's files ([[Tables.listing]]: a table
+    * rewritten under the same dir gets a fresh layout) and on the
+    * generator SEMANTICS ([[generatorFingerprint]], not a
+    * hand-maintained version) and the layout's columns, so a directory
+    * that is complete (`_SUCCESS`) is served with no job. A layout that a
+    * rewrite superseded is deleted. Shared by Bench (the timed layout)
+    * and q_extract_presplit (the battery/correctness entry over the same
+    * layout). */
   def materializedPreSplit(spark: SparkSession, sfDir: String): String = {
     val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val path = s"/tmp/graft_corpus_${sfName}_$generatorFingerprint"
-    val usable = java.nio.file.Files.exists(java.nio.file.Paths.get(path, "_SUCCESS")) &&
-      (try {
-        val cols = spark.read.parquet(path).columns
-        cols.contains("n_spans") && cols.contains("part_idx")
-      } catch { case _: Exception => false })
-    if (!usable) {
+    val prefix = s"graft_corpus_${sfName}_${Tables.md5Hex(sfDir).take(8)}_"
+    val key = Tables.md5Hex(Seq(generatorFingerprint, Tables.listing(spark, sfDir, "documents"),
+      PreSplitColumns.mkString(","), graft.pipeline.Extract.PartSize).mkString("|")).take(12)
+    val path = java.nio.file.Paths.get("/tmp", prefix + key)
+    if (!java.nio.file.Files.exists(path.resolve("_SUCCESS"))) {
+      val stale = java.nio.file.Files.list(path.getParent)
+      try stale.filter(p => p.getFileName.toString.startsWith(prefix) && p != path)
+        .forEach(p => org.apache.commons.io.FileUtils.deleteDirectory(p.toFile))
+      finally stale.close()
       preSplit(fromDocuments(spark, sfDir))
         .repartition(32)
-        .write.mode("overwrite").parquet(path)
+        .write.mode("overwrite").parquet(path.toString)
     }
-    path
+    path.toString
   }
+
+  private val PreSplitColumns = Seq("doc_id", "part_idx", "spans", "n_spans")
 
   /** The PRE-SPLIT storage layout (doc_id, part_idx, spans, n_spans):
     * each doc's span array chunked into fixed Extract.PartSize slices,
@@ -149,6 +157,6 @@ object CorpusGen {
         posexplode(expr(
           s"transform(sequence(0, (n_spans - 1) div $partSize), p -> slice(spans, p * $partSize + 1, $partSize))"))
           .as(Seq("part_idx", "spans")))
-      .select(col("doc_id"), col("part_idx"), col("spans"), col("n_spans"))
+      .select(PreSplitColumns.map(col): _*)
   }
 }

@@ -17,8 +17,10 @@ object HocrParse {
     parseHocrString(decoded)
   }
 
-  def parseHocrString(decoded: String): Either[String, Hocr] = {
-    val dom = HtmlDom.parse(decoded)
+  def parseHocrString(decoded: String): Either[String, Hocr] = parseDom(HtmlDom.parse(decoded))
+
+  /** The model of a parsed document. */
+  private[graft] def parseDom(dom: Node): Either[String, Hocr] = {
     val pages = pageNodes(dom)
     if (pages.isEmpty) Left("no ocr_page elements found in HOCR data")
     else Right(extractDocumentMeta(dom).copy(pages = pages.map(processPage).toVector))
@@ -27,7 +29,7 @@ object HocrParse {
   /** findPages (parse.go:55-77): `div.ocr_page` elements in document
     * order; early-return per page subtree (a page nested in a page is not
     * a page of its own). */
-  private[hocr] def pageNodes(dom: Node): ArrayBuffer[Node] = {
+  private def pageNodes(dom: Node): ArrayBuffer[Node] = {
     val pages = ArrayBuffer.empty[Node]
     def isPage(n: Node): Boolean =
       n.nodeType == ElementNode && n.data == "div" && n.attr("class").contains("ocr_page")
@@ -157,7 +159,7 @@ object HocrParse {
     * (parse.go:231-249 pattern): one bucket per entry of `classes`,
     * filled in document order. A node goes to the first class its
     * `class` attribute contains, and its subtree is not descended. */
-  private[hocr] def collectByClass(parent: Node, classes: Array[String]): Array[ArrayBuffer[Node]] = {
+  private def collectByClass(parent: Node, classes: Array[String]): Array[ArrayBuffer[Node]] = {
     val buckets = Array.fill(classes.length)(new ArrayBuffer[Node](4))
     preOrder(parent) { node =>
       val cls = if (node.nodeType == ElementNode) node.attr("class") else ""
@@ -171,7 +173,7 @@ object HocrParse {
 
   /** A line's words (parse.go:465-478): full recursion with early stop
     * only at ocrx_word nodes. */
-  private[hocr] def lineWordNodes(line: Node): ArrayBuffer[Node] = {
+  private def lineWordNodes(line: Node): ArrayBuffer[Node] = {
     val words = new ArrayBuffer[Node](8)
     preOrder(line) { node =>
       val word = node.nodeType == ElementNode && node.attr("class").contains("ocrx_word")
@@ -182,7 +184,7 @@ object HocrParse {
   }
 
   /** A word's text (processWord): only when the node has children. */
-  private[hocr] def wordText(n: Node): String =
+  private def wordText(n: Node): String =
     if (n.children.nonEmpty) extractTextContent(n) else ""
 
   /** processPage (parse.go:196-280).

@@ -2,8 +2,8 @@ package graft.hocr
 
 import scala.collection.mutable
 
-import graft.html.HtmlDom
-import graft.html.HtmlDom.Node
+import graft.html.Arena
+import graft.text.GoStrings
 
 /** Reading-order text extraction — mirrors
   * /root/reference/pkg/hocr/helpers.go:10-102 exactly, including the
@@ -15,61 +15,272 @@ import graft.html.HtmlDom.Node
   * direct words. Inside a paragraph: lines -> direct words.
   *
   * Two entry points with one output: [[extractText]] over the parsed
-  * model, and [[fromMarkup]] straight from the markup's DOM. */
+  * model, and [[fromMarkup]] straight from the markup's arena. */
 object HocrText {
 
   /** `extractText(parseHocrString(markup))`, with "" where the parse
-    * finds no page, computed without the hOCR model: the DOM walk uses
-    * HocrParse's own page, bucket and word rules and emits each word's
-    * text as it is reached, so no `title` is parsed and no
-    * HWord..HPage is built. The extraction hot path (SpanExtract's
-    * pdf_layout kind) reads only word texts and line ids, and allocation
-    * rate is its scaling limiter. */
+    * finds no page, computed without the hOCR model (read as the
+    * markup's UTF-8 bytes). */
   def fromMarkup(markup: String): String = {
-    val pages = HocrParse.pageNodes(HtmlDom.parse(markup))
-    if (pages.isEmpty) return ""
-    val sb = new java.lang.StringBuilder
-    val processed = mutable.HashSet.empty[String]
-    pages.foreach { page =>
-      processed.clear()
-      val Array(areas, paras, lines) = HocrParse.collectByClass(page, HocrParse.PageClasses)
-      areas.foreach { area =>
-        val Array(aParas, aLines, aWords) = HocrParse.collectByClass(area, HocrParse.AreaClasses)
-        aParas.foreach(p => paragraphFromMarkup(sb, p, processed))
-        aLines.foreach(l => lineFromMarkup(sb, l, processed))
-        wordsFromMarkup(sb, aWords)
+    val a = Arena.of(markup)
+    fromMarkup(a)
+    a.resultString()
+  }
+
+  /** [[fromMarkup]] of the document `a` holds, into its output
+    * ([[Arena.result]]). The arena walk uses HocrParse's own page,
+    * bucket and word rules and writes each word's text as it is reached,
+    * so no `title` is parsed, no node and no HWord..HPage is built, and
+    * only word texts are decoded. The extraction hot path (SpanExtract's
+    * pdf_layout kind) reads only word texts and line ids, and allocation
+    * rate is its scaling limiter. The buckets come in bucket order, not
+    * document order (areas, then paragraphs, then lines), which is why
+    * this walks a whole-document arena and not a token stream. */
+  def fromMarkup(a: Arena): Unit = new Walk(a).run()
+
+  private val Div = Arena.tagId("div")
+  private val Bits = Array("ocr_page", "ocr_carea", "ocr_par", "ocr_line", "ocrx_word")
+  private def bits(classes: Array[String]): Array[Int] = classes.map(c => 1 << Bits.indexOf(c))
+  private val PageBit = 1
+  private val WordBit = 1 << Bits.indexOf("ocrx_word")
+  private val PageClasses = bits(HocrParse.PageClasses)
+  private val AreaClasses = bits(HocrParse.AreaClasses)
+  private val ParaClasses = bits(HocrParse.ParaClasses)
+
+  private final class Walk(a: Arena) {
+    /** Per element, which [[Bits]] its first `class` contains. */
+    private val classes = { a.marks.ensure(a.nNodes); java.util.Arrays.fill(a.marks.a, 0, a.nNodes, 0); a.marks.a }
+    /** The ids of the page's lines written so far. */
+    private val lineIds = new SliceSet
+
+    def run(): Unit = {
+      a.resetOut(math.max(64, (a.srcEnd - a.srcStart) / 8))
+      var k = 0
+      while (k < a.nNodes) {
+        if (a.isElem(k)) {
+          val c = a.firstAttr(k, Arena.ClassAttr)
+          if (c >= 0) { a.valueOf(c); classes(k) = classBits(a.textArr, a.textFrom, a.textTo) }
+        }
+        k += 1
       }
-      paras.foreach(p => paragraphFromMarkup(sb, p, processed))
-      lines.foreach(l => lineFromMarkup(sb, l, processed))
-      sb.append("\n\n")
+      // findPages: div.ocr_page in document order, not inside a page
+      val pool = a.pool
+      pool.n = 0
+      val st = a.stack
+      st.n = 0
+      a.pushChildren(st, 0)
+      while (st.n > 0) {
+        val n = st.pop()
+        if (a.isElem(n) && a.tagOf(n) == Div && (classes(n) & PageBit) != 0) pool.add(n)
+        else a.pushChildren(st, n)
+      }
+      val pages = pool.n
+      var p = 0
+      while (p < pages) {
+        lineIds.clear()
+        val s = collect(pool.a(p), PageClasses)
+        each(s, 0)(area)
+        each(s, 1)(paragraph)
+        each(s, 2)(line)
+        pool.n = s
+        a.ensureOut(2)
+        a.put('\n'); a.put('\n')
+        p += 1
+      }
+      a.finish()
     }
-    sb.toString
+
+    /** Whether `arr(from until to)` contains each class name, as bits. */
+    private def classBits(arr: Array[Byte], from: Int, to: Int): Int = {
+      var m = 0
+      var i = from
+      while (i + 3 <= to) {
+        if (arr(i) == 'o' && arr(i + 1) == 'c' && arr(i + 2) == 'r') {
+          var b = 0
+          while (b < Bits.length) {
+            val name = Bits(b)
+            if (i + name.length <= to) {
+              var j = 3
+              while (j < name.length && arr(i + j) == name.charAt(j)) j += 1
+              if (j == name.length) m |= 1 << b
+            }
+            b += 1
+          }
+        }
+        i += 1
+      }
+      m
+    }
+
+    /** collectByClass: `parent`'s descendants, in document order, that
+      * carry one of `wanted` (the first one matching wins), not
+      * descending into them; appended to the pool as (node, bucket)
+      * pairs. Returns where they start. */
+    private def collect(parent: Int, wanted: Array[Int]): Int = {
+      val pool = a.pool
+      val start = pool.n
+      val st = a.stack
+      st.n = 0
+      a.pushChildren(st, parent)
+      while (st.n > 0) {
+        val n = st.pop()
+        val m = classes(n)
+        var b = 0
+        while (b < wanted.length && (m & wanted(b)) == 0) b += 1
+        if (b < wanted.length) { pool.add(n); pool.add(b) }
+        else a.pushChildren(st, n)
+      }
+      start
+    }
+
+    /** `f` on bucket `b` of the pairs from `s` to the pool's end. */
+    private def each(s: Int, b: Int)(f: Int => Unit): Unit = {
+      val e = a.pool.n
+      var i = s
+      while (i < e) { if (a.pool.a(i + 1) == b) f(a.pool.a(i)); i += 2 }
+    }
+
+    private def area(n: Int): Unit = {
+      val s = collect(n, AreaClasses)
+      each(s, 0)(paragraph)
+      each(s, 1)(line)
+      words(s, 2)
+      a.pool.n = s
+    }
+
+    private def paragraph(n: Int): Unit = {
+      val s = collect(n, ParaClasses)
+      each(s, 0)(line)
+      words(s, 1)
+      a.pool.n = s
+    }
+
+    /** Area- or paragraph-direct words: one line, none when empty. */
+    private def words(s: Int, b: Int): Unit = {
+      var any = false
+      each(s, b) { w => word(w); any = true }
+      if (any) { a.ensureOut(1); a.put('\n') }
+    }
+
+    /** A line once per id (processLine keeps the LAST `id` attribute),
+      * its words found by full recursion with an early stop only at
+      * ocrx_word nodes. */
+    private def line(n: Int): Unit = {
+      val id = a.lastAttr(n, Arena.IdAttr)
+      val fresh =
+        if (id < 0) lineIds.add(a.src, 0, 0)
+        else { a.valueOf(id); lineIds.add(a.textArr, a.textFrom, a.textTo) }
+      if (fresh) {
+        val pool = a.pool
+        val s = pool.n
+        val st = a.stack
+        st.n = 0
+        a.pushChildren(st, n)
+        while (st.n > 0) {
+          val c = st.pop()
+          if ((classes(c) & WordBit) != 0) pool.add(c) else a.pushChildren(st, c)
+        }
+        var i = s
+        while (i < pool.n) { word(pool.a(i)); i += 1 }
+        pool.n = s
+        a.ensureOut(1)
+        a.put('\n')
+      }
+    }
+
+    /** A word's text and a space. The text (extractTextContent) is every
+      * descendant text node trimmed, in document order: each element's
+      * text is then trimmed already, so its own trim is a no-op. */
+    private def word(n: Int): Unit = {
+      val st = a.stack2
+      st.n = 0
+      a.pushChildren(st, n)
+      while (st.n > 0) {
+        val c = st.pop()
+        if (a.isText(c)) {
+          a.textOf(c)
+          val arr = a.textArr
+          var i = a.textFrom
+          var j = a.textTo
+          while (i < j && isSpaceAt(arr, i)) i += Arena.seqLen(arr(i))
+          while (j > i && isSpaceAt(arr, lastSeq(arr, j))) j = lastSeq(arr, j)
+          a.append(arr, i, j)
+        } else a.pushChildren(st, c)
+      }
+      a.ensureOut(1)
+      a.put(' ')
+    }
   }
 
-  private def paragraphFromMarkup(sb: java.lang.StringBuilder, para: Node,
-      processed: mutable.HashSet[String]): Unit = {
-    val Array(lines, words) = HocrParse.collectByClass(para, HocrParse.ParaClasses)
-    lines.foreach(l => lineFromMarkup(sb, l, processed))
-    wordsFromMarkup(sb, words)
+  private def isSpaceAt(arr: Array[Byte], i: Int): Boolean = {
+    val b = arr(i)
+    if (b >= 0) GoStrings.isSpace(b.toChar)
+    else Arena.seqLen(b) < 4 && GoStrings.isSpace(Arena.cp(arr, i).toChar)
   }
 
-  /** A line once per id (processLine keeps the LAST `id` attribute). */
-  private def lineFromMarkup(sb: java.lang.StringBuilder, line: Node,
-      processed: mutable.HashSet[String]): Unit = {
-    var id = ""
-    line.attrs.foreach { case (k, v) => if (k == "id") id = v }
-    if (processed.add(id)) {
-      HocrParse.lineWordNodes(line).foreach(w => sb.append(HocrParse.wordText(w)).append(' '))
-      sb.append('\n')
-    }
+  /** Start of the sequence that ends at `end`. */
+  private def lastSeq(arr: Array[Byte], end: Int): Int = {
+    var i = end - 1
+    while ((arr(i) & 0xC0) == 0x80) i -= 1
+    i
   }
 
-  /** Area- or paragraph-direct words: one line, none when empty. */
-  private def wordsFromMarkup(sb: java.lang.StringBuilder, words: collection.Seq[Node]): Unit =
-    if (words.nonEmpty) {
-      words.foreach(w => sb.append(HocrParse.wordText(w)).append(' '))
-      sb.append('\n')
+  /** A set of byte strings (line ids), copied into one pool. */
+  private final class SliceSet {
+    private var bytes = new Array[Byte](64)
+    private var used = 0
+    private var starts = new Array[Int](8)
+    private var ends = new Array[Int](8)
+    private var size = 0
+    private var table = new Array[Int](16) // entry + 1, 0 = empty
+
+    def clear(): Unit = {
+      if (size > 0) java.util.Arrays.fill(table, 0)
+      used = 0
+      size = 0
     }
+
+    /** Adds `arr(from until to)`; false when it was present. */
+    def add(arr: Array[Byte], from: Int, to: Int): Boolean = {
+      var h = 1
+      var i = from
+      while (i < to) { h = 31 * h + arr(i); i += 1 }
+      var slot = (h ^ (h >>> 16)) & (table.length - 1)
+      while (table(slot) != 0) {
+        val e = table(slot) - 1
+        if (java.util.Arrays.equals(bytes, starts(e), ends(e), arr, from, to)) return false
+        slot = (slot + 1) & (table.length - 1)
+      }
+      if (used + (to - from) > bytes.length) bytes = java.util.Arrays.copyOf(bytes, math.max(2 * bytes.length, used + to - from))
+      System.arraycopy(arr, from, bytes, used, to - from)
+      if (size == starts.length) {
+        starts = java.util.Arrays.copyOf(starts, 2 * size)
+        ends = java.util.Arrays.copyOf(ends, 2 * size)
+      }
+      starts(size) = used
+      used += to - from
+      ends(size) = used
+      table(slot) = size + 1
+      size += 1
+      if (2 * size > table.length) rehash()
+      true
+    }
+
+    private def rehash(): Unit = {
+      val old = table
+      table = new Array[Int](2 * old.length)
+      var k = 0
+      while (k < size) {
+        var h = 1
+        var i = starts(k)
+        while (i < ends(k)) { h = 31 * h + bytes(i); i += 1 }
+        var slot = (h ^ (h >>> 16)) & (table.length - 1)
+        while (table(slot) != 0) slot = (slot + 1) & (table.length - 1)
+        table(slot) = k + 1
+        k += 1
+      }
+    }
+  }
 
   def extractText(doc: Hocr): String = {
     val sb = new StringBuilder

@@ -1,6 +1,5 @@
 package graft.html
 
-import graft.html.HtmlDom.{ElementNode, Node, TextNode}
 import graft.text.GoStrings
 
 /** Main-content extraction from raw HTML (the north rule's "HTML
@@ -10,7 +9,9 @@ import graft.text.GoStrings
   * The algorithm is deterministic and self-contained (in the spirit of
   * Boilerpipe/jusText, from the published descriptions, not their code):
   *
-  *  1. Parse the DOM; DROP subtrees rooted at non-content tags:
+  *  1. Parse the document into an [[Arena]] straight from its UTF-8
+  *     bytes (no String, no node objects); DROP subtrees rooted at
+  *     non-content tags:
   *     script, style, noscript, template, iframe, svg, canvas, form,
   *     button, select, option, nav, footer, aside.
   *  2. Segment the remaining tree into BLOCKS: a block ends at each
@@ -27,7 +28,8 @@ import graft.text.GoStrings
   *       - list item (li ancestor):  textLen >= 30 and linkDensity <= 0.2
   *       - otherwise:                textLen >= 25 and linkDensity <= 1/3
   *                                   and textDensity >= 8.
-  *  5. Output = kept blocks joined with "\n".
+  *  5. Output = kept blocks joined with "\n", written as UTF-8 bytes:
+  *     only the kept text is ever decoded.
   *
   * Thresholds are part of this engine's pinned semantics (golden tests).
   */
@@ -50,117 +52,143 @@ object Boilerplate {
 
   private val headingTags = Set("h1", "h2", "h3", "h4", "h5", "h6")
 
+  private val Drop = Arena.tagSet(dropTags)
+  private val Block = Arena.tagSet(blockTags)
+  private val Heading = Arena.tagSet(headingTags)
+  private val A = Arena.tagId("a")
+  private val Li = Arena.tagId("li")
+  private val AsciiSpace = Array.tabulate(128)(c => GoStrings.isSpace(c.toChar))
+
   // the walk's inherited flags: inside an <a>, a heading, an <li>
   private final val InLink = 1
   private final val InHeading = 2
   private final val InLi = 4
 
-  private final class Block {
-    val text = new StringBuilder
-    var linkLen = 0
-    var tagCount = 0
-    var heading = false
-    var listItem = false
-    def textLen: Int = collapsed.codePointCount(0, collapsed.length)
-    private var collapsedCache: String = null
-    def collapsed: String = {
-      if (collapsedCache == null) collapsedCache = collapseWs(text.toString)
-      collapsedCache
-    }
-  }
-
-  /** Collapse whitespace runs to single spaces and trim (Go-space class). */
-  private def collapseWs(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var pendingSpace = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (GoStrings.isSpace(c)) pendingSpace = true
-      else {
-        if (pendingSpace && sb.nonEmpty) sb.append(' ')
-        pendingSpace = false
-        sb.append(c)
-      }
-      i += 1
-    }
-    sb.toString
-  }
-
-  /** Extract main content text from raw HTML. */
+  /** Extract main content text from raw HTML (read as its UTF-8 bytes). */
   def extractMainText(html: String): String = {
-    val dom = HtmlDom.parse(html)
-    val blocks = scala.collection.mutable.ArrayBuffer.empty[Block]
-    var cur = new Block
+    val a = Arena.of(html)
+    extractMainText(a)
+    a.resultString()
+  }
 
-    def flush(): Unit = {
-      if (cur.collapsed.nonEmpty) blocks += cur
-      cur = new Block
-    }
+  /** Extract main content text from the document `a` holds, into its
+    * output ([[Arena.result]]). */
+  def extractMainText(a: Arena): Unit = new Walk(a).run()
 
-    // Pre-order walk on an explicit stack, so that nesting depth costs
-    // heap, not thread stack (a Spark task thread has 1 MiB). Each entry
-    // is a node with its inherited link/heading/li flags; a null node is
-    // the flush a block element owes after its last child.
-    var nodes = new Array[Node](32)
-    var flags = new Array[Int](32)
-    var top = 0
-    def push(n: Node, f: Int): Unit = {
-      if (top == nodes.length) {
-        nodes = java.util.Arrays.copyOf(nodes, 2 * top)
-        flags = java.util.Arrays.copyOf(flags, 2 * top)
-      }
-      nodes(top) = n; flags(top) = f; top += 1
-    }
-    def pushChildren(n: Node, f: Int): Unit = {
-      var i = n.children.length - 1
-      while (i >= 0) { push(n.children(i), f); i -= 1 }
-    }
-    push(dom, 0)
-    while (top > 0) {
-      top -= 1
-      val n = nodes(top)
-      val f = flags(top)
-      nodes(top) = null
-      if (n == null) flush()
-      else n.nodeType match {
-        case TextNode =>
-          val t = n.data
-          cur.text.append(t)
-          if ((f & InLink) != 0) {
-            val cw = collapseWs(t)
-            cur.linkLen += cw.codePointCount(0, cw.length)
+  /** One pre-order walk of the arena on an explicit stack, so that
+    * nesting depth costs heap, not thread stack (a Spark task thread has
+    * 1 MiB). Each entry is a node with its inherited link/heading/li
+    * flags; -1 is the flush a block element owes after its last child.
+    * A block's text is collapsed straight into the output as it is
+    * reached; a block that is not kept is cut off again at its flush, and
+    * kept blocks are separated by "\n". */
+  private final class Walk(a: Arena) {
+    private var anyKept = false
+    private var sepAt = 0 // where the block's "\n" separator starts
+    private var from = 0 // where the block's collapsed text starts
+    private var pending = false // a whitespace run awaits the next char
+    private var linkLen = 0
+    private var tagCount = 0
+    private var heading = false
+    private var listItem = false
+
+    def run(): Unit = {
+      a.resetOut(math.max(64, (a.srcEnd - a.srcStart) / 4))
+      open()
+      val nodes = a.stack
+      val flags = a.stack2
+      nodes.n = 0; flags.n = 0
+      nodes.add(0); flags.add(0)
+      while (nodes.n > 0) {
+        val k = nodes.pop()
+        val f = flags.pop()
+        if (k < 0) flush()
+        else if (a.isText(k)) text(k, f)
+        else {
+          var g = f
+          if (a.isElem(k)) {
+            val t = a.tagOf(k)
+            if (t < Drop.length && Drop(t)) g = -1
+            else {
+              if (t < Block.length && Block(t)) { flush(); nodes.add(-1); flags.add(0) }
+              else tagCount += 1
+              g = f |
+                (if (t == A) InLink else 0) |
+                (if (t < Heading.length && Heading(t)) InHeading else 0) |
+                (if (t == Li) InLi else 0)
+            }
           }
-          if ((f & InHeading) != 0) cur.heading = true
-          if ((f & InLi) != 0) cur.listItem = true
-        case ElementNode =>
-          val tag = n.data
-          if (!dropTags.contains(tag)) {
-            val isBlock = blockTags.contains(tag)
-            if (isBlock) { flush(); push(null, 0) }
-            else cur.tagCount += 1
-            pushChildren(n, f |
-              (if (tag == "a") InLink else 0) |
-              (if (headingTags.contains(tag)) InHeading else 0) |
-              (if (tag == "li") InLi else 0))
+          if (g >= 0) {
+            a.pushChildren(nodes, k)
+            flags.ensure(nodes.n)
+            while (flags.n < nodes.n) { flags.a(flags.n) = g; flags.n += 1 }
           }
-        case _ =>
-          pushChildren(n, f)
+        }
       }
+      flush()
+      a.outLen = sepAt // the separator the last open() wrote
+      a.finish()
     }
-    flush()
 
-    val kept = blocks.filter { b =>
-      val len = b.textLen
-      if (len == 0) false
-      else {
-        val linkDensity = b.linkLen.toDouble / len
-        val textDensity = len.toDouble / (1 + b.tagCount)
-        if (b.heading) len >= 3 && b.linkLen == 0
-        else if (b.listItem) len >= 30 && linkDensity <= 0.2
+    private def open(): Unit = {
+      sepAt = a.outLen
+      if (anyKept) { a.ensureOut(1); a.put('\n') }
+      from = a.outLen
+      pending = false
+      linkLen = 0
+      tagCount = 0
+      heading = false
+      listItem = false
+    }
+
+    /** End the block: keep it iff its collapsed text passes the rules. */
+    private def flush(): Unit = {
+      // textLen: code points of the collapsed text
+      var len = 0
+      var p = from
+      while (p < a.outLen) { if ((a.out(p) & 0xC0) != 0x80) len += 1; p += 1 }
+      val keep = len > 0 && {
+        val linkDensity = linkLen.toDouble / len
+        val textDensity = len.toDouble / (1 + tagCount)
+        if (heading) len >= 3 && linkLen == 0
+        else if (listItem) len >= 30 && linkDensity <= 0.2
         else len >= 25 && linkDensity <= (1.0 / 3.0) && textDensity >= 8.0
       }
+      if (keep) anyKept = true else a.outLen = sepAt
+      open()
     }
-    kept.map(_.collapsed).mkString("\n")
+
+    /** Collapse text node `k` into the block; inside a link, add the code
+    * points of its own collapsed text to linkLen. */
+    private def text(k: Int, f: Int): Unit = {
+      a.textOf(k)
+      val arr = a.textArr
+      var p = a.textFrom
+      val e = a.textTo
+      a.ensureOut(e - p + 1)
+      var seen = false // a non-space char of this node was reached
+      var gap = false // and whitespace followed it
+      var own = 0
+      while (p < e) {
+        val b = arr(p)
+        val l = if (b >= 0) 1 else Arena.seqLen(b)
+        if (if (b >= 0) AsciiSpace(b) else l < 4 && GoStrings.isSpace(Arena.cp(arr, p).toChar)) {
+          pending = true
+          gap = seen
+        } else {
+          if (pending && a.outLen > from) a.put(' ')
+          pending = false
+          if (gap) own += 1
+          gap = false
+          seen = true
+          own += 1
+          if (l == 1) a.put(b) else a.append(arr, p, p + l)
+        }
+        p += l
+      }
+      if ((f & InLink) != 0) linkLen += own
+      if ((f & InHeading) != 0) heading = true
+      if ((f & InLi) != 0) listItem = true
+    }
   }
 }

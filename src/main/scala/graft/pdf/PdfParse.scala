@@ -246,11 +246,20 @@ object PdfParse {
     }
   }
 
+  /** The most bytes one Flate stream may inflate to. The sf0.1 PDF
+    * queries inflate no stream at all (their PDFs are written
+    * uncompressed), and the largest stream the test suite inflates is far
+    * below this; a scanned page's raw image at 300 dpi RGB is about 25 MiB.
+    * Past it a stream is a decompression bomb, and a span that carries
+    * one must fail alone instead of taking the executor's heap. */
+  final val MaxInflated: Int = 64 << 20
+
   def inflate(data: Array[Byte]): Either[String, Array[Byte]] = {
     val inf = new Inflater()
     try {
       inf.setInput(data)
-      val out = new java.io.ByteArrayOutputStream(data.length * 4)
+      // in Long: data.length * 4 overflows past 512 MiB of input
+      val out = new java.io.ByteArrayOutputStream(math.min(data.length.toLong * 4, MaxInflated).toInt)
       val buf = new Array[Byte](8192)
       while (!inf.finished()) {
         val n = inf.inflate(buf)
@@ -259,6 +268,7 @@ object PdfParse {
         if (n == 0 && !inf.finished())
           return Left(if (inf.needsDictionary()) "Flate stream needs a preset dictionary"
             else "truncated Flate stream")
+        if (out.size.toLong + n > MaxInflated) return Left(s"Flate output exceeds $MaxInflated bytes")
         out.write(buf, 0, n)
       }
       Right(out.toByteArray)

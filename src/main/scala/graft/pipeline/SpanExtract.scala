@@ -1,7 +1,9 @@
 package graft.pipeline
 
+import org.apache.spark.unsafe.types.UTF8String
+
 import graft.hocr.HocrText
-import graft.html.Boilerplate
+import graft.html.{Arena, Boilerplate}
 import graft.layout.MediaOcr
 
 /** Pure per-span extraction — the unit of distributed work.
@@ -20,9 +22,13 @@ import graft.layout.MediaOcr
   *
   * Spark runs this per span inside one native expression that every
   * Extract path uses (org.apache.spark.sql.graft.ExtractSpanSeq): it
-  * calls [[extractSpanText]] only for the [[TransformedKinds]] and hands
-  * every other span's text through as the same UTF8String, never
-  * converting it to a String.
+  * calls the UTF8String entry of [[extractSpanText]] only for the
+  * [[TransformedKinds]] and hands every other span's text through as the
+  * same UTF8String. The html and pdf_layout kernels read the span's
+  * UTF-8 bytes in place into an [[Arena]] and write only the text they
+  * keep as UTF-8: no String is decoded and none is encoded. The String
+  * entry is a wrapper over the same kernels (its text read as UTF-8,
+  * as every Spark column holds it); media stays on Strings.
   */
 object SpanExtract {
 
@@ -46,4 +52,21 @@ object SpanExtract {
       if (mediaRef == null) "" else MediaOcr.text(mediaRef)
     case _ => text
   }
+
+  /** The same over UTF8Strings, equal to `fromString(extractSpanText(
+    * kind, text.toString, mediaRef.toString))`. `arena` is the html and
+    * pdf_layout kernels' scratch; one serves every span of a row. */
+  def extractSpanText(kind: String, text: UTF8String, mediaRef: UTF8String, arena: Arena): UTF8String =
+    kind match {
+      case Html | PdfLayout =>
+        if (text == null) UTF8String.EMPTY_UTF8
+        else {
+          arena.load(text)
+          if (kind == Html) Boilerplate.extractMainText(arena) else HocrText.fromMarkup(arena)
+          arena.result()
+        }
+      case Media =>
+        UTF8String.fromString(if (mediaRef == null) "" else MediaOcr.text(mediaRef.toString))
+      case _ => text
+    }
 }

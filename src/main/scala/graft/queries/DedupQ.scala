@@ -259,14 +259,8 @@ object DedupQ {
     * parquet split, and the signature pass would otherwise run as one
     * task. */
   private def cachedSig(s: SparkSession, dir: String): DataFrame = {
-    def md5Hex(x: String) =
-      HexFormat.of().formatHex(MessageDigest.getInstance("MD5").digest(x.getBytes(UTF_8)))
-    val table = new org.apache.hadoop.fs.Path(Tables.path(dir, "documents"))
-    val it = table.getFileSystem(s.sparkContext.hadoopConfiguration).listFiles(table, true)
-    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-      .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}").toSeq.sorted
-    val prefix = s"graft_minhash_sig_${md5Hex(dir)}_"
-    val view = prefix + md5Hex(files.mkString("\n"))
+    val prefix = s"graft_minhash_sig_${Tables.md5Hex(dir)}_"
+    val view = prefix + Tables.listing(s, dir, "documents")
     if (!s.catalog.tableExists(view)) {
       // SHOW VIEWS runs no job; catalog.listTables() runs one
       s.sql(s"SHOW VIEWS LIKE '$prefix*'").collect()

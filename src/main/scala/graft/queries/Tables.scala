@@ -1,5 +1,9 @@
 package graft.queries
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.security.MessageDigest
+import java.util.HexFormat
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.fixtures.CorpusGen
@@ -18,6 +22,21 @@ object Tables {
     s.read.parquet(path(dir, table))
 
   def documents(s: SparkSession, dir: String): DataFrame = read(s, dir, "documents")
+
+  /** MD5 of a table's files (name, length, mtime), from a driver-side
+    * listing that runs no job: a table rewritten under the same path
+    * gets a new value. What is derived from a table and kept past one
+    * query (the MinHash memo, the pre-split layout) is keyed on it. */
+  def listing(s: SparkSession, dir: String, table: String): String = {
+    val path = new org.apache.hadoop.fs.Path(Tables.path(dir, table))
+    val it = path.getFileSystem(s.sparkContext.hadoopConfiguration).listFiles(path, true)
+    val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}").toSeq.sorted
+    md5Hex(files.mkString("\n"))
+  }
+
+  def md5Hex(x: String): String =
+    HexFormat.of().formatHex(MessageDigest.getInstance("MD5").digest(x.getBytes(UTF_8)))
 
   /** The materialized pre-split layout of the scale dir's corpus
     * ([[CorpusGen.materializedPreSplit]], built on first use). */

@@ -9,15 +9,17 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.html.Arena
 import graft.pipeline.SpanExtract
 
 /** The per-row span law of the extraction job: `spans` (an array of
   * structs with string fields `kind`, `text` and `media_ref`) becomes
   * `array<struct<kind, text, media_ref, order>>` in one loop over the
   * array. For the SpanExtract.TransformedKinds the text is
-  * `SpanExtract.extractSpanText(kind, text, media_ref)`; every other
-  * span's text passes through as the same UTF8String. `order` is
-  * `base + i` for the span at array index `i`.
+  * `SpanExtract.extractSpanText(kind, text, media_ref)`, read from and
+  * written as UTF-8 bytes for html and pdf_layout (one [[Arena]] per row
+  * serves its spans); every other span's text passes through as the same
+  * UTF8String. `order` is `base + i` for the span at array index `i`.
   *
   * It replaces `transform(spans, (s, i) -> struct(s.kind, CASE WHEN
   * s.kind IN (...) THEN udf(...) ELSE s.text END, s.media_ref, base + i))`
@@ -90,6 +92,7 @@ case class ExtractSpanSeq(spans: Expression, base: Expression)
     val width = element.length
     val Array(kindOrd, textOrd, refOrd) = ordinals
     val out = new Array[Any](n)
+    var arena: Arena = null
     var i = 0
     while (i < n) {
       val order = if (baseNull) null else Int.box(first + i)
@@ -101,10 +104,8 @@ case class ExtractSpanSeq(spans: Expression, base: Expression)
           val text = if (s.isNullAt(textOrd)) null else s.getUTF8String(textOrd)
           val ref = if (s.isNullAt(refOrd)) null else s.getUTF8String(refOrd)
           val k = ExtractSpanSeq.transformedKind(kind)
-          Array[Any](kind,
-            if (k == null) text
-            else UTF8String.fromString(SpanExtract.extractSpanText(k, str(text), str(ref))),
-            ref, order)
+          if (k != null && arena == null && k != SpanExtract.Media) arena = new Arena
+          Array[Any](kind, if (k == null) text else SpanExtract.extractSpanText(k, text, ref, arena), ref, order)
         })
       i += 1
     }
@@ -128,8 +129,6 @@ case class ExtractSpanSeq(spans: Expression, base: Expression)
       |  ${ev.value} = $self.extract(${a.value}, ${b.isNull}, ${b.value});
       |}""".stripMargin)
   }
-
-  private def str(s: UTF8String): String = if (s == null) null else s.toString
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(spans = newLeft, base = newRight)

@@ -2,12 +2,14 @@ package graft
 
 import java.util.concurrent.atomic.AtomicReference
 
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.concurrent.{Signaler, ThreadSignaler}
 import org.scalatest.concurrent.TimeLimits.failAfter
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
-import graft.html.{Boilerplate, HtmlDom}
+import graft.html.{Arena, Boilerplate, HtmlDom}
+import graft.pipeline.SpanExtract
 
 class HtmlDomSpec extends AnyFunSuite {
   test("basic tree, attributes, entities, self-closing, comments") {
@@ -81,13 +83,20 @@ class BoilerplateSpec extends AnyFunSuite {
 
   test("100k nested <div> on a 1 MiB-stack thread: no StackOverflowError, paragraph kept") {
     // a Spark task thread has the JVM default 1 MiB stack; the walk must
-    // not spend it per nesting level
+    // not spend it per nesting level, through either entry
     val para = Seq.fill(20)("word").mkString(" ") + "!"
     assert(para.length == 100)
     val html = "<div>" * 100000 + s"<p>$para</p>" + "</div>" * 100000
+    Seq[() => String](
+      () => Boilerplate.extractMainText(html),
+      () => SpanExtract.extractSpanText("html", UTF8String.fromString(html), null, new Arena).toString
+    ).foreach(kernel => assert(onSmallStack(kernel()) == para))
+  }
+
+  private def onSmallStack(f: => String): String = {
     val result = new AtomicReference[Either[Throwable, String]]()
     val t = new Thread(null, () =>
-      result.set(try Right(Boilerplate.extractMainText(html)) catch { case e: Throwable => Left(e) }),
+      result.set(try Right(f) catch { case e: Throwable => Left(e) }),
       "deep-html", 1L << 20)
     implicit val signaler: Signaler = ThreadSignaler
     failAfter(Span(10, Seconds)) {
@@ -96,7 +105,7 @@ class BoilerplateSpec extends AnyFunSuite {
     }
     result.get match {
       case Left(e) => fail(s"extractMainText threw $e")
-      case Right(out) => assert(out == para)
+      case Right(out) => out
     }
   }
 }

@@ -2,18 +2,21 @@ package graft
 
 import java.util.concurrent.atomic.AtomicReference
 
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.concurrent.{Signaler, ThreadSignaler}
 import org.scalatest.concurrent.TimeLimits.failAfter
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.{Seconds, Span}
 
 import graft.hocr.{HocrParse, HocrText}
+import graft.html.Arena
+import graft.pipeline.SpanExtract
 
 /** 100k-deep hOCR on the 1 MiB stack a Spark task thread gets: the DOM
   * walks (pages, class buckets, line words, word text) must not spend
-  * thread stack per nesting level. Both entry points — the DOM stitch
-  * (HocrText.fromMarkup, the pdf_layout kernel) and the parsed model —
-  * give the literal text. */
+  * thread stack per nesting level. Every entry point — the arena stitch
+  * (HocrText.fromMarkup, the pdf_layout kernel, from a String and from
+  * UTF8String bytes) and the parsed model — gives the literal text. */
 class HocrDepthSpec extends AnyFunSuite {
 
   private val N = 100000
@@ -55,6 +58,8 @@ class HocrDepthSpec extends AnyFunSuite {
   shapes.foreach { case (shape, markup, text) =>
     test(s"100k deep, $shape: literal text on a 1 MiB stack") {
       assert(onSmallStack(HocrText.fromMarkup(markup)) == text)
+      assert(onSmallStack(SpanExtract.extractSpanText("pdf_layout", UTF8String.fromString(markup), null,
+        new Arena).toString) == text)
       assert(onSmallStack(HocrParse.parseHocrString(markup).map(HocrText.extractText)) == Right(text))
     }
   }

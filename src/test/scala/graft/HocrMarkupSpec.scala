@@ -1,22 +1,31 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fixtures.CorpusGen
 import graft.hocr.{HocrParse, HocrText}
+import graft.html.Arena
+import graft.pipeline.SpanExtract
 
 /** Differential law for the model-free hOCR text path:
   * `HocrText.fromMarkup(s) == parseHocrString(s).fold(_ => "", extractText)`
-  * on generated hOCR and on every pdf_layout span of the sf0.001 corpus.
+  * on generated hOCR and on every pdf_layout span of the sf0.001 corpus,
+  * through the String entry and the UTF8String entry (one arena reused
+  * across documents, as across a row's spans).
   * Generators are seeded and sampled explicitly (no scalatestplus
   * bridge offline), as in PropertySpec. */
 class HocrMarkupSpec extends AnyFunSuite {
 
   private def viaModel(s: String): String =
     HocrParse.parseHocrString(s).fold(_ => "", HocrText.extractText)
+
+  private val arena = new Arena
+  private def viaBytes(s: String): String =
+    SpanExtract.extractSpanText("pdf_layout", UTF8String.fromString(s), null, arena).toString
 
   private val params = Gen.Parameters.default.withSize(10)
   private def samples[T](g: Gen[T], n: Int): Seq[T] =
@@ -88,7 +97,10 @@ class HocrMarkupSpec extends AnyFunSuite {
 
   test("fromMarkup == parse + extractText on 600 generated hOCR documents") {
     val docs = samples(genDoc, 600)
-    docs.foreach(s => assert(HocrText.fromMarkup(s) == viaModel(s), s))
+    docs.foreach { s =>
+      assert(HocrText.fromMarkup(s) == viaModel(s), s)
+      assert(viaBytes(s) == viaModel(s), s)
+    }
     // non-vacuous: pages with text, page-less input, and line-id collisions
     val outs = docs.map(HocrText.fromMarkup)
     assert(outs.count(_.exists(_.isLetter)) > 100)
@@ -144,7 +156,10 @@ class HocrMarkupSpec extends AnyFunSuite {
       .selectExpr("explode(spans) AS s").filter("s.kind = 'pdf_layout'")
       .selectExpr("s.text").collect().map(_.getString(0))
     assert(texts.length > 100)
-    texts.foreach(s => assert(HocrText.fromMarkup(s) == viaModel(s)))
+    texts.foreach { s =>
+      assert(HocrText.fromMarkup(s) == viaModel(s))
+      assert(viaBytes(s) == viaModel(s))
+    }
     assert(texts.forall(s => HocrText.fromMarkup(s).nonEmpty))
   }
 }

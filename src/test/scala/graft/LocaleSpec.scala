@@ -3,10 +3,11 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.util.Locale
 
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.hocr.{HocrParse, HocrText}
-import graft.html.HtmlDom
+import graft.html.{Arena, HtmlDom}
 import graft.pipeline.SpanExtract
 import graft.text.GoStrings
 
@@ -35,7 +36,12 @@ class LocaleSpec extends AnyFunSuite {
     SpanExtract.extractSpanText("html", html, ""),
     GoStrings.decodeWithSniff(sniffed),
     HtmlDom.parse(html).children.head.children.head.children.map(n =>
-      n.data + n.attrs.map(_._1).mkString("[", ",", "]")).mkString(" "))
+      n.data + n.attrs.map(_._1).mkString("[", ",", "]")).mkString(" "),
+    // the UTF8String entry, one arena for both kinds
+    SpanExtract.extractSpanText("pdf_layout", UTF8String.fromString(hocr), null, arena).toString,
+    SpanExtract.extractSpanText("html", UTF8String.fromString(html), null, arena).toString)
+
+  private val arena = new Arena
 
   private def underLocale[T](locale: Locale)(body: => T): T = {
     val categories = Locale.Category.values.toSeq
@@ -61,6 +67,7 @@ class LocaleSpec extends AnyFunSuite {
     assert(!root(2).contains("script text"))
     assert(root(4) == "script[] noscript[] div[id,itemid]")
     assert(root(3).contains("<title>é<")) // read as UTF-8, not re-decoded as Latin-1
+    assert(root(5) == root(0) && root(6) == root(2))
   }
 
   test("well-known names match ASCII case only, like lowerAscii") {
@@ -70,5 +77,23 @@ class LocaleSpec extends AnyFunSuite {
     // root-locale lowercase is "i̇": not the constant "div"
     assert(firstTag("<D\u0130V>x</D\u0130V>") == "di\u0307v")
     assert(HtmlDom.parse("<P CLASS=a>x</P>").children.head.attrs.toSeq == Seq("class" -> "a"))
+  }
+
+  test("root-locale and regionMatches folds reach the byte tokenizer: Kelvin sign, long s, dotted I") {
+    // U+212A KELVIN SIGN lowercases to 'k': a block element, through
+    // both kernel entries
+    val prose = "a paragraph of prose that is long enough to be kept"
+    val quoted = s"<div>$prose<BLOC\u212aQUOTE>$prose</BLOC\u212aQUOTE></div>"
+    assert(HtmlDom.parse(quoted).children.head.children(1).data == "blockquote")
+    assert(SpanExtract.extractSpanText("html", quoted, "") == s"$prose\n$prose")
+    assert(SpanExtract.extractSpanText("html", UTF8String.fromString(quoted), null, arena).toString ==
+      s"$prose\n$prose")
+    // regionMatches(ignoreCase) folds U+017F onto 's' and U+0130 onto
+    // 'i': each closes <script>, so the paragraph after it is content
+    Seq("</\u017fcript>", "</SCR\u0130PT>").foreach { close =>
+      val html = s"<script>var x = 1;$close<p>$prose</p>"
+      assert(HtmlDom.parse(html).children.map(_.data) == Seq("script", "p"), close)
+      assert(SpanExtract.extractSpanText("html", UTF8String.fromString(html), null, arena).toString == prose)
+    }
   }
 }

@@ -218,6 +218,29 @@ class PdfFilterSpec extends AnyFunSuite {
     assert(PdfParse.inflate(plain.take(plain.length / 2)) == Left("truncated Flate stream"))
   }
 
+  test("a 1000:1 Flate bomb is a clear error within 5 s, not a heap-sized array") {
+    // 128 MiB of zeros, twice the bound, deflated in 1 MiB pieces
+    val zeros = new Array[Byte](1 << 20)
+    val d = new Deflater(Deflater.BEST_COMPRESSION)
+    val bomb = new java.io.ByteArrayOutputStream
+    val buf = new Array[Byte](1 << 16)
+    def drain(): Unit = { var n = d.deflate(buf); while (n > 0) { bomb.write(buf, 0, n); n = d.deflate(buf) } }
+    (0 until 128).foreach { _ => d.setInput(zeros); drain() }
+    d.finish()
+    while (!d.finished()) bomb.write(buf, 0, d.deflate(buf))
+    d.end()
+    val bytes = bomb.toByteArray
+    assert(128L * (1 << 20) / bytes.length >= 1000, s"ratio of ${bytes.length} compressed bytes")
+    implicit val signaler: Signaler = ThreadSignaler
+    val got = failAfter(Span(5, Seconds)) {
+      Await.result(Future(PdfParse.inflate(bytes))(ExecutionContext.global), Duration.Inf)
+    }
+    assert(got == Left(s"Flate output exceeds ${PdfParse.MaxInflated} bytes"))
+    // a stream of exactly the bound still inflates
+    val atBound = deflate(new Array[Byte](PdfParse.MaxInflated), None)
+    assert(PdfParse.inflate(atBound).map(_.length) == Right(PdfParse.MaxInflated))
+  }
+
   test("Flate + /Predictor 12 page content parses and page-imports end-to-end (P-8)") {
     // the real-corpus class the parser previously rejected: page content
     // written through a PNG Up predictor before FlateDecode

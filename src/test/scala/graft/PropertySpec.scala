@@ -1,11 +1,16 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.hocr._
+import graft.html.{Arena, Boilerplate, HtmlDom, RefBoilerplate, RefHtmlDom}
 import graft.model.BBox
+import graft.pipeline.SpanExtract
 import graft.text.GoStrings
 
 /** Property-based round-trip laws (SURVEY.md §5.2 item 2), driven by
@@ -227,6 +232,186 @@ class PropertySpec extends AnyFunSuite {
       }
       val dec = graft.pdf.PdfParse.unpredict(enc, 12, cols)
       assert(dec.exists(_.sameElements(data)), s"mixed tags cols=$cols")
+    }
+  }
+
+  // ---- the arena tokenizer and its kernels against the String reference ----
+
+  private val prose = "This paragraph holds enough words of prose to be kept by the filter"
+
+  /** Text: entity floods and edge bodies, the whitespace classes, non-BMP
+    * chars, and stray markup characters. */
+  private val genMarkupText: Gen[String] = Gen.oneOf(
+    prose, "short", "the quick brown fox jumps over the lazy dog", "\u00e9\u20ac\u4e2d", "\ud83d\ude00 \ud835\udd18",
+    "x&amp;y", "a&lt;b&gt;", "&#+65;", "&#-65;", "&#\u0661\u0662;", "&#xD800;", "&#x110000;", "&#xD83D;&#xDE00;",
+    "&#xD83D;", "&#xDE00;", "&#xDBFF;&#xDFFF;", "&nbsp;", "&bogus;", "&;", "&#;", "&#x;", "&aaaaaaaaaaaa;",
+    "&#0000000065;", "&#65", "&hellip;&mdash;&copy;", "&\ud83d\ude00;", "&#x1F600;",
+    "\u0085", "\u00a0", "\u2003", "\u3000", "\u1680", "\u001c", "\u2028", " ", "\n\t ", "  spaced   out  ",
+    "?", "<", "< x", "<1", "<\ud83d\ude00", "<\u00e9t\u00e9>", "&", "=", ">", "&#+65;" * 40)
+
+  private val genTagName: Gen[String] = Gen.frequency(
+    6 -> Gen.oneOf("div", "p", "span", "a", "li", "h1", "b", "em", "section", "td"),
+    2 -> Gen.oneOf("ul", "h2", "nav", "footer", "aside", "header", "br", "img", "input", "table", "title", "meta"),
+    2 -> Gen.oneOf("DIV", "Div", "P", "LI", "A", "BLOCKQUOTE", "blockquote"),
+    // U+212A KELVIN SIGN lowercases to 'k'; the long s, dotted and
+    // dotless i do not lowercase to ASCII
+    2 -> Gen.oneOf("BLOC\u212aQUOTE", "bloc\u212aquote", "\u017fcript", "SCR\u0130PT", "d\u0131v", "D\u0130V"),
+    1 -> Gen.oneOf("foo", "x-y", "a:b", "custom1", "FOO", "\u00e9t\u00e9", "\u03a3\u03a3"))
+
+  private val genAttr: Gen[String] = for {
+    ws <- Gen.oneOf(" ", "  ", "\n", "\u2003", "\u001c", " \u00a0")
+    name <- Gen.frequency(
+      5 -> Gen.oneOf("class", "id", "title", "href"),
+      2 -> Gen.oneOf("CLASS", "ID", "Class", "data-x", "\u0130D", "\u0131d", "cla\u017f\u017f", "x\ud83d\ude00"),
+      1 -> Gen.oneOf("", "=", "'q'"))
+    value <- Gen.frequency(
+      3 -> Gen.oneOf("ocr_page", "ocr_carea", "ocr_par", "ocr_line", "ocrx_word", "ocr_line ocrx_word", "a", "b")
+        .map(v => s"='$v'"),
+      2 -> Gen.oneOf("", "=v", "= \"v w\"", "='&amp;&#xD83D;&#xDE00;'", "='ocr&#95;page'", "='a&#xD800;'",
+        "='unterminated", "=\"x'y\"", "=a&lt;b", "='" + "x" * 3000 + "'"))
+  } yield ws + name + value
+
+  private def genMarkupNode(depth: Int): Gen[String] =
+    if (depth <= 0) genMarkupText
+    else Gen.frequency(
+      4 -> genMarkupText,
+      8 -> genMarkupElem(depth),
+      3 -> genHocrElem(depth),
+      1 -> Gen.oneOf("</span>", "</div>", "</P>", "</ div>", "</div foo>", "</>", "</", "</\u017fcript>",
+        "</bloc\u212aquote>", "</foo >"),
+      1 -> Gen.oneOf("<!-- a <b> comment -->", "<!--", "<!DOCTYPE html>", "<!x", "<?xml version='1.0'?>", "<?",
+        "<br/>", "<img src=x/>", "<div/>", "<script/>"),
+      1 -> genRawText)
+
+  /** script and style: closed in any case spelling (`\u017f` matches s,
+    * `\u0130` and `\u0131` match i), or never. */
+  private val genRawText: Gen[String] = for {
+    tag <- Gen.oneOf("script", "style", "SCRIPT", "Style")
+    body <- Gen.oneOf("var a = 1 < 2 && b;", "&amp; <b>not markup</b>", "</scr", "</styl", prose)
+    close <- Gen.oneOf("</script>", "</style>", "</\u017fcript>", "</scr\u0130pt>", "</SCR\u0131PT>",
+      "</\u017ftyle >", "</script", "")
+  } yield s"<$tag>$body$close"
+
+  private def genMarkupElem(depth: Int): Gen[String] = for {
+    tag <- genTagName
+    n <- Gen.chooseNum(0, 3)
+    attrs <- Gen.listOfN(n, genAttr)
+    selfClose <- Gen.frequency(12 -> "", 1 -> "/")
+    k <- Gen.chooseNum(0, 4)
+    kids <- Gen.listOfN(k, Gen.lzy(genMarkupNode(depth - 1)))
+    close <- Gen.frequency(8 -> s"</$tag>", 1 -> "", 1 -> s"</${tag.toUpperCase}>")
+  } yield s"<$tag${attrs.mkString}$selfClose>${kids.mkString}$close"
+
+  /** hOCR-shaped elements, so pages with lines and words arise. */
+  private def genHocrElem(depth: Int): Gen[String] = for {
+    (tag, cls) <- Gen.oneOf(("div", "ocr_page"), ("DIV", "ocr_page"), ("div", "ocr_carea"), ("p", "ocr_par"),
+      ("span", "ocr_line"), ("span", "ocrx_word"), ("span", "ocrx_word"), ("span", "ocr_line ocrx_word"))
+    id <- Gen.oneOf("", " id='a'", " id='b'", " id='&#97;'", " id='a' id='b'", " id=''", " id='&#xD83D;&#xDE00;'",
+      " id='\ud83d\ude00'")
+    k <- Gen.chooseNum(1, 4)
+    kids <- Gen.listOfN(k, Gen.lzy(
+      if (depth <= 1) genMarkupText
+      else Gen.frequency(3 -> genHocrElem(depth - 1), 2 -> genMarkupText, 2 -> genMarkupNode(depth - 1))))
+    close <- Gen.frequency(9 -> s"</$tag>", 1 -> "")
+  } yield s"<$tag class='$cls'$id>${kids.mkString}$close"
+
+  private val genMarkup: Gen[String] = for {
+    n <- Gen.chooseNum(1, 5)
+    nodes <- Gen.listOfN(n, genMarkupNode(4))
+    page <- Gen.frequency(2 -> false, 1 -> true)
+  } yield if (page) s"<div class='ocr_page'>${nodes.mkString}</div>" else nodes.mkString
+
+  /** Whole trees equal: type, tag or text, attributes, children. */
+  private def assertSameTree(got: HtmlDom.Node, ref: HtmlDom.Node, doc: => String): Unit = {
+    val stack = scala.collection.mutable.Stack((got, ref))
+    while (stack.nonEmpty) {
+      val (g, r) = stack.pop()
+      assert(g.nodeType == r.nodeType && g.data == r.data && g.attrs == r.attrs &&
+        g.children.length == r.children.length, s"${g.data} vs ${r.data}: ${doc.take(600)}")
+      g.children.indices.foreach(i => stack.push((g.children(i), r.children(i))))
+    }
+  }
+
+  private def hocrRef(s: String): String = HocrParse.parseDom(RefHtmlDom.parse(s)).fold(_ => "", HocrText.extractText)
+
+  /** Trees, html text and hOCR text of the bytes `b` against the String
+    * reference over `new String(b, UTF_8)` — what `UTF8String.toString`
+    * reads — compared as UTF-8 bytes, through both kernel entries. The
+    * UTF8String entry reads `b` in place at an offset, with `arena`
+    * reused across documents as across a row's spans. */
+  private def assertSameAsReference(b: Array[Byte], arena: Arena): Unit = {
+    val s = new String(b, UTF_8)
+    lazy val doc = s
+    val padded = Array.fill[Byte](3)('#') ++ b
+    val u = UTF8String.fromBytes(padded, 3, b.length)
+    arena.load(u)
+    assertSameTree(HtmlDom.parse(arena), RefHtmlDom.parse(s), doc)
+    assertSameTree(HtmlDom.parse(s), RefHtmlDom.parse(s), doc)
+    val html = RefBoilerplate.extractMainText(s).getBytes(UTF_8)
+    assert(Boilerplate.extractMainText(s).getBytes(UTF_8).sameElements(html), doc.take(600))
+    assert(SpanExtract.extractSpanText("html", u, null, arena).getBytes.sameElements(html), doc.take(600))
+    val hocr = hocrRef(s).getBytes(UTF_8)
+    assert(HocrText.fromMarkup(s).getBytes(UTF_8).sameElements(hocr), doc.take(600))
+    assert(SpanExtract.extractSpanText("pdf_layout", u, null, arena).getBytes.sameElements(hocr), doc.take(600))
+  }
+
+  test("property: arena trees and kernels == String reference on 1500 generated documents") {
+    val arena = new Arena
+    val docs = samples(genMarkup, 1500)
+    docs.foreach(d => assertSameAsReference(d.getBytes(UTF_8), arena))
+    // non-vacuous: kept html text, hOCR pages with words, surrogate and
+    // Kelvin cases, raw-text closes spelled with the long s
+    assert(docs.count(d => RefBoilerplate.extractMainText(d).nonEmpty) > 200)
+    assert(docs.count(d => hocrRef(d).exists(_.isLetter)) > 50)
+    assert(docs.count(d => RefBoilerplate.extractMainText(d).exists(Character.isSurrogate)) > 20)
+    assert(docs.count(_.contains("\u212a")) > 50 && docs.count(_.contains("</\u017fcript>")) > 20)
+  }
+
+  test("property: invalid UTF-8 is read as its U+FFFD normalization") {
+    val arena = new Arena
+    val junk = Seq(Array(0xFF), Array(0xC0, 0x80), Array(0xED, 0xA0, 0x80), Array(0xE2, 0x82), Array(0x80),
+      Array(0xF4, 0x90, 0x80, 0x80), Array(0xF0, 0x9F, 0x98)).map(_.map(_.toByte))
+    val gen = for {
+      d <- genMarkup
+      cuts <- Gen.listOfN(3, Gen.chooseNum(0, 1000))
+      bad <- Gen.listOfN(3, Gen.oneOf(junk))
+    } yield {
+      val b = d.getBytes(UTF_8)
+      cuts.zip(bad).sortBy(-_._1).foldLeft(b) { case (acc, (c, j)) =>
+        val at = math.min(c, acc.length)
+        acc.take(at) ++ j ++ acc.drop(at)
+      }
+    }
+    samples(gen, 400).foreach(b => assertSameAsReference(b, arena))
+  }
+
+  test("property: deep nesting, stray end tags, huge attributes, unterminated comments and raw text") {
+    val arena = new Arena
+    val p = s"<p>$prose</p>"
+    Seq(
+      "<div>" * 10000 + p + "</div>" * 10000,
+      "<div>" * 10000 + p + "</span>" * 10000 + "</div>" * 5000,
+      "<li><a>" * 5000 + prose + "</a></li>" * 5000,
+      "<div class='ocr_page'><span class='ocr_line'>" + "<b>" * 10000 +
+        "<span class='ocrx_word'> deep </span>" + "</b>" * 10000 + "</span></div>",
+      s"<div title='${"x" * 200000}'>$p</div>",
+      s"<div class='ocr_page' id='${"&amp;" * 20000}'><span class='ocr_line' title=\"${"y" * 100000}\">" +
+        "<span class='ocrx_word'>w</span></span></div>",
+      s"$p<!-- ${"never closed " * 2000}",
+      s"$p<script>${"var x = '</scr';" * 2000}",
+      s"<p>${"&#+65;&#\u0661\u0662;&#xD800;&#x110000;" * 3000}</p>",
+      "<p>" + "&#xD83D;&#xDE00;" * 5000 + "</p>" + "<P>" + "&#xDE00;&#xD83D;" * 5000 + "</P>",
+      "<" * 20000 + p + "</" * 20000,
+      "<div " + "a=b " * 20000 + ">" + p
+    ).foreach(d => assertSameAsReference(d.getBytes(UTF_8), arena))
+  }
+
+  test("caseMatches is String.regionMatches(ignoreCase) for every char against a..z") {
+    (0 until 0x10000).foreach { c =>
+      ('a' to 'z').foreach { x =>
+        assert(Arena.caseMatches(c.toChar, x) ==
+          String.valueOf(c.toChar).regionMatches(true, 0, String.valueOf(x), 0, 1), f"U+$c%04X ~ $x")
+      }
     }
   }
 }

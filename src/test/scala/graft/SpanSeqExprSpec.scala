@@ -121,6 +121,26 @@ class SpanSeqExprSpec extends AnyFunSuite {
     spark.createDataFrame(rows.asJava, schema)
   }
 
+  /** html and pdf_layout spans whose bytes are not valid UTF-8 (a string
+    * cast from binary keeps them as they are), with non-BMP text: the
+    * kernels' bytes must read as `UTF8String.toString` does (U+FFFD). */
+  private def invalidUtf8: DataFrame = {
+    def b(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val bad = Array(0xFF, 0xC0, 0x80, 0xED, 0xA0, 0x80, 0xF0, 0x9F).map(_.toByte)
+    val html = b("<div><p>") ++ bad ++ b(Seq.fill(6)("words of " + nonBmp).mkString(" ")) ++ bad ++
+      b("</p><a href='x'>nav</a></div>")
+    val hocr = b("<div class='ocr_page'><span class='ocr_line' id='l1'><span class='ocrx_word'>") ++ bad ++
+      b(s" $nonBmp </span><span class='ocrx_word'>two") ++ bad ++ b("</span></span></div>") ++ bad
+    val schema = StructType(Seq(
+      StructField("doc_id", StringType, nullable = false), StructField("part_idx", IntegerType),
+      StructField("html", BinaryType), StructField("hocr", BinaryType)))
+    val rows = Seq(Row("i1", 0, html, hocr), Row("i2", 1, bad, bad ++ hocr))
+    def span(kind: String, text: Column) =
+      struct(lit(kind).as("kind"), text.cast("string").as("text"), lit(null).cast("string").as("media_ref"))
+    spark.createDataFrame(rows.asJava, schema).select(col("doc_id"), col("part_idx"),
+      array(span("html", col("html")), span("pdf_layout", col("hocr")), span("text", col("html"))).as("spans"))
+  }
+
   /** The element struct with its fields in another order, an extra
     * field, and non-nullable kind and elements. */
   private def reordered: DataFrame = {
@@ -184,6 +204,17 @@ class SpanSeqExprSpec extends AnyFunSuite {
         assert(got("g_null_base").forall(_.isNullAt(3)))
         assert(got("e_null_kind").map(_.getString(1)).head.contains("<p>"))
         assert(!got.contains("a_null_spans") && !got.contains("b_empty"))
+      }
+    }
+
+    test(s"invalid UTF-8 and non-BMP html and pdf_layout spans == reference ($mode)") {
+      withConfs(confs: _*) {
+        assertLaw(invalidUtf8, partBase)
+        assertLaw(stored(invalidUtf8), partBase)
+        val got = Extract.extractInRow(invalidUtf8, partBase).collect()
+          .map(r => r.getString(0) -> r.getSeq[Row](1).map(_.getString(1))).toMap
+        assert(got("i1")(0).contains("\uFFFD") && got("i1")(0).contains(nonBmp), got("i1")(0))
+        assert(got("i1")(1).contains("\uFFFD") && got("i1")(1).contains(nonBmp), got("i1")(1))
       }
     }
 
