@@ -3,7 +3,6 @@ package graft.hocr
 import scala.collection.mutable
 
 import graft.html.Arena
-import graft.text.GoStrings
 
 /** Reading-order text extraction — mirrors
   * /root/reference/pkg/hocr/helpers.go:10-102 exactly, including the
@@ -28,129 +27,52 @@ object HocrText {
   }
 
   /** [[fromMarkup]] of the document `a` holds, into its output
-    * ([[Arena.result]]). The arena walk uses HocrParse's own page,
-    * bucket and word rules and writes each word's text as it is reached,
-    * so no `title` is parsed, no node and no HWord..HPage is built, and
-    * only word texts are decoded. The extraction hot path (SpanExtract's
-    * pdf_layout kind) reads only word texts and line ids, and allocation
-    * rate is its scaling limiter. The buckets come in bucket order, not
-    * document order (areas, then paragraphs, then lines), which is why
-    * this walks a whole-document arena and not a token stream. */
-  def fromMarkup(a: Arena): Unit = new Walk(a).run()
+    * ([[Arena.result]]). The walk is HocrParse's own [[HocrParse.Tree]]
+    * (page, bucket, line-word and word-text rules), writing each word's
+    * text as it is reached, so no `title` is parsed, no HWord..HPage is
+    * built, and only word texts are decoded. The extraction hot path
+    * (SpanExtract's pdf_layout kind) reads only word texts and line ids,
+    * and allocation rate is its scaling limiter. The buckets come in
+    * bucket order, not document order (areas, then paragraphs, then
+    * lines), which is why this walks a whole-document arena and not a
+    * token stream. */
+  def fromMarkup(a: Arena): Unit = new Walk(new HocrParse.Tree(a)).run()
 
-  private val Div = Arena.tagId("div")
-  private val Bits = Array("ocr_page", "ocr_carea", "ocr_par", "ocr_line", "ocrx_word")
-  private def bits(classes: Array[String]): Array[Int] = classes.map(c => 1 << Bits.indexOf(c))
-  private val PageBit = 1
-  private val WordBit = 1 << Bits.indexOf("ocrx_word")
-  private val PageClasses = bits(HocrParse.PageClasses)
-  private val AreaClasses = bits(HocrParse.AreaClasses)
-  private val ParaClasses = bits(HocrParse.ParaClasses)
-
-  private final class Walk(a: Arena) {
-    /** Per element, which [[Bits]] its first `class` contains. */
-    private val classes = { a.marks.ensure(a.nNodes); java.util.Arrays.fill(a.marks.a, 0, a.nNodes, 0); a.marks.a }
+  private final class Walk(t: HocrParse.Tree) {
+    private val a = t.a
     /** The ids of the page's lines written so far. */
     private val lineIds = new SliceSet
 
     def run(): Unit = {
       a.resetOut(math.max(64, (a.srcEnd - a.srcStart) / 8))
-      var k = 0
-      while (k < a.nNodes) {
-        if (a.isElem(k)) {
-          val c = a.firstAttr(k, Arena.ClassAttr)
-          if (c >= 0) { a.valueOf(c); classes(k) = classBits(a.textArr, a.textFrom, a.textTo) }
-        }
-        k += 1
-      }
-      // findPages: div.ocr_page in document order, not inside a page
-      val pool = a.pool
-      pool.n = 0
-      val st = a.stack
-      st.n = 0
-      a.pushChildren(st, 0)
-      while (st.n > 0) {
-        val n = st.pop()
-        if (a.isElem(n) && a.tagOf(n) == Div && (classes(n) & PageBit) != 0) pool.add(n)
-        else a.pushChildren(st, n)
-      }
-      val pages = pool.n
-      var p = 0
-      while (p < pages) {
-        lineIds.clear()
-        val s = collect(pool.a(p), PageClasses)
-        each(s, 0)(area)
-        each(s, 1)(paragraph)
-        each(s, 2)(line)
-        pool.n = s
-        a.ensureOut(2)
-        a.put('\n'); a.put('\n')
-        p += 1
-      }
+      val s = t.pages()
+      t.each(s, 0)(page)
+      a.pool.n = s
       a.finish()
     }
 
-    /** Whether `arr(from until to)` contains each class name, as bits. */
-    private def classBits(arr: Array[Byte], from: Int, to: Int): Int = {
-      var m = 0
-      var i = from
-      while (i + 3 <= to) {
-        if (arr(i) == 'o' && arr(i + 1) == 'c' && arr(i + 2) == 'r') {
-          var b = 0
-          while (b < Bits.length) {
-            val name = Bits(b)
-            if (i + name.length <= to) {
-              var j = 3
-              while (j < name.length && arr(i + j) == name.charAt(j)) j += 1
-              if (j == name.length) m |= 1 << b
-            }
-            b += 1
-          }
-        }
-        i += 1
-      }
-      m
-    }
-
-    /** collectByClass: `parent`'s descendants, in document order, that
-      * carry one of `wanted` (the first one matching wins), not
-      * descending into them; appended to the pool as (node, bucket)
-      * pairs. Returns where they start. */
-    private def collect(parent: Int, wanted: Array[Int]): Int = {
-      val pool = a.pool
-      val start = pool.n
-      val st = a.stack
-      st.n = 0
-      a.pushChildren(st, parent)
-      while (st.n > 0) {
-        val n = st.pop()
-        val m = classes(n)
-        var b = 0
-        while (b < wanted.length && (m & wanted(b)) == 0) b += 1
-        if (b < wanted.length) { pool.add(n); pool.add(b) }
-        else a.pushChildren(st, n)
-      }
-      start
-    }
-
-    /** `f` on bucket `b` of the pairs from `s` to the pool's end. */
-    private def each(s: Int, b: Int)(f: Int => Unit): Unit = {
-      val e = a.pool.n
-      var i = s
-      while (i < e) { if (a.pool.a(i + 1) == b) f(a.pool.a(i)); i += 2 }
+    private def page(n: Int): Unit = {
+      lineIds.clear()
+      val s = t.collect(n, HocrParse.PageBuckets)
+      t.each(s, 0)(area)
+      t.each(s, 1)(paragraph)
+      t.each(s, 2)(line)
+      a.pool.n = s
+      a.ensureOut(2)
+      a.put('\n'); a.put('\n')
     }
 
     private def area(n: Int): Unit = {
-      val s = collect(n, AreaClasses)
-      each(s, 0)(paragraph)
-      each(s, 1)(line)
+      val s = t.collect(n, HocrParse.AreaBuckets)
+      t.each(s, 0)(paragraph)
+      t.each(s, 1)(line)
       words(s, 2)
       a.pool.n = s
     }
 
     private def paragraph(n: Int): Unit = {
-      val s = collect(n, ParaClasses)
-      each(s, 0)(line)
+      val s = t.collect(n, HocrParse.ParaBuckets)
+      t.each(s, 0)(line)
       words(s, 1)
       a.pool.n = s
     }
@@ -158,71 +80,31 @@ object HocrText {
     /** Area- or paragraph-direct words: one line, none when empty. */
     private def words(s: Int, b: Int): Unit = {
       var any = false
-      each(s, b) { w => word(w); any = true }
+      t.each(s, b) { w => word(w); any = true }
       if (any) { a.ensureOut(1); a.put('\n') }
     }
 
-    /** A line once per id (processLine keeps the LAST `id` attribute),
-      * its words found by full recursion with an early stop only at
-      * ocrx_word nodes. */
+    /** A line once per id (processLine keeps the LAST `id` attribute). */
     private def line(n: Int): Unit = {
       val id = a.lastAttr(n, Arena.IdAttr)
       val fresh =
         if (id < 0) lineIds.add(a.src, 0, 0)
         else { a.valueOf(id); lineIds.add(a.textArr, a.textFrom, a.textTo) }
       if (fresh) {
-        val pool = a.pool
-        val s = pool.n
-        val st = a.stack
-        st.n = 0
-        a.pushChildren(st, n)
-        while (st.n > 0) {
-          val c = st.pop()
-          if ((classes(c) & WordBit) != 0) pool.add(c) else a.pushChildren(st, c)
-        }
-        var i = s
-        while (i < pool.n) { word(pool.a(i)); i += 1 }
-        pool.n = s
+        val s = t.lineWords(n)
+        t.each(s, 0)(word)
+        a.pool.n = s
         a.ensureOut(1)
         a.put('\n')
       }
     }
 
-    /** A word's text and a space. The text (extractTextContent) is every
-      * descendant text node trimmed, in document order: each element's
-      * text is then trimmed already, so its own trim is a no-op. */
+    /** A word's text and a space. */
     private def word(n: Int): Unit = {
-      val st = a.stack2
-      st.n = 0
-      a.pushChildren(st, n)
-      while (st.n > 0) {
-        val c = st.pop()
-        if (a.isText(c)) {
-          a.textOf(c)
-          val arr = a.textArr
-          var i = a.textFrom
-          var j = a.textTo
-          while (i < j && isSpaceAt(arr, i)) i += Arena.seqLen(arr(i))
-          while (j > i && isSpaceAt(arr, lastSeq(arr, j))) j = lastSeq(arr, j)
-          a.append(arr, i, j)
-        } else a.pushChildren(st, c)
-      }
+      t.wordText(n)
       a.ensureOut(1)
       a.put(' ')
     }
-  }
-
-  private def isSpaceAt(arr: Array[Byte], i: Int): Boolean = {
-    val b = arr(i)
-    if (b >= 0) GoStrings.isSpace(b.toChar)
-    else Arena.seqLen(b) < 4 && GoStrings.isSpace(Arena.cp(arr, i).toChar)
-  }
-
-  /** Start of the sequence that ends at `end`. */
-  private def lastSeq(arr: Array[Byte], end: Int): Int = {
-    var i = end - 1
-    while ((arr(i) & 0xC0) == 0x80) i -= 1
-    i
   }
 
   /** A set of byte strings (line ids), copied into one pool. */

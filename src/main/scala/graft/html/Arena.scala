@@ -551,49 +551,17 @@ final class Arena {
   /** Append the decoded entity body `src(s until e)` to [[buf]], or
     * false when it is none. An entity is never longer than its source. */
   private def entity(s: Int, e: Int): Boolean = {
-    if (s < e && src(s) == '#') {
-      val hex = s + 1 < e && (src(s + 1) == 'x' || src(s + 1) == 'X')
-      val p = if (hex) s + 2 else s + 1
-      var v = 0
-      var k = p
-      while (k < e && k - p < 7 && src(k) >= 0 && Character.digit(src(k).toInt, if (hex) 16 else 10) >= 0) {
-        v = v * (if (hex) 16 else 10) + Character.digit(src(k).toInt, if (hex) 16 else 10)
-        k += 1
+    val d = Arena.entity(new String(src, s, e - s, UTF_8))
+    d != null && {
+      var c = 0
+      while (c < d.length) {
+        val x = d.codePointAt(c)
+        putCodePoint(x)
+        c += Character.charCount(x)
       }
-      if (k == e && k > p) {
-        if (v > Character.MAX_CODE_POINT) false else { putCodePoint(v); true }
-      } else {
-        // signs, non-ASCII digits, overflow: Integer.parseInt decides
-        val d = Arena.entity(new String(src, s, e - s, UTF_8))
-        if (d == null) false
-        else {
-          var c = 0
-          while (c < d.length) {
-            val x = d.codePointAt(c)
-            putCodePoint(x)
-            c += Character.charCount(x)
-          }
-          true
-        }
-      }
-    } else {
-      var n = 0
-      while (n < NamedNames.length && !sameBytes(NamedNames(n), s, e)) n += 1
-      n < NamedNames.length && {
-        val v = NamedValues(n)
-        System.arraycopy(v, 0, buf, bufLen, v.length)
-        bufLen += v.length
-        true
-      }
+      true
     }
   }
-
-  private def sameBytes(name: Array[Byte], s: Int, e: Int): Boolean =
-    e - s == name.length && {
-      var j = 0
-      while (j < name.length && src(s + j) == name(j)) j += 1
-      j == name.length
-    }
 
   /** Append `c` to [[buf]]; a surrogate takes its 3-byte form and a low
     * one joins a high one just before it. */
@@ -652,6 +620,11 @@ final class Arena {
     outLen = w
   }
 
+  /** The output as a String, before [[finish]]: a lone surrogate stays
+    * a char, as in a String built by concatenation. */
+  private[graft] def outString(): String =
+    if (!outSurrogates) new String(out, 0, outLen, UTF_8) else Arena.wtf8String(out, 0, outLen)
+
   /** The output, after [[finish]]. */
   def result(): UTF8String = UTF8String.fromBytes(java.util.Arrays.copyOf(out, outLen))
   def resultString(): String = new String(out, 0, outLen, UTF_8)
@@ -685,17 +658,40 @@ object Arena {
   private val CommentClose = "-->".getBytes(UTF_8)
   private final val SurrogateLead = 0xED.toByte
 
-  /** The tag names every kernel and the generated inputs use; each
+  // The tag sets the kernels test live here, next to Tags, which is
+  // built from them: a name added to a set cannot miss its fixed id.
+
+  /** Boilerplate's step 1: subtrees that are dropped. <header> is
+    * intentionally NOT dropped — it typically holds the article h1; its
+    * boilerplate content (nav, logo links) is removed by the nav drop and
+    * the link-density rule instead. */
+  private[graft] val DropTags = Set(
+    "script", "style", "noscript", "template", "iframe", "svg", "canvas",
+    "form", "button", "select", "option", "nav", "footer", "aside")
+
+  /** Boilerplate's step 2: elements that end a block. */
+  private[graft] val BlockTags = Set(
+    "p", "div", "section", "article", "main", "body", "html",
+    "h1", "h2", "h3", "h4", "h5", "h6",
+    "ul", "ol", "li", "dl", "dt", "dd",
+    "table", "thead", "tbody", "tr", "td", "th",
+    "blockquote", "pre", "figure", "figcaption", "hr", "br",
+    "address", "fieldset", "legend")
+
+  private[graft] val HeadingTags = Set("h1", "h2", "h3", "h4", "h5", "h6")
+
+  /** Elements that never have children. */
+  private val VoidTags = Set(
+    "area", "base", "br", "col", "embed", "hr", "img", "input",
+    "link", "meta", "param", "source", "track", "wbr")
+
+  /** The tag names with a fixed id: the sets above, the single tags the
+    * kernels test ([[tagId]]), and names the generated inputs use. Each
     * other name gets an id of its own per arena. */
-  val Tags: Array[String] = Array(
-    "html", "head", "title", "meta", "link", "body", "script", "style",
-    "div", "span", "p", "a", "br", "img", "h1", "h2", "h3", "h4", "h5", "h6",
-    "nav", "header", "footer", "aside", "main", "section", "article",
-    "noscript", "template", "iframe", "svg", "canvas", "form", "button", "select", "option",
-    "ul", "ol", "li", "dl", "dt", "dd", "table", "thead", "tbody", "tfoot", "tr", "td", "th",
-    "blockquote", "pre", "figure", "figcaption", "hr", "address", "fieldset", "legend",
-    "b", "i", "em", "strong", "small", "code", "sup", "sub", "u", "label", "input", "textarea",
-    "area", "base", "col", "embed", "param", "source", "track", "wbr")
+  val Tags: Array[String] = (Seq(
+    "html", "head", "title", "meta", "script", "style", "div", "span", "a", "li",
+    "header", "tfoot", "b", "i", "em", "strong", "small", "code", "sup", "sub", "u", "label", "textarea") ++
+    DropTags.toSeq.sorted ++ BlockTags.toSeq.sorted ++ VoidTags.toSeq.sorted).distinct.toArray
 
   private val TagIds: java.util.HashMap[String, Integer] = {
     val m = new java.util.HashMap[String, Integer]
@@ -727,10 +723,7 @@ object Arena {
   private def byLength(names: Array[String]): Array[Array[Int]] =
     Array.tabulate(names.map(_.length).max + 1)(n => names.indices.filter(names(_).length == n).toArray)
 
-  /** Elements that never have children. */
-  private val VoidTag = tagSet(Set(
-    "area", "base", "br", "col", "embed", "hr", "img", "input",
-    "link", "meta", "param", "source", "track", "wbr"))
+  private val VoidTag = tagSet(VoidTags)
   private val Script = tagId("script")
   private val Style = tagId("style")
 
@@ -756,9 +749,6 @@ object Arena {
       try new String(Character.toChars(Integer.parseInt(body.substring(1))))
       catch { case _: Exception => null }
     } else namedEntities.getOrElse(body, null)
-
-  private val NamedNames: Array[Array[Byte]] = namedEntities.keys.toArray.map(_.getBytes(UTF_8))
-  private val NamedValues: Array[Array[Byte]] = namedEntities.keys.toArray.map(k => namedEntities(k).getBytes(UTF_8))
 
   /** A parsed `s`. */
   def of(s: String): Arena = { val a = new Arena; a.load(s); a }

@@ -35,26 +35,9 @@ import graft.text.GoStrings
   */
 object Boilerplate {
 
-  // NOTE: <header> is intentionally NOT dropped — it typically holds the
-  // article h1; its boilerplate content (nav, logo links) is removed by
-  // the nav drop and the link-density rule instead.
-  private val dropTags = Set(
-    "script", "style", "noscript", "template", "iframe", "svg", "canvas",
-    "form", "button", "select", "option", "nav", "footer", "aside")
-
-  private val blockTags = Set(
-    "p", "div", "section", "article", "main", "body", "html",
-    "h1", "h2", "h3", "h4", "h5", "h6",
-    "ul", "ol", "li", "dl", "dt", "dd",
-    "table", "thead", "tbody", "tr", "td", "th",
-    "blockquote", "pre", "figure", "figcaption", "hr", "br",
-    "address", "fieldset", "legend")
-
-  private val headingTags = Set("h1", "h2", "h3", "h4", "h5", "h6")
-
-  private val Drop = Arena.tagSet(dropTags)
-  private val Block = Arena.tagSet(blockTags)
-  private val Heading = Arena.tagSet(headingTags)
+  private val Drop = Arena.tagSet(Arena.DropTags)
+  private val Block = Arena.tagSet(Arena.BlockTags)
+  private val Heading = Arena.tagSet(Arena.HeadingTags)
   private val A = Arena.tagId("a")
   private val Li = Arena.tagId("li")
   private val AsciiSpace = Array.tabulate(128)(c => GoStrings.isSpace(c.toChar))

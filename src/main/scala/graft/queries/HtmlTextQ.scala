@@ -18,7 +18,7 @@ import graft.pipeline.Extract
   * on one side of its threshold:
   *
   *   - title block "Doc <id>": textLen <= 4+len(id) < 25      -> dropped
-  *   - nav/aside/footer subtrees: dropTags, never become blocks
+  *   - nav/aside/footer subtrees: Arena.DropTags, never become blocks
   *   - ads div (present iff h%3==0): linkDensity 26/27 > 1/3  -> dropped
   *   - h1 "Page <i> heading": heading rule (len>=3, no links) -> KEPT
   *   - main paragraph body+" end of paragraph content.":
@@ -48,7 +48,7 @@ object HtmlTextQ {
 
   /** The strip law in plain Scala — what the DuckDB oracle also computes.
     * SpanTextSpec pins this against the REAL pipeline
-    * (HtmlDom.parse -> Boilerplate.extractMainText) so the law, not just
+    * (Boilerplate.extractMainText over the span's Arena) so the law, not just
     * the SQL, is verified against the code. */
   def predictHtmlText(docText: String, docId: Long, spanOrder: Int): String = {
     val h = graft.layout.MediaOcr.hash64(s"span:$docId:$spanOrder")

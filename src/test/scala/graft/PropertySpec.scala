@@ -332,11 +332,12 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  private def hocrRef(s: String): String = HocrParse.parseDom(RefHtmlDom.parse(s)).fold(_ => "", HocrText.extractText)
+  private def hocrRef(s: String): String = RefHocr.parseDom(RefHtmlDom.parse(s)).fold(_ => "", HocrText.extractText)
 
-  /** Trees, html text and hOCR text of the bytes `b` against the String
-    * reference over `new String(b, UTF_8)` — what `UTF8String.toString`
-    * reads — compared as UTF-8 bytes, through both kernel entries. The
+  /** Trees, html text, hOCR text and the hOCR model of the bytes `b`
+    * against the String reference over `new String(b, UTF_8)` — what
+    * `UTF8String.toString` reads — the texts compared as UTF-8 bytes,
+    * through both kernel entries. The
     * UTF8String entry reads `b` in place at an offset, with `arena`
     * reused across documents as across a row's spans. */
   private def assertSameAsReference(b: Array[Byte], arena: Arena): Unit = {
@@ -353,6 +354,11 @@ class PropertySpec extends AnyFunSuite {
     val hocr = hocrRef(s).getBytes(UTF_8)
     assert(HocrText.fromMarkup(s).getBytes(UTF_8).sameElements(hocr), doc.take(600))
     assert(SpanExtract.extractSpanText("pdf_layout", u, null, arena).getBytes.sameElements(hocr), doc.take(600))
+    // the hOCR model walks the same arena rules as the stitch: whole
+    // models equal to the Node reference's
+    val model = RefHocr.parseDom(RefHtmlDom.parse(s))
+    assert(HocrParse.parse(arena) == model, doc.take(600))
+    assert(HocrParse.parseHocrString(s) == model, doc.take(600))
   }
 
   test("property: arena trees and kernels == String reference on 1500 generated documents") {
