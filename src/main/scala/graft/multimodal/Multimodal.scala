@@ -561,7 +561,6 @@ object Multimodal {
     val feats = featurize(genTable(spark, 200)).toDF()
     feats.select(col("media_id"), col("kind"), col("n_bytes"),
         round(col("mean_luma"), 4).as("luma_r"), col("n_frames"), col("decoded"))
-      .orderBy(col("media_id"))
   }
 
   /** The ORACLE-checkable structural projection of the featurizer run
@@ -585,7 +584,6 @@ object Multimodal {
             (col("media_id") % 9 === 3 || col("media_id") % 9 === 6), lit(null))
           .otherwise(col("n_bytes")).cast("int").as("n_bytes_raw"),
         col("n_frames"), col("decoded"))
-      .orderBy(col("media_id"))
   }
 
   val qMediaProfileSql: String = {
@@ -850,7 +848,6 @@ object Multimodal {
       .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))).cast("long"))
       .filter(col("hamming") <= MaxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
-      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** Image near-dup at scale: aHash in the decode pass (BMP hand-rolled
@@ -945,7 +942,6 @@ object Multimodal {
           .join(planted.select(col("id_a"), col("id_b")), Seq("id_a", "id_b"), "left_anti")
           .select(col("id_a"), col("id_b"), lit("spurious").as("pair_class"),
             lit(true).as("recovered")))
-      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** Driver query (ORACLE-checked recall report): the blocked aHash
@@ -1015,7 +1011,6 @@ object Multimodal {
       .filter(col("hamming") <= MaxHamming)
       .groupBy(col("id_a"), col("id_b"))
       .agg(countDistinct(col("f")).as("frames_matched"))
-      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** The video near-dup corpus: every Y4M video with media_id % 18 == 2
@@ -1099,7 +1094,6 @@ object Multimodal {
       (r.media_id, r.width, r.height, nw, nh,
         out.map(_.length).getOrElse(-1), out.isDefined)
     }.toDF("media_id", "w", "h", "new_w", "new_h", "n_bytes_out", "resized")
-      .orderBy(col("media_id"))
   }
 
   val qMediaResizeSql: String =

@@ -117,6 +117,5 @@ object Extract {
         when(col("doc_id") =!= col("rep"), "dup_extracted")
           .when(col("n_tokens") < 20, "too_short")
           .otherwise("kept").as("reason"))
-      .orderBy(col("doc_id"))
   }
 }

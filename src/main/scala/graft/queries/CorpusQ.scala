@@ -60,7 +60,6 @@ object CorpusQ {
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
         when(coalesce(col("n_bigrams"), lit(0L)) === 0, lit(0.0))
           .otherwise(round(col("top_bigram_count").cast("double") / col("n_bigrams"), 4)).as("top_bigram_share"))
-      .orderBy(col("doc_id"))
   }
 
   val qRepetitionSignalsSql: String =
@@ -93,7 +92,6 @@ object CorpusQ {
       .groupBy(col("prefix_fp"))
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_docs"))
       .select(col("doc_id"), col("prefix_fp"), col("n_docs"))
-      .orderBy(col("doc_id"))
 
   val qPrefixDedupSql: String =
     """WITH t AS (SELECT doc_id,
@@ -118,7 +116,6 @@ object CorpusQ {
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 3)
       .select(col("doc_id"), col("term"), col("tf"), col("df"), col("rnk").cast("long").as("rnk"))
-      .orderBy(col("doc_id"), col("rnk"))
   }
 
   val qTfidfTermsSql: String =
@@ -158,7 +155,6 @@ object CorpusQ {
       .withColumn("reason", reason)
       .select(col("doc_id"), col("reason"),
         when(col("reason") === "kept", 1L).otherwise(0L).as("keep_flag"))
-      .orderBy(col("doc_id"))
   }
 
   val qCorpusFilterSql: String =
@@ -205,7 +201,6 @@ object CorpusQ {
         size(regexp_extract_all(col("t"), lit(UrlRe), lit(0))).cast("long").as("n_urls"),
         md5(regexp_replace(regexp_replace(col("t"), EmailRe, "<EMAIL>"), UrlRe, "<URL>")
           .cast("binary")).as("redacted_md5"))
-      .orderBy(col("doc_id"))
   }
 
   val qPiiRedactSql: String =
@@ -241,7 +236,6 @@ object CorpusQ {
       .groupBy(col("source"))
       .agg(max(col("n")).as("n_docs"),
         pick(0.50).as("p50"), pick(0.90).as("p90"), pick(0.99).as("p99"))
-      .orderBy(col("source"))
   }
 
   val qLengthPercentilesSql: String =
@@ -333,7 +327,6 @@ object CorpusQ {
       .select(coalesce(col("source"), lit("TOTAL")).as("source"),
         col("n_docs"), col("n_chars"), col("n_tokens"), col("n_langs"),
         col("n_dup_docs"), col("n_short_docs"))
-      .orderBy(col("source"))
   }
 
   val qDatasetCardSql: String =
@@ -367,7 +360,6 @@ object CorpusQ {
         count(lit(1)).as("n_buckets"),
         sum(col("nfp")).as("n_exact"))
       .select(col("source"), col("n_exact"), expr(EstimateExpr).as("n_est"))
-      .orderBy(col("source"))
   }
 
   /** The estimator over (s_present, n_buckets) — ONE string, used
@@ -437,7 +429,6 @@ object CorpusQ {
       // bans (DeltaQ's jacc_bp convention)
       .select(col("source_a"), col("source_b"), col("n_shared"), col("n_a"), col("n_b"),
         expr("(n_shared * 10000) div (n_a + n_b - n_shared)").as("jacc_bp"))
-      .orderBy(col("source_a"), col("source_b"))
   }
 
   val qSourceOverlapSql: String =
@@ -494,7 +485,6 @@ object CorpusQ {
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"), max(col("med")).as("med"), max(col("mad")).as("mad"),
         sum(when(col("adev") > lit(3) * col("mad"), 1L).otherwise(0L)).as("n_outliers"))
-      .orderBy(col("source"))
   }
 
   val qMadOutliersSql: String =
@@ -535,7 +525,6 @@ object CorpusQ {
         round(col("sum_tok").cast("double") / col("n_docs"), 6).as("mean_tok"),
         round((col("n_docs") * col("sumsq_tok") - col("sum_tok") * col("sum_tok")).cast("double")
           / (col("n_docs") * col("n_docs")), 6).as("var_tok"))
-      .orderBy(col("source"))
 
   val qSourceVarianceSql: String =
     """WITH t AS (SELECT source,
@@ -601,7 +590,6 @@ object CorpusQ {
     est.join(exact, Seq("source", "q_pct"))
       .select(col("source"), col("q_pct"), col("est_hi"), col("exact_v"),
         (col("est_hi") - col("exact_v")).as("err"))
-      .orderBy(col("source"), col("q_pct"))
   }
 
   val qHistQuantilesSql: String = {

@@ -81,7 +81,6 @@ object DataQualityQ {
           |  'unique_orderkey', n_total, n_total - ndv) AS (check_name, c, v)""".stripMargin)
       .select(col("check_name"), col("c").cast("long").as("n_checked"),
         col("v").cast("long").as("n_violations"), (col("v") === 0).as("pass"))
-      .orderBy(col("check_name"))
   }
 
   val qDqChecksSql: String =
@@ -152,7 +151,6 @@ object DataQualityQ {
         sum(length(col("b.text"))).as("sum_chars"),
         sum(when(col("b.text") === col("d.text") && col("b.lang") === col("d.lang"), 1L)
           .otherwise(0L)).as("n_exact"))
-      .orderBy(col("source"))
   }
 
   val qJsonlRoundtripSql: String =
@@ -193,7 +191,6 @@ object DataQualityQ {
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("quality").isNull, 1L).otherwise(0L)).as("n_legacy"),
         coalesce(sum(col("quality")), lit(0L)).as("sum_quality"))
-      .orderBy(col("lang"))
   }
 
   val qSchemaEvolveSql: String =

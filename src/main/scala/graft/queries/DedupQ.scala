@@ -51,7 +51,6 @@ object DedupQ {
       .groupBy(col("fp"))
       .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_copies"))
       .select(col("doc_id"), col("fp"), col("n_copies"))
-      .orderBy(col("doc_id"))
 
   val qDedupExactSql: String =
     """SELECT MIN(doc_id) AS doc_id, md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS fp,
@@ -82,7 +81,6 @@ object DedupQ {
       .withColumn("cluster_rep", min(col("doc_id")).over(w))
       .select(col("doc_id"), col("cluster_rep"), col("n_copies"),
         expr("CAST(10000 div n_copies AS BIGINT)").as("weight_bp"))
-      .orderBy(col("doc_id"))
   }
 
   val qDedupSoftSql: String =
@@ -141,7 +139,6 @@ object DedupQ {
       .select(col("k").as("cluster_size"), col("n_clusters"),
         (col("k") * col("n_clusters")).as("n_docs"),
         ((col("k") - 1) * col("n_clusters")).as("n_excess"))
-      .orderBy(col("cluster_size"))
 
   val qDupProfileSql: String =
     """WITH all_fps AS (
@@ -343,7 +340,7 @@ object DedupQ {
     * on the bucket key, never an all-pairs product — and oversized
     * buckets are excluded (MaxLshBucket). */
   def qMinhashLsh(s: SparkSession, dir: String): DataFrame =
-    lshPairs(corpusBands(s, dir)).orderBy(col("doc_a"), col("doc_b"))
+    lshPairs(corpusBands(s, dir))
 
   /** mh-signature CTE chain (n, sh, mh) over a (doc_id, text) relation
     * name — the oracle spelling of [[minhashSig]]; eval queries sign a
@@ -413,7 +410,6 @@ object DedupQ {
         (col("n_eq") * 625L).as("est_bp"),
         expr("ni * 10000 div (na + nb - ni)").as("jacc_bp"))
       .withColumn("err_bp", abs(col("est_bp") - col("jacc_bp")))
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   val qMinhashCalibrationSql: String =
@@ -448,7 +444,6 @@ object DedupQ {
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc"))
       .withColumn("dropped",
         when(col("n_docs") > MaxLshBucket, lit(1)).otherwise(lit(0)))
-      .orderBy(col("band"), col("bh"))
 
   val qLshBucketProfileSql: String =
     s"""$bandsCte
@@ -466,7 +461,7 @@ object DedupQ {
     * via a recursive transitive closure — fine at oracle scale, exactly
     * the quadratic thing the Spark side avoids. */
   def qDedupCluster(s: SparkSession, dir: String): DataFrame =
-    connectedComponents(qMinhashLsh(s, dir)).orderBy(col("doc_id"))
+    connectedComponents(qMinhashLsh(s, dir))
 
   /** General connected-components operator over an undirected pair list
     * (doc_a, doc_b) -> (doc_id, cluster_rep, cluster_size). Standalone:
@@ -592,7 +587,6 @@ object DedupQ {
       .join(found, Seq("doc_a"), "left")
       .select(col("doc_a").as("doc_id"), coalesce(col("hit"), lit(0)).as("found"),
         overlapJaccard.as("jaccard"))
-      .orderBy(col("doc_id"))
   }
 
   val qLshRecallSql: String =
@@ -648,7 +642,7 @@ object DedupQ {
       import s.implicits._
       val df = Seq(row).toDF("banding", "n_planted", "n_found")
       Some(acc.map(_.unionAll(df)).getOrElse(df))
-    }.get.orderBy(col("banding"))
+    }.get
   }
 
   val qLshTuningSql: String = {
@@ -712,7 +706,6 @@ object DedupQ {
       .select(col("doc_a").as("doc_id"), col("n_candidates"),
         (-col("m.neg")).as("best_old_id"), col("m.j").as("best_jaccard"),
         when(col("m.j") >= 0.5, lit(1)).otherwise(lit(0)).as("is_dup"))
-      .orderBy(col("doc_id"))
   }
 
   val qIncrementalDedupSql: String =
@@ -751,8 +744,11 @@ object DedupQ {
     * actually writes back: a keep/drop verdict per clustered doc, not
     * just the cluster labels. Plan shape: cluster labels (pointer-jump
     * CC) -> slim length projection join -> one partial-agg argmax per
-    * cluster (max(struct)) -> AQE-broadcast join back. No window over
-    * the full corpus; every shuffle carries only clustered docs. */
+    * cluster (max(struct)) -> join back. The join back plans as a
+    * sort-merge join; AQE replans it as a broadcast hash join once the
+    * cached clustered side is measured (at sf0.1 it broadcasts that
+    * 477-row side, plans/q_canonical_docs_final_sf0.1.txt). No window
+    * over the full corpus; every shuffle carries only clustered docs. */
   def qCanonicalDocs(s: SparkSession, dir: String): DataFrame = {
     val clusters = qDedupCluster(s, dir)
     val lens = documents(s, dir)
@@ -769,7 +765,6 @@ object DedupQ {
       .select(col("doc_id"), col("cluster_rep"), col("cluster_size"),
         col("n_chars"), col("canonical_id"),
         when(col("doc_id") === col("canonical_id"), lit(1)).otherwise(lit(0)).as("is_canonical"))
-      .orderBy(col("doc_id"))
   }
 
   val qCanonicalDocsSql: String =
@@ -814,7 +809,6 @@ object DedupQ {
       .selectExpr("doc_id", "grp", s"CAST(${SampleQ.bucketExpr} AS BIGINT) AS bucket")
       .selectExpr("doc_id", "grp",
         "CASE WHEN bucket < 58982 THEN 'train' WHEN bucket < 62259 THEN 'val' ELSE 'test' END AS split")
-      .orderBy(col("doc_id"))
   }
 
   val qLeakageSplitSql: String =
@@ -852,7 +846,6 @@ object DedupQ {
         (col("sa.n") + col("sb.n") - col("n_inter")).as("n_union"),
         round(col("n_inter").cast("double") / (col("sa.n") + col("sb.n") - col("n_inter")), 4).as("jaccard"))
       .filter(col("jaccard") >= 0.35)
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   val qNgramJaccardSql: String =
@@ -892,7 +885,6 @@ object DedupQ {
       .select(col("doc_a"), col("doc_b"), col("n_inter"), col("sa.n").as("n_a"),
         round(col("n_inter").cast("double") / col("sa.n"), 4).as("containment"))
       .filter(col("containment") >= 0.65)
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   val qShingleContainSql: String =
@@ -921,7 +913,6 @@ object DedupQ {
         documents(s, dir).select(col("doc_id"), col("text")))
       .select(col("doc_a"), col("doc_b"), col("ni").as("n_inter"), jac.as("jaccard"),
         when(jac >= 0.5, lit(1)).otherwise(lit(0)).as("verified"))
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   val qNeardupVerifiedSql: String =
@@ -967,8 +958,8 @@ object DedupQ {
 
   def qSimhash(s: SparkSession, dir: String): DataFrame = {
     documents(s, dir).createOrReplaceTempView("documents")
-    s.sql(simhashCore(
-      "SELECT doc_id, t FROM documents LATERAL VIEW explode(split(trim(text), '\\\\s+')) AS t"))
+    s.sql(Tables.unordered(simhashCore(
+      "SELECT doc_id, t FROM documents LATERAL VIEW explode(split(trim(text), '\\\\s+')) AS t")))
   }
 
   val qSimhashSql: String = simhashCore(
@@ -1082,7 +1073,6 @@ object DedupQ {
       .select(col("doc_a"), col("doc_b"),
         expr("CAST(bit_count(sha ^ shb) AS INT)").as("hamming"))
       .filter(col("hamming") <= 3)
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   val qSimhashNeardupSql: String = simhashNeardupCore(
@@ -1119,7 +1109,6 @@ object DedupQ {
         sum(when(col("rn") > 1, 1L).otherwise(0L)).as("n_dup_blocks"))
       .select(col("doc_id"), col("n_blocks"), col("n_dup_blocks"),
         round(col("n_dup_blocks").cast("double") / col("n_blocks"), 4).as("dup_block_frac"))
-      .orderBy(col("doc_id"))
   }
 
   val qSubstrDedupSql: String =
@@ -1174,7 +1163,6 @@ object DedupQ {
       .select(col("doc_id"), col("n_blocks"),
         size(col("ks")).cast("long").as("n_kept"),
         md5(concat_ws(" ", expr("transform(ks, x -> x.btext)")).cast("binary")).as("dedup_md5"))
-      .orderBy(col("doc_id"))
   }
 
   val qParaDedupSql: String =
@@ -1242,7 +1230,6 @@ object DedupQ {
       .agg(count(lit(1)).as("n_docs_dropped"))
       .select(col("source_kept"), col("source").as("source_dropped"),
         col("n_docs_dropped"))
-      .orderBy(col("source_kept"), col("source_dropped"))
   }
 
   val qSourcePrecedenceSql: String =

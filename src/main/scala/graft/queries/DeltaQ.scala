@@ -60,7 +60,6 @@ object DeltaQ {
           .otherwise("changed").as("status"))
       .groupBy(col("source"), col("status"))
       .agg(count(lit(1)).as("n_docs"))
-      .orderBy(col("source"), col("status"))
   }
 
   val qSnapshotDiffSql: String =
@@ -158,7 +157,6 @@ object DeltaQ {
       .filter(col("inter") * 10 >= (col("n_a") + col("n_b") - col("inter")) * PjThresholdTenths)
       .select(col("doc_a"), col("doc_b"), col("inter"), col("n_a"), col("n_b"),
         expr("(inter * 10000) div (n_a + n_b - inter)").as("jacc_bp"))
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   val qPrefixJaccardSql: String =
@@ -223,7 +221,6 @@ object DeltaQ {
         (count(lit(1)) - count(col("v"))).as("n_null"),
         countDistinct(col("v")).as("ndv"),
         min(col("v")).as("min_v"), max(col("v")).as("max_v"))
-      .orderBy(col("col_name"))
 
   val qColStatsSql: String =
     """WITH u AS (
@@ -271,7 +268,6 @@ object DeltaQ {
       .groupBy(col("source"), col("bin"))
       .agg(count(lit(1)).as("n_files"), sum(col("size_bytes")).as("bin_bytes"),
         min(col("file_id")).as("first_file"), max(col("file_id")).as("last_file"))
-      .orderBy(col("source"), col("bin"))
   }
 
   val qCompactionPlanSql: String =
@@ -312,7 +308,6 @@ object DeltaQ {
         when(col("b.lang").isNull, lit("inserted"))
           .when(col("u.lang").isNotNull, lit("updated"))
           .otherwise(lit("kept")).as("op"))
-      .orderBy(col("doc_id"))
   }
 
   val qUpsertMergeSql: String =
@@ -368,7 +363,6 @@ object DeltaQ {
       .select(col("layout"), col("file_id"), col("n_rows"), col("min_nc"), col("max_nc"),
         when(col("max_nc") < 300 || col("min_nc") >= 400, 1L).otherwise(0L).as("skipped"),
         col("n_match"))
-      .orderBy(col("layout"), col("file_id"))
   }
 
   val qFileSkippingSql: String =

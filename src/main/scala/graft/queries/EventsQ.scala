@@ -46,7 +46,6 @@ object EventsQ {
     ret.join(cohorts, Seq("cohort_day"))
       .select(col("cohort_day"), col("day_offset"), col("n_cohort"), col("n_active"),
         expr("(n_active * 10000) div n_cohort").as("ret_bp"))
-      .orderBy(col("cohort_day"), col("day_offset"))
   }
 
   val qCohortRetentionSql: String =
@@ -96,7 +95,6 @@ object EventsQ {
         coalesce(col("n"), lit(0L)).as("n_events"),
         coalesce(col("s"), lit(0L)).as("sum_cents"),
         col("n").isNull.as("filled"))
-      .orderBy(col("h"), col("event_type"))
   }
 
   val qGapFillSql: String =
@@ -156,7 +154,6 @@ object EventsQ {
         (col("sum_cents") === col("s_d")).as("sum_match"),
         (col("min_cents") === col("mn_d")).as("min_match"),
         (col("max_cents") === col("mx_d")).as("max_match"))
-      .orderBy(col("event_type"))
   }
 
   val qPartialReaggSql: String =
@@ -225,7 +222,6 @@ object EventsQ {
         col("n_late_30h"),
         expr("mx div 1000000").as("max_late_sec"),
         expr("sm div 1000000").as("sum_late_sec"))
-      .orderBy(col("event_type"))
   }
 
   val qLateProfileSql: String =

@@ -102,7 +102,6 @@ object GraphQ {
         coalesce(col("outdeg"), lit(0L)).as("out_degree"),
         coalesce(col("ind"), lit(0L)).as("in_degree"),
         col("rank").as("rank_scaled"))
-      .orderBy(col("doc_id"))
   }
 
   val qPagerankSql: String = {
@@ -153,7 +152,6 @@ object GraphQ {
       .join(top, Seq("dst"))
       .select(col("dst").as("target_id"), col("n_inlinks"),
         col("n_distinct_anchors"), col("top_anchor"), col("top_anchor_count"))
-      .orderBy(col("target_id"))
   }
 
   val qAnchorAggSql: String =
@@ -203,7 +201,6 @@ object GraphQ {
     docs.select(col("doc_id"))
       .join(perNode.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cnt"), lit(0L)).as("n_triangles"))
-      .orderBy(col("doc_id"))
   }
 
   val qTriangleCountSql: String =
@@ -261,7 +258,6 @@ object GraphQ {
     dist.select(col("doc_id"),
         when(col("dist") >= Inf, -1L).otherwise(col("dist")).as("dist"),
         (col("doc_id") % 128 === 0).as("is_seed"))
-      .orderBy(col("doc_id"))
   }
 
   val qBfsDistSql: String = {
@@ -341,8 +337,7 @@ object GraphQ {
     }
     (dist.select(col("doc_id"),
         when(col("dist") >= Inf, -1L).otherwise(col("dist")).as("dist"),
-        (col("doc_id") % 128 === 0).as("is_seed"))
-      .orderBy(col("doc_id")), rounds)
+        (col("doc_id") % 128 === 0).as("is_seed")), rounds)
   }
 
   val qBfsFixpointSql: String =

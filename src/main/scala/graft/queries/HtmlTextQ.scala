@@ -80,7 +80,6 @@ object HtmlTextQ {
       .filter(col("sp.kind") === "html")
       .select(col("doc_id"), col("sp.order").as("span_order"),
         md5(col("sp.text").cast("binary")).as("text_md5"))
-      .orderBy(col("doc_id"), col("span_order"))
 
   /** Shared CTE chain (doc_id, text, span_order, hi) over the documents
     * table — FlagshipQ's generator recurrence with the text column

@@ -61,7 +61,6 @@ object IndexQ {
       .crossJoin(broadcast(nDocs))
       .filter(col("df") * 20 >= col("n_docs"))
       .select(col("term"), col("df"), col("tf_total"), col("postings_head"))
-      .orderBy(col("df").desc, col("term").asc)
   }
 
   val qInvertedIndexSql: String =
@@ -105,7 +104,6 @@ object IndexQ {
       .select(col("user_id"), col("version").cast("long").as("version"),
         col("event_type"), col("valid_from"), col("valid_to"),
         col("valid_to").isNull.as("is_current"))
-      .orderBy(col("user_id"), col("version"))
   }
 
   val qScd2Sql: String =
@@ -158,7 +156,6 @@ object IndexQ {
       .agg(min(col("rk")).cast("long").as("vocab_rank"))
       .select(col("threshold_pct").cast("long").as("threshold_pct"), col("vocab_rank"),
         col("total").as("total_tokens"), col("vocab_size"))
-      .orderBy(col("threshold_pct"))
   }
 
   val qVocabCoverageSql: String = {
@@ -237,7 +234,7 @@ object IndexQ {
           col("freq"))
       result
     }
-    rounds.reduce(_.unionByName(_)).orderBy(col("round"))
+    rounds.reduce(_.unionByName(_))
   }
 
   /** DuckDB merge-application expression: padded `replace` applied twice
@@ -346,7 +343,6 @@ object IndexQ {
       .agg(count(lit(1)).as("n_words"),
         sum(length(col("word"))).cast("long").as("n_chars"),
         sum(col("n_syms")).cast("long").as("n_tokens"))
-      .orderBy(col("doc_id"))
   }
 
   val qBpeEncodeSql: String = {
@@ -402,7 +398,6 @@ object IndexQ {
       .select(col("lang"), col("n_words"), col("n_chars"), col("n_tokens"),
         expr("CAST((10000 * n_tokens) div n_words AS BIGINT)").as("fertility_bp"),
         expr("CAST((100 * n_chars) div n_tokens AS BIGINT)").as("chars_per_token_x100"))
-      .orderBy(col("lang"))
   }
 
   val qTokenizerFertilitySql: String = {

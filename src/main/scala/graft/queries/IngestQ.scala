@@ -57,7 +57,6 @@ object IngestQ {
     writeFixture(s, dir, root)
     BinaryIngest.pages(s, root, glob = "*.bin")
       .select(col("doc_id"), col("page_idx"), col("media_type"), col("length"))
-      .orderBy(col("doc_id"), col("page_idx"))
   }
 
   val qBinaryIngestSql: String =
@@ -113,7 +112,7 @@ object IngestQ {
         .select(lit(fmt).as("format"), col("n_rows"), col("sum_doc_id"),
           col("sum_chars"),
           when(col("bad") === 0, lit(1)).otherwise(lit(0)).as("parity"))
-    }.reduce(_ unionAll _).orderBy(col("format"))
+    }.reduce(_ unionAll _)
   }
 
   val qFormatParitySql: String =

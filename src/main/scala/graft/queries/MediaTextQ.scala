@@ -47,7 +47,6 @@ object MediaTextQ {
       .filter(col("sp.kind") === "media")
       .select(col("doc_id"), col("sp.order").as("span_order"),
         md5(col("sp.text").cast("binary")).as("text_md5"))
-      .orderBy(col("doc_id"), col("span_order"))
 
   /** pdf_layout-span TEXT under the same machine: CorpusGen renders real
     * hOCR from MediaOcr.classify("pdf://<doc>/<i>") and extraction does
@@ -64,7 +63,6 @@ object MediaTextQ {
       .filter(col("sp.kind") === "pdf_layout")
       .select(col("doc_id"), col("sp.order").as("span_order"),
         md5(col("sp.text").cast("binary")).as("text_md5"))
-      .orderBy(col("doc_id"), col("span_order"))
 
   // ---- the DuckDB oracle: Rng stream as a recursive state machine ----
 

@@ -60,7 +60,6 @@ object MiningQ {
   def qFuzzyDedup(s: SparkSession, dir: String): DataFrame =
     fuzzyPairs(fuzzyCorpus(s, dir))
       .withColumn("is_planted", col("doc_b") === col("doc_a") + 1000000L)
-      .orderBy(col("doc_a"), col("doc_b"))
 
   /** The blocked corpus (doc_id, text, blk): ASCII-only docs plus the
     * planted variants, block key = first 16 chars. THE documented ASCII
@@ -149,7 +148,6 @@ object MiningQ {
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc"))
       .withColumn("dropped",
         when(col("n_docs") > MaxFuzzyBlock, lit(1)).otherwise(lit(0)))
-      .orderBy(col("blk"))
 
   val qFuzzyBlocksSql: String =
     s"""WITH $fuzzyCorpusCte
@@ -220,7 +218,6 @@ object MiningQ {
       .agg(min(col("cv")).as("n_est"))
       .select(col("b").as("bigram"), col("n_exact"), col("n_est"),
         (col("n_est") > col("n_exact")).as("overestimated"))
-      .orderBy(col("n_exact").desc, col("bigram").asc)
   }
 
   val qCmsHeavySql: String = {
@@ -295,7 +292,6 @@ object MiningQ {
         (col("n_grams") - WinnowWindow + 1).as("n_windows"),
         col("n_fps"),
         expr(s"(1000 * n_fps) div (n_grams - ${WinnowWindow - 1})").as("sel_per_1000"))
-      .orderBy(col("doc_id"))
   }
 
   val qWinnowFpSql: String =
@@ -385,7 +381,6 @@ object MiningQ {
         coalesce(col("cov"), lit(0L)).as("covered_tokens"),
         expr("CAST(CASE WHEN n_tokens > 0 THEN (coalesce(cov, 0) * 10000) div n_tokens ELSE 0 END AS BIGINT)")
           .as("coverage_bp"))
-      .orderBy(col("doc_id"))
   }
 
   val qDupspanCoverageSql: String = {

@@ -49,7 +49,6 @@ object PdfQ {
         (id, nPages, layers.length, layers.headOption.getOrElse(""), if (hasOcr) 1 else 0)
       }
       .toDF("doc_id", "n_pages", "n_layers", "first_layer", "has_ocr")
-      .orderBy(col("doc_id"))
   }
 
   /** The prediction side. `first_layer` is 'OCR Text (Page 1\' — no
@@ -111,7 +110,6 @@ object PdfQ {
       }
       .toDF("doc_id", "n_pages", "n_layers", "first_layer", "has_ocr",
         "n_forms", "imported", "overlaid")
-      .orderBy(col("doc_id"))
   }
 
   /** 2 layers per page (the copied "Scan Text" OCG + the new "OCR Text"
@@ -183,7 +181,6 @@ object PdfQ {
         (id, cipher, pages.length, encNamed, hidden, decrypted)
       }
       .toDF("doc_id", "cipher", "n_pages", "enc_named", "hidden", "decrypted")
-      .orderBy(col("doc_id"))
   }
 
   /** Ciphertext hides the text operators and the OCG layer NAMES from
@@ -259,7 +256,6 @@ object PdfQ {
       .toDF("doc_id", "reason")
       .groupBy(col("reason"))
       .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("sum_doc_id"))
-      .orderBy(col("reason"))
   }
 
   val qPdfQuarantineSql: String =
@@ -282,7 +278,6 @@ object PdfQ {
     PdfAssemble.run(pageTable)
       .select(col("doc_id"), col("n_pages"), length(col("pdf")).as("pdf_bytes"),
         col("err"))
-      .orderBy(col("doc_id"))
   }
 
   /** ORACLE companion to the rows-only q_pdf_assemble (the flagship
@@ -313,7 +308,6 @@ object PdfQ {
         (docId, nPages, if (consistent) 1 else 0)
       }
       .toDF("doc_id", "n_pages", "consistent")
-      .orderBy(col("doc_id"))
   }
 
   val qPdfAssembleCheckSql: String =

@@ -39,7 +39,6 @@ object PositionedQ {
         col("doc_id"), col("w_idx"), col("w"), col("x"), col("width"),
         (lit(10.0) * col("width") / (lit(0.5) * 10.0 * col("wlen"))).as("font_size"),
         (col("y0") + lit(10.0) * col("width") / (lit(0.5) * 10.0 * col("wlen")) * 0.718).as("baseline_y"))
-      .orderBy(col("doc_id"), col("w_idx"))
   }
 
   val qPositionedWordsSql: String =

@@ -36,7 +36,6 @@ object Relational {
         sum(dec(col("l_extendedprice")) * (lit(1).cast("decimal(18,4)") - dec(col("l_discount"))))
           .cast("double").as("sum_disc"),
         count(lit(1)).as("n_rows"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
 
   val qAggPushdownSql: String =
     """SELECT l_returnflag, l_linestatus,
@@ -56,7 +55,6 @@ object Relational {
       .agg(
         sum(dec(col("o_totalprice"))).cast("double").as("revenue"),
         count(lit(1)).as("n_orders"))
-      .orderBy(col("n_name"))
 
   val qJoinBroadcastSql: String =
     """SELECT n_name,
@@ -85,7 +83,6 @@ object Relational {
         row_number().over(w).as("rn"),
         sum(dec(col("o_totalprice"))).over(w.rowsBetween(Window.unboundedPreceding, 0))
           .cast("double").as("run_total"))
-      .orderBy(col("o_custkey"), col("rn"))
   }
 
   val qWindowRunningSql: String =
@@ -105,7 +102,6 @@ object Relational {
           array_sort(collect_list(struct(col("ts"), col("event_id"), col("event_type")))),
           (x: Column) => x.getField("event_type")),
         " ").as("type_seq"))
-      .orderBy(col("user_id"))
 
   val qStitchOrderSql: String =
     """SELECT user_id, STRING_AGG(event_type, ' ' ORDER BY ts, event_id) AS type_seq
@@ -118,7 +114,6 @@ object Relational {
       .agg(array_join(
         transform(array_sort(collect_list(col("l_linenumber"))), (x: Column) => x.cast("string")),
         ",").as("line_seq"))
-      .orderBy(col("l_orderkey"))
 
   val qPageSortSql: String =
     """SELECT l_orderkey, STRING_AGG(CAST(l_linenumber AS VARCHAR), ',' ORDER BY l_linenumber) AS line_seq
@@ -132,7 +127,6 @@ object Relational {
     counts.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("source"), col("lang").as("top_lang"), col("c").as("cnt"))
-      .orderBy(col("source"))
   }
 
   val qFreqArgmaxSql: String =
@@ -155,7 +149,6 @@ object Relational {
           array_sort(collect_list(struct(col("first_ts"), col("event_type")))),
           (x: Column) => x.getField("event_type")),
         "|").as("vals"))
-      .orderBy(col("user_id"))
   }
 
   val qDupkeyFoldSql: String =
@@ -184,7 +177,6 @@ object Relational {
       .filter(col("clo") >= col("lo") && col("chi") <= col("hi"))
       .groupBy(col("o_orderkey"))
       .agg(count(lit(1)).as("n_contained"))
-      .orderBy(col("o_orderkey"))
   }
 
   val qContainmentJoinSql: String =
@@ -207,7 +199,6 @@ object Relational {
         when(unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts")) > 1800, 1).otherwise(0))
       .groupBy(col("user_id"))
       .agg((sum(col("is_new")) + 1).as("n_sessions"), count(lit(1)).as("n_events"))
-      .orderBy(col("user_id"))
   }
 
   val qSessionizeSql: String =
@@ -225,7 +216,6 @@ object Relational {
       .select(col("event_type"), get_json_object(col("props"), "$.k").cast("long").as("k"))
       .groupBy(col("event_type"))
       .agg(sum(col("k")).as("sum_k"), count(lit(1)).as("n"))
-      .orderBy(col("event_type"))
 
   val qJsonExtractSql: String =
     """SELECT event_type, CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k, COUNT(*) AS n
@@ -251,7 +241,6 @@ object Relational {
         unix_millis(col("ts").cast("timestamp")).as("purchase_ms"),
         coalesce(col("prior_view_id"), lit(-1L)).as("prior_view_id"),
         coalesce(col("prior_view_ms"), lit(-1L)).as("prior_view_ms"))
-      .orderBy(col("user_id"), col("event_id"))
   }
 
   val qAsofJoinSql: String =
@@ -293,7 +282,6 @@ object Relational {
       .select(coalesce(col("r_name"), lit("ALL")).as("region"),
         coalesce(col("n_name"), lit("ALL")).as("nation"),
         col("revenue_cents"), col("n_supp"), col("n_rows"))
-      .orderBy(col("region"), col("nation"))
   }
 
   val qRollupRevenueSql: String =
@@ -315,7 +303,6 @@ object Relational {
       .agg(count(lit(1)).as("n_items"),
         countDistinct(col("l_partkey")).as("n_parts"),
         sum(dec(col("l_quantity"))).cast("double").as("sum_qty"))
-      .orderBy(col("p_brand"))
   }
 
   val qBrandStatsSql: String =
@@ -335,7 +322,6 @@ object Relational {
       .join(Tables.read(s, dir, "orders").filter(col("o_totalprice") > 400000),
         col("c_custkey") === col("o_custkey"), "left_anti")
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
-      .orderBy(col("c_custkey"))
 
   val qAntiJoinSql: String =
     """SELECT c_custkey, c_name, c_nationkey
@@ -352,7 +338,6 @@ object Relational {
     lo.exceptAll(hi).select(col("event_type"), org.apache.spark.sql.functions.lit("only_low").as("bucket"))
       .unionAll(lo.intersectAll(hi)
         .select(col("event_type"), org.apache.spark.sql.functions.lit("both").as("bucket")))
-      .orderBy(col("bucket"), col("event_type"))
   }
 
   val qSetOpsSql: String =
@@ -382,7 +367,6 @@ object Relational {
       .join(Tables.documents(s, dir)
         .groupBy(col("source")).agg(count(lit(1)).as("n_docs")), Seq("source"))
       .select(col("source") +: PivotLangs.map(l => col(s"chars_$l")) :+ col("n_docs"): _*)
-      .orderBy(col("source"))
   }
 
   val qPivotLangsSql: String = {
@@ -427,7 +411,6 @@ object Relational {
         coalesce(col("nn"), lit(0L)).as("n_nearby"),
         coalesce(col("nu"), lit(0L)).as("n_users"),
         col("mn").as("min_neighbor"))
-      .orderBy(col("event_id"))
   }
 
   val qRangeJoinSql: String =
@@ -471,7 +454,6 @@ object Relational {
           .when(col("t_view").isNotNull, 1)
           .otherwise(0).as("stage"),
         col("t_view"), col("t_click"), col("t_purchase"))
-      .orderBy(col("user_id"))
   }
 
   val qFunnelSql: String =
@@ -515,7 +497,6 @@ object Relational {
       .groupBy(col("event_type"))
       .agg(sum(col("c")).as("n_events"),
         floor(sum(col("sv")) * 100).cast("long").as("sum_cents"))
-      .orderBy(col("event_type"))
 
   val qSaltedAggSql: String =
     """SELECT event_type, COUNT(*) AS n_events,
@@ -546,7 +527,6 @@ object Relational {
         countDistinct(col("user_id")).as("n_users"),
         sumCents(col("value")).as("sum_cents"))
       .select(col("w.start").as("w_start"), col("n_events"), col("n_users"), col("sum_cents"))
-      .orderBy(col("w_start"))
 
   val qHopWindowSql: String =
     """WITH x AS (SELECT ts, user_id, value,
@@ -589,7 +569,6 @@ object Relational {
         min(col("doc_id")).as("min_doc"), max(col("doc_id")).as("max_doc"),
         min(col("n_chars")).as("min_chars"), max(col("n_chars")).as("max_chars"),
         min(col("z")).as("min_z"), max(col("z")).as("max_z"))
-      .orderBy(col("tile"))
   }
 
   val qZorderLayoutSql: String = {
@@ -631,7 +610,7 @@ object Relational {
 
   def qGroupingSets(s: SparkSession, dir: String): DataFrame = {
     Tables.documents(s, dir).createOrReplaceTempView("documents")
-    s.sql(qGroupingSetsSql)
+    s.sql(Tables.unordered(qGroupingSetsSql))
   }
 
   /** CDC/SCD "latest record wins" compaction: treat the event stream as
@@ -656,7 +635,6 @@ object Relational {
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("event_type").as("last_type"), col("value_cents").as("last_value_cents"),
         col("n_changes"))
-      .orderBy(col("user_id"))
 
   val qCdcLatestSql: String =
     """WITH r AS (SELECT user_id, event_id, event_type,

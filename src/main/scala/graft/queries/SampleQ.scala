@@ -217,7 +217,6 @@ object SampleQ {
       .withColumn("rk", row_number().over(w2).cast("long"))
       .filter(col("rk") <= DomainCap)
       .select(col("source"), col("rk"), col("doc_id"), col("n_chars"))
-      .orderBy(col("source"), col("rk"))
   }
 
   private val domainCapSql: String =
@@ -299,7 +298,7 @@ object SampleQ {
 
   private def run(sql: String)(s: SparkSession, dir: String): DataFrame = {
     Tables.documents(s, dir).createOrReplaceTempView("documents")
-    s.sql(sql)
+    s.sql(Tables.unordered(sql))
   }
 
   val all: Map[String, ((SparkSession, String) => DataFrame, Option[String])] = Map(

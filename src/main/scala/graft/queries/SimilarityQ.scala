@@ -55,7 +55,6 @@ object SimilarityQ {
     joined.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 10)
       .select(col("qid"), col("rank"), col("cid"), col("sim"))
-      .orderBy(col("qid"), col("rank"))
   }
 
   val qAnnCosineSql: String =
@@ -114,7 +113,6 @@ object SimilarityQ {
       .select(bucketCol(col("embedding")).as("bucket"), col("vec_id"))
       .groupBy(col("bucket"))
       .agg(count(lit(1)).as("n_vecs"), min(col("vec_id")).as("min_vec"))
-      .orderBy(col("bucket"))
 
   val qAnnLshBucketsSql: String = {
     val sigBits = sigBitsSql
@@ -205,7 +203,6 @@ object SimilarityQ {
       .select(col("vec_a"), col("vec_b"),
         (col("dp") / (sqrt(col("qq")) * sqrt(col("cc")))).as("sim"))
       .filter(col("sim") >= 0.25)
-      .orderBy(col("vec_a"), col("vec_b"))
   }
 
   val qEmbedNeardupSql: String = embedNeardupCore(
@@ -235,7 +232,6 @@ object SimilarityQ {
     joined.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("vec_id"), col("cid").as("centroid"), col("sim"))
-      .orderBy(col("vec_id"))
   }
 
   val qIvfAssignSql: String =
@@ -280,7 +276,6 @@ object SimilarityQ {
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
       .select(col("qid"), col("rank"), col("cand_id"), col("sim"))
-      .orderBy(col("qid"), col("rank"))
   }
 
   val qIvfProbeSql: String =
@@ -357,7 +352,6 @@ object SimilarityQ {
     a0.join(a1, Seq("vec_id"))
       .select(col("vec_id"), col("c0").as("centroid0"), col("c1").as("centroid1"),
         when(col("c0") =!= col("c1"), 1).otherwise(0).as("moved"))
-      .orderBy(col("vec_id"))
   }
 
   val qKmeansRefineSql: String =
@@ -405,7 +399,6 @@ object SimilarityQ {
         qEmbedNeardup(s, dir)
           .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
       .select(col("doc_id").as("vec_id"), col("cluster_rep"), col("cluster_size"))
-      .orderBy(col("vec_id"))
 
   val qEmbedClusterSql: String =
     s"""WITH RECURSIVE pairs AS (
@@ -479,7 +472,6 @@ object SimilarityQ {
     assigned.join(dropped, Seq("vec_id"), "left")
       .select(col("vec_id"), col("centroid").as("cluster"), col("csim"),
         when(col("is_dropped").isNotNull, lit(0)).otherwise(lit(1)).as("kept"))
-      .orderBy(col("vec_id"))
   }
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540 — public paper):
@@ -579,7 +571,6 @@ object SimilarityQ {
            |  AS pairs_capped""".stripMargin,
         s"CAST(CASE WHEN n_members - 1 > $R THEN 1 ELSE 0 END AS INT) AS capped")
       .withColumn("pairs_skipped", col("pairs_full") - col("pairs_capped"))
-      .orderBy(col("cluster"))
   }
 
   val qSemdedupBlocksSql: String =
@@ -661,7 +652,6 @@ object SimilarityQ {
     adc.withColumn("rank", row_number().over(wR))
       .filter(col("rank") <= 10)
       .select(col("qid"), col("rank"), col("cand_id"), col("adc_dist"))
-      .orderBy(col("qid"), col("rank"))
   }
 
   val qPqAnnSql: String =
@@ -711,7 +701,6 @@ object SimilarityQ {
         sum(coalesce(col("hit"), lit(0))).cast("long").as("n_hits"))
       .select(col("qid"), col("n_exact"), col("n_hits"),
         expr("n_hits * 10000 div n_exact").as("recall_bp"))
-      .orderBy(col("qid"))
   }
 
   val qAnnRecallSql: String =
@@ -755,7 +744,6 @@ object SimilarityQ {
         sum(coalesce(col("hit"), lit(0))).cast("long").as("n_hits"))
       .select(col("qid"), col("n_exact"), col("n_hits"),
         expr("n_hits * 10000 div n_exact").as("recall_bp"))
-      .orderBy(col("qid"))
   }
 
   val qPqRecallSql: String =

@@ -32,7 +32,6 @@ object SpanEqualityQ {
       .select(col("doc_id"), col("sp.order").as("span_order"),
         col("sp.kind").as("kind"), col("sp.media_ref").as("media_ref"),
         md5(col("sp.text").cast("binary")).as("text_md5"))
-      .orderBy(col("doc_id"), col("span_order"))
 
   val oracle: String = {
     import FlagshipQ.floorModSql

@@ -23,6 +23,11 @@ object Tables {
 
   def documents(s: SparkSession, dir: String): DataFrame = read(s, dir, "documents")
 
+  /** An oracle statement as Spark runs it: the same SQL without its
+    * trailing top-level `ORDER BY`, which the row-set compare never
+    * reads and which would cost a range exchange and a sort. */
+  def unordered(sql: String): String = sql.replaceFirst("\\s+ORDER BY [\\w, ]+$", "")
+
   /** MD5 of a table's files (name, length, mtime), from a driver-side
     * listing that runs no job: a table rewritten under the same path
     * gets a new value. What is derived from a table and kept past one

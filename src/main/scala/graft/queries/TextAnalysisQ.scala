@@ -28,7 +28,6 @@ object TextAnalysisQ {
         size(split(trim(col("text")), "\\s+")).cast("long").as("n_tokens"),
         size(regexp_extract_all(col("text"), lit(BpeRegex), lit(0))).cast("long").as("n_bpe_tokens"),
         length(col("text")).cast("long").as("n_chars_txt"))
-      .orderBy(col("doc_id"))
 
   val qTokenCountSql: String =
     s"""SELECT doc_id,
@@ -52,7 +51,6 @@ object TextAnalysisQ {
         nStop.cast("long").as("n_stop"),
         round(nStop.cast("double") / nTok, 4).as("stop_ratio"),
         round(nNonSpace.cast("double") / nTok, 4).as("mean_tok_len"))
-      .orderBy(col("doc_id"))
   }
 
   val qQualityScoreSql: String = {
@@ -103,7 +101,6 @@ object TextAnalysisQ {
     val scored = withLangScores(documents(s, dir))
     scored.select(col("doc_id"), predLangCol.as("pred_lang"),
         col("s_en"), col("s_de"), col("s_fr"), col("s_es"))
-      .orderBy(col("doc_id"))
   }
 
   /** The s_en..s_es column list in DuckDB SQL (shared with CorpusQ). */
@@ -137,7 +134,6 @@ object TextAnalysisQ {
     documents(s, dir)
       .select(col("doc_id"),
         md5(lower(regexp_replace(col("text"), "\\s+", " ")).cast("binary")).as("fp"))
-      .orderBy(col("doc_id"))
 
   val qFingerprintSql: String =
     """SELECT doc_id, md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS fp
@@ -204,7 +200,6 @@ object TextAnalysisQ {
       .agg(sum(col("cnt")).as("n_bigrams"), sum(col("cnt") * col("gc")).as("sum_gc"))
       .select(col("doc_id"), col("n_bigrams"),
         round(col("sum_gc").cast("double") / col("n_bigrams"), 4).as("familiarity"))
-      .orderBy(col("doc_id"))
   }
 
   val qBigramFamiliaritySql: String =
@@ -237,7 +232,6 @@ object TextAnalysisQ {
         round(lit(206.835)
           - lit(1.015) * (nWords.cast("double") / nSent.cast("double"))
           - lit(84.6) * (nVg.cast("double") / nWords.cast("double")), 4).as("flesch"))
-      .orderBy(col("doc_id"))
   }
 
   val qReadabilitySql: String =
@@ -370,7 +364,6 @@ object TextAnalysisQ {
         col("n_stop").cast("long").as("n_stop"), col("top2_chars"),
         col("r_nwords"), col("r_wordlen"), col("r_alpha"), col("r_stop"),
         col("r_rep"), col("kept"))
-      .orderBy(col("doc_id"))
   }
 
   val qGopherRulesSql: String = {
@@ -422,7 +415,6 @@ object TextAnalysisQ {
       .groupBy(col("source"), col("log2_bucket"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n")).as("sum_chars"),
         min(col("n")).as("min_chars"), max(col("n")).as("max_chars"))
-      .orderBy(col("source"), col("log2_bucket"))
 
   val qLengthHistSql: String =
     """SELECT source,

@@ -127,7 +127,6 @@ object TrainPrepQ {
       .select(col("doc_id"), col("n_tokens"), col("score_target"), col("score_raw"),
         when(col("score_target") * col("s_total") >= col("score_raw") * col("t_total"),
           lit(1)).otherwise(lit(0)).as("selected"))
-      .orderBy(col("doc_id"))
   }
 
   val qDsirSelectSql: String =
@@ -213,7 +212,6 @@ object TrainPrepQ {
       .select(col("doc_id"), col("n_shingles"),
         coalesce(col("n_hits"), lit(0L)).as("n_contaminated"),
         when(coalesce(col("n_hits"), lit(0L)) > 0, 1L).otherwise(0L).as("drop_flag"))
-      .orderBy(col("doc_id"))
   }
 
   val qDecontaminateSql: String =
@@ -262,7 +260,6 @@ object TrainPrepQ {
         sum(when(col("first_doc") === col("doc_id"), 1L).otherwise(0L)).as("n_novel"))
       .select(col("doc_id"), col("n_grams"), col("n_novel"),
         expr("n_novel * 10000 div n_grams").as("novelty_bp"))
-      .orderBy(col("doc_id"))
   }
 
   val qNgramNoveltySql: String =
@@ -310,7 +307,6 @@ object TrainPrepQ {
       .select(col("doc_id"), col("source"), col("n_tok"),
         expr(s"(cum_end - n_tok) div $SeqLen").as("seq_id"),
         ((col("cum_end") - col("n_tok")) % SeqLen).as("seq_off"))
-      .orderBy(col("doc_id"))
   }
 
   val qSeqPackSql: String =
@@ -346,7 +342,6 @@ object TrainPrepQ {
       .agg(count(lit(1)).as("n_tokens"), sum(col("wt")).cast("long").as("score"))
       .select(col("doc_id"), col("n_tokens"), col("score"),
         when(col("score") >= 0, 1L).otherwise(0L).as("keep_flag"))
-      .orderBy(col("doc_id"))
   }
 
   val qLinearQualitySql: String =
@@ -418,7 +413,6 @@ object TrainPrepQ {
           .otherwise(lit(-1L)).as("seq_id"),
         when(col("reason") === "kept", (col("cum_end") - col("kept_n")) % SeqLen)
           .otherwise(lit(-1L)).as("seq_off"))
-      .orderBy(col("doc_id"))
   }
 
   val qCuratePipelineSql: String =
@@ -480,7 +474,6 @@ object TrainPrepQ {
         count(lit(1)).as("n_occurrences"),
         min(col("doc_id")).as("first_doc"))
       .filter(col("n_docs") >= 3)
-      .orderBy(col("fp"))
 
   val qBoilerplateNgramsSql: String =
     s"""WITH t AS (SELECT doc_id,
@@ -555,7 +548,6 @@ object TrainPrepQ {
       .agg(count(lit(1)).as("n_urls"),
         countDistinct(col("doc_id")).as("n_docs"),
         min(col("doc_id")).as("first_doc"))
-      .orderBy(col("host"))
   }
 
   val qDomainStatsSql: String =
@@ -594,7 +586,6 @@ object TrainPrepQ {
       .select(col("doc_id"), col("chunk_idx"),
         size(col("c")).cast("long").as("n_chunk_tokens"),
         md5(concat_ws(" ", col("c")).cast("binary")).as("chunk_fp"))
-      .orderBy(col("doc_id"), col("chunk_idx"))
   }
 
   val qChunkOverlapSql: String =
@@ -639,7 +630,6 @@ object TrainPrepQ {
       .agg(count(lit(1)).as("n_urls"),
         countDistinct(col("doc_id")).as("n_docs"),
         min(col("doc_id")).as("min_doc"))
-      .orderBy(col("canon_url"))
   }
 
   val qUrlDedupSql: String =
@@ -712,7 +702,6 @@ object TrainPrepQ {
       .select(col("doc_id"), col("n_bits_set"),
         (col("n_bits_set") === 4).as("bloom_hit"),
         coalesce(col("in_bench"), lit(false)).as("true_hit"))
-      .orderBy(col("doc_id"))
   }
 
   val qBloomProbeSql: String =
@@ -787,7 +776,6 @@ object TrainPrepQ {
       .select(col("epoch"), col("shard"),
         row_number().over(w).cast("long").as("pos"),
         col("doc_id"), col("hkey"))
-      .orderBy(col("epoch"), col("shard"), col("pos"))
   }
 
   val qEpochShuffleSql: String = {
@@ -883,7 +871,6 @@ object TrainPrepQ {
         coalesce(col("cov"), lit(0L)).as("covered_tokens"),
         expr("CAST(CASE WHEN n_tokens > 0 THEN (coalesce(cov, 0) * 10000) div n_tokens ELSE 0 END AS BIGINT)")
           .as("contam_bp"))
-      .orderBy(col("doc_id"))
   }
 
   val qContamCoverageSql: String =
@@ -959,7 +946,6 @@ object TrainPrepQ {
       .select(col("bucket"), col("n_docs"), col("n_contam"),
         expr("(n_contam * 10000) div n_docs").as("contam_rate_bp"),
         expr("tok_sum div n_docs").as("avg_tokens"))
-      .orderBy(col("bucket"))
   }
 
   val qQualityCalibrationSql: String =
@@ -1053,7 +1039,6 @@ object TrainPrepQ {
         expr(s"(n_tokens * 10000) div (greedy_bins * $L)").as("greedy_eff_bp"),
         col("concat_bins"), col("concat_waste"),
         expr(s"(n_tokens * 10000) div (concat_bins * $L)").as("concat_eff_bp"))
-      .orderBy(col("source"))
   }
 
   /** Radix for the oracle's single-BIGINT `waste * radix + fill` fold
@@ -1148,7 +1133,7 @@ object TrainPrepQ {
   }
 
   def qShardManifest(s: SparkSession, dir: String): DataFrame =
-    shardManifest(documents(s, dir)).orderBy(col("shard"))
+    shardManifest(documents(s, dir))
 
   /** The manifest aggregate as SQL over a named doc relation — shared
     * by the q_shard_manifest oracle and both sides of the
@@ -1219,7 +1204,6 @@ object TrainPrepQ {
           .as("docs_added"),
         when(coalesce(col("ck_old"), lit(-1L)) =!= coalesce(col("ck_new"), lit(-1L)),
           lit(1)).otherwise(lit(0)).as("checksum_changed"))
-      .orderBy(col("shard"))
   }
 
   val qManifestDiffSql: String =

@@ -1,9 +1,11 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
 
-/** Debug utility: print the formatted physical plan of any registered
-  * SparkEntry query. Usage:
+/** Debug utility: run any registered SparkEntry query once and print its
+  * formatted FINAL adaptive plan — the joins and exchanges AQE actually
+  * chose, which the pre-execution plan does not show. Usage:
   *   sbt "runMain graft.tools.QueryExplain <sfDir> <queryName> [queryName...]"
   */
 object QueryExplain {
@@ -18,7 +20,13 @@ object QueryExplain {
     spark.sparkContext.setLogLevel("ERROR")
     args.drop(1).foreach { name =>
       println(s"===== $name =====")
-      graft.SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+      val df = graft.SparkEntry.queries(name)(spark, sfDir)
+      // run the plan instance that explain prints: an action on the
+      // Dataset would plan and run a copy of it
+      val qe = df.queryExecution
+      SQLExecution.withNewExecutionId(qe)(qe.executedPlan.execute().foreach(_ => ()))
+      df.explain("formatted")
+      graft.queries.QCache.releaseScoped()
     }
     spark.stop()
   }

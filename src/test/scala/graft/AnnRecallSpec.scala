@@ -64,7 +64,7 @@ class AnnRecallSpec extends AnyFunSuite {
     }.toMap
 
     val got = SimilarityQ.qAnnRecall(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sortBy(_._1)
     assert(got.map(_._1).toSeq == qids, "one row per query vector, ordered")
     got.foreach { case (q, nExact, nHits, bp) =>
       val hits = (exactTop5(q) & probedTop5(q)).size.toLong
@@ -121,7 +121,7 @@ class AnnRecallSpec extends AnyFunSuite {
     }.toMap
 
     val got = SimilarityQ.qPqRecall(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sortBy(_._1)
     assert(got.map(_._1).toSeq == qids)
     got.foreach { case (q, nExact, nHits, bp) =>
       val hits = (exactTop10(q) & probedTop10(q)).size.toLong

@@ -39,7 +39,7 @@ class DupProfileSpec extends AnyFunSuite {
     ).toDF("doc_id", "text", "lang", "source")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
     val got = DedupQ.qDupProfile(spark, d).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sortBy(_._1)
     assert(got.toSeq == Seq((1L, 1L, 1L, 0L), (2L, 1L, 2L, 1L), (3L, 1L, 3L, 2L)))
   }
 
@@ -86,7 +86,7 @@ class DupProfileSpec extends AnyFunSuite {
       (1L, n1, n1, 0L), (2L, n2, 2 * n2, n2), (3L, n3, 3 * n3, 2 * n3))
       .filter(_._2 > 0)
     val got = DedupQ.qDupProfile(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sortBy(_._1)
     assert(got.toSeq == expect)
     // coverage law: histogram docs sum to corpus + injected copies
     // (one upper copy per % 7 doc, one spaced copy per % 21 doc)

@@ -20,7 +20,7 @@ class GraphQSpec extends AnyFunSuite {
 
   test("pagerank: degree accounting, rank floor, sink baseline, mass bound") {
     val rows = GraphQ.qPagerank(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sortBy(_._1)
     val n = spark.read.parquet(s"$dir/documents.parquet").count()
     assert(rows.length == n)
     // every edge has one src and one dst
@@ -37,7 +37,7 @@ class GraphQSpec extends AnyFunSuite {
     // per-round total <= 0.15*N*1e6 + 0.85*(previous total))
     assert(rows.map(_._4).sum <= n * 1000000L)
     // determinism across reruns
-    assert(GraphQ.qPagerank(spark, dir).collect().map(_.getLong(3)).toSeq ==
+    assert(GraphQ.qPagerank(spark, dir).collect().sortBy(_.getLong(0)).map(_.getLong(3)).toSeq ==
       rows.map(_._4).toSeq)
   }
 

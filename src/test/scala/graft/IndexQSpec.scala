@@ -29,6 +29,7 @@ class IndexQSpec extends AnyFunSuite {
 
   test("q_inverted_index: df threshold, sorted bounded postings, tf mass") {
     val rows = IndexQ.qInvertedIndex(spark, dir).collect()
+      .sortBy(r => (-r.getLong(1), r.getString(0)))
     val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
     assert(rows.nonEmpty)
     // independent brute force for one term: per-doc tf and df
@@ -66,7 +67,7 @@ class IndexQSpec extends AnyFunSuite {
 
   test("q_vocab_coverage: ranks monotone in threshold; brute-force check") {
     val rows = IndexQ.qVocabCoverage(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).sortBy(_._1)
     assert(rows.map(_._1).sameElements(IndexQ.CoverageThresholds.map(_.toLong)))
     assert(rows.map(_._2).sameElements(rows.map(_._2).sorted), "vocab_rank monotone")
     // brute force: rank terms by (count desc, term asc), find min rank per threshold
@@ -86,6 +87,7 @@ class IndexQSpec extends AnyFunSuite {
   test("q_bpe_merges: round-1 argmax matches brute force; merge shrinks symbol mass") {
     val rows = IndexQ.qBpeMerges(spark, dir).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3), r.getLong(4)))
+      .sortBy(_._1)
     assert(rows.length === IndexQ.BpeRounds)
     // brute-force round 1: adjacent char-pair counts weighted by word freq
     val wordFreq = corpusWords.flatten.groupBy(identity).view.mapValues(_.size.toLong).toMap

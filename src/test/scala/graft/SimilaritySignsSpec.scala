@@ -45,7 +45,7 @@ class SimilaritySignsSpec extends AnyFunSuite {
          |sigs AS (SELECT vec_id, $sigBits AS bucket FROM u GROUP BY vec_id)
          |SELECT bucket, COUNT(*) AS n_vecs, MIN(vec_id) AS min_vec
          |FROM sigs GROUP BY bucket ORDER BY bucket""".stripMargin).collect().toSeq
-    val neu = SimilarityQ.qAnnLshBuckets(spark, dir).collect().toSeq
+    val neu = SimilarityQ.qAnnLshBuckets(spark, dir).orderBy("bucket").collect().toSeq
     assert(neu.nonEmpty && neu == old)
   }
 
@@ -75,7 +75,7 @@ class SimilaritySignsSpec extends AnyFunSuite {
          |SELECT va AS vec_a, vb AS vec_b, dp / (sqrt(qq) * sqrt(cc)) AS sim
          |FROM dots WHERE dp / (sqrt(qq) * sqrt(cc)) >= 0.25
          |ORDER BY vec_a, vec_b""".stripMargin).collect().toSeq
-    val neu = SimilarityQ.qEmbedNeardup(spark, dir).collect().toSeq
+    val neu = SimilarityQ.qEmbedNeardup(spark, dir).orderBy("vec_a", "vec_b").collect().toSeq
     assert(neu.nonEmpty && neu == old)
   }
 }
