@@ -25,6 +25,7 @@ object HocrParse {
   /** The model of the document `a` holds. */
   private[graft] def parse(a: Arena): Either[String, Hocr] = {
     val t = new Tree(a)
+    t.reset()
     val s = t.pages()
     if (a.pool.n == s) Left("no ocr_page elements found in HOCR data")
     else Right(extractDocumentMeta(a).copy(pages = bucket(t, s, 0)(processPage(t, _))))
@@ -53,12 +54,16 @@ object HocrParse {
     * where they start; its caller reads them with [[each]] and then cuts
     * the pool back. The searches run on the arena's explicit stacks, so
     * nesting depth costs heap, not thread stack (a Spark task thread has
-    * 1 MiB). */
+    * 1 MiB). [[reset]] points the rules at the document the arena holds;
+    * one tree serves the arena's documents in turn. */
   private[hocr] final class Tree(val a: Arena) {
 
     /** Per node, the bits of [[Classes]] its first `class` contains
       * (0 for a node that is not an element). */
-    private val classes = {
+    private var classes: Array[Int] = null
+
+    /** Read the document the arena holds now. */
+    def reset(): Unit = {
       a.marks.ensure(a.nNodes)
       val m = a.marks.a
       java.util.Arrays.fill(m, 0, a.nNodes, 0)
@@ -70,7 +75,7 @@ object HocrParse {
         }
         k += 1
       }
-      m
+      classes = m
     }
 
     /** findPages (parse.go:55-77): `div.ocr_page` elements in document

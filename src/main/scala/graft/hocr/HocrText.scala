@@ -35,18 +35,29 @@ object HocrText {
     * and allocation rate is its scaling limiter. The buckets come in
     * bucket order, not document order (areas, then paragraphs, then
     * lines), which is why this walks a whole-document arena and not a
-    * token stream. */
-  def fromMarkup(a: Arena): Unit = new Walk(new HocrParse.Tree(a)).run()
+    * token stream. The walk is the arena's own. */
+  def fromMarkup(a: Arena): Unit = a.hocr.run()
 
-  private final class Walk(t: HocrParse.Tree) {
-    private val a = t.a
+  /** The stitch over the document its arena holds. An arena holds one
+    * walk for all its documents; [[run]] starts each afresh. */
+  private[graft] final class Walk(a: Arena) {
+    private val t = new HocrParse.Tree(a)
     /** The ids of the page's lines written so far. */
     private val lineIds = new SliceSet
+    private var wordsWritten = 0
+
+    // the steps as functions, made once per walk instead of once per call
+    private val pageStep: Int => Unit = page
+    private val areaStep: Int => Unit = area
+    private val paragraphStep: Int => Unit = paragraph
+    private val lineStep: Int => Unit = line
+    private val wordStep: Int => Unit = word
 
     def run(): Unit = {
+      t.reset()
       a.resetOut(math.max(64, (a.srcEnd - a.srcStart) / 8))
       val s = t.pages()
-      t.each(s, 0)(page)
+      t.each(s, 0)(pageStep)
       a.pool.n = s
       a.finish()
     }
@@ -54,9 +65,9 @@ object HocrText {
     private def page(n: Int): Unit = {
       lineIds.clear()
       val s = t.collect(n, HocrParse.PageBuckets)
-      t.each(s, 0)(area)
-      t.each(s, 1)(paragraph)
-      t.each(s, 2)(line)
+      t.each(s, 0)(areaStep)
+      t.each(s, 1)(paragraphStep)
+      t.each(s, 2)(lineStep)
       a.pool.n = s
       a.ensureOut(2)
       a.put('\n'); a.put('\n')
@@ -64,24 +75,24 @@ object HocrText {
 
     private def area(n: Int): Unit = {
       val s = t.collect(n, HocrParse.AreaBuckets)
-      t.each(s, 0)(paragraph)
-      t.each(s, 1)(line)
+      t.each(s, 0)(paragraphStep)
+      t.each(s, 1)(lineStep)
       words(s, 2)
       a.pool.n = s
     }
 
     private def paragraph(n: Int): Unit = {
       val s = t.collect(n, HocrParse.ParaBuckets)
-      t.each(s, 0)(line)
+      t.each(s, 0)(lineStep)
       words(s, 1)
       a.pool.n = s
     }
 
     /** Area- or paragraph-direct words: one line, none when empty. */
     private def words(s: Int, b: Int): Unit = {
-      var any = false
-      t.each(s, b) { w => word(w); any = true }
-      if (any) { a.ensureOut(1); a.put('\n') }
+      val before = wordsWritten
+      t.each(s, b)(wordStep)
+      if (wordsWritten > before) { a.ensureOut(1); a.put('\n') }
     }
 
     /** A line once per id (processLine keeps the LAST `id` attribute). */
@@ -92,7 +103,7 @@ object HocrText {
         else { a.valueOf(id); lineIds.add(a.textArr, a.textFrom, a.textTo) }
       if (fresh) {
         val s = t.lineWords(n)
-        t.each(s, 0)(word)
+        t.each(s, 0)(wordStep)
         a.pool.n = s
         a.ensureOut(1)
         a.put('\n')
@@ -104,6 +115,7 @@ object HocrText {
       t.wordText(n)
       a.ensureOut(1)
       a.put(' ')
+      wordsWritten += 1
     }
   }
 

@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `attrs(j * Stride)`: INFO (class, id or other, and the has-`&` bit),
   * and the byte ranges of its name and its raw value. Node 0 is the
   * document. Tag ids index [[Arena.Tags]]; a name outside it gets an id
-  * of its own, stable for the arena's life.
+  * of its own, for the document's life.
   *
   * The tree rules are those of the reference tokenizer
   * (golang.org/x/net/html's subset that graft's callers observe):
@@ -43,8 +43,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * as they would in a `String`; [[finish]] writes each one left alone as
   * `?`, which is what `String.getBytes(UTF_8)` writes.
   *
-  * One arena serves any number of documents in turn (a row's spans): its
-  * buffers only grow. It is not thread-safe. */
+  * One arena serves any number of documents in turn (a task's spans):
+  * its buffers only grow, to the largest document's size, while every
+  * other piece of state belongs to one document and is reset by [[load]].
+  * The kernels keep their walk state here too ([[boilerplate]], [[hocr]],
+  * [[rng]]), made on the first span of their kind and reset by each
+  * span, so that a span allocates only its output ([[result]]). It is
+  * not thread-safe. */
 final class Arena {
   import Arena._
 
@@ -60,7 +65,8 @@ final class Arena {
   private[graft] var attrs: Array[Int] = NoInts
   private[graft] var nAttrs = 0
 
-  /** Lowercased names outside [[Arena.Tags]], by id - Tags.length. */
+  /** The document's lowercased names outside [[Arena.Tags]], by id -
+    * Tags.length. */
   private var extraIds: java.util.HashMap[String, Integer] = null
   private var extraNames: Array[String] = null
 
@@ -68,8 +74,10 @@ final class Arena {
   private var open: Array[Int] = new Array[Int](16)
   private var openLast: Array[Int] = new Array[Int](16)
   private var depth = 0
-  /** Open elements per tag id; null until an end tag misses the top. */
-  private var openCount: Array[Int] = null
+  /** Open elements per tag id, kept from the document's first end tag
+    * that misses the top element on ([[counting]]). */
+  private var openCount: Array[Int] = NoInts
+  private var counting = false
 
   /** Kernel output. */
   private[graft] var out: Array[Byte] = NoBytes
@@ -87,17 +95,16 @@ final class Arena {
   private[graft] val pool = new Ints
   private[graft] val marks = new Ints
 
+  // ---- the kernels' walk state ----
+
+  private[graft] lazy val boilerplate = new Boilerplate.Walk(this)
+  private[graft] lazy val hocr = new graft.hocr.HocrText.Walk(this)
+  private[graft] lazy val rng = new graft.layout.MediaOcr.Rng(0L)
+
   // ---- input ----
 
   /** Parse `s`'s bytes; an on-heap UTF8String is read in place. */
-  def load(s: UTF8String): Unit = s.getBaseObject match {
-    case b: Array[Byte] =>
-      load(b, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
-    case _ =>
-      if (own.length < s.numBytes) own = new Array[Byte](s.numBytes)
-      s.writeToMemory(own, Platform.BYTE_ARRAY_OFFSET)
-      load(own, 0, s.numBytes)
-  }
+  def load(s: UTF8String): Unit = { source(s); parse() }
 
   /** Parse `s` as its UTF-8 encoding. */
   def load(s: String): Unit = {
@@ -107,13 +114,50 @@ final class Arena {
 
   /** Parse `bytes(off until off + len)`, which must not change while the
     * arena reads it. */
-  def load(bytes: Array[Byte], off: Int, len: Int): Unit = {
+  def load(bytes: Array[Byte], off: Int, len: Int): Unit = { source(bytes, off, len); parse() }
+
+  /** Hold `s`'s bytes as [[src]] without parsing them, an on-heap
+    * UTF8String in place; normalized as the byte overload below does. */
+  private[graft] def source(s: UTF8String): Unit = s.getBaseObject match {
+    case b: Array[Byte] =>
+      source(b, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, s.numBytes)
+    case _ =>
+      if (own.length < s.numBytes) own = new Array[Byte](s.numBytes)
+      s.writeToMemory(own, Platform.BYTE_ARRAY_OFFSET)
+      source(own, 0, s.numBytes)
+  }
+
+  /** Hold `bytes(off until off + len)` as [[src]] without parsing them:
+    * in place when they are strict UTF-8, else their U+FFFD normalization,
+    * what `new String(bytes, UTF_8)` reads. */
+  private[graft] def source(bytes: Array[Byte], off: Int, len: Int): Unit = {
     val end = off + len
     if (valid(bytes, off, end)) { src = bytes; srcStart = off; srcEnd = end }
     else {
       src = new String(bytes, off, len, UTF_8).getBytes(UTF_8)
       srcStart = 0; srcEnd = src.length
     }
+  }
+
+  /** Whether `bytes(off until end)` is strict UTF-8. */
+  private def valid(bytes: Array[Byte], off: Int, end: Int): Boolean = {
+    var i = off
+    while (i < end) {
+      if (bytes(i) >= 0) i += 1
+      else {
+        val n = seqLenValid(bytes, i, end)
+        if (n == 0) return false
+        i += n
+      }
+    }
+    true
+  }
+
+  // ---- the tokenizer ----
+
+  /** Parse [[src]] into a tree of its own: nothing of an earlier
+    * document survives but buffer capacity. */
+  private def parse(): Unit = {
     // what bounds the node and attribute counts: a '<' makes at most a
     // text node before it and one more node (an element, a stray '<' or a
     // raw text), and `</`, `<!` and `<?` make no more; a valued attribute
@@ -133,33 +177,14 @@ final class Arena {
     val maxNodes = 2 + 2 * lts - closes
     if (nodes.length < Stride * maxNodes) nodes = new Array[Int](Stride * maxNodes)
     if (attrs.length < Stride * (eqs + 1)) attrs = new Array[Int](Stride * (eqs + 1))
-    parse()
-  }
-
-  /** Whether `bytes(off until end)` is strict UTF-8. */
-  private def valid(bytes: Array[Byte], off: Int, end: Int): Boolean = {
-    var i = off
-    while (i < end) {
-      if (bytes(i) >= 0) i += 1
-      else {
-        val n = seqLenValid(bytes, i, end)
-        if (n == 0) return false
-        i += n
-      }
-    }
-    true
-  }
-
-  // ---- the tokenizer ----
-
-  private def parse(): Unit = {
     nNodes = 0; nAttrs = 0
+    if (extraIds != null && !extraIds.isEmpty) extraIds.clear()
+    counting = false
     newNode(Doc, 0, 0)
     depth = 0
     pushOpen(0)
-    openCount = null
     val n = srcEnd
-    var i = srcStart
+    i = srcStart
     while (i < n) {
       var lt = i
       var amp = false
@@ -197,8 +222,11 @@ final class Arena {
   private def endTag(id: Int): Unit =
     if (depth > 1 && tagOf(open(depth - 1)) == id) popOpen()
     else {
-      if (openCount == null) {
-        openCount = new Array[Int](Tags.length + extraCount + 8)
+      if (!counting) {
+        counting = true
+        val size = Tags.length + extraCount + 8
+        if (openCount.length < size) openCount = new Array[Int](size)
+        else java.util.Arrays.fill(openCount, 0)
         var d = 1
         while (d < depth) { openCount(tagOf(open(d))) += 1; d += 1 }
       }
@@ -331,7 +359,7 @@ final class Arena {
       openLast = java.util.Arrays.copyOf(openLast, 2 * depth)
     }
     open(depth) = node; openLast(depth) = -1; depth += 1
-    if (openCount != null && node != 0) {
+    if (counting && node != 0) {
       val t = tagOf(node)
       if (t >= openCount.length) openCount = java.util.Arrays.copyOf(openCount, 2 * t + 8)
       openCount(t) += 1
@@ -340,7 +368,7 @@ final class Arena {
 
   private def popOpen(): Unit = {
     depth -= 1
-    if (openCount != null) openCount(tagOf(open(depth))) -= 1
+    if (counting) openCount(tagOf(open(depth))) -= 1
   }
 
   /** The tag id of `lowerAscii(name)`: a [[Arena.Tags]] index, else an
@@ -357,7 +385,7 @@ final class Arena {
     }
     // ASCII names not matched above are no Tags entry; others lowercase
     // in the root locale, where U+212A KELVIN SIGN becomes 'k'
-    if (ascii && !intern && extraIds == null) return -1
+    if (ascii && !intern && extraCount == 0) return -1
     val name = lowerAscii(new String(src, s, len, UTF_8))
     if (!ascii) {
       val known = TagIds.get(name)
@@ -395,7 +423,8 @@ final class Arena {
     -1
   }
 
-  private def extraCount: Int = if (extraIds == null) 0 else extraIds.size
+  /** The number of names outside [[Arena.Tags]] the document holds. */
+  private[graft] def extraCount: Int = if (extraIds == null) 0 else extraIds.size
 
   // ---- byte scanning ----
 

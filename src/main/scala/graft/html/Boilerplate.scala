@@ -55,8 +55,8 @@ object Boilerplate {
   }
 
   /** Extract main content text from the document `a` holds, into its
-    * output ([[Arena.result]]). */
-  def extractMainText(a: Arena): Unit = new Walk(a).run()
+    * output ([[Arena.result]]), with the arena's own walk. */
+  def extractMainText(a: Arena): Unit = a.boilerplate.run()
 
   /** One pre-order walk of the arena on an explicit stack, so that
     * nesting depth costs heap, not thread stack (a Spark task thread has
@@ -64,8 +64,9 @@ object Boilerplate {
     * flags; -1 is the flush a block element owes after its last child.
     * A block's text is collapsed straight into the output as it is
     * reached; a block that is not kept is cut off again at its flush, and
-    * kept blocks are separated by "\n". */
-  private final class Walk(a: Arena) {
+    * kept blocks are separated by "\n". An arena holds one walk for all
+    * its documents; [[run]] starts each afresh. */
+  private[html] final class Walk(a: Arena) {
     private var anyKept = false
     private var sepAt = 0 // where the block's "\n" separator starts
     private var from = 0 // where the block's collapsed text starts
@@ -77,6 +78,7 @@ object Boilerplate {
 
     def run(): Unit = {
       a.resetOut(math.max(64, (a.srcEnd - a.srcStart) / 4))
+      anyKept = false
       open()
       val nodes = a.stack
       val flags = a.stack2

@@ -1,6 +1,12 @@
 package graft.layout
 
+import java.nio.charset.StandardCharsets.UTF_8
+
 import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.html.Arena
 
 /** Pure-JVM OCR-style layout classification for media spans (north rule:
   * the reference's one network boundary — the Document AI gRPC call,
@@ -27,36 +33,52 @@ object MediaOcr {
     // downstream anchor and fails the golden fixture.
     "𝔤𝔯𝔞𝔣𝔱")
 
+  /** [[vocab]] as UTF-8, what [[text]] writes. */
+  private val vocabUtf8: Array[Array[Byte]] = vocab.map(_.getBytes(UTF_8))
+  private val OrphanLine = "orphan line \n".getBytes(UTF_8)
+
   private val langs = Array("en", "de", "fr", "es")
+
+  private final val HashSeed = 0x9E3779B97F4A7C15L
 
   /** splitmix64 over the UTF-8 bytes of `s` — stable across JVMs.
     * ASCII fast path hashes chars directly (for ASCII, char == UTF-8
-    * byte) without materializing a byte[]; media_refs are ASCII, and
-    * this runs once per media span on the extraction hot path. */
+    * byte) without materializing a byte[]. */
   def hash64(s: String): Long = {
     val n = s.length
     var ascii = true
     var i = 0
     while (ascii && i < n) { if (s.charAt(i) >= 0x80) ascii = false else i += 1 }
-    var h = 0x9E3779B97F4A7C15L
-    def mix(b: Long): Unit = {
-      h ^= b
-      h *= 0xBF58476D1CE4E5B9L
-      h ^= (h >>> 27)
-      h *= 0x94D049BB133111EBL
-      h ^= (h >>> 31)
+    if (!ascii) {
+      val b = s.getBytes(UTF_8)
+      return hash64(b, 0, b.length)
     }
-    if (ascii) {
-      i = 0
-      while (i < n) { mix(s.charAt(i).toLong); i += 1 }
-    } else {
-      s.getBytes(java.nio.charset.StandardCharsets.UTF_8).foreach(b => mix(b & 0xFFL))
-    }
+    var h = HashSeed
+    i = 0
+    while (i < n) { h = mix(h, s.charAt(i).toLong); i += 1 }
     h
   }
 
-  private final class Rng(seed: Long) {
-    private var state = seed
+  /** splitmix64 over the bytes `b(from until to)`. */
+  def hash64(b: Array[Byte], from: Int, to: Int): Long = {
+    var h = HashSeed
+    var i = from
+    while (i < to) { h = mix(h, b(i) & 0xFFL); i += 1 }
+    h
+  }
+
+  private def mix(h0: Long, b: Long): Long = {
+    var h = h0 ^ b
+    h *= 0xBF58476D1CE4E5B9L
+    h ^= (h >>> 27)
+    h *= 0x94D049BB133111EBL
+    h ^ (h >>> 31)
+  }
+
+  /** The classifier's draws; an arena holds one for its media spans,
+    * reseeded per span. */
+  private[graft] final class Rng(private var state: Long) {
+    def reset(seed: Long): Unit = state = seed
     def next(): Long = {
       state += 0x9E3779B97F4A7C15L
       var z = state
@@ -90,31 +112,58 @@ object MediaOcr {
     *
     * MediaTextSpec pins it equal to the model path; the
     * q_extract_media_text and q_extract_pdf_text oracles run the same law
-    * as a DuckDB recursive CTE (MediaTextQ.machineCtes). */
+    * as a DuckDB recursive CTE (MediaTextQ.machineCtes).
+    *
+    * The law is written once, as UTF-8 into an arena's output; this is a
+    * wrapper over it. */
   def text(mediaRef: String): String = {
-    val rng = new Rng(hash64(mediaRef))
-    val sb = new java.lang.StringBuilder(256)
+    val a = new Arena
+    text(UTF8String.fromString(mediaRef), a)
+    a.resultString()
+  }
+
+  /** [[text]] of `mediaRef` into `a`'s output ([[Arena.result]]), with
+    * the arena's [[Rng]]: the ref's bytes are hashed as they stand,
+    * after the U+FFFD normalization [[Arena.load]] applies, so the seed
+    * is `hash64(mediaRef.toString)`; each word is copied from its
+    * encoding in [[vocabUtf8]]. */
+  def text(mediaRef: UTF8String, a: Arena): Unit = {
+    a.source(mediaRef)
+    val rng = a.rng
+    rng.reset(hash64(a.src, a.srcStart, a.srcEnd))
+    a.resetOut(256)
     rng.int(langs.length) // page language
-    val nBlocks = 1 + rng.int(3)
-    for (_ <- 0 until nBlocks) {
-      val nParas = 1 + rng.int(2)
-      for (_ <- 0 until nParas) {
-        val nLines = 1 + rng.int(3)
-        for (_ <- 0 until nLines) {
-          val nTokens = 2 + rng.int(6)
-          for (_ <- 0 until nTokens) {
-            sb.append(vocab(rng.int(vocab.length))).append(' ')
+    var blocks = 1 + rng.int(3)
+    while (blocks > 0) {
+      var paras = 1 + rng.int(2)
+      while (paras > 0) {
+        var lines = 1 + rng.int(3)
+        while (lines > 0) {
+          var tokens = 2 + rng.int(6)
+          while (tokens > 0) {
+            word(a, rng.int(vocab.length))
             rng.int(50) // confidence
             if (rng.int(5) == 0) rng.int(langs.length) // token language
+            tokens -= 1
           }
           if (rng.int(4) == 0) rng.int(langs.length) // line language
-          sb.append('\n')
+          a.ensureOut(1); a.put('\n')
+          lines -= 1
         }
+        paras -= 1
       }
+      blocks -= 1
     }
-    if (rng.int(7) == 0) sb.append(vocab(rng.int(vocab.length))).append(" \n")
-    if (rng.int(11) == 0) sb.append("orphan line \n")
-    sb.append("\n\n").toString
+    if (rng.int(7) == 0) { word(a, rng.int(vocab.length)); a.ensureOut(1); a.put('\n') }
+    if (rng.int(11) == 0) a.append(OrphanLine, 0, OrphanLine.length)
+    a.ensureOut(2); a.put('\n'); a.put('\n')
+  }
+
+  /** Word `w` and a space. */
+  private def word(a: Arena, w: Int): Unit = {
+    val b = vocabUtf8(w)
+    a.append(b, 0, b.length)
+    a.ensureOut(1); a.put(' ')
   }
 
   /** Classification result: page text + the layout page (pageNumber=1). */

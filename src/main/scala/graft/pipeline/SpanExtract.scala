@@ -24,11 +24,13 @@ import graft.layout.MediaOcr
   * Extract path uses (org.apache.spark.sql.graft.ExtractSpanSeq): it
   * calls the UTF8String entry of [[extractSpanText]] only for the
   * [[TransformedKinds]] and hands every other span's text through as the
-  * same UTF8String. The html and pdf_layout kernels read the span's
-  * UTF-8 bytes in place into an [[Arena]] and write only the text they
-  * keep as UTF-8: no String is decoded and none is encoded. The String
-  * entry is a wrapper over the same kernels (its text read as UTF-8,
-  * as every Spark column holds it); media stays on Strings.
+  * same UTF8String. Every kernel reads the span's UTF-8 bytes in place
+  * through an [[Arena]] (html and pdf_layout the text, media the ref)
+  * and writes its output into the arena as UTF-8: no String is decoded
+  * and none is encoded. One arena, with the kernels' walk state, serves
+  * a task's spans, so a span allocates only its output. The String
+  * entry is a wrapper over the same kernels (its text read as UTF-8, as
+  * every Spark column holds it).
   */
 object SpanExtract {
 
@@ -54,8 +56,9 @@ object SpanExtract {
   }
 
   /** The same over UTF8Strings, equal to `fromString(extractSpanText(
-    * kind, text.toString, mediaRef.toString))`. `arena` is the html and
-    * pdf_layout kernels' scratch; one serves every span of a row. */
+    * kind, text.toString, mediaRef.toString))`. `arena` is the kernels'
+    * scratch; one serves any number of spans in turn, and the result
+    * never aliases it. */
   def extractSpanText(kind: String, text: UTF8String, mediaRef: UTF8String, arena: Arena): UTF8String =
     kind match {
       case Html | PdfLayout =>
@@ -66,7 +69,11 @@ object SpanExtract {
           arena.result()
         }
       case Media =>
-        UTF8String.fromString(if (mediaRef == null) "" else MediaOcr.text(mediaRef.toString))
+        if (mediaRef == null) UTF8String.EMPTY_UTF8
+        else {
+          MediaOcr.text(mediaRef, arena)
+          arena.result()
+        }
       case _ => text
     }
 }

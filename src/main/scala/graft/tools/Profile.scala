@@ -1,5 +1,7 @@
 package graft.tools
 
+import java.lang.management.ManagementFactory
+
 import scala.collection.mutable
 
 import org.apache.spark.SparkContext
@@ -9,16 +11,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.BenchCore
 
 /** Layer profile of any registered query, as one JSON document. Runs
-  * each named [[graft.SparkEntry]] query `n` times into a noop sink,
-  * interleaved across queries (adjacent runs see the same host
-  * throttle) with scoped caches released after every run, as the
-  * battery does. Per query it reports every run's wall time and, from
-  * the fastest run, its jobs, stages and tasks, the DS2 skew signal
-  * (max / median task time in the stage with the most task time),
-  * shuffle bytes and records, spill, the GC share of task time, how
-  * much of the wall time some stage was running (`stage_cover`), and a
-  * per-stage table. A host block brackets all runs with the battery's
-  * CPU burn and extraction-kernel calibrations and their clean gates.
+  * each named [[graft.SparkEntry]] query [[Profile.Warmups]] times
+  * unrecorded, then `n` times into a noop sink, interleaved across
+  * queries (adjacent runs see the same host throttle) with scoped
+  * caches released after every run, as the battery does. Per query it
+  * reports every run's wall time and, from the fastest run, its jobs,
+  * stages and tasks, the DS2 skew signal (max / median task time in the
+  * stage with the most task time), shuffle bytes and records, spill,
+  * the GC share of task time, how much of the wall time some stage was
+  * running (`stage_cover`), the bytes allocated by executor task threads
+  * and by every other thread (`alloc_task_bytes`, `alloc_other_bytes`:
+  * ThreadMXBean counters of the threads alive at both ends of the run,
+  * so a thread born and gone within it is not counted), and a per-stage
+  * table. A host block brackets all runs with the battery's CPU burn and
+  * extraction-kernel calibrations and their clean gates.
   *
   * Usage: runMain graft.tools.Profile <sfDir> <n> <q1,q2,...>
   * Cores come from SPARK_GRAFT_CPUS (default 32). For a CPU profile of
@@ -51,22 +57,53 @@ object Profile {
     }
   }
 
-  /** One run: wall seconds, its epoch-ms window and what the bus saw. */
-  private final case class Run(wallS: Double, fromMs: Long, toMs: Long, log: RunLog)
+  /** Unrecorded runs of each query before the recorded ones: a JVM's
+    * first runs are still compiling, and min-of-5 read above steady state
+    * without them. */
+  final val Warmups = 2
+
+  /** One run: wall seconds, its epoch-ms window, what the bus saw, and
+    * the bytes allocated by task threads and by all other threads. */
+  private final case class Run(wallS: Double, fromMs: Long, toMs: Long, log: RunLog,
+                               taskAlloc: Long, otherAlloc: Long)
+
+  private val threads = ManagementFactory.getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
+
+  /** Bytes allocated so far by each live thread, by thread id. */
+  private def allocated(): Map[Long, Long] = {
+    val ids = threads.getAllThreadIds
+    val bytes = threads.getThreadAllocatedBytes(ids)
+    ids.indices.collect { case i if bytes(i) >= 0 => ids(i) -> bytes(i) }.toMap
+  }
+
+  /** Bytes allocated since `before` by executor task threads and by
+    * every other thread. */
+  private def allocatedSince(before: Map[Long, Long]): (Long, Long) = {
+    val after = allocated().toArray
+    val infos = threads.getThreadInfo(after.map(_._1))
+    after.indices.foldLeft((0L, 0L)) { case ((task, other), i) =>
+      val (id, bytes) = after(i)
+      val d = bytes - before.getOrElse(id, 0L)
+      if (infos(i) != null && infos(i).getThreadName.startsWith("Executor task launch worker")) (task + d, other)
+      else (task, other + d)
+    }
+  }
 
   private def run(spark: SparkSession, sfDir: String, query: (SparkSession, String) => DataFrame): Run = {
     val sc = spark.sparkContext
     val log = new RunLog
     sc.addSparkListener(log)
+    val before = allocated()
     val fromMs = System.currentTimeMillis()
     try query(spark, sfDir).write.format("noop").mode("overwrite").save()
     finally graft.queries.QCache.releaseScoped() // every run starts cold, as in the battery
     val toMs = System.currentTimeMillis()
+    val (taskAlloc, otherAlloc) = allocatedSince(before)
     // the listener bus is asynchronous and its drain is private[spark]
     val bus = classOf[SparkContext].getMethod("listenerBus").invoke(sc)
     bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
     sc.removeSparkListener(log)
-    Run((toMs - fromMs) / 1e3, fromMs, toMs, log)
+    Run((toMs - fromMs) / 1e3, fromMs, toMs, log, taskAlloc, otherAlloc)
   }
 
   private def median(xs: Seq[Long]): Long = if (xs.isEmpty) 0L else xs.sorted.apply(xs.size / 2)
@@ -106,15 +143,18 @@ object Profile {
         f""""task_max_over_median":$skew%.3f,"shuffle_write_bytes":${sum(log.tasks)(_.shuffleBytes)},""" +
         s""""shuffle_records":${sum(log.tasks)(_.shuffleRecords)},"spill_bytes":${sum(log.tasks)(_.spillBytes)},""" +
         f""""gc_frac":$gcFrac%.4f,"stage_cover":$cover%.4f,""" +
+        s""""alloc_task_bytes":${best.taskAlloc},"alloc_other_bytes":${best.otherAlloc},""" +
         perStage.mkString("\"per_stage\":[\n    ", ",\n    ", "]}")
     QueryProfile(name, json, gcFrac)
   }
 
-  /** Profiles of the named queries, `n` interleaved runs each, in the
-    * order named. Throws on a name that is not a registered query. */
+  /** Profiles of the named queries, `n` interleaved runs each after
+    * [[Warmups]] unrecorded ones, in the order named. Throws on a name
+    * that is not a registered query. */
   def queries(spark: SparkSession, sfDir: String, n: Int, names: Seq[String]): Seq[QueryProfile] = {
     val qs = graft.SparkEntry.queries
     names.find(q => !qs.contains(q)).foreach(q => throw new IllegalArgumentException(s"unknown query: $q"))
+    (1 to Warmups).foreach(_ => names.foreach(q => run(spark, sfDir, qs(q))))
     val runs = mutable.LinkedHashMap(names.map(_ -> mutable.ArrayBuffer.empty[Run]): _*)
     (1 to n).foreach(_ => names.foreach(q => runs(q) += run(spark, sfDir, qs(q))))
     runs.toSeq.map { case (q, rs) => profile(q, rs.toSeq) }

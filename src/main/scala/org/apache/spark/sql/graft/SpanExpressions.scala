@@ -17,9 +17,12 @@ import graft.pipeline.SpanExtract
   * `array<struct<kind, text, media_ref, order>>` in one loop over the
   * array. For the SpanExtract.TransformedKinds the text is
   * `SpanExtract.extractSpanText(kind, text, media_ref)`, read from and
-  * written as UTF-8 bytes for html and pdf_layout (one [[Arena]] per row
-  * serves its spans); every other span's text passes through as the same
-  * UTF8String. `order` is `base + i` for the span at array index `i`.
+  * written as UTF-8 bytes through one [[Arena]] per partition: the
+  * generated code holds it as mutable state of its class, which one
+  * task's thread runs over the partition, and `eval` makes one per row
+  * (the expression itself holds no state, as expressions are shared);
+  * every other span's text passes through as the same UTF8String.
+  * `order` is `base + i` for the span at array index `i`.
   *
   * It replaces `transform(spans, (s, i) -> struct(s.kind, CASE WHEN
   * s.kind IN (...) THEN udf(...) ELSE s.text END, s.media_ref, base + i))`
@@ -83,16 +86,18 @@ case class ExtractSpanSeq(spans: Expression, base: Expression)
     val a = spans.eval(input)
     if (a == null) return null
     val b = base.eval(input)
-    extract(a.asInstanceOf[ArrayData], b == null, if (b == null) 0 else b.asInstanceOf[Int])
+    extract(a.asInstanceOf[ArrayData], b == null, if (b == null) 0 else b.asInstanceOf[Int], null)
   }
 
-  /** The per-row loop; see the class doc. */
-  def extract(a: ArrayData, baseNull: Boolean, first: Int): ArrayData = {
+  /** The per-row loop; see the class doc. `scratch` is the kernels'
+    * arena, or null to make one for this row at its first transformed
+    * span. */
+  def extract(a: ArrayData, baseNull: Boolean, first: Int, scratch: Arena): ArrayData = {
     val n = a.numElements()
     val width = element.length
     val Array(kindOrd, textOrd, refOrd) = ordinals
     val out = new Array[Any](n)
-    var arena: Arena = null
+    var arena = scratch
     var i = 0
     while (i < n) {
       val order = if (baseNull) null else Int.box(first + i)
@@ -104,7 +109,7 @@ case class ExtractSpanSeq(spans: Expression, base: Expression)
           val text = if (s.isNullAt(textOrd)) null else s.getUTF8String(textOrd)
           val ref = if (s.isNullAt(refOrd)) null else s.getUTF8String(refOrd)
           val k = ExtractSpanSeq.transformedKind(kind)
-          if (k != null && arena == null && k != SpanExtract.Media) arena = new Arena
+          if (k != null && arena == null) arena = new Arena
           Array[Any](kind, if (k == null) text else SpanExtract.extractSpanText(k, text, ref, arena), ref, order)
         })
       i += 1
@@ -115,9 +120,12 @@ case class ExtractSpanSeq(spans: Expression, base: Expression)
   /** Generated code calls [[extract]] on this instance: the Project
     * joins the scan's whole-stage-codegen stage and reads its input
     * without an intermediate row, and both modes run one body of
-    * logic. */
+    * logic. The arena is a field of the generated class, made once per
+    * partition iterator. */
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val self = ctx.addReferenceObj("extractSpanSeq", this)
+    val arenaClass = classOf[Arena].getName
+    val arena = ctx.addMutableState(arenaClass, "arena", v => s"$v = new $arenaClass();")
     val a = spans.genCode(ctx)
     val b = base.genCode(ctx)
     ev.copy(code = code"""
@@ -126,7 +134,7 @@ case class ExtractSpanSeq(spans: Expression, base: Expression)
       |boolean ${ev.isNull} = ${a.isNull};
       |${CodeGenerator.javaType(dataType)} ${ev.value} = null;
       |if (!${ev.isNull}) {
-      |  ${ev.value} = $self.extract(${a.value}, ${b.isNull}, ${b.value});
+      |  ${ev.value} = $self.extract(${a.value}, ${b.isNull}, ${b.value}, $arena);
       |}""".stripMargin)
   }
 

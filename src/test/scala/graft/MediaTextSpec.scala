@@ -1,9 +1,14 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.hocr.{Hocr, HocrText}
+import graft.html.Arena
 import graft.layout.{Assembly, MediaOcr, RuneIndex}
+import graft.pipeline.SpanExtract
 
 /** The media-text stitch LAW that media extraction runs and the
   * q_extract_media_text oracle simulates: MediaOcr.text must equal the
@@ -74,5 +79,33 @@ class MediaTextSpec extends AnyFunSuite {
     val ref = hit.get
     assert(MediaOcr.text(ref) == model(ref))
     assert(MediaOcr.text(ref).split("[ \n]").contains(Fraktur))
+  }
+
+  test("the byte writer == fromString(text(ref.toString)) for ASCII, non-BMP and invalid-UTF-8 refs, one arena") {
+    val arena = new Arena
+    val rnd = new java.util.Random(20261021L)
+    /** The ref's bytes at an offset in a larger array, as a column holds them. */
+    def viaBytes(b: Array[Byte]): UTF8String =
+      SpanExtract.extractSpanText("media", null, UTF8String.fromBytes(Array[Byte]('#', '#') ++ b, 2, b.length), arena)
+    def check(b: Array[Byte]): Unit = {
+      val ref = new String(b, UTF_8) // what UTF8String.toString reads
+      assert(viaBytes(b) == UTF8String.fromString(MediaOcr.text(ref)), s"ref=$ref")
+    }
+    val ascii = (0 until 3000).map(i => f"img://${MediaOcr.hash64(s"bytes:$i")}%016x") ++
+      Seq("", "x", "pdf://1/2") ++ (0 until 1000).map(i => s"pdf://$i/${i % 7}")
+    val nonAscii = (0 until 1000).map(i => s"img://$Fraktur/$i") ++ (0 until 1000).map(_ => unicode(rnd))
+    val junk = Seq(Array(0xFF), Array(0xC0, 0x80), Array(0xED, 0xA0, 0x80), Array(0xE2, 0x82), Array(0x80),
+      Array(0xF4, 0x90, 0x80, 0x80), Array(0xF0, 0x9F, 0x98)).map(_.map(_.toByte))
+    val invalid = (0 until 2000).map { i =>
+      val b = (if (i % 2 == 0) ascii(i) else nonAscii(i)).getBytes(UTF_8)
+      val at = rnd.nextInt(b.length + 1)
+      b.take(at) ++ junk(i % junk.length) ++ b.drop(at)
+    }
+    (ascii ++ nonAscii).foreach(r => check(r.getBytes(UTF_8)))
+    invalid.foreach(check)
+    // non-vacuous: the refs hold what they claim, and the Fraktur word is written
+    assert(invalid.forall(b => new String(b, UTF_8).contains("\uFFFD")))
+    assert(nonAscii.count(_.exists(_ >= 0x80)) > 1500)
+    assert((ascii ++ nonAscii).count(r => MediaOcr.text(r).contains(Fraktur)) > 100)
   }
 }

@@ -10,8 +10,8 @@ import graft.tools.Profile
 
 /** graft.tools.Profile's per-query JSON on both extraction layouts: every
   * field present, and the numbers consistent with each other — at least
-  * one stage, skew and stage cover in range, and every task belonging to
-  * a listed stage. */
+  * one stage, skew and stage cover in range, bytes allocated on executor
+  * task threads, and every task belonging to a listed stage. */
 class ProfileSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -26,7 +26,7 @@ class ProfileSpec extends AnyFunSuite {
 
   private val fields = Seq("name", "runs_s", "min_s", "jobs", "stages", "tasks",
     "task_max_over_median", "shuffle_write_bytes", "shuffle_records", "spill_bytes",
-    "gc_frac", "stage_cover", "per_stage")
+    "gc_frac", "stage_cover", "alloc_task_bytes", "alloc_other_bytes", "per_stage")
   private val stageFields = Seq("id", "name", "tasks", "wall_ms", "task_median_ms",
     "task_max_ms", "gc_ms", "input_bytes", "shuffle_write_bytes", "spill_bytes")
 
@@ -45,6 +45,8 @@ class ProfileSpec extends AnyFunSuite {
       assert(q.get("task_max_over_median").asDouble >= 1.0)
       val gc = q.get("gc_frac").asDouble
       assert(gc >= 0.0 && gc <= 1.0)
+      // the extraction runs on executor task threads
+      assert(q.get("alloc_task_bytes").asLong > 0 && q.get("alloc_other_bytes").asLong >= 0)
       val cover = q.get("stage_cover").asDouble
       assert(cover > 0.0 && cover <= 1.0, s"${p.name}: stage_cover $cover")
       val stages = q.get("per_stage").elements.asScala.toSeq

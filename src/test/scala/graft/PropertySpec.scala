@@ -373,11 +373,11 @@ class PropertySpec extends AnyFunSuite {
     assert(docs.count(_.contains("\u212a")) > 50 && docs.count(_.contains("</\u017fcript>")) > 20)
   }
 
-  test("property: invalid UTF-8 is read as its U+FFFD normalization") {
-    val arena = new Arena
+  /** Generated markup with invalid UTF-8 sequences cut in. */
+  private val genInvalidUtf8: Gen[Array[Byte]] = {
     val junk = Seq(Array(0xFF), Array(0xC0, 0x80), Array(0xED, 0xA0, 0x80), Array(0xE2, 0x82), Array(0x80),
       Array(0xF4, 0x90, 0x80, 0x80), Array(0xF0, 0x9F, 0x98)).map(_.map(_.toByte))
-    val gen = for {
+    for {
       d <- genMarkup
       cuts <- Gen.listOfN(3, Gen.chooseNum(0, 1000))
       bad <- Gen.listOfN(3, Gen.oneOf(junk))
@@ -388,11 +388,15 @@ class PropertySpec extends AnyFunSuite {
         acc.take(at) ++ j ++ acc.drop(at)
       }
     }
-    samples(gen, 400).foreach(b => assertSameAsReference(b, arena))
   }
 
-  test("property: deep nesting, stray end tags, huge attributes, unterminated comments and raw text") {
+  test("property: invalid UTF-8 is read as its U+FFFD normalization") {
     val arena = new Arena
+    samples(genInvalidUtf8, 400).foreach(b => assertSameAsReference(b, arena))
+  }
+
+  /** Documents at the parser's extremes. */
+  private lazy val extremes: Seq[String] = {
     val p = s"<p>$prose</p>"
     Seq(
       "<div>" * 10000 + p + "</div>" * 10000,
@@ -408,8 +412,42 @@ class PropertySpec extends AnyFunSuite {
       s"<p>${"&#+65;&#\u0661\u0662;&#xD800;&#x110000;" * 3000}</p>",
       "<p>" + "&#xD83D;&#xDE00;" * 5000 + "</p>" + "<P>" + "&#xDE00;&#xD83D;" * 5000 + "</P>",
       "<" * 20000 + p + "</" * 20000,
-      "<div " + "a=b " * 20000 + ">" + p
-    ).foreach(d => assertSameAsReference(d.getBytes(UTF_8), arena))
+      "<div " + "a=b " * 20000 + ">" + p)
+  }
+
+  test("property: deep nesting, stray end tags, huge attributes, unterminated comments and raw text") {
+    val arena = new Arena
+    extremes.foreach(d => assertSameAsReference(d.getBytes(UTF_8), arena))
+  }
+
+  test("property: one arena over shuffled and large-before-small documents == a fresh arena per span") {
+    // each document through every kernel (media reads it as its ref), the
+    // kinds rotated per document, so every kernel follows every other
+    val docs = (samples(genMarkup, 600).map(_.getBytes(UTF_8)) ++ samples(genInvalidUtf8, 200) ++
+      extremes.map(_.getBytes(UTF_8))).toIndexedSeq
+    val kinds = SpanExtract.TransformedKinds.toSeq
+    def extract(kind: String, b: Array[Byte], arena: Arena): Array[Byte] = {
+      val u = UTF8String.fromBytes(b)
+      (if (kind == SpanExtract.Media) SpanExtract.extractSpanText(kind, null, u, arena)
+      else SpanExtract.extractSpanText(kind, u, null, arena)).getBytes
+    }
+    val fresh = docs.map(b => kinds.map(k => extract(k, b, new Arena)))
+    val rnd = new scala.util.Random(20261021L)
+    Seq(
+      "shuffled" -> rnd.shuffle(docs.indices.toVector),
+      "large before small" -> docs.indices.toVector.sortBy(i => -docs(i).length)
+    ).foreach { case (order, idx) =>
+      val arena = new Arena
+      idx.foreach { i =>
+        kinds.indices.foreach { j =>
+          val k = (i + j) % kinds.length
+          assert(extract(kinds(k), docs(i), arena).sameElements(fresh(i)(k)),
+            s"$order: ${kinds(k)} of ${new String(docs(i), UTF_8).take(600)}")
+        }
+      }
+    }
+    // non-vacuous: every kernel kept text from many documents
+    kinds.indices.foreach(k => assert(fresh.count(_(k).nonEmpty) > 100, kinds(k)))
   }
 
   test("caseMatches is String.regionMatches(ignoreCase) for every char against a..z") {

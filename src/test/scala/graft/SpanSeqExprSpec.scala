@@ -141,6 +141,31 @@ class SpanSeqExprSpec extends AnyFunSuite {
       array(span("html", col("html")), span("pdf_layout", col("hocr")), span("text", col("html"))).as("spans"))
   }
 
+  /** 300 rows, largest first, whose html and pdf_layout spans each hold a
+    * tag name of their own and stray end tags, and whose media refs are
+    * invalid UTF-8: what one row leaves in a shared arena must not reach
+    * the next. */
+  private def multiRow: DataFrame = {
+    def b(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val bad = Array(0xFF, 0xC0, 0x80).map(_.toByte)
+    val rows = (0 until 300).map { i =>
+      val words = Seq.fill(300 - i)("prose").mkString(" ")
+      val html = s"<div><x-$i><p>$words $nonBmp</p></b></x-$i></z$i></div>"
+      val hocr = s"<div class='ocr_page'><x-$i><span class='ocr_line' id='l$i'>" +
+        s"<span class='ocrx_word'>$words</span></span></x-$i></i></div>"
+      Row(s"m$i", i % 3, b(html), b(hocr), b(s"img://$i") ++ bad)
+    }
+    val schema = StructType(Seq(
+      StructField("doc_id", StringType, nullable = false), StructField("part_idx", IntegerType),
+      StructField("html", BinaryType), StructField("hocr", BinaryType), StructField("ref", BinaryType)))
+    def span(kind: String, text: Column, ref: Column) =
+      struct(lit(kind).as("kind"), text.cast("string").as("text"), ref.cast("string").as("media_ref"))
+    val none = lit(null).cast("string")
+    spark.createDataFrame(rows.asJava, schema).select(col("doc_id"), col("part_idx"),
+      array(span("html", col("html"), none), span("pdf_layout", col("hocr"), none),
+        span("media", none, col("ref")), span("text", col("html"), col("ref"))).as("spans"))
+  }
+
   /** The element struct with its fields in another order, an extra
     * field, and non-nullable kind and elements. */
   private def reordered: DataFrame = {
@@ -215,6 +240,21 @@ class SpanSeqExprSpec extends AnyFunSuite {
           .map(r => r.getString(0) -> r.getSeq[Row](1).map(_.getString(1))).toMap
         assert(got("i1")(0).contains("\uFFFD") && got("i1")(0).contains(nonBmp), got("i1")(0))
         assert(got("i1")(1).contains("\uFFFD") && got("i1")(1).contains(nonBmp), got("i1")(1))
+      }
+    }
+
+    test(s"multi-row partitions, largest row first, one arena per partition == reference ($mode)") {
+      withConfs(confs: _*) {
+        val corpusRows = corpus.orderBy(size(col("spans")).desc).coalesce(1)
+        val hostileRows = multiRow.coalesce(1)
+        Seq(corpusRows, hostileRows, stored(multiRow).coalesce(1)).foreach(df => assert(df.rdd.getNumPartitions == 1))
+        assertLaw(corpusRows, lit(0))
+        assertLaw(hostileRows, partBase)
+        assertLaw(stored(multiRow).coalesce(1), partBase)
+        // the generated class holds the arena, made once per partition
+        val code = Extract.extractInRow(hostileRows, partBase).queryExecution.debug.codegenToSeq().map(_._2)
+        if (mode == "interpreted") assert(code.isEmpty)
+        else assert(code.exists(_.contains("new graft.html.Arena()")), code.mkString("\n"))
       }
     }
 
